@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Deterministic release of `localCheckpoint` block pins.
+/** Deterministic release of pinned batches.
   *
-  * A `localCheckpoint` stores its partitions in executor block storage
-  * and Spark's ContextCleaner only frees them after a DRIVER GC
+  * A pin is a frame whose plan leaf is a LogicalRDD over blocks held in
+  * executor storage. The engine makes pins one way —
+  * `org.apache.spark.sql.GraftBridge.pin`, which materializes the
+  * blocks and folds the row counts plus one caller tally into the same
+  * job — and the operators also make plain `localCheckpoint` pins.
+  * Spark's ContextCleaner frees either kind only after a DRIVER GC
   * collects the RDD object — which a large-heap driver may not run for
   * hundreds of queries. Over a long suite the stranded pins saturate
   * the block manager and unrelated queries pay eviction + GC (bench
@@ -13,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * helpers free pins the moment their data is provably dead instead of
   * waiting for a GC that may never come.
   *
-  * Safety rule: a localCheckpoint truncates lineage, so an unpersisted
-  * checkpoint RDD CANNOT be recomputed — only free a pin once nothing
-  * will scan it again (e.g. the next iteration's pin has materialized,
-  * or the result has been collected).
+  * Safety rule: only free a pin once nothing will scan it again (e.g.
+  * the next iteration's pin has materialized, or the result has been
+  * collected). A localCheckpoint truncates lineage, so a freed one
+  * CANNOT be recomputed; a GraftBridge pin keeps its lineage, but a
+  * recompute would re-read sources that may have moved on — a DML
+  * batch's source is the very log the statement appends to.
   */
 object Pins {
 

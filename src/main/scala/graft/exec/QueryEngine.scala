@@ -113,126 +113,32 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   // ------------------------------------------------------- pin registry
 
-  /** Statement-path `localCheckpoint` pins, registered for
-    * deterministic release at close(). The ContextCleaner frees such
-    * blocks only after a natural driver GC — which a 128 GiB-heap
-    * driver may not run across a whole bench suite, so each query's
-    * DML pins stranded in the block manager and inflated later heavy
-    * queries 4-18x (r9 verdict). References are WEAK so a GC that does
-    * happen still lets the ContextCleaner reclaim pins early; close()
-    * frees whatever survives. */
+  /** Statement-path pins, registered for deterministic release at
+    * close(). The ContextCleaner frees such blocks only after a natural
+    * driver GC — which a 128 GiB-heap driver may not run across a whole
+    * bench suite, so each query's DML pins stranded in the block
+    * manager and inflated later heavy queries 4-18x (r9 verdict).
+    * References are WEAK so a GC that does happen still lets the
+    * ContextCleaner reclaim pins early; close() frees whatever
+    * survives. The result cache keeps its own eviction-time release
+    * instead — its pins outlive statements by design. */
   private val pinRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[
       java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
 
-  /** `localCheckpoint` + register the checkpoint blocks for release at
-    * close(). Every statement-scoped pin (DML batches, probe
-    * materializations) goes through here; the result cache keeps its
-    * own eviction-time release instead — its pins outlive statements
-    * by design. */
-  /** Pin a batch UNLESS its optimized plan already IS a LocalRelation:
-    * literal VALUES rows live on the driver, nothing in their lineage
-    * can re-read the log being appended to, their parallelize layout
-    * is deterministic (so sequence assignment is stable across the
-    * counts job and the write), and any non-deterministic expression
-    * would have blocked constant folding and left a Project above —
-    * failing this gate and keeping the real checkpoint. Skipping the
-    * pin removes one materialization job from every literal INSERT,
-    * the floor under OLTP-shaped statement streams. */
-  private def pinUnlessLiteral(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ => pinCheckpoint(df)
-    }
-
-  private def pinCheckpoint(df: DataFrame): DataFrame = tracer.span("pin-batch") {
-    // opportunistically drop nodes whose referent a GC already let the
-    // ContextCleaner reclaim — without this the queue grows one node
-    // per DML statement for the engine's whole life (a long-lived wire
-    // server would accumulate millions of dead nodes awaiting close())
-    pinRegistry.removeIf(_.get() == null)
-    val p = df.localCheckpoint()
-    p.queryExecution.logical.collectLeaves().foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        pinRegistry.add(new java.lang.ref.WeakReference(r.rdd))
-      case _ => ()
-    }
-    p
-  }
-
-  /** Pin a batch AND capture its per-partition row counts in ONE job:
-    * the persisted blocks materialize under the same pass that computes
-    * the counts sequence assignment needs anyway, replacing the
-    * localCheckpoint-then-count pair (two jobs) every DML statement
-    * used to pay. Row-preserving narrow projections over the pin
-    * (physical casts, event shaping, SET-clause application) keep the
-    * partition layout, so the counts stay valid for
-    * EventLog.assignWithOffsets downstream. The blocks go through the
-    * same pinRegistry release path as pinCheckpoint's. */
-  private def pinCheckpointCounted(df: DataFrame): (DataFrame, Array[Long]) =
-    tracer.span("pin-batch") {
-      pinRegistry.removeIf(_.get() == null)
-      // small batches come back as a driver LocalRelation from the
-      // same job (pinCountedOrLocal) and ride the literal fast path
-      // end to end — driver probe folding, job-free sequencing, and
-      // the driver-side staging write. Unlike the PRE-collect
-      // plan-proven path (pinUnlessLiteralCounted, where only row
-      // bounds are provable), this job SEES the materialized bytes:
-      // pinCountedOrLocal's total-byte gate (round 18) bounds what
-      // may literalize, so the row cap no longer needs to assume
-      // worst-case strings — ~1000-row short-string DML batches (the
-      // OLTP scenario shape) now ride the driver write instead of a
-      // distributed staging write. Binary stays distributed: blobs
-      // do not belong in driver plans even under the byte gate.
-      val cap = if (literalizableSchema(df)) PinLiteralizeMaxRows else -1L
-      val (pinned, counts, rddOpt) =
-        org.apache.spark.sql.GraftBridge.pinCountedOrLocal(df, cap)
-      rddOpt.foreach(r =>
-        pinRegistry.add(new java.lang.ref.WeakReference(r)))
-      (pinned, counts)
-    }
-
-  /** pinCheckpointCounted's siblings for the streaming ingest paths:
-    * same one-job pin discipline, but the fold-in is the measurement
-    * the batch's probe gating needs — total row count
-    * (pinCheckpointRows: rows bound the distinct-key probe exactly
-    * when the frame is one-row-per-key) or Σ array lengths of one
-    * column (pinCheckpointSized: postings bound the distinct-token
-    * probe from above). No literalization: streaming batches publish
-    * through the staged-manifest path regardless of size. */
-  private def pinCheckpointRows(df: DataFrame): (DataFrame, Long) =
-    tracer.span("pin-batch") {
-      pinRegistry.removeIf(_.get() == null)
-      val (pinned, counts, rdd) =
-        org.apache.spark.sql.GraftBridge.pinCounted(df)
-      pinRegistry.add(new java.lang.ref.WeakReference(rdd))
-      (pinned, counts.sum)
-    }
-
-  private def pinCheckpointSized(df: DataFrame, arrayOrdinal: Int)
-      : (DataFrame, Long) =
-    tracer.span("pin-batch") {
-      pinRegistry.removeIf(_.get() == null)
-      val (pinned, _, elems, rdd) =
-        org.apache.spark.sql.GraftBridge.pinCountedSized(df, arrayOrdinal)
-      pinRegistry.add(new java.lang.ref.WeakReference(rdd))
-      (pinned, elems)
-    }
-
   /** Row-count cap for collecting a BOUNDED batch source to a driver
-    * LocalRelation instead of checkpoint-pinning it. Conservative:
-    * covers the shapes that matter (a global aggregate proves 1 row, a
-    * small LIMIT proves its bound) while keeping worst-case driver
-    * memory trivial even for wide payload rows. */
+    * LocalRelation instead of pinning it. Conservative: covers the
+    * shapes that matter (a global aggregate proves 1 row, a small LIMIT
+    * proves its bound) while keeping worst-case driver memory trivial
+    * even for wide payload rows. */
   private val LiteralizeMaxRows = 1024L
 
-  /** Row cap for the PIN-JOB literalization (pinCheckpointCounted →
-    * pinCountedOrLocal), which — unlike the plan-proven pre-collect
-    * path — measures the batch's actual bytes inside the job and
-    * gates on GraftBridge.LiteralizeByteBudget (1 MB total), so the
-    * row bound is a plan-size guard, not a memory guard. 8192 rows of
-    * any literalizable schema under 1 MB embed safely in a driver
-    * plan. */
+  /** Row cap for the PIN-JOB literalization, which — unlike the
+    * plan-proven pre-collect path — measures the batch's actual bytes
+    * inside the job and gates on GraftBridge.LiteralizeByteBudget
+    * (1 MB total), so the row bound is a plan-size guard, not a memory
+    * guard. 8192 rows of any literalizable schema under 1 MB embed
+    * safely in a driver plan. */
   private val PinLiteralizeMaxRows = 8192L
 
   /** Tighter cap when the schema carries any STRING column. Row-count
@@ -249,28 +155,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * distributed pin path instead. */
   private val StringLiteralizeMaxRows = 16L
 
-  /** pinCheckpointCounted unless the batch is literal-scale:
-    *   - a LocalRelation (literal VALUES) passes through untouched;
-    *   - a plan whose OPTIMIZER-PROVEN row bound (`maxRows`: global
-    *     aggregate -> 1, small LIMIT -> n) is at or under
-    *     [[LiteralizeMaxRows]] collects to a driver LocalRelation.
-    * Either way the batch then rides the whole literal fast path —
-    * driver-side guard folding, job-free sequence assignment,
-    * single-file staging — replacing the pin job plus a per-partition
-    * staging write with ONE collect job and a one-task write. This is
-    * THE floor under trigger/procedure bodies of the
-    * `INSERT ... SELECT <aggregate>` shape (audit counters, MAX+1 id
-    * assignment), which pay it once per fired statement. Cost parity
-    * elsewhere: the collect runs the source exactly once, same as the
-    * pin job it replaces; order determinism matches the literal
-    * contract (one driver-resident row seq, collected once, feeding
-    * probes, sequencing and the write identically). */
   /** Binary columns never literalize at any row count: a single
     * multimodal blob row can be arbitrarily large, and blobs belong
-    * in distributed checkpoint blocks, not embedded in a driver-side
-    * plan. (Strings are bounded by the tighter row cap above
-    * instead — they carry SQL semantics the literal fast path still
-    * wants for 1-row counter/label batches.) */
+    * in distributed blocks, not embedded in a driver-side plan — not
+    * even under the pin job's byte gate. (Strings are bounded by the
+    * tighter row cap above instead — they carry SQL semantics the
+    * literal fast path still wants for 1-row counter/label batches.) */
   private def literalizableSchema(df: DataFrame): Boolean =
     !df.schema.exists(f => hasType(f.dataType,
       _ == org.apache.spark.sql.types.BinaryType))
@@ -295,19 +185,66 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       case other => p(other)
     }
 
-  private def pinUnlessLiteralCounted(df: DataFrame): (DataFrame, Option[Array[Long]]) =
+  /** Every statement-path pin goes through here: one
+    * [[org.apache.spark.sql.GraftBridge.pin]] job under the `pin-batch`
+    * span, its blocks registered for release at close(). `tally` folds
+    * into the same job (see GraftBridge.pin).
+    *
+    * `literal = true` lets a small batch become a driver-resident
+    * LocalRelation and ride the literal fast path — driver-side guard
+    * folding, job-free sequence assignment, single-file staging:
+    *   - a LocalRelation (literal VALUES) passes through untouched: its
+    *     rows live on the driver, nothing in their lineage can re-read
+    *     the log being appended to, their parallelize layout is
+    *     deterministic (so sequence assignment is stable across the
+    *     counts job and the write), and any non-deterministic
+    *     expression would have blocked constant folding and left a
+    *     Project above. Skipping the pin removes one materialization
+    *     job from every literal INSERT;
+    *   - a plan whose OPTIMIZER-PROVEN row bound (`maxRows`: global
+    *     aggregate -> 1, small LIMIT -> n) is at or under
+    *     [[literalizeRowCap]] collects to a LocalRelation in one job
+    *     (`collect-literal`). This is THE floor under trigger/procedure
+    *     bodies of the `INSERT ... SELECT <aggregate>` shape (audit
+    *     counters, MAX+1 id assignment). The collect runs the source
+    *     exactly once, same as the pin job it replaces;
+    *   - otherwise the pin job itself carries the batch back when it
+    *     proves to fit [[PinLiteralizeMaxRows]] and the 1 MB gate.
+    * The first two report one count: the batch's row total. Binary
+    * schemas never literalize. Streaming batches pin with `literal =
+    * false`: they publish through the distributed staged write
+    * regardless of size. */
+  private def pinBatch(df: DataFrame, literal: Boolean = false,
+      tally: org.apache.spark.sql.catalyst.InternalRow => Long =
+        org.apache.spark.sql.GraftBridge.NoTally)
+      : org.apache.spark.sql.GraftBridge.Pin = {
+    import org.apache.spark.sql.GraftBridge.Pin
+    lazy val literalizable = literal && literalizableSchema(df)
     df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => (df, None)
-      case p if p.maxRows.exists(_ <= literalizeRowCap(df)) && literalizableSchema(df) =>
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if literal =>
+        Pin(df, Array(lr.data.length.toLong), 0L, None)
+      case p if literalizable && p.maxRows.exists(_ <= literalizeRowCap(df)) =>
         tracer.span("collect-literal") {
           val rows = df.collect()
-          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
-            None)
+          Pin(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+            df.schema), Array(rows.length.toLong), 0L, None)
         }
       case _ =>
-        val (p, c) = pinCheckpointCounted(df)
-        (p, Some(c))
+        tracer.span("pin-batch") {
+          // opportunistically drop nodes whose referent a GC already
+          // let the ContextCleaner reclaim — without this the queue
+          // grows one node per DML statement for the engine's whole
+          // life (a long-lived wire server would accumulate millions
+          // of dead nodes awaiting close())
+          pinRegistry.removeIf(_.get() == null)
+          val p = org.apache.spark.sql.GraftBridge.pin(df, tally,
+            if (literalizable) PinLiteralizeMaxRows else -1L)
+          p.rdd.foreach(r => pinRegistry.add(new java.lang.ref.WeakReference(r)))
+          p
+        }
     }
+  }
 
   private def freeStatementPins(): Unit = {
     var ref = pinRegistry.poll()
@@ -1529,7 +1466,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               // entries into the engine's lifetime
               val refreshPins =
                 scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-              // synchronized: cascade hops pin from probe-pool threads
+              // synchronized: cascade hops pin from Par fork threads
               def pin(df: DataFrame): DataFrame = {
                 refreshPins.synchronized { refreshPins += df.persist(lvl) }
                 df
@@ -1570,7 +1507,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               // reads them back single-threaded
               tracer.span("touched-keys-warm", s"${sides.size} sides") {
                 val touchedNames = sides.filter(tn => horizons(tn) > bases(tn))
-                for ((tn, f) <- joinParallel(touchedNames)(tn =>
+                for ((tn, f) <- Par.all(spark.sparkContext, touchedNames)(tn =>
                     tn -> touchedFilters(catalog.require(tn), bases(tn),
                       horizons(tn))))
                   touchedFiltersFor(tn) = f
@@ -1633,7 +1570,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               // collect. Serially that is k sources × up to (k−1)
               // hops of job latency back to back (span-profiled at
               // ~6 s of the all-five-churned refresh, 20 join-keys
-              // collects); on the probe pool the refresh pays the
+              // collects); forked (Par.all) the refresh pays the
               // LONGEST source chain, not the sum. Results merge in
               // source order so the plan (the OR order of preds) is
               // identical to the sequential construction; hop tags
@@ -1662,7 +1599,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               }
               if (!legacyHidden)
                 tracer.span("cascade-join", s"${touchedIdx.size} sources") {
-                  for (rs <- joinParallel(touchedIdx)(cascadeOf);
+                  for (rs <- Par.all(spark.sparkContext, touchedIdx)(cascadeOf);
                        (u, r) <- rs)
                     preds(u) ::= r
                 }
@@ -1724,14 +1661,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               // one-fact refresh of a 6-table view plans one term.
               // MULTI-touched refreshes (round 19, guide §2.6) build,
               // analyze and MATERIALIZE each term concurrently on the
-              // probe pool: the merge consumes every term, so the
+              // Par pool: the merge consumes every term, so the
               // serial form executed one ~k·n-join action whose AQE
               // stage-jobs ran back to back — per-term pin jobs
               // overlap instead, and the merge then reads k pinned
               // O(touched-reach) frames (the same bound as every
               // other refresh pin; a pinned term is the term's
               // grouped-contribution rows, never a partner scan).
-              // Item order through joinParallel keeps the union order
+              // Item order through Par.all keeps the union order
               // identical to the sequential construction.
               val sideFrames = sides.indices.map(i =>
                 (deltas(i)._1, deltas(i)._2, fullOlds(i), fulls(i)))
@@ -1742,7 +1679,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
                   IncrementalView.joinSignedDelta(js, stored, sideFrames,
                     untouched = untouchedSet)
                 else tracer.span("delta-terms", s"${touchedIdx.size} terms") {
-                  joinParallel(sides.indices.filterNot(untouchedSet)) { i =>
+                  Par.all(spark.sparkContext,
+                      sides.indices.filterNot(untouchedSet)) { i =>
                     val p = pin(IncrementalView.joinSignedDeltaTerm(
                       js, stored, sideFrames, i))
                     p.count() // materialize the pinned blocks
@@ -1753,9 +1691,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               val acds = IncrementalView.sketchAggs(js.aggs)
               // persist the k-term delta across its consumers
               // (main merge, aux merges, overlays, the ACD probe),
-              // like the single-table path
+              // like the single-table path — unless it already is the
+              // union of the pinned per-term frames above, which those
+              // consumers re-read as cheaply as a second pin would
               val sdOpt =
-                if (cds.isEmpty && acds.isEmpty) None else Some(pin(delta))
+                if (cds.isEmpty && acds.isEmpty) None
+                else Some(if (touchedIdx.size <= 1) pin(delta) else delta)
               // A sketch cannot retract a joined row, and the union
               // merge folds EVERY +1 row's value in — so it is sound
               // only when every +1 (group, value) pair truly exists in
@@ -2428,7 +2369,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           // once so an expensive export query never runs 3-4x; the
           // OPTIMIZE path gets the same for free by reading its
           // materialized checkpoint
-          graft.operators.ZOrder.cluster(pinCheckpoint(selected), zorderBy,
+          graft.operators.ZOrder.cluster(pinBatch(selected).df, zorderBy,
             spark.sessionState.conf.numShufflePartitions)
         }
       try {
@@ -3081,28 +3022,31 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // the two serial halves of its fixed floor.
     // `probes` is a THUNK: for the direct-publish path its evaluation
     // — which itself plans state reads and may run an inline-key
-    // collect job — moves onto the probe pool, overlapping probe
+    // collect job — moves into a Par fork, overlapping probe
     // CONSTRUCTION with the staging write alongside probe execution.
     // A literal batch instead evaluates it here and decides its
     // row-local probes driver-side first (dropFoldedProbes): a doomed
     // literal statement raises HERE, with zero jobs and no staging dir
     // ever created.
+    def isLocal(df: DataFrame) = df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    // any failure between probe submission and the publish-time join
+    // must still join the fork: the probe verdict may be the better
+    // error. An unjoined probe fork is cancelled and awaited when the
+    // scope exits, never left running Spark jobs with no consumer. The
+    // join is idempotent, so the publish path's own catch and the tail
+    // call below stay as they are.
+    Par.scope(spark.sparkContext) { par =>
+    def probe(ps: => Seq[DataFrame]): () => Unit =
+      if (viaTxn.isDefined) { raiseFirstViolation(ps); () => () }
+      else { val f = par.fork(raiseFirstViolation(ps)); () => f.join() }
     val awaitProbes: () => Unit =
       if (probes eq QueryEngine.NoProbes) () => ()
-      else if (physical.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
+      else if (isLocal(physical)) {
         val remaining = dropFoldedProbes(probes())
-        if (remaining.isEmpty) () => ()
-        else if (viaTxn.isDefined) { raiseFirstViolation(remaining); () => () }
-        else backgroundViolationCheck(() => remaining)
+        if (remaining.isEmpty) () => () else probe(remaining)
       }
-      else if (viaTxn.isDefined) { raiseFirstViolation(probes()); () => () }
-      else backgroundViolationCheck(probes)
-    // any failure between probe submission and the publish-time join
-    // must still join the task: the probe verdict may be the better
-    // error, and an unjoined probe union would keep running Spark jobs
-    // with no consumer. The join handle is idempotent, so the publish
-    // path's own catch and the tail call below stay as they are.
+      else probe(probes())
     def sequenceAndPublish(): (Long, Long) = {
     // inside a transaction, sequences continue from the buffered tail
     val base = viaTxn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
@@ -3113,18 +3057,18 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // caller that already pinned the batch (DML paths pin once so
     // PK/FK probe jobs read blocks instead of re-executing the source)
     // skips the second materialization.
-    val pinned = if (prePinned) physical else pinUnlessLiteral(physical)
-    // a caller that pinned through pinCheckpointCounted already knows
-    // the layout: sequence assignment is job-free. A batch that came
-    // back LITERALIZED from the pin (small matched set → LocalRelation)
-    // must NOT take the offsets path — assignWithOffsets goes through
-    // .rdd, re-launching the job the literalization exists to skip;
-    // assignSequencesCounted's LocalRelation branch sequences it
+    // A literal batch needs no pin, for the reasons pinBatch gives.
+    val pinned =
+      if (prePinned || isLocal(physical)) physical else pinBatch(physical).df
+    // a caller that pinned through pinBatch passes the pin's layout:
+    // sequence assignment is then job-free. A batch that came back
+    // LITERALIZED (small matched set → LocalRelation) has no layout
+    // and must NOT take the offsets path — assignWithOffsets goes
+    // through .rdd, re-launching the job the literalization exists to
+    // skip; assignSequencesCounted's LocalRelation branch sequences it
     // driver-side instead.
-    def isLocal(df: DataFrame) = df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val (withSeq, n) = pinnedCounts match {
-      case Some(cs) if !isLocal(pinned) =>
+      case Some(cs) =>
         (EventLog.assignWithOffsets(pinned, base, cs), cs.sum)
       case _ => EventLog.assignSequencesCounted(pinned, base)
     }
@@ -3203,6 +3147,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         try awaitProbes()
         catch { case pe: Throwable if pe ne e => throw pe }
         throw e
+    }
     }
   }
 
@@ -4271,88 +4216,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       if (bad.nonEmpty) throw new IllegalArgumentException(bad(0).getString(0))
     }
 
-  /** Run the probe union on the shared pool, propagating this
-    * statement's Spark job group so a statement-timeout cancel reaches
-    * the probe jobs too. Returns an idempotent join handle that
-    * rethrows the probe's violation (or any failure) on the caller's
-    * thread — [[append]] overlaps the probes with the sequence-count
-    * job and the staging write this way, joining at the
-    * manifest-rename commit point. */
-  /** Run independent driver-blocking Spark work items concurrently on
-    * the shared probe pool, propagating this statement's job group (so
-    * a statement-timeout cancel reaches every item's jobs) and joining
-    * them ALL before returning — results in ITEM order, never
-    * completion order, so plan construction stays deterministic. The
-    * first failure rethrows on the caller's thread after every task
-    * has settled (a refresh that throws must not leave sibling jobs
-    * racing a teardown). Single-item lists run inline: the common
-    * one-table refresh pays zero handoff. Tracer spans no-op off the
-    * statement thread by design — callers wrap the join in one
-    * statement-thread span that accounts the whole batch's wall. */
-  private def joinParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.lengthIs <= 1) items.map(f)
-    else {
-      val sc = spark.sparkContext
-      val group = sc.getLocalProperty("spark.jobGroup.id")
-      val desc = sc.getLocalProperty("spark.job.description")
-      val interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-      val tasks = items.map { a =>
-        val t = new java.util.concurrent.FutureTask[B](() => {
-          // ALWAYS reset the pool thread's job group: cached pool
-          // threads inherit localProperties from whichever thread
-          // created them, so a group-less caller would otherwise
-          // submit jobs under a stale inherited group and be
-          // collaterally cancelled by a later cancelJobGroup
-          if (group != null)
-            sc.setJobGroup(group, if (desc == null) "" else desc,
-              interrupt == "true")
-          else sc.clearJobGroup()
-          try f(a)
-          finally sc.clearJobGroup()
-        })
-        QueryEngine.probePool.execute(t)
-        t
-      }
-      // settle every task before surfacing the first failure
-      val settled = tasks.map(t => scala.util.Try(t.get()))
-      settled.collectFirst {
-        case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
-          throw e.getCause
-        case scala.util.Failure(e) => throw e
-      }
-      settled.map(_.get)
-    }
-
-  /** Run one driver-blocking Spark work item on the probe pool with
-    * this statement's job group propagated; the returned join function
-    * rethrows the item's failure on the caller's thread. Single-item
-    * form of [[joinParallel]] — callers overlap an independent guard
-    * job with the statement's main materialization and join before
-    * the commit point. */
-  private def asyncTask[T](f: => T): () => T = {
-    val sc = spark.sparkContext
-    val group = sc.getLocalProperty("spark.jobGroup.id")
-    val desc = sc.getLocalProperty("spark.job.description")
-    val interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    val task = new java.util.concurrent.FutureTask[T](() => {
-      // ALWAYS reset the pool thread's job group (see joinParallel)
-      if (group != null)
-        sc.setJobGroup(group, if (desc == null) "" else desc, interrupt == "true")
-      else sc.clearJobGroup()
-      try f
-      finally sc.clearJobGroup()
-    })
-    QueryEngine.probePool.execute(task)
-    () =>
-      try task.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-  }
-
-  private def backgroundViolationCheck(probes: () => Seq[DataFrame]): () => Unit =
-    asyncTask(raiseFirstViolation(probes()))
-
   // ------------------------------------------------------ foreign keys
 
   /** Max distinct keys inlined as an IN-list into a probe's scanned
@@ -4597,41 +4460,39 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // guards, job-free sequencing, single-file staging — which the
         // RDD-zip assignment would otherwise forfeit for every literal
         // VALUES insert into an auto-increment table.
-        val (pinned, cnts) = pinUnlessLiteralCounted(positioned)
-        val (withId, cntsOut) = pinned.queryExecution.optimizedPlan match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            val rows = pinned.collect()
+        val p = pinBatch(positioned, literal = true)
+        val withId = p.layout match {
+          case None =>
+            val rows = p.df.collect()
             val n = rows.length
             val first =
               if (n > 0) catalog.reserveSequenceBlock(seqName, n.toLong) else 1L
             val out = org.apache.spark.sql.types.StructType(
-              pinned.schema.fields :+ org.apache.spark.sql.types.StructField(
+              p.df.schema.fields :+ org.apache.spark.sql.types.StructField(
                 "_auto_id", org.apache.spark.sql.types.LongType, nullable = false))
             val seqd: java.util.List[org.apache.spark.sql.Row] =
               java.util.Arrays.asList(rows.zipWithIndex.map { case (r, i) =>
                 org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (first + i))
               }.toIndexedSeq: _*)
-            (spark.createDataFrame(seqd, out), None)
-          case _ =>
-            val counts = cnts.getOrElse(EventLog.partitionCounts(pinned))
+            spark.createDataFrame(seqd, out)
+          case Some(counts) =>
             val n = counts.sum
             val first = if (n > 0) catalog.reserveSequenceBlock(seqName, n) else 1L
-            (EventLog.assignWithOffsets(pinned, first - 1, counts, "_auto_id"),
-              cnts)
+            EventLog.assignWithOffsets(p.df, first - 1, counts, "_auto_id")
         }
         (withId.select(t.columns.map(c =>
           if (c.logical == idCol) col("_auto_id").cast(c.dataType).as(c.logical)
           else if (target.contains(c.logical))
             col(c.logical).cast(c.dataType).as(c.logical)
           else expr(defaults.getOrElse(c.logical, "NULL"))
-            .cast(c.dataType).as(c.logical)): _*), cntsOut)
+            .cast(c.dataType).as(c.logical)): _*), p.layout)
       case None =>
-        val (pinned, cnts) = pinUnlessLiteralCounted(
+        val p = pinBatch(
           positioned.select(t.columns.map(c =>
             if (target.contains(c.logical)) col(c.logical).cast(c.dataType).as(c.logical)
             else expr(defaults.getOrElse(c.logical, "NULL"))
-              .cast(c.dataType).as(c.logical)): _*))
-        (pinned, cnts)
+              .cast(c.dataType).as(c.logical)): _*), literal = true)
+        (p.df, p.layout)
     }
     fireTriggers(table, "INSERT", "BEFORE", None, Some(full))
     // every declarative guard in ONE Spark job: pk batch-duplicates, pk
@@ -4726,7 +4587,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // pin the matched batch first: the tombstone append below mutates
       // the very log this lineage reads, so the second (INSERT) append
       // must work from a materialized copy, not a log re-scan
-      val (matching, mCounts) = pinCheckpointCounted(matching0)
+      val mp = pinBatch(matching0, literal = true)
+      val matching = mp.df
       val updated = applyAssigns(matching)
       fireTriggers(table, "UPDATE", "BEFORE", Some(matching), Some(updated))
       val touched = assigns.map(_._1).toSet
@@ -4747,9 +4609,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           rlsCheckProbes(table, updated, "UPDATE") ++
           fkChangedProbes(t, assigns, updated) ++
           fkIncomingOnUpdateProbes(t, assigns, state, matching, updated),
-        pinnedCounts = Some(mCounts))
+        pinnedCounts = mp.layout)
       val (_, last) = append(t, updated, EventLog.INSERT, prePinned = true,
-        pinnedCounts = Some(mCounts))
+        pinnedCounts = mp.layout)
       fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
       summary("update", nd, last)
     } else {
@@ -4757,7 +4619,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // read blocks instead of replaying the state collapse per action,
       // and a trigger body writing this table cannot change what the
       // batch lineage re-reads
-      val (matching, mCounts) = pinCheckpointCounted(matching0)
+      val mp = pinBatch(matching0, literal = true)
+      val matching = mp.df
       val updated = applyAssigns(matching)
       fireTriggers(table, "UPDATE", "BEFORE", Some(matching), Some(updated))
       val (n, last) = append(t, updated, EventLog.PATCH, prePinned = true,
@@ -4767,7 +4630,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           rlsCheckProbes(table, updated, "UPDATE") ++
           fkChangedProbes(t, assigns, updated) ++
           fkIncomingOnUpdateProbes(t, assigns, state, matching, updated),
-        pinnedCounts = Some(mCounts))
+        pinnedCounts = mp.layout)
       fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
       summary("update", n, last)
     }
@@ -4837,11 +4700,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // read blocks instead of replaying state collapse per action, and a
     // trigger body writing this table cannot change what the lazy
     // lineage re-reads
-    val (matching, mCounts) = pinCheckpointCounted(matching0)
+    val mp = pinBatch(matching0, literal = true)
+    val matching = mp.df
     fireTriggers(table, "DELETE", "BEFORE", Some(matching), None)
     val (n, last) = append(t, matching, EventLog.SOFT_DELETE, prePinned = true,
       probes = () => fkIncomingProbes(t, matching),
-      pinnedCounts = Some(mCounts))
+      pinnedCounts = mp.layout)
     fireTriggers(table, "DELETE", "AFTER", Some(matching), None)
     summary("delete", n, last)
   }
@@ -5663,12 +5527,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       if (raw.columns.contains(c.logical)) col(c.logical).cast(c.dataType).as(c.logical)
       else expr(defaults.getOrElse(c.logical, "NULL"))
         .cast(c.dataType).as(c.logical)): _*)
-    val (full, fCounts) = pinCheckpointCounted(full0)
+    val fp = pinBatch(full0, literal = true)
+    val full = fp.df
     fireTriggers(table, "INSERT", "BEFORE", None, Some(full))
     val (n, last) = append(t, full, EventLog.INSERT, prePinned = true,
       probes = () => constraintViolations(t, full, stateAt(table, None), None) ++
         fkOutgoingProbes(t, full) ++ rlsCheckProbes(table, full, "INSERT"),
-      pinnedCounts = Some(fCounts))
+      pinnedCounts = fp.layout)
     fireTriggers(table, "INSERT", "AFTER", None, Some(full))
     summary("ingest", n, last)
   }
@@ -5721,17 +5586,15 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** Physical-cast, sequence-assign, and event-shape one INSERT batch
     * — the body `append` applies, shared with the multi-table
-    * streaming-dedup publish. Returns (events, new last sequence). */
+    * streaming-dedup publish. Returns (events, new last sequence).
+    * The batch must be a pin or a narrow derivation of one: partition
+    * layout is then deterministic and nothing re-reads the log being
+    * appended to. */
   private def insertEventFrame(t: TableDef, rowsLogical: DataFrame,
-      base: Long, prePinned: Boolean = false): (DataFrame, Long) = {
+      base: Long): (DataFrame, Long) = {
     val physical = rowsLogical.select(t.columns.map(c =>
       col(c.logical).cast(c.dataType).as(c.physical)): _*)
-    // prePinned: the caller's frame is a pinned checkpoint or a narrow
-    // derivation of one — partition layout is already deterministic and
-    // nothing re-reads the log being appended to, so a second
-    // materialized copy would be pure waste
-    val (withSeq, n) = EventLog.assignSequencesCounted(
-      if (prePinned) physical else pinCheckpoint(physical), base)
+    val (withSeq, n) = EventLog.assignSequencesCounted(physical, base)
     val ev0 = withSeq.select(
       col("sequence"),
       timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")).as("ts"),
@@ -5780,27 +5643,30 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         .withColumn("__fp", fingerprint)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__fp")).orderBy(col(t.pk))
-      // firsts is one row per DISTINCT fingerprint, so its pin-job row
-      // count bounds the probe's key set EXACTLY: past InlineKeyCap
-      // the inline collect MUST overflow — skip its two probe jobs
-      // and take the unfiltered registry anti-join directly (round 19)
-      val (firsts, nFirsts) = pinCheckpointRows(
-        full.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn"))
-      val seen = (if (nFirsts > InlineKeyCap) stateAt(r.name, None)
+      // firsts is one row per DISTINCT fingerprint, so the pin job's
+      // count of non-null fingerprints IS the probe's key set size
+      // (the NULL-fingerprint group's row is no key): past InlineKeyCap
+      // the inline collect MUST overflow — skip its two probe jobs and
+      // take the unfiltered registry anti-join directly
+      val firsts0 = full.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+      val fpAt = firsts0.schema.fieldIndex("__fp")
+      val fp = pinBatch(firsts0,
+        tally = row => if (row.isNullAt(fpAt)) 0L else 1L)
+      val firsts = fp.df
+      val seen = (if (fp.tally > InlineKeyCap) stateAt(r.name, None)
           else inlineKeyFilter(stateAt(r.name, None), r.pk, firsts, "__fp"))
         .select(col(r.pk).cast("string").as("__seen_fp"))
-      val admitted = pinCheckpoint(firsts
-        .join(seen, col("__fp") === col("__seen_fp"), "left_anti"))
+      val admitted = pinBatch(firsts
+        .join(seen, col("__fp") === col("__seen_fp"), "left_anti")).df
       val (evT, hiT) = insertEventFrame(t, admitted.drop("__fp"),
-        catalog.lastSeq(t.name), prePinned = true)
+        catalog.lastSeq(t.name))
       val regRows = admitted.select(r.columns.map(c =>
         if (c.logical == r.pk) col("__fp").cast(c.dataType).as(c.logical)
         else if (admitted.columns.contains(c.logical))
           col(c.logical).cast(c.dataType).as(c.logical)
         else lit(null).cast(c.dataType).as(c.logical)): _*)
-      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name),
-        prePinned = true)
+      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name))
       // an all-duplicates batch still publishes when a batch id must be
       // recorded; without one there is nothing to make durable
       if (hiT == catalog.lastSeq(t.name) && hiR == catalog.lastSeq(r.name) &&
@@ -5871,13 +5737,16 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           else lit(null).cast(c.dataType).as(c.logical)): _*)
         .withColumn("__sh",
           graft.operators.Dedup.shingleSet(textCol, shingleN))
-      // total posting count rides the pin job (round 19): it bounds
-      // the batch's distinct-token count from above, which decides
-      // below whether the registry probe's inline-key collect can
-      // possibly fit the cap — past it, the two probe jobs ALWAYS
-      // overflowed and were pure waste on every realistic batch
-      val (full, postings) = pinCheckpointSized(shaped,
-        shaped.schema.fieldIndex("__sh"))
+      // total posting count (Σ shingle-array lengths, null arrays 0)
+      // rides the pin job (round 19): it bounds the batch's
+      // distinct-token count from above, which decides below whether
+      // the registry probe's inline-key collect can possibly fit the
+      // cap — past it, the two probe jobs ALWAYS overflowed and were
+      // pure waste on every realistic batch
+      val shAt = shaped.schema.fieldIndex("__sh")
+      val sp = pinBatch(shaped, tally = row =>
+        if (row.isNullAt(shAt)) 0L else row.getArray(shAt).numElements().toLong)
+      val (full, postings) = (sp.df, sp.tally)
       // the seen-before-wins policy equals the SQL "no smaller-id doc
       // clears the threshold" semantics ONLY when batches arrive in
       // ascending pk ranges — cross-batch drops are temporal (registry
@@ -5906,12 +5775,15 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // (above-watermark + distinct-in-batch = the whole log stays
       // unique-pk INSERTs, so both tables keep their flat-log
       // certificate and reads skip the keyed collapse).
-      // ASYNC on the probe pool (round 19, guide §2.6): nothing before
-      // publishAtomic has a side effect, so the guard aggregate need
-      // not serialize ahead of the batch's dedup-join materialization
-      // — it overlaps the admitted-pin job and joins (surfacing any
-      // ordering violation) before the event frames are built.
-      val guardJoin: () => (Boolean, Option[Long]) = asyncTask {
+      // FORKED (round 19, guide §2.6): nothing before publishAtomic has
+      // a side effect, so the guard aggregate need not serialize ahead
+      // of the batch's dedup-join materialization — it overlaps the
+      // admitted-pin job and joins (surfacing any ordering violation)
+      // before the event frames are built. If the statement fails
+      // first, the scope cancels and awaits the guard before the
+      // failure propagates.
+      Par.scope(spark.sparkContext) { par =>
+      val guard = par.fork {
         if (pkIntegral) {
           val bounds = full.agg(min(col(t.pk)).cast("long"),
             max(col(t.pk)).cast("long"),
@@ -5999,14 +5871,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         .select(col("__d"))
       val dropped = wiDrop.union(crDrop).distinct()
         .select(col("__d").as("__dropped"))
-      val admitted = pinCheckpoint(full
+      val admitted = pinBatch(full
         .join(dropped, col(t.pk) === col("__dropped"), "left_anti")
-        .drop("__sh"))
+        .drop("__sh")).df
       // join the overlapped guard before any event frame exists — an
       // ordering violation must surface exactly as it did serially
-      val (batchPkUnique, batchMax) = guardJoin()
-      val (evT, hiT) = insertEventFrame(t, admitted, catalog.lastSeq(t.name),
-        prePinned = true)
+      val (batchPkUnique, batchMax) = guard.join()
+      val (evT, hiT) = insertEventFrame(t, admitted, catalog.lastSeq(t.name))
       // ALL batch docs' postings land in the registry (seen semantics);
       // toks already carries __n, and is a narrow re-read of the pinned
       // batch — no checkpoint copy, no join
@@ -6019,8 +5890,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           case "n" => col("__n").cast(c.dataType).as("n")
           case other => lit(null).cast(c.dataType).as(other)
         }): _*)
-      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name),
-        prePinned = true)
+      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name))
       if (hiT == catalog.lastSeq(t.name) && hiR == catalog.lastSeq(r.name) &&
         streamId.isEmpty) return
       // a batch of shingle-less docs advances only the table; skip the
@@ -6042,6 +5912,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       maybeAutoSnapshot(t.name, hiT)
       maybeAutoSnapshot(r.name, hiR)
       }
+      }
       maybeAutoRefresh() // see ingestStream
     }
 
@@ -6062,7 +5933,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       if (committed.exists(_ >= batchId)) return
       val t = catalog.require(table)
       require(t.attached.isEmpty, s"cannot replicate into attached table $table")
-      val pinned = pinCheckpoint(batch)
+      val pinned = pinBatch(batch).df
       val mx = pinned.agg(max(col("sequence"))).head()
       val hi =
         if (mx.isNullAt(0)) catalog.lastSeq(t.name) // empty batch: record the id only
@@ -6533,7 +6404,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 }
 
 object QueryEngine {
-  /** Sentinel for "no guard probes" — lets append skip the probe-pool
+  /** Sentinel for "no guard probes" — lets append skip the probe fork
     * handoff entirely for probe-free paths (COPY, stream ingest). */
   private[exec] val NoProbes: () => Seq[org.apache.spark.sql.DataFrame] = () => Nil
 
@@ -6590,18 +6461,6 @@ object QueryEngine {
   /** Shared daemon timer for statement timeouts — one thread per JVM,
     * not per statement. */
   private[exec] val timeoutTimer = new java.util.Timer("graft-stmt-timeout", true)
-
-  /** Shared daemon pool for overlapping a DML statement's guard-probe
-    * jobs with its staging write (the two are independent until the
-    * manifest-rename commit point). Cached: idle threads die, bursts
-    * reuse them; one probe union runs per statement, so the pool's
-    * live size tracks concurrent engines, not statement volume. */
-  private[exec] val probePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
-      val th = new Thread(r, "graft-probe")
-      th.setDaemon(true)
-      th
-    })
 
   /** The statement exceeded the session's STATEMENT_TIMEOUT and its
     * Spark jobs were cancelled (PG error 57014; the reference's

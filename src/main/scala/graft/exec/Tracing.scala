@@ -29,7 +29,7 @@ import scala.collection.mutable
   *
   * Single-writer discipline: spans are recorded only from the
   * statement thread, which holds the engine's write-lock monitor for
-  * the whole statement; work the engine offloads to the probe pool is
+  * the whole statement; work the engine offloads to Par forks is
   * accounted for by the `probe-join` span at the point the statement
   * would block on it (the join IS the statement-visible cost). The
   * completed-trace ring is additionally synchronized because HTTP

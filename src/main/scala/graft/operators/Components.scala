@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB corpus, 10⁹+ vertices):
   *  - every round is two hash joins + one aggregation — no driver
   *    state, no per-vertex driver loop;
-  *  - each round's labels pin through GraftBridge.pinCountedFlagged:
-  *    ONE job materializes the round's persisted blocks AND tallies
-  *    the changed-flag column during the same pass, so the driver
+  *  - each round's labels pin through GraftBridge.pin with a
+  *    changed-flag tally: ONE job materializes the round's persisted
+  *    blocks AND counts the changed rows during the same pass, so the driver
   *    learns convergence without a separate probe job, and lineage
   *    truncates so round k's plan does not replay rounds 1..k-1
   *    (same discipline as RecursiveCTE.scala);
@@ -73,7 +73,7 @@ object Components {
       // ids, so the lookup is a self-join; label(label) <= label keeps
       // the map monotone while halving chains.
       // The convergence probe rides the SAME job as the round's pin
-      // (round 18, pinCountedFlagged): each round used to pay an eager
+      // (round 18, the pin's tally): each round used to pay an eager
       // checkpoint job plus a limit-1 probe job — the changed tally is
       // computable during the materialization pass itself, halving the
       // per-round job count of the closure.
@@ -85,22 +85,21 @@ object Components {
       // (q_dup_clusters 4.0-4.6 s -> 6.6-7.3 s, q_dedup_keep
       // 4.0-5.1 -> 6.8-7.1 interleaved A/B at sf0.1); reverted, the
       // one-hop round below stands.
-      val (jumped, _, chg, _) = org.apache.spark.sql.GraftBridge
-        .pinCountedFlagged(
-          prop.join(
-              prop.select(col("id").as("comp"), col("comp").as("comp2")),
-              Seq("comp"), "left")
-            .select(col("id"),
-              coalesce(col("comp2"), col("comp")).as("comp"),
-              (coalesce(col("comp2"), col("comp")) =!= col("prev"))
-                .as("__chg")),
-          flagOrdinal = 2)
-      changed = chg
+      val jumped = org.apache.spark.sql.GraftBridge.pin(
+        prop.join(
+            prop.select(col("id").as("comp"), col("comp").as("comp2")),
+            Seq("comp"), "left")
+          .select(col("id"),
+            coalesce(col("comp2"), col("comp")).as("comp"),
+            (coalesce(col("comp2"), col("comp")) =!= col("prev"))
+              .as("__chg")),
+        tally = r => if (!r.isNullAt(2) && r.getBoolean(2)) 1L else 0L)
+      changed = jumped.tally
       // the new round's pin is materialized, so the superseded round's
       // blocks are dead — free them now instead of stranding ~rounds
       // pins per invocation until a GC
       graft.Pins.free(labels)
-      labels = jumped.select(col("id"), col("comp"))
+      labels = jumped.df.select(col("id"), col("comp"))
       round += 1
     }
     if (changed > 0)

@@ -41,25 +41,25 @@ object RecursiveCTE {
       maxIter: Int = 1000,
       repinEvery: Int = 16): DataFrame = {
     require(repinEvery > 0, s"repinEvery must be positive (got $repinEvery)")
-    // each pin rides GraftBridge.pinCounted so the row count — the
+    // each pin rides GraftBridge.pin so the row count — the
     // fixpoint's termination probe — comes out of the SAME job as the
     // materialization (round 18): the loop used to pay an isEmpty job
     // per iteration on top of each eager checkpoint job
-    val (acc0, anchorCounts, _) = org.apache.spark.sql.GraftBridge
-      .pinCounted(if (distinct) anchor.distinct() else anchor)
-    var acc = acc0
+    val anchorPin = org.apache.spark.sql.GraftBridge
+      .pin(if (distinct) anchor.distinct() else anchor)
+    var acc = anchorPin.df
     var frontier = acc
-    var frontierRows = anchorCounts.sum
+    var frontierRows = anchorPin.counts.sum
     // pins the CURRENT acc union tree still references — freed at each
     // re-pin, once the repinned copy has materialized their rows
     var live = List(acc)
     var i = 0
     while (i < maxIter && frontierRows > 0) {
       val produced = step(frontier)
-      val (delta, deltaCounts, _) = org.apache.spark.sql.GraftBridge
-        .pinCounted(
-          if (distinct) produced.distinct().except(acc) else produced)
-      frontierRows = deltaCounts.sum
+      val deltaPin = org.apache.spark.sql.GraftBridge
+        .pin(if (distinct) produced.distinct().except(acc) else produced)
+      val delta = deltaPin.df
+      frontierRows = deltaPin.counts.sum
       live ::= delta
       acc = acc.union(delta) // lazy: both sides are pinned already
       i += 1

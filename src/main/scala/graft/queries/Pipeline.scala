@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.exec.Par
 import graft.operators.{AsOfJoin, BloomFilterDecontam, Bpe, Components, Decontam, Dedup, Dsir, FullText, HeavyHitters, Mixture, Multimodal, NaiveBayes, Packing, Pca, Web, Perplexity, QualityFilters, Quantize, RangeJoin, Sampling, SemDedup, Similarity, SubstringDedup, TextAnalysis, TextChunking, TrainingOrder, Vocabulary}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -18,29 +19,6 @@ object Pipeline {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  /** Run independent EAGER construction phases of a query body
-    * concurrently (guide §2.6 — overlap independent jobs). The
-    * k-means invariant queries build two independent clusterings plus
-    * an independent coarse re-derivation, each a serial chain of
-    * driver-blocking Lloyd collects; the phases share nothing and are
-    * deterministic, so overlap changes wall clock, never a value.
-    * Results return in item order; the first failure rethrows. */
-  private def inParallel(fs: (() => DataFrame)*): Seq[DataFrame] = {
-    val ts = fs.map(f => new java.util.concurrent.FutureTask[DataFrame](
-      () => f()))
-    ts.foreach { t =>
-      val th = new Thread(t, "graft-query-phase")
-      th.setDaemon(true)
-      th.start()
-    }
-    ts.map { t =>
-      try t.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    }
-  }
 
   // ----------------------------------------------------------- dedup
 
@@ -674,13 +652,13 @@ object Pipeline {
     // independent serial chains of driver-blocking Lloyd collects —
     // build them concurrently (§2.6); each is deterministic, so the
     // overlap cannot change any value
-    val Seq(res, coarse, res2) = inParallel(
+    val Seq(res, coarse, res2) = Par.all(s.sparkContext, Seq[() => DataFrame](
       () => Similarity.kmeansTwoLevel(emb, k = 16, iters = 2)
         .localCheckpoint(),
       () => Similarity.kmeans(emb, k = 4, iters = 2)
         .withColumnRenamed("cluster", "cell").localCheckpoint(),
       () => Similarity.kmeansTwoLevel(emb, k = 16, iters = 2)
-        .withColumnRenamed("cluster", "__c2"))
+        .withColumnRenamed("cluster", "__c2")))(_())
     val missing = emb.select("vec_id")
       .join(res.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(lit("vector_unassigned").as("why"), col("vec_id"))
@@ -726,13 +704,13 @@ object Pipeline {
     // same §2.6 overlap as q_kmeans_twolevel: result tree, the
     // determinism re-run, and the independently re-derived frozen
     // root partition (fan = 3) are independent Lloyd-collect chains
-    val Seq(res, coarse, res2) = inParallel(
+    val Seq(res, coarse, res2) = Par.all(s.sparkContext, Seq[() => DataFrame](
       () => Similarity.kmeansTree(emb, k = 27, iters = 2, branch = 3)
         .localCheckpoint(),
       () => Similarity.kmeans(emb, k = 3, iters = 2)
         .withColumnRenamed("cluster", "cell").localCheckpoint(),
       () => Similarity.kmeansTree(emb, k = 27, iters = 2, branch = 3)
-        .withColumnRenamed("cluster", "__c2"))
+        .withColumnRenamed("cluster", "__c2")))(_())
     val missing = emb.select("vec_id")
       .join(res.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(lit("vector_unassigned").as("why"), col("vec_id"))

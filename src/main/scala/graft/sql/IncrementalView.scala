@@ -1012,7 +1012,7 @@ object IncrementalView {
     * old-prefix ⋈ Δᵢ ⋈ new-suffix contribution, exactly as
     * [[joinSignedDelta]] would build it (which delegates here).
     * Exposed so the engine can CONSTRUCT AND MATERIALIZE the k terms
-    * of a multi-touched refresh concurrently on its probe pool
+    * of a multi-touched refresh concurrently (Par.all)
     * (guide §2.6): the union's value is order-independent term
     * algebra, so per-term pinning changes execution overlap, never
     * the merged delta. */

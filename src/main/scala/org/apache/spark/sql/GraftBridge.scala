@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column <-> catalyst Expression bridge for graft's custom
@@ -13,122 +14,80 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Pin-and-count: materialize `df`'s physical RDD into persisted
-    * blocks and return (pinned frame, per-partition row counts, the
-    * pinned RDD for later release) — ONE job where a
-    * localCheckpoint-then-count pair pays two, and at the InternalRow
-    * layer so every downstream consumer (guard probes, sequence
-    * assignment, the staging write) reads the blocks without Row
-    * boxing. Mirrors Dataset.localCheckpoint's own internals
-    * (execute → copy → persist → LogicalRDD.fromDataset); the count
-    * pass is the forcing action localCheckpoint(eager) would have
-    * spent on a plain count. */
-  def pinCounted(df: DataFrame): (DataFrame, Array[Long], org.apache.spark.rdd.RDD[_]) = {
-    val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = rdd
-      .mapPartitions(it => Iterator.single(it.size.toLong),
-        preservesPartitioning = true)
-      .collect()
-    val plan = execution.LogicalRDD.fromDataset(rdd, cds, isStreaming = false)
-    (classic.Dataset.ofRows(cds.sparkSession, plan), counts, rdd)
+  /** A materialized batch: the pinned frame, the pin job's
+    * per-partition row counts, the sum of the caller's per-row tally,
+    * and the persisted RDD to release later (None when the batch came
+    * back as a driver-resident LocalRelation and no blocks exist). */
+  final case class Pin(df: DataFrame, counts: Array[Long], tally: Long,
+      rdd: Option[org.apache.spark.rdd.RDD[_]]) {
+    /** The counts when they describe `df`'s own partitions, which is
+      * while the batch stays distributed. A LocalRelation's partition
+      * layout is Spark's to choose, so a literal batch has none. */
+    def layout: Option[Array[Long]] = rdd.map(_ => counts)
   }
 
-  /** pinCounted with a BOOLEAN-column tally folded into the same job:
-    * returns (pinned frame, per-partition row counts, number of rows
-    * whose `flagOrdinal` column is true, pinned RDD). Iterative
-    * fixpoint loops (connected components, recursive CTEs) pay one
-    * eager checkpoint job PLUS one convergence-probe job per round —
-    * the probe answer is computable during the materialization pass,
-    * so this folds the two into one job per round. */
-  def pinCountedFlagged(df: DataFrame, flagOrdinal: Int)
-      : (DataFrame, Array[Long], Long, org.apache.spark.rdd.RDD[_]) = {
-    val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = rdd.mapPartitions({ it =>
-      var n = 0L
-      var f = 0L
-      it.foreach { r =>
-        n += 1
-        if (!r.isNullAt(flagOrdinal) && r.getBoolean(flagOrdinal)) f += 1
-      }
-      Iterator.single((n, f))
-    }, preservesPartitioning = true).collect()
-    val plan = execution.LogicalRDD.fromDataset(rdd, cds, isStreaming = false)
-    (classic.Dataset.ofRows(cds.sparkSession, plan),
-      stats.map(_._1), stats.map(_._2).sum, rdd)
-  }
+  /** The tally of a pin that needs only its row counts. */
+  val NoTally: InternalRow => Long = _ => 0L
 
-  /** pinCounted with a per-row ARRAY-LENGTH tally folded into the same
-    * job: returns (pinned frame, per-partition row counts, Σ
-    * numElements of the `arrayOrdinal` column across all rows (null
-    * arrays count 0), pinned RDD). The streaming near-dup ingest pins
-    * its shingled batch anyway; the total posting count decides —
-    * inside the SAME materialization pass — whether the registry
-    * probe's inline-key collect can possibly succeed, instead of
-    * paying two always-overflowing probe jobs per batch. */
-  def pinCountedSized(df: DataFrame, arrayOrdinal: Int)
-      : (DataFrame, Array[Long], Long, org.apache.spark.rdd.RDD[_]) = {
-    val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = rdd.mapPartitions({ it =>
-      var n = 0L
-      var elems = 0L
-      it.foreach { r =>
-        n += 1
-        if (!r.isNullAt(arrayOrdinal))
-          elems += r.getArray(arrayOrdinal).numElements().toLong
-      }
-      Iterator.single((n, elems))
-    }, preservesPartitioning = true).collect()
-    val plan = execution.LogicalRDD.fromDataset(rdd, cds, isStreaming = false)
-    (classic.Dataset.ofRows(cds.sparkSession, plan),
-      stats.map(_._1), stats.map(_._2).sum, rdd)
-  }
-
-  /** pinCounted with small-batch LITERALIZATION folded into the SAME
-    * job: each partition reports its row count and carries up to
-    * rowCap+1 rows back with it. When the batch proves to be at or
-    * under `rowCap` rows (so every partition's rows came back whole),
-    * the result is a driver-resident LocalRelation — the whole
-    * downstream statement then rides the literal fast path (driver
-    * probe folding, job-free sequence assignment, driver-side staging
-    * write) and NO pin blocks exist to track (returned RDD is None,
-    * the cache is dropped immediately). Past the cap — or with
-    * rowCap < 0 — behaves exactly like pinCounted. This is the floor
-    * under OLTP-shaped UPDATE/DELETE statements, whose matched
-    * batches are usually a handful of rows that previously paid a
-    * distributed staging write each. */
   /** Total/per-partition byte ceiling for a batch that may become a
     * driver-resident LocalRelation: 1 MB embeds safely in any plan
     * (far under broadcast/task-size limits) and bounds the collect
     * regardless of per-row width. */
   val LiteralizeByteBudget: Long = 1L << 20
 
-  def pinCountedOrLocal(df: DataFrame, rowCap: Long)
-      : (DataFrame, Array[Long], Option[org.apache.spark.rdd.RDD[_]]) = {
+  /** What one partition reports back from the pin job. */
+  private final case class PartStats(rows: Long, tally: Long,
+      complete: Boolean, bytes: Long, carried: Array[InternalRow])
+
+  /** THE pin: materialize `df`'s physical RDD into persisted blocks
+    * and learn what the caller needs about the batch in the SAME job —
+    * where a localCheckpoint followed by a count or a probe pays two.
+    * Mirrors Dataset.localCheckpoint's own internals (execute → copy →
+    * persist → LogicalRDD.fromDataset); the one job is the forcing
+    * action localCheckpoint(eager) would have spent on a plain count.
+    * It works at the InternalRow layer, so every downstream consumer
+    * (guard probes, sequence assignment, the staging write) reads the
+    * blocks without Row boxing. The job always returns:
+    *   - per-partition row counts. Row-preserving narrow projections
+    *     over the pin (physical casts, event shaping, SET-clause
+    *     application) keep the partition layout, so the counts stay
+    *     valid for EventLog.assignWithOffsets downstream;
+    *   - Σ `tally(row)` over the batch, folded into the same pass: a
+    *     fixpoint's changed-flag count, the postings (array lengths)
+    *     or distinct non-null keys that bound a probe's key set.
+    * With `literalRowCap >= 0` each partition also carries up to
+    * cap+1 rows back. When the batch proves to be at or under the cap
+    * and the 1 MB byte budget (so every partition's rows came back
+    * whole), the result is a driver-resident LocalRelation: the whole
+    * downstream statement then rides the literal fast path (driver
+    * probe folding, job-free sequence assignment, driver-side staging
+    * write) and no blocks remain to track. This is the floor under
+    * OLTP-shaped UPDATE/DELETE statements, whose matched batches are
+    * usually a handful of rows. */
+  def pin(df: DataFrame, tally: InternalRow => Long = NoTally,
+      literalRowCap: Long = -1L): Pin = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
     val rdd = cds.queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keep = if (rowCap < 0) 0 else rowCap.toInt + 1
+    val keep = if (literalRowCap < 0) 0 else literalRowCap.toInt + 1
     // row counts bound rows, not BYTES: a fixed-width-but-wide schema
-    // (array<double> embeddings) at the row cap could ship
-    // multi-GB to the driver only to be discarded. Per-partition byte
-    // budget caps the carry; a partition that stops buffering reports
-    // itself incomplete and the batch stays distributed. The TOTAL
-    // byte gate below (round 18) additionally bounds what may become
-    // a plan-embedded LocalRelation — with it, the row caps no longer
-    // need to assume worst-case per-row strings, so ~1000-row short-
-    // string DML batches (the OLTP scenario shape) literalize instead
-    // of paying the distributed staging write.
+    // (array<double> embeddings) at the row cap could ship multi-GB to
+    // the driver only to be discarded. The per-partition byte budget
+    // caps the carry; a partition that stops buffering reports itself
+    // incomplete and the batch stays distributed. The TOTAL byte gate
+    // below additionally bounds what may become a plan-embedded
+    // LocalRelation — with it, the row caps need not assume worst-case
+    // per-row strings, so ~1000-row short-string DML batches (the OLTP
+    // scenario shape) literalize instead of paying the distributed
+    // staging write.
     val byteBudget = LiteralizeByteBudget
     val fieldTypes = df.schema.fields.map(_.dataType)
-    val capped = rdd.mapPartitions({ it =>
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[catalyst.InternalRow]
+    // an RDD without partitions (AQE's empty-result plans) needs no
+    // job, and localCheckpoint would launch none: say so up front
+    // rather than post an empty job for the scheduler to count
+    val parts = if (rdd.partitions.isEmpty) Array.empty[PartStats]
+      else rdd.mapPartitions({ it =>
+      val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       // non-unsafe rows (driver-built RDD sources) carry no size; a
       // flat per-row guess could undercount wide rows past the byte
       // budget, so MEASURE them through an UnsafeProjection — the
@@ -137,10 +96,12 @@ object GraftBridge {
       lazy val toUnsafe =
         catalyst.expressions.UnsafeProjection.create(fieldTypes)
       var n = 0L
+      var t = 0L
       var bytes = 0L
       var complete = true
       it.foreach { r =>
         n += 1
+        t += tally(r)
         if (buf.length < keep && bytes <= byteBudget) {
           val u = r match {
             case u: catalyst.expressions.UnsafeRow => u
@@ -150,24 +111,25 @@ object GraftBridge {
           if (bytes <= byteBudget) buf += u else complete = false
         } else if (n > buf.length) complete = false
       }
-      Iterator.single((n, complete, bytes, buf.toArray))
+      Iterator.single(PartStats(n, t, complete, bytes, buf.toArray))
     }, preservesPartitioning = true).collect()
-    val counts = capped.map(_._1)
+    val counts = parts.map(_.rows)
+    val total = parts.map(_.tally).sum
     // total rows <= cap AND total bytes within ONE budget AND every
     // partition carried ALL its rows ==> the carried arrays are the
     // whole batch and small enough to live in a driver plan — safe to
     // become the batch
-    if (rowCap >= 0 && counts.sum <= rowCap &&
-        capped.map(_._3).sum <= LiteralizeByteBudget &&
-        capped.forall(_._2)) {
+    if (literalRowCap >= 0 && counts.sum <= literalRowCap &&
+        parts.map(_.bytes).sum <= byteBudget && parts.forall(_.complete)) {
       rdd.unpersist(false)
       val attrs = catalyst.types.DataTypeUtils.toAttributes(df.schema)
-      val rows = capped.iterator.flatMap(_._4).toIndexedSeq
-      (classic.Dataset.ofRows(cds.sparkSession,
-        catalyst.plans.logical.LocalRelation(attrs, rows)), counts, None)
+      val rows = parts.iterator.flatMap(_.carried).toIndexedSeq
+      Pin(classic.Dataset.ofRows(cds.sparkSession,
+        catalyst.plans.logical.LocalRelation(attrs, rows)), counts, total, None)
     } else {
       val plan = execution.LogicalRDD.fromDataset(rdd, cds, isStreaming = false)
-      (classic.Dataset.ofRows(cds.sparkSession, plan), counts, Some(rdd))
+      Pin(classic.Dataset.ofRows(cds.sparkSession, plan), counts, total,
+        Some(rdd))
     }
   }
 

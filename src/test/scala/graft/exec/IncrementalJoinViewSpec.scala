@@ -343,9 +343,35 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".parquet")).toSeq.sorted.head
     val orig = java.nio.file.Files.readAllBytes(part)
     java.nio.file.Files.write(part, orig.take(orig.length / 2))
-    intercept[Throwable] {
+    // the refresh runs under its own job group so its jobs — the
+    // forked ones included — can be told apart from everything else
+    val jobs = graft.GroupJobs(spark, "jf-mid-refresh")
+    val sc = spark.sparkContext
+    // RDD ids grow monotonically: anything the refresh persisted has a
+    // larger id than this probe RDD
+    val idFloor = sc.emptyRDD[Int].id
+    sc.setJobGroup(jobs.group, "failing refresh")
+    try intercept[Throwable] {
       e.sql("REFRESH MATERIALIZED VIEW jf INCREMENTALLY").collect()
-    }
+    } finally sc.clearJobGroup()
+    val failedAt = System.currentTimeMillis()
+    try {
+      jobs.sync()
+      // no job of the failed refresh is still running, and none ended
+      // later than a moment after the failure surfaced
+      assert(jobs.running.isEmpty, s"refresh jobs still running: ${jobs.running}")
+      jobs.ended.values.asScala.foreach { case (time, _) =>
+        assert(time <= failedAt + 1000L, s"a job ended ${time - failedAt} ms late")
+      }
+    } finally jobs.close()
+    // none of its cached refresh frames survive
+    val leaked = sc.getPersistentRDDs.keys.filter(_ > idFloor)
+    assert(leaked.isEmpty, s"refresh frames still cached: $leaked")
+    // and no staging dir is left under the base dir
+    val staging = java.nio.file.Files.walk(java.nio.file.Paths.get(e.baseDir))
+      .iterator().asScala.filter(_.getFileName.toString.startsWith(".txn-staging-"))
+      .toList
+    assert(staging.isEmpty, staging)
     // the engine is not wedged: other tables still serve
     assert(e.sql("SELECT COUNT(*) AS n FROM reg").collect()
       .head.getLong(0) === 3L)

@@ -105,4 +105,36 @@ class StreamingDedupSpec extends AnyFunSuite {
     // the empty middle batch left no events behind
     assert(rows("SELECT COUNT(*) AS n FROM docs FOR SYSTEM_TIME ALL") === Seq(Row(2L)))
   }
+  test("exactly InlineKeyCap non-null fingerprints plus NULLs probe the registry inline") {
+    // the NULL-fingerprint group's first row is no probe key: a batch of
+    // 256 (= InlineKeyCap) distinct non-null fingerprints plus NULL-text
+    // rows fits the inline IN-list probe and must take it
+    import scala.jdk.CollectionConverters._
+    val e = QueryEngine.scratch(spark)
+    setup(e)
+    def batch(rows: Seq[(Long, String)]) =
+      spark.createDataFrame(rows).toDF("doc_id", "text")
+    e.ingestStreamDeduped("docs", "seen", batch(Seq(1L -> "t0")),
+      md5(col("text")), None, 0L)
+    val rows = (0 until 256).map(i => (100L + i, s"t$i")) ++
+      Seq((1000L, null: String), (1001L, null: String))
+    val jobs = graft.GroupJobs(spark, "dedup-inline-cap")
+    val sc = spark.sparkContext
+    sc.setJobGroup(jobs.group, "boundary batch")
+    try e.ingestStreamDeduped("docs", "seen", batch(rows), md5(col("text")),
+      None, 1L)
+    finally sc.clearJobGroup()
+    try {
+      jobs.sync()
+      // the inline probe is the limit(cap + 1) collect of the batch's
+      // non-null fingerprints
+      assert(jobs.plans.asScala.exists(p =>
+          p.contains("CollectLimit") && p.contains("isnotnull(__fp")),
+        "the registry read skipped the inline IN-list probe")
+    } finally jobs.close()
+    // t0 was seen in the first batch; the NULL-text group keeps its
+    // lowest pk
+    assert(e.sql("SELECT doc_id FROM docs ORDER BY doc_id").collect()
+      .map(_.getLong(0)).toSeq === Seq(1L) ++ (101L until 356L) :+ 1000L)
+  }
 }
