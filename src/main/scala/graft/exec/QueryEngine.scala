@@ -3,9 +3,10 @@ package graft.exec
 import graft.catalog.{ColumnDef, TableCatalog, TableDef}
 import graft.log.EventLog
 import graft.sql.{IncrementalView, SqlText, Statement, StatementRouter, SystemTime, TemporalPre}
-import graft.state.{Snapshots, StateView}
+import graft.state.{DriverTails, Snapshots, StateView}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructField, StructType}
@@ -632,6 +633,11 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       validate: () => Unit = () => ()): Unit = {
     val stagingRoot = new Path(s"$baseDir/.txn-staging-${System.nanoTime()}")
     val fs = stagingRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // each touched table's tail as it stands before this publish, and
+    // the rows of every batch the driver writes itself
+    val tailsBefore = batches.map(_._1).distinct
+      .map(n => n -> catalog.get(n).flatMap(knownTail)).toMap
+    val written = Seq.newBuilder[(String, Option[(StructType, Seq[InternalRow])])]
     try {
       val lines = new StringBuilder
       batches.zipWithIndex.foreach { case ((table, ev), i) =>
@@ -658,7 +664,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           // statement floor (measured A/B in EncryptionSpec /
           // SURVEY §8); ANY driver-write failure falls back to the
           // job path after clearing partial output.
-          val droveIt =
+          val drove =
             try org.apache.spark.sql.GraftBridge.writeLocalParquet(ev,
               dir.toString, opts)
             catch {
@@ -667,9 +673,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
                 System.err.println(
                   s"[graft] driver-side staging of $table fell back " +
                     s"to the job write: ${e.getMessage}")
-                false
+                None
             }
-          if (!droveIt)
+          written += table -> drove.map(ev.schema -> _)
+          if (drove.isEmpty)
             encrypted(ev.write)
               .options(opts)
               .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
@@ -714,6 +721,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           try completePublish(stagingRoot, hooked = true)
           catch {
             case e: Throwable =>
+              tailsBefore.keys.foreach(tails.forget)
               publishIncomplete = true
               throw new CommitIncompleteException(
                 s"commit is durable but its publish did not finish; it " +
@@ -722,6 +730,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           }
       }
     }
+    tails.extend(tailsBefore, written.result(), catalog.lastSeq)
   }
 
   /** Set when a commit passed its manifest commit point but the publish
@@ -1175,6 +1184,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         require(cols.exists(_._1 == c), s"constraint column not declared: $c")
       catalog.createTable(name, pk,
         cols.map { case (c, ddl) => (c, DataType.fromDDL(ddl)) })
+      tails.forget(name)
       if (fkDefs.nonEmpty)
         catalog.setForeignKeys(name, fkDefs.map(f => (f.column, f.refTable, f.refColumn)))
       if (conDefs.nonEmpty)
@@ -2182,9 +2192,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // OF @SEQ:N cuts the chain by
       val (recorded, copied) = Backup.create(spark, baseDir, dir, parent,
         tableSeqs = catalog.tableNames.map(t => t -> catalog.lastSeq(t)).toMap)
-      spark.range(1).select(lit("backup").as("op"),
-        lit(recorded).as("files"), lit(copied).as("copied"),
-        lit(dir).as("path"))
+      oneRow("op" -> "backup", "files" -> recorded, "copied" -> copied,
+        "path" -> dir)
     case Statement.ShowCluster =>
       requirePerm("SHOW CLUSTER", "VIEW_METRICS")
       showCluster()
@@ -2218,6 +2227,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       }
       catalog.reload()
       lastSnapSeqs.clear()
+      tails.clear()
       // the audit trail is database state: the restore swapped its
       // files, so the unflushed tail is void and ids re-prime from the
       // restored log (the RESTORE record itself lands after, re-primed)
@@ -2227,16 +2237,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // resolving (the select path re-registers live ones lazily)
       for (t <- prevTables if catalog.get(t).isEmpty)
         spark.catalog.dropTempView(t)
-      spark.range(1).select(lit("restore").as("op"),
-        lit(n).as("files"), lit(restoredFrom).as("path"))
+      oneRow("op" -> "restore", "files" -> n, "path" -> restoredFrom)
     case Statement.VerifyBackup(dir) =>
       val (checked, bad) = Backup.verify(spark, dir)
       if (bad.nonEmpty)
         throw new IllegalStateException(
           s"backup verification failed (${bad.size}/${checked}): " +
             bad.take(3).mkString("; "))
-      spark.range(1).select(lit("verify").as("op"),
-        lit(checked).as("files"), lit("ok").as("status"))
+      oneRow("op" -> "verify", "files" -> checked, "status" -> "ok")
     case Statement.Call(name, args) => callProcedure(name, args)
     case Statement.DropTable(name, ifEx) =>
       // destructive DDL under the gate; the admin bundle carries
@@ -2259,6 +2267,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       }
       catalog.dropTable(name, ifEx)
       lastSnapSeqs.remove(name) // a recreated table starts fresh
+      tails.forget(name)
       // the select path registers session temp views lazily; drop any
       // stale one so the name stops resolving immediately
       spark.catalog.dropTempView(name)
@@ -2382,16 +2391,15 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
             s"unsupported COPY format: $other (JSONL | PARQUET | CSV)")
         }
       } finally if (zorderBy.nonEmpty) unpersistPinned(df)
-      spark.range(1).select(lit("export").as("op"),
-        lit(path).as("path"))
+      oneRow("op" -> "export", "path" -> path)
     case Statement.SetCache(on) =>
       cacheEnabled = on
       if (!on) { dropAllCached(); cacheHits = 0L; cacheMisses = 0L }
       summary(if (on) "cache_enabled" else "cache_disabled", 0L, 0L)
     case Statement.ShowCache =>
-      spark.range(1).select(lit(cacheEnabled).as("enabled"),
-        lit(resultCache.size().toLong).as("entries"),
-        lit(cacheHits).as("hits"), lit(cacheMisses).as("misses"))
+      oneRow("enabled" -> cacheEnabled,
+        "entries" -> resultCache.size().toLong, "hits" -> cacheHits,
+        "misses" -> cacheMisses)
     case Statement.ClearCache =>
       dropAllCached()
       summary("cache_cleared", 0L, 0L)
@@ -2869,6 +2877,33 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   private def logDir(table: String) = catalog.logPath(table)
 
+  // ------------------------------------------------ driver-resident tail
+
+  /** Each table's log tail as the driver wrote it (see DriverTails),
+    * within the pin-literalization caps. Dropped by RESTORE, DROP/CREATE
+    * TABLE, VACUUM and REPAIR; a fresh engine knows none. */
+  private val tails = new DriverTails(PinLiteralizeMaxRows,
+    GraftBridge.LiteralizeByteBudget)
+
+  private def knownTail(t: TableDef): Option[DriverTails.Tail] =
+    if (t.attached.isDefined) None
+    else tails.get(t.name, catalog.lastSeq(t.name),
+      Snapshots.nearest(spark, catalog.snapshotPath(t.name), None),
+      t.payloadSchema)
+
+  /** The tail events a state read needs — those in (snapshot, bound] —
+    * when the driver holds them. Not for transactions (buffered events
+    * union in), attached logs, or dmlRead reads (their row order becomes
+    * event order, which the keyed plan fixes). */
+  private def tailAbove(t: TableDef, base: Option[Long], asOf: Option[Long],
+      dmlRead: Boolean): Option[Seq[InternalRow]] =
+    if (dmlRead || dmlReadScope || txn.isDefined || t.attached.isDefined) None
+    else {
+      val last = catalog.lastSeq(t.name)
+      tails.between(knownTail(t), base.getOrElse(0L),
+        asOf.fold(last)(math.min(_, last)), last, t.payloadSchema)
+    }
+
   /** State at a sequence, snapshot-accelerated: replay starts from the
     * nearest checkpoint <= target instead of sequence 0
     * (optimizer.rs:296-307). */
@@ -2908,7 +2943,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       throw new IllegalStateException(
         s"AS OF sequence $a is below the retention floor $floor of " +
           s"$table — the events were vacuumed")
-    val ev = events(t)
+    // the log scan (a file listing) only when the read needs it
+    lazy val ev = events(t)
     // inside a transaction the checkpoint choice is bounded by the
     // snapshot horizon too — an auto-snapshot another session took
     // AFTER our snapshot would otherwise leak its post-snapshot events
@@ -2922,62 +2958,57 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       case _ => asOf.orElse(snapCap)
     }
     val base = Snapshots.nearest(spark, catalog.snapshotPath(table), bound)
-    // flat-log certificate: the live log holds only INSERT events with
-    // distinct pks (every landed batch was probe- or construction-
-    // certified), so the keyed collapse is an identity — serve the log
-    // (or snapshot + tail) as a FLAT scan with no window exchange. At
-    // 100 TB this is THE read path for append-only fact tables: filters
-    // and column pruning reach the parquet scan directly, at any AS OF
-    // bound, snapshot or not. In-transaction reads keep the windowed
-    // path (buffered events union in).
-    // also valid INSIDE a transaction while the table has no buffered
-    // writes: events(t) is already horizon-capped, and a first-access
-    // read sees exactly the bare log
-    val flat = !dmlRead && !dmlReadScope &&
-      t.attached.isEmpty && catalog.isFlatLog(t.name) &&
-      txn.forall(tx => !tx.pending.exists(_._1 == t.name))
+    def snapshotScan(snapSeq: Long): DataFrame =
+      Snapshots.read(spark, catalog.snapshotPath(table), snapSeq,
+        Some(EventLog.schema(t.payloadSchema)))
     def payloadFlat(df: DataFrame): DataFrame = {
       val fields = df.schema("payload").dataType
         .asInstanceOf[org.apache.spark.sql.types.StructType]
         .fieldNames.toIndexedSeq
       df.select(fields.map(f => col(s"payload.`$f`").as(f)): _*)
     }
-    // keyed collapse: the pk output column IS the window partition
-    // attribute, so pk predicates push below the collapse to the scan
-    val collapsed = base match {
-      case Some(snapSeq) if !dmlRead && !dmlReadScope &&
-          txn.isEmpty && t.attached.isEmpty &&
-          snapSeq >= math.min(
-            asOf.getOrElse(Long.MaxValue), catalog.lastSeq(t.name)) =>
-        // the checkpoint IS the state at the read bound — no tail
-        // events past it, and a checkpoint holds each live pk exactly
-        // once as a collapsed INSERT, so the keyed window would be an
-        // identity. Serve the flat columnar scan instead: predicates
-        // and column pruning reach the parquet scan with NO window
-        // exchange in the plan. At 100 TB this makes every
-        // post-checkpoint read a plain scan; in-transaction reads
-        // keep the windowed path (buffered events union in), and
-        // ATTACHED event logs are excluded — they carry no sequence
-        // counter, so "no tail past the checkpoint" cannot be decided
-        // from metadata for them.
-        val snap = Snapshots.read(spark, catalog.snapshotPath(table), snapSeq,
-          Some(EventLog.schema(t.payloadSchema)))
-        snap.select(t.payloadSchema.fieldNames.toIndexedSeq
-          .map(f => col(s"payload.`$f`").as(f)): _*)
-      case Some(snapSeq) =>
-        val tail = asOf.fold(ev.where(col("sequence") > snapSeq))(s =>
-          ev.where(col("sequence") > snapSeq && col("sequence") <= s))
-        val snap = Snapshots.read(spark, catalog.snapshotPath(table), snapSeq,
-          Some(EventLog.schema(t.payloadSchema)))
-        val union = snap.unionByName(tail, allowMissingColumns = true)
-        // flat: snapshot pks (collapsed state at snapSeq) and tail pks
-        // (all new inserts) are disjoint by the certificate, so the
-        // union IS the state
-        if (flat) payloadFlat(union)
-        else StateView.stateAtKeyed(union, None, t.pkPhysical)
-      case None if flat =>
-        payloadFlat(asOf.fold(ev)(s => ev.where(col("sequence") <= s)))
-      case None => StateView.stateAtKeyed(ev, asOf, t.pkPhysical)
+    val collapsed = tailAbove(t, base, asOf, dmlRead) match {
+      // the read is the snapshot (if any) plus tail events the driver
+      // holds: fold them on the driver and serve a FLAT plan with no
+      // window and no exchange (see StateView.overTail). With an empty
+      // tail this is the bare checkpoint scan; with no snapshot it is a
+      // LocalRelation and runs no job.
+      case Some(rows) =>
+        StateView.overTail(spark, base.map(snapshotScan), rows,
+          t.payloadSchema, t.pkPhysical)
+      // otherwise the log slice after the snapshot is read from storage
+      case None =>
+        // flat-log certificate: the live log holds only INSERT events
+        // with distinct pks (every landed batch was probe- or
+        // construction-certified), so the keyed collapse is an identity
+        // — serve the log (or snapshot + log slice) as a FLAT scan with
+        // no window exchange. At 100 TB this is THE read path for
+        // append-only fact tables: filters and column pruning reach the
+        // parquet scan directly, at any AS OF bound, snapshot or not.
+        // Also valid inside a transaction while the table has no
+        // buffered writes: events(t) is already horizon-capped, and a
+        // first-access read sees exactly the bare log
+        val flat = !dmlRead && !dmlReadScope &&
+          t.attached.isEmpty && catalog.isFlatLog(t.name) &&
+          txn.forall(tx => !tx.pending.exists(_._1 == t.name))
+        // else the keyed collapse: the pk output column IS the window
+        // partition attribute, so pk predicates push below the collapse
+        // to the scan
+        base match {
+          case Some(snapSeq) =>
+            val tail = asOf.fold(ev.where(col("sequence") > snapSeq))(s =>
+              ev.where(col("sequence") > snapSeq && col("sequence") <= s))
+            val union = snapshotScan(snapSeq)
+              .unionByName(tail, allowMissingColumns = true)
+            // flat: snapshot pks (collapsed state at snapSeq) and tail
+            // pks (all new inserts) are disjoint by the certificate, so
+            // the union IS the state
+            if (flat) payloadFlat(union)
+            else StateView.stateAtKeyed(union, None, t.pkPhysical)
+          case None if flat =>
+            payloadFlat(asOf.fold(ev)(s => ev.where(col("sequence") <= s)))
+          case None => StateView.stateAtKeyed(ev, asOf, t.pkPhysical)
+        }
     }
     // column mapping: physical payload fields -> logical names; a
     // column added by ALTER before any event carries it reads as NULL
@@ -3194,6 +3225,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           case _ => snapshot(table)
         }
         lastSnapSeqs(table) = catalog.lastSeq(table)
+        tails.atSnapshot(table, lastSeq, catalog.lastSeq(table),
+          catalog.require(table).payloadSchema)
       }
     }
 
@@ -3239,8 +3272,20 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   private def summary(op: String, n: Long, lastSeq: Long): DataFrame = {
     lastAffected = Some(n) // side channel for the audit record
-    spark.range(1).select(lit(op).as("op"), lit(n).as("n_affected"),
-      lit(lastSeq).as("last_sequence"))
+    oneRow("op" -> op, "n_affected" -> n, "last_sequence" -> lastSeq)
+  }
+
+  /** A one-row result frame of non-null literal columns (DML summaries,
+    * utility results) as a LocalRelation: collecting it — the PG server
+    * reads every DML statement's n_affected — runs no Spark job and
+    * compiles no code. Column types are those `lit` gives the values. */
+  private def oneRow(cols: (String, Any)*): DataFrame = {
+    val lits = cols.map { case (_, v) =>
+      org.apache.spark.sql.catalyst.expressions.Literal(v) }
+    GraftBridge.localFrame(spark,
+      StructType(cols.zip(lits).map { case ((n, _), l) =>
+        StructField(n, l.dataType, nullable = false) }),
+      Seq(InternalRow.fromSeq(lits.map(_.value))))
   }
 
   // ============================================================ audit
@@ -5330,6 +5375,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       else Snapshots.write(src, snapDir, seq, opts)
     }
     lastSnapSeqs(table) = math.max(lastSnapSeqs.getOrElse(table, 0L), seq)
+    tails.atSnapshot(table, seq, catalog.lastSeq(table), t.payloadSchema)
     metricSnapshots += 1
     summary("snapshot", 0L, seq)
   }
@@ -5458,6 +5504,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       Snapshots.delete(spark, snapDir, s)
     catalog.setRetentionFloor(table, floor)
     lastSnapSeqs(table) = math.max(lastSnapSeqs.getOrElse(table, 0L), floor)
+    tails.forget(table)
     summary("vacuumed", deleted, floor)
   }
 
@@ -5981,9 +6028,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       val t0 = System.nanoTime()
       val n = df.queryExecution.executedPlan.execute().count()
       val elapsedMs = (System.nanoTime() - t0) / 1e6
-      spark.range(1).select(lit(text).as("plan"), lit(n).as("n_rows"),
-        lit(elapsedMs).as("elapsed_ms"))
-    } else spark.range(1).select(lit(text).as("plan"))
+      oneRow("plan" -> text, "n_rows" -> n, "elapsed_ms" -> elapsedMs)
+    } else oneRow("plan" -> text)
   }
 
   /** Physical plan tree → YAML: one `- node/detail/children` mapping
@@ -6037,8 +6083,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         max = row.getAs[String](s"max_${c.logical}"))
     }.toMap
     analyzeHistograms(table, state, nRows, row)
-    spark.range(1).select(lit(table).as("table"),
-      lit(nRows).as("n_rows"))
+    oneRow("table" -> table, "n_rows" -> nRows)
   }
 
   /** Equi-width 10-bucket histograms for every numeric column
@@ -6338,6 +6383,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // invalidate the snapshot bookkeeping snapshot() consults, then
     // rebuild the current checkpoint from the readable artifacts
     lastSnapSeqs.remove(t.name)
+    tails.forget(t.name)
     snapshot(table)
     out += (("checkpoint", t.name,
       s"rebuilt at seq=${catalog.lastSeq(t.name)}"))

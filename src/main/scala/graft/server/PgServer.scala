@@ -766,8 +766,9 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
     "EXPLAIN", "DESCRIBE", "DIFF")
 
   /** The affected-row count from the engine's DML summary frame
-    * ((op, n_affected, last_sequence) — a literal one-row frame; the
-    * DML side effects already ran eagerly when the statement did). */
+    * ((op, n_affected, last_sequence) — a one-row LocalRelation, so the
+    * collect runs no Spark job; the DML side effects already ran
+    * eagerly when the statement did). */
   private def affectedRows(df: DataFrame): Long =
     if (df.schema.fieldNames.contains("n_affected"))
       df.select("n_affected").collect().headOption.fold(0L)(_.getLong(0))

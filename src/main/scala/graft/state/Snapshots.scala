@@ -12,12 +12,15 @@ import org.apache.spark.sql.functions._
   *
   * A snapshot at sequence S is the collapsed state at S stored as
   * synthetic INSERT events (full documents, sequence = winning event's
-  * sequence). A read AS OF T >= S then unions the snapshot with only
-  * the events in (S, T] and collapses — replay cost is proportional to
-  * the tail, not the full history. At 100 TB this is the difference
-  * between scanning the whole log and scanning one checkpoint + a
-  * sequence-pruned slice (parquet min/max on `sequence` skips all
-  * pre-snapshot files).
+  * sequence). A read AS OF T >= S is this snapshot plus the events in
+  * (S, T]. When the engine holds those events on the driver (the
+  * literal batches it wrote since the newest snapshot), it folds them
+  * there and the read is a flat scan of the snapshot with no shuffle.
+  * Otherwise it unions the snapshot with the sequence-pruned log slice
+  * and collapses — replay cost is proportional to the tail, not the
+  * full history. At 100 TB this is the difference between scanning
+  * the whole log and scanning one checkpoint + a sequence-pruned slice
+  * (parquet min/max on `sequence` skips all pre-snapshot files).
   *
   * Layout: `<dir>/seq=<S>` for the initial checkpoint at S, and
   * `<dir>/seq=<S>.v<K>` for rewrites of the SAME state with a better

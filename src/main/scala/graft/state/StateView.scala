@@ -1,9 +1,14 @@
 package graft.state
 
 import graft.log.EventLog
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** State reconstruction over an event log — the engine's one genuinely
   * custom operator (SURVEY §7.3).
@@ -18,11 +23,15 @@ import org.apache.spark.sql.functions._
   * document plus any later PATCHes. Patches that arrive after a delete
   * but before the next insert never resurrect the row.
   *
-  * Scale: both collapse variants are a single hash shuffle on pk (all
-  * windows share the partitioning, so Catalyst plans one Exchange);
-  * with the log bucketed by pk the shuffle disappears entirely.
-  * `sequence` is monotonically increasing, so time-travel predicates
-  * prune whole parquet files via min/max stats before any shuffle.
+  * Scale: a read is the nearest snapshot plus the events after it.
+  * When the driver holds those events itself (the engine keeps the
+  * literal batches it wrote since the newest snapshot), `overTail`
+  * folds them on the driver and the read is a flat snapshot scan with
+  * no shuffle at all. Otherwise the collapse variants below are a
+  * single hash shuffle on pk (all windows share the partitioning, so
+  * Catalyst plans one Exchange). `sequence` is monotonically
+  * increasing, so time-travel predicates prune whole parquet files via
+  * min/max stats before any shuffle.
   */
 object StateView {
 
@@ -94,6 +103,86 @@ object StateView {
         if (f == pkPhysical) col("__pkv").as(f)
         else col(s"payload.`$f`").as(f))
         :+ col(OldWinCol) :+ col(NewWinCol): _*)
+  }
+
+  /** A driver-side fold of event rows above a base state, keyed on the
+    * top-level `pk` string (see `collapsedFrames`):
+    *   - `live`: payload rows of keys whose latest INSERT in the rows
+    *     outlives their latest SOFT_DELETE — each the key's last event;
+    *   - `patched`: (pk, payload) of keys the rows only PATCH. Such a
+    *     key is live iff the base state holds it, with the last
+    *     PATCH's payload as its row;
+    *   - `keys`: every key the rows touch. The base state's row of
+    *     such a key is superseded by the above, or deleted.
+    * These are the live-epoch rules of `collapsedBy` applied to base +
+    * rows, given that every base row is an INSERT older than the rows. */
+  private final case class TailFold(live: Seq[InternalRow],
+      patched: Seq[(String, InternalRow)], keys: Seq[String])
+
+  /** Fold event rows (`EventLog.schema` layout, payload of `nFields`
+    * fields) in sequence order. A PATCH after a SOFT_DELETE stays a
+    * no-op, as in the windowed fold; any type other than INSERT and
+    * SOFT_DELETE folds as a PATCH, as it does there. */
+  private def foldTail(events: Seq[InternalRow], nFields: Int): TailFold = {
+    // per key: Some(true) live, Some(false) deleted, None patch-only
+    val st = scala.collection.mutable.LinkedHashMap
+      .empty[String, (Option[Boolean], InternalRow)]
+    for (e <- events.sortBy(_.getLong(0))) {
+      val k = e.getUTF8String(3).toString
+      val kind = e.getUTF8String(2).toString
+      st(k) =
+        if (kind == EventLog.INSERT) (Some(true), e.getStruct(4, nFields))
+        else if (kind == EventLog.SOFT_DELETE) (Some(false), null)
+        else st.get(k) match {
+          case Some((Some(false), _)) => (Some(false), null)
+          case Some((state, _)) => (state, e.getStruct(4, nFields))
+          case None => (None, e.getStruct(4, nFields))
+        }
+    }
+    TailFold(
+      st.valuesIterator.collect { case (Some(true), p) => p }.toSeq,
+      st.iterator.collect { case (k, (None, p)) => (k, p) }.toSeq,
+      st.keys.toSeq)
+  }
+
+  /** The state at a bound from a snapshot (its INSERT frames, each live
+    * pk once; None = empty state) and the exact events between the
+    * snapshot and the bound, held on the driver (`EventLog.schema`
+    * rows). The events fold on the driver (`foldTail`) and the result
+    * is a FLAT plan over the payload columns:
+    *   - the snapshot scan minus the keys the events supersede or
+    *     delete;
+    *   - a key the events only PATCH keeps its snapshot row — it is
+    *     live iff the snapshot holds it — with the last PATCH's values,
+    *     looked up field by field in a literal map keyed on pk;
+    *   - union the events' live rows as a LocalRelation.
+    * No window, no exchange and no broadcast, so a read runs one job
+    * (none without a snapshot). The pk column is the scan's own, so a
+    * pk predicate pushes into the snapshot scan; it prunes the
+    * LocalRelation on the driver. */
+  def overTail(spark: SparkSession, snapshot: Option[DataFrame],
+      events: Seq[InternalRow], payload: StructType,
+      pkPhysical: String): DataFrame = {
+    val fold = foldTail(events, payload.length)
+    val live = GraftBridge.localFrame(spark, payload, fold.live)
+    snapshot.fold(live) { snap =>
+      val patched = fold.patched.map(_._1).toSet
+      val gone = fold.keys.filterNot(patched)
+      val kept = if (gone.isEmpty) snap else snap.where(!col("pk").isin(gone: _*))
+      // per field, so the scan still reads only the payload fields a
+      // query uses
+      val patch = GraftBridge.column(Literal(
+        new ArrayBasedMapData(
+          new GenericArrayData(fold.patched.map(kp => UTF8String.fromString(kp._1))),
+          new GenericArrayData(fold.patched.map(_._2))),
+        MapType(StringType, payload))).getItem(col("pk"))
+      val state = kept.select(payload.fieldNames.toIndexedSeq.map { f =>
+        val stored = col(s"payload.`$f`")
+        (if (f == pkPhysical || patched.isEmpty) stored
+         else when(patch.isNotNull, patch.getField(f)).otherwise(stored)).as(f)
+      }: _*)
+      if (fold.live.isEmpty) state else state.unionByName(live)
+    }
   }
 
   /** Winning event per live key (all windows share `key`'s hash

@@ -122,10 +122,8 @@ object GraftBridge {
     if (literalRowCap >= 0 && counts.sum <= literalRowCap &&
         parts.map(_.bytes).sum <= byteBudget && parts.forall(_.complete)) {
       rdd.unpersist(false)
-      val attrs = catalyst.types.DataTypeUtils.toAttributes(df.schema)
-      val rows = parts.iterator.flatMap(_.carried).toIndexedSeq
-      Pin(classic.Dataset.ofRows(cds.sparkSession,
-        catalyst.plans.logical.LocalRelation(attrs, rows)), counts, total, None)
+      Pin(localFrame(cds.sparkSession, df.schema,
+        parts.iterator.flatMap(_.carried).toIndexedSeq), counts, total, None)
     } else {
       val plan = execution.LogicalRDD.fromDataset(rdd, cds, isStreaming = false)
       Pin(classic.Dataset.ofRows(cds.sparkSession, plan), counts, total,
@@ -146,10 +144,11 @@ object GraftBridge {
     * from the job path's output. The file lands in `dir` under a
     * Spark-shaped part name carrying a fresh uuid (publish renames by
     * NAME into a shared log dir) and the CODEC's true extension.
-    * Returns false (nothing written) when the plan is NOT a
-    * LocalRelation; callers fall back to the job write. */
+    * Returns the rows it wrote, in `df.schema`, or None (nothing
+    * written) when the plan is NOT a LocalRelation; callers fall back
+    * to the job write. */
   def writeLocalParquet(df: DataFrame, dir: String,
-      options: Map[String, String]): Boolean = {
+      options: Map[String, String]): Option[Seq[InternalRow]] = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
     // a coalesce(1) over a literal batch (the small-batch single-file
     // discipline) is a no-op for a single driver-written file — see
@@ -219,10 +218,18 @@ object GraftBridge {
               .getFileEncryptionProperties(conf, p, null))
         val w = b.build()
         try lr.data.foreach(w.write) finally w.close()
-        true
-      case None => false
+        Some(lr.data)
+      case None => None
     }
   }
+
+  /** A driver-resident frame over `rows` (InternalRows in `schema`):
+    * a LocalRelation, so reading it runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** Register a SQL function on an ALREADY-RUNNING session (notebooks,
     * tests). `spark.sql.extensions` is a static conf applied only at

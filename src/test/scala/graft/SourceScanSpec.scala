@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source-level guards on the engine's single primitives: one function
-  * builds a pin (GraftBridge.pin) and one helper starts pool work
-  * (graft.exec.Par). A new pin variant or a hand-rolled thread fails
+  * builds a pin (GraftBridge.pin), one helper starts pool work
+  * (graft.exec.Par) and one builds one-row result frames
+  * (QueryEngine.oneRow). A new pin variant or a hand-rolled thread fails
   * here instead of quietly growing a second copy of either. Comment
   * lines are ignored, so docs may name what the code must not do. */
 class SourceScanSpec extends AnyFunSuite {
@@ -42,6 +43,14 @@ class SourceScanSpec extends AnyFunSuite {
     val bridge = "org/apache/spark/sql/GraftBridge.scala"
     for (p <- Seq("toRdd.map(_.copy())", "LogicalRDD.fromDataset"))
       assert(occurrences(p) == Map(bridge -> 1), p)
+  }
+
+  test("one-row result frames come from QueryEngine.oneRow, not a range job") {
+    // a spark.range(1) frame runs a job (and compiles code) when read;
+    // oneRow's LocalRelation does neither
+    assert(occurrences("spark.range(1).select(").isEmpty)
+    assert(occurrences("private def oneRow(") ==
+      Map("graft/exec/QueryEngine.scala" -> 1))
   }
 
   test("only Par starts pool work; PgServer keeps its own threads") {

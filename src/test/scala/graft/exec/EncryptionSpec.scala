@@ -96,7 +96,7 @@ class EncryptionSpec extends AnyFunSuite {
     val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     val dir = java.nio.file.Files.createTempDirectory("graft-encw-").toString
     val wrote = org.apache.spark.sql.GraftBridge.writeLocalParquet(df, dir,
-      Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId))
+      Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId)).isDefined
     assert(wrote, "literal frame should take the driver write")
     val parts = new java.io.File(dir).listFiles.toSeq
       .filter(_.getName.startsWith("part-"))

@@ -131,16 +131,29 @@ class PlanQualitySpec extends AnyFunSuite {
   test("pk point lookups push through the state collapse to the scan") {
     val e = graft.exec.QueryEngine.scratch(spark)
     e.sql("CREATE TABLE pt (k BIGINT PRIMARY KEY, v STRING)")
-    e.sql("INSERT INTO pt SELECT id, CONCAT('v', id) FROM range(1000)")
+    // past the literal row cap, so the batch is job-written and the
+    // read collapses the log from storage (a smaller literal batch
+    // would stay on the driver and read as a LocalRelation)
+    e.sql("INSERT INTO pt SELECT id, CONCAT('v', id) FROM range(9000)")
+    e.sql("UPDATE pt SET v = 'u' WHERE k < 2000") // PATCHes: a real collapse
     val df = e.sql("SELECT k, v FROM pt WHERE k = 77")
     val p = plan(df)
     // the collapse is keyed on the payload pk attribute, so the
     // equality must reach the parquet scan as a pushed nested filter -
     // a plan that collapses the whole log first fails a 100 TB point
     // lookup no matter how fast everything above it is
-    assert(p.contains("EqualTo(payload.k,77)"),
+    assert(p.contains("Window") && p.contains("EqualTo(payload.k,77)"),
       "pk predicate did not reach the scan:\n" + p.take(3000))
-    assert(df.collect().map(_.getLong(0)).toSeq === Seq(77L))
+    assert(df.collect().map(_.getString(1)).toSeq === Seq("u"))
+    // a snapshot plus a driver-held tail that PATCHes the key: the
+    // predicate reaches the snapshot scan, and no collapse remains
+    e.sql("SNAPSHOT pt")
+    e.sql("UPDATE pt SET v = 't' WHERE k = 77")
+    val dt = e.sql("SELECT k, v FROM pt WHERE k = 77")
+    val pt = plan(dt)
+    assert(!pt.contains("Window") && pt.contains("EqualTo(payload.k,77)"),
+      "pk predicate did not reach the snapshot scan:\n" + pt.take(3000))
+    assert(dt.collect().map(_.getString(1)).toSeq === Seq("t"))
     e.close()
   }
 
@@ -149,12 +162,25 @@ class PlanQualitySpec extends AnyFunSuite {
     e.sql("""CREATE TABLE wide (k BIGINT PRIMARY KEY, a STRING, b STRING,
             |c STRING, d STRING, e2 STRING, f STRING, g STRING)""".stripMargin
       .replace("\n", " "))
-    e.sql("INSERT INTO wide SELECT id, 'a','b','c','d','e','f','g' FROM range(10)")
+    // past the literal row cap: the read collapses the log from storage
+    e.sql("INSERT INTO wide SELECT id, 'a','b','c','d','e','f','g' FROM range(9000)")
+    e.sql("UPDATE wide SET a = 'x' WHERE k < 10")
+    def payloadReads(p: String): Seq[String] =
+      "payload:struct<([^>]*)>".r.findAllMatchIn(p).map(_.group(1)).toSeq
     val p = plan(e.sql("SELECT k, a FROM wide"))
-    val structs = "payload:struct<([^>]*)>".r.findAllMatchIn(p).map(_.group(1)).toSeq
-    assert(structs.nonEmpty, p.take(2000))
+    val structs = payloadReads(p)
+    assert(p.contains("Window") && structs.nonEmpty, p.take(2000))
     assert(structs.forall(_.split(",").length <= 2),
       s"collapse read the whole payload for a 2-column query: $structs")
+    // a snapshot plus a driver-held tail that PATCHes keys: the
+    // snapshot scan reads the two fields too
+    e.sql("SNAPSHOT wide")
+    e.sql("UPDATE wide SET b = 'y' WHERE k = 3")
+    val pt = plan(e.sql("SELECT k, a FROM wide"))
+    val tailStructs = payloadReads(pt)
+    assert(!pt.contains("Window") && tailStructs.nonEmpty, pt.take(2000))
+    assert(tailStructs.forall(_.split(",").length <= 2),
+      s"snapshot scan read the whole payload for a 2-column query: $tailStructs")
     e.close()
   }
 
