@@ -108,10 +108,9 @@ final class TableCatalog(spark: SparkSession, val baseDir: String) {
   private val mviews = mutable.LinkedHashMap.empty[String, (String, Long)]
   // incremental-refresh horizons per matview: base table -> last
   // refresh sequence — recorded only for views whose SQL is
-  // incrementally maintainable (IncrementalView.parse/parseJoin) over
-  // engine tables; single-table views carry one entry, join views one
-  // per side (persisted as one `mviewbase` line each, so pre-join
-  // catalogs load unchanged)
+  // incrementally maintainable (IncrementalView.parse) over engine
+  // tables; one entry per table of the view's chain (persisted as one
+  // `mviewbase` line each, so pre-join catalogs load unchanged)
   private val mviewBases = mutable.HashMap.empty[String, Map[String, Long]]
   // views that refresh themselves incrementally at the end of any
   // statement that advanced a base table past their horizon
@@ -478,17 +477,6 @@ final class TableCatalog(spark: SparkSession, val baseDir: String) {
     mviews(name) = (sql, version)
     save()
   }
-
-  /** Record the incremental-refresh horizon: the view's data version
-    * reflects `table`'s state at exactly `seq` (other tables' entries
-    * are kept — a join view anchors one horizon per side). */
-  def setMviewBase(name: String, table: String, seq: Long): Unit = {
-    mviewBases(name) = mviewBases.getOrElse(name, Map.empty) + (table -> seq)
-    save()
-  }
-
-  def mviewBase(name: String): Option[(String, Long)] =
-    mviewBases.get(name).flatMap(_.headOption)
 
   /** Version bump + horizon re-anchors in ONE atomic catalog save: a
     * crash between separate saves would leave a bumped data version

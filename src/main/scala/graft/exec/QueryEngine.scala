@@ -1240,56 +1240,20 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // data lands before the registration: a registered matview is
         // always readable (crash between the two leaves only an
         // unreferenced data dir, cleaned by the next CREATE or DROP)
-        incShapeOf(viewSql) match {
+        shapeOf(viewSql) match {
           case Some(sh) =>
             // maintainable shape: populate WITH the hidden support
-            // columns at a pinned sequence, so INCREMENTALLY can later
-            // merge deltas from exactly this horizon
-            val r = catalog.lastSeq(sh.table)
-            val st0 = stateAt(sh.table, Some(r).filter(_ > 0))
-            val agged = IncrementalView.aggregate(st0, sh)
-            // HAVING resolves against the view's VISIBLE output
-            // columns plus the rewrite-minted __graft_h_* having
-            // accumulators — analysis-check it against that frame NOW
-            // so a typo (or a reference to a __graft_* support column
-            // the read path strips) fails the CREATE, not the first
-            // read (the filter itself applies at read time)
-            sh.having.foreach(h => agged
-              .drop(agged.columns.filter(c => IncrementalView.hidden(c) &&
-                !c.startsWith(IncrementalView.HavingAggPrefix)).toIndexedSeq: _*)
-              .where(expr(h)).queryExecution.analyzed)
-            encrypted(agged.write)
-              .mode("overwrite").parquet(catalog.mviewDataPath(name, 0L))
-            writeAuxes(sh.filtered(st0),
-              sh.groupKeys, IncrementalView.auxAggs(sh.aggs), name, 0L)
+            // columns at pinned sequences of EVERY table, so
+            // INCREMENTALLY can later merge deltas from exactly these
+            // horizons; they land in ONE catalog save (a crash mid-way
+            // must not leave partial horizons)
+            val hs = populateShape(name, sh, 0L)
             catalog.createMaterializedView(name, viewSql)
-            catalog.setMviewRefreshed(name, 0L, Map(sh.table -> r))
-          case None => joinShapeOf(viewSql) match {
-            case Some(js) =>
-              // maintainable join shape: populate through the same
-              // aliased-join aggregation (hidden columns included) at
-              // pinned sequences of EVERY side; horizons land in ONE
-              // catalog save (a crash mid-way must not leave partial
-              // horizons)
-              val hs = js.tables.map(tn => tn -> catalog.lastSeq(tn)).toMap
-              val frames0 = js.tables.map(tn =>
-                stateAt(tn, Some(hs(tn)).filter(_ > 0)))
-              val agged = IncrementalView.aggregateJoin(frames0, js)
-              js.having.foreach(h => agged
-                .drop(agged.columns.filter(c => IncrementalView.hidden(c) &&
-                  !c.startsWith(IncrementalView.HavingAggPrefix)).toIndexedSeq: _*)
-                .where(expr(h)).queryExecution.analyzed)
-              encrypted(agged.write)
-                .mode("overwrite").parquet(catalog.mviewDataPath(name, 0L))
-              writeAuxes(js.joined(frames0), js.groupKeys,
-                IncrementalView.auxAggs(js.aggs), name, 0L)
-              catalog.createMaterializedView(name, viewSql)
-              catalog.setMviewRefreshed(name, 0L, hs)
-            case None =>
-              encrypted(select(viewSql).write).mode("overwrite")
-                .parquet(catalog.mviewDataPath(name, 0L))
-              catalog.createMaterializedView(name, viewSql)
-          }
+            catalog.setMviewRefreshed(name, 0L, hs)
+          case None =>
+            encrypted(select(viewSql).write).mode("overwrite")
+              .parquet(catalog.mviewDataPath(name, 0L))
+            catalog.createMaterializedView(name, viewSql)
         }
         summary("materialized_view_created", 0L, 0L)
       }
@@ -1306,508 +1270,381 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // (views.rs:40-123 refresh; the versioned-dir swap is how an
       // object store serves this without read-write races)
       val prev = catalog.mviewVersion(name)
-      val op = (incShapeOf(viewSql), incremental) match {
+      val op = (shapeOf(viewSql), incremental) match {
         case (Some(sh), true) =>
           // INCREMENTAL: merge the signed contributions of only the
-          // rows TOUCHED since the last refresh horizon. The two state
-          // reads are semi-join-restricted to touched pks; the
-          // aggregation shuffles O(touched) rows and the merge joins on
-          // the view's own key space — never a full re-aggregation.
-          val (baseT, r) = catalog.mviewBase(name).getOrElse(
+          // rows TOUCHED since the last refresh horizons — the
+          // counting-algorithm TELESCOPING delta (round 17; for one
+          // table just ΔA, for two ΔA⋈B_new + A_old⋈ΔB) over the
+          // touched rows of each table, exact under ARBITRARY
+          // updates/deletes (a sketch-bearing view additionally
+          // probes the delta for negative-signed sketch values — see
+          // the dispatch below). Each Δ side's state reads are
+          // restricted to touched pks; the aggregation shuffles
+          // O(touched) rows and the merge joins on the view's own key
+          // space — never a full re-aggregation. Every delta term
+          // carries at least one Δ side, and each FULL side of a join
+          // prunes to the keys that reach a delta, so a small refresh
+          // reads only the matching row groups of a 100 TB partner
+          // table instead of scanning it.
+          val bases = catalog.mviewBaseAll(name)
+          val sides = sh.tables
+          if (!sides.forall(bases.contains))
             throw new IllegalStateException(
-              s"$name has no recorded refresh horizon — run a full REFRESH first"))
-          val t = catalog.require(baseT)
-          val horizon = catalog.lastSeq(baseT)
-          if (catalog.retentionFloor(baseT) > r)
-            throw new IllegalStateException(
-              s"events since the last refresh horizon @SEQ:$r of $name were " +
-                "vacuumed — run a full (non-incremental) REFRESH")
-          // a sequence counter BELOW the horizon means the base was
-          // dropped and recreated — the view's content refers to a
-          // table that no longer exists, which no delta can mend
-          if (horizon < r)
-            throw new IllegalStateException(
-              s"$name's refresh horizon @SEQ:$r is ahead of $baseT's " +
-                s"sequence counter ($horizon) — the table was dropped " +
-                "and recreated. Run a full (non-incremental) REFRESH")
-          if (horizon > r) {
-            val restrict = touchedRestrictor(t, r, horizon)
-            val stored = spark.read.parquet(catalog.mviewDataPath(name, prev))
-            // both horizon states from ONE pruned scan where the
-            // bounds share a checkpoint source (round 16) — the pin
-            // makes the single scan + Exchange serve the old side,
-            // the new side, the retraction probe and the delta
-            val fusedPin = fusedHorizonStates(t, r, horizon).map(f =>
-              restrict(f).persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            // everything from here on — including the retraction
-            // probe, a real action — runs under the finally that
-            // releases the pin: a refresh that throws mid-way must
-            // not leak cache entries into the engine's lifetime
-            try {
-            val (oldSide, newSide) = fusedPin match {
-              case Some(p) => fusedSides(p)
-              case None => (restrict(stateAt(baseT, Some(r))),
-                restrict(stateAt(baseT, Some(horizon))))
+              s"$name has no recorded refresh horizon — run a full " +
+                "REFRESH first")
+          for (tn <- sides) {
+            catalog.require(tn)
+            if (catalog.retentionFloor(tn) > bases(tn))
+              throw new IllegalStateException(
+                s"events since the last refresh horizon " +
+                  s"@SEQ:${bases(tn)} of $name were vacuumed — run a " +
+                  "full (non-incremental) REFRESH")
+            if (catalog.lastSeq(tn) < bases(tn))
+              throw new IllegalStateException(
+                s"$name's refresh horizon @SEQ:${bases(tn)} is ahead " +
+                  s"of $tn's sequence counter (${catalog.lastSeq(tn)}) " +
+                  "— the table was dropped and recreated. Run a full " +
+                  "(non-incremental) REFRESH")
+          }
+          val horizons = sides.map(tn => tn -> catalog.lastSeq(tn)).toMap
+          val touchedIdx = sides.indices
+            .filter(i => horizons(sides(i)) > bases(sides(i)))
+          if (touchedIdx.nonEmpty) {
+            // Pin the touched delta sides (lazy — the cascade's
+            // hop-0 key collect is the first materialization): the
+            // k telescoping terms and the cascade sources each
+            // re-reference these frames, and without the cache
+            // every consumer would re-plan the touched-pk state
+            // reads. O(touched) rows, so the pin is bounded.
+            val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+            // every pin registers here and is released in the
+            // finally below — a refresh that throws mid-way (job
+            // failure, missing aux frame) must not leak cache
+            // entries into the engine's lifetime
+            val refreshPins =
+              scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+            // synchronized: cascade hops pin from Par fork threads
+            def pin(df: DataFrame): DataFrame = {
+              refreshPins.synchronized { refreshPins += df.persist(lvl) }
+              df
             }
-            // A sketch (ACD's HLL, APPROX_PERCENTILE's KLL) unions but
-            // cannot retract, so the
-            // sketch merge is a plain union ONLY
-            // when no touched pk CONTRIBUTED to the view at the old
-            // horizon. The probe applies the view's own WHERE: a
-            // touched pre-horizon row the predicate excluded
-            // contributed nothing, so its change lands like a fresh
-            // insert. One pruned limit-1 job, paid only by
-            // sketch-bearing views; tail-local churn (insert-then-
-            // update/delete since the horizon) stays on the union
-            // path, because only surviving new-state rows contribute.
-            // When the probe DOES find a contributing row (round 15 —
-            // previously a refusal gate), only the TOUCHED groups'
-            // sketches recompute from current state filtered to those
-            // groups (full-refresh semantics per touched group;
-            // see pruneToTouchedGroups for the honest cost model);
-            // untouched groups keep their stored
-            // sketch, so the refresh never re-aggregates the table.
-            // MIN/MAX never probe: they retract exactly through their
-            // aux frames.
-            val acds = IncrementalView.sketchAggs(sh.aggs)
-            val acdRetracts = sh.hasSketch &&
-              sh.where.fold(oldSide)(w => oldSide.where(expr(w)))
-                .limit(1).count() > 0
-            val cds = IncrementalView.auxAggs(sh.aggs)
-            // the delta frame feeds the main merge, every aux merge,
-            // every overlay's touched set and the ACD recompute's
-            // touched-group prune — persist it across those consumers
-            // instead of re-running the touched state reads per plan,
-            // then release it with the writes done
-            val sdPin =
-              if (cds.isEmpty && !acdRetracts) None
-              else Some(
-                IncrementalView.signedDelta(stored, oldSide, newSide, sh)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            // released in the finally: a refresh that throws mid-way
-            // (job failure, missing aux frame) must not leak the pin
             try {
-              val (merged0, auxWrites) = sdPin match {
-                case None =>
-                  (IncrementalView.merge(stored, oldSide, newSide, sh),
-                    Seq.empty[Long => Unit])
-                case Some(sd) if cds.isEmpty =>
-                  (IncrementalView.mergeSigned(stored, sd, sh.groupCols,
-                    sh.aggs), Seq.empty[Long => Unit])
-                case Some(sd) =>
-                  mergeWithAux(name, prev,
-                    IncrementalView.mergeSigned(stored, sd, sh.groupCols, sh.aggs),
-                    sd, sh.groupCols, cds)
+            // one touched-key collection per touched table, shared
+            // between the delta restrictors (semi) and the derived
+            // old-prefix anti filters below; each is an independent
+            // pruned inline-key collect (span-profiled ~0.1–0.3 s
+            // apiece), so they run in parallel
+            val touchedFor = tracer.span("touched-keys-warm",
+                s"${sides.size} sides") {
+              Par.all(spark.sparkContext, touchedIdx.map(sides))(tn =>
+                tn -> touchedFilters(catalog.require(tn), bases(tn),
+                  horizons(tn))).toMap
+            }
+            // old/new state of the touched pks; an untouched side
+            // contributes an empty delta (its terms vanish). Where
+            // the two bounds share a checkpoint source, BOTH sides
+            // come off one pinned two-bound collapse (round 16 —
+            // one scan + one Exchange per table instead of two).
+            def deltaSides(tn: String): (DataFrame, DataFrame) =
+              if (horizons(tn) <= bases(tn)) {
+                val empty = stateAt(tn, Some(horizons(tn))).where(lit(false))
+                (empty, empty)
+              } else {
+                val restrict = touchedFor(tn)._1
+                fusedHorizonStates(catalog.require(tn), bases(tn),
+                    horizons(tn)) match {
+                  case Some(f) => fusedSides(pin(restrict(f)))
+                  case None =>
+                    (pin(restrict(stateAt(tn, Some(bases(tn))))),
+                      pin(restrict(stateAt(tn, Some(horizons(tn))))))
+                }
               }
-              val merged =
-                if (!acdRetracts) merged0
-                else IncrementalView.overlaySketches(merged0,
-                  IncrementalView.recomputeSketches(
-                    pruneToTouchedGroups(
-                      sh.filtered(stateAt(baseT, Some(horizon))),
-                      sdPin.get, sh.groupKeys),
-                    sh.groupKeys, acds),
-                  sdPin.get, sh.groupCols, acds)
-              tracer.span("mview-write") {
-                encrypted(merged.write).mode("overwrite")
-                  .parquet(catalog.mviewDataPath(name, prev + 1))
-                // bucketed aux store + manifests, after the main
-                // overwrite truncated the version dir
-                auxWrites.foreach(_(prev + 1))
+            val deltas = sides.map(deltaSides)
+            // Full-side pruning, any chain length (round 15,
+            // generalizing the round-14 two-table case): every
+            // telescoping term joins its full sides against exactly
+            // one delta somewhere along the chain, so a full
+            // side only contributes rows that REACH some touched
+            // table's delta through the links. From each touched
+            // table, cascade its delta's join-key values outward:
+            // restrict the neighbor to those keys (a pruned scan by
+            // pushdown below the cap, a left-semi against the
+            // distributed distinct-key frame past it — round 16, no
+            // hop ever abandons the path), derive the neighbor's
+            // outgoing link keys from that restricted frame,
+            // continue to ITS neighbors. Reachability passes through
+            // full NEW state unioned with each hop table's OLD delta
+            // rows — a term's Δ side can carry old-state rows
+            // (deleted since the horizon) that a new-state-only
+            // cascade would miss. A full side is pruned to the OR of
+            // its per-source restrictions: a row reaching NO delta
+            // can contribute to no term (for the singleton term {j}
+            // it would have to reach Δj through full state — exactly
+            // the cascade's reach relation). At 100 TB this is the
+            // difference between a one-row refresh of a 4-table view
+            // reading matching row groups of each partner vs
+            // scanning every partner per term — and a bulk
+            // backfill touching thousands of keys now degrades to
+            // semi-joins on O(touched reach) key frames, never to
+            // raw full partner scans.
+            // The sole touched side of a one-touched refresh — every
+            // one-table refresh — sits in its only term as the delta,
+            // so no term, cascade hop or full side reads its full new
+            // state: it stands as an empty frame, and only a sketch
+            // recompute (below) reads that state.
+            val sole = if (touchedIdx.size == 1) touchedIdx.head else -1
+            def newState(i: Int): DataFrame =
+              stateAt(sides(i), Some(horizons(sides(i))))
+            val fullNew = sides.indices.map(i =>
+              if (i == sole) deltas(i)._2.where(lit(false)) else newState(i))
+            val idxOf = sides.zipWithIndex
+              .map { case (t, i) => t.toLowerCase -> i }.toMap
+            // the chain's links as an adjacency list (a tree: each
+            // link joins the new table to one earlier table)
+            val adj = Array.fill(sides.size)(
+              List.empty[(Int, String, String)])
+            for ((q1, c1, q2, c2) <- sh.links) {
+              val (i1, i2) = (idxOf(q1.toLowerCase), idxOf(q2.toLowerCase))
+              adj(i1) ::= ((i2, c1, c2))
+              adj(i2) ::= ((i1, c2, c1))
+            }
+            // legacy pre-r16 tables carrying __graft_ user columns
+            // would collide with the cascade's minted key frames —
+            // they skip pruning (unpruned full sides are correct,
+            // just slower); see carriesHiddenCols
+            val legacyHidden =
+              sides.exists(tn => carriesHiddenCols(catalog.require(tn)))
+            // preds(i): one restriction per touched source whose
+            // cascade reached table i — inline predicate or
+            // distributed key frame, always bounding
+            val preds = Array.fill(sides.size)(List.empty[CascRestrict])
+            // Each touched source's BFS is independent — it reads
+            // only the pinned deltas, the full-new frames and the
+            // adjacency, and every hop blocks on a driver-side key
+            // collect. Serially that is k sources × up to (k−1)
+            // hops of job latency back to back (span-profiled at
+            // ~6 s of the all-five-churned refresh, 20 join-keys
+            // collects); forked (Par.all) the refresh pays the
+            // LONGEST source chain, not the sum. Results merge in
+            // source order so the plan (the OR order of preds) is
+            // identical to the sequential construction; hop tags
+            // come off an atomic so minted key-frame columns stay
+            // unique. pin() synchronizes on the pin registry.
+            val hopTag = new java.util.concurrent.atomic.AtomicInteger(0)
+            def cascadeOf(s: Int): List[(Int, CascRestrict)] = {
+              val out = List.newBuilder[(Int, CascRestrict)]
+              val visited = scala.collection.mutable.Set(s)
+              var frontier: List[(Int, DataFrame)] =
+                List(s -> deltas(s)._1.unionByName(deltas(s)._2))
+              while (frontier.nonEmpty) {
+                val next = List.newBuilder[(Int, DataFrame)]
+                for ((t, frame) <- frontier;
+                     (u, ct, cu) <- adj(t) if !visited(u)) {
+                  visited += u
+                  val (r, restricted) = cascadeHop(frame, ct,
+                    fullNew(u).unionByName(deltas(u)._1), cu, pin,
+                    hopTag.getAndIncrement())
+                  out += ((u, r))
+                  next += ((u, restricted))
+                }
+                frontier = next.result()
               }
-              // ONE atomic catalog save: a version bump without the
-              // horizon re-anchor would double-apply this delta on the
-              // next refresh
-              catalog.setMviewRefreshed(name, prev + 1, Map(baseT -> horizon))
-            } finally sdPin.foreach(_.unpersist(false))
-            } finally fusedPin.foreach(_.unpersist(false))
+              out.result()
+            }
+            if (!legacyHidden)
+              tracer.span("cascade-join", s"${touchedIdx.size} sources") {
+                for (rs <- Par.all(spark.sparkContext, touchedIdx)(cascadeOf);
+                     (u, r) <- rs)
+                  preds(u) ::= r
+              }
+            // Key-pruned fulls pin too when the chain has 3+ tables
+            // (each full side then appears in 2^(n-1)−1 ≥ 3 terms;
+            // at n=2 a full sits in exactly ONE term, so a pin only
+            // costs) — but ONLY when every restriction is inline
+            // (≤ cap keys per source): a semi-join restriction's
+            // reach is unbounded relative to cache capacity (a bulk
+            // backfill can make the "pruned" partner ≈ the partner
+            // table), and caching ~a 100 TB table to executor disk
+            // is worse than rescanning it — there the pinned KEY
+            // frames keep the semi-join rebuild cheap and the plain
+            // scan is the right plan, as before round 16.
+            // Empty frames optimize to local relations, no pin.
+            val fulls: Seq[DataFrame] =
+              sides.indices.map { i =>
+                val ps = preds(i)
+                if (i == sole || legacyHidden) fullNew(i)
+                else {
+                  val pruned = applyCascade(fullNew(i), ps)
+                  val bounded = ps.forall(_.isInstanceOf[CascInline])
+                  if (sides.size >= 3 && bounded) pin(pruned) else pruned
+                }
+              }
+            val stored = spark.read.parquet(catalog.mviewDataPath(name, prev))
+            // The telescoping delta's term for touched side i joins
+            // OLD state for every side before i — for an untouched
+            // side old equals new (reuse the pruned full), and a
+            // TOUCHED side that precedes another touched side
+            // DERIVES its old prefix from frames already in hand
+            // (round 18, retiring the k−1 extra old-horizon scans
+            // this branch used to pay): old state is exactly
+            // (new state − touched pks) ∪ old rows of touched pks,
+            // so the pruned-and-pinned full-new frame anti-filtered
+            // by the same touched-key set, unioned with the pinned
+            // old-delta side, IS the (pruned) old state — zero new
+            // scans, one broadcast-able anti filter over a pinned
+            // frame plus a churn-bounded union. Pruning stays sound:
+            // rows the cascade dropped from full-new can reach no
+            // delta in any term, and the delta-old rows ride in
+            // unpruned (bounded by churn; over-inclusion never
+            // changes a term's value, only its cost). Legacy
+            // hidden-column tables keep the raw two-scan fallback —
+            // their refresh path minted no touched-key frames.
+            val fullOlds: Seq[DataFrame] = sides.indices.map { j =>
+              if (touchedIdx.contains(j) && touchedIdx.exists(_ > j)) {
+                if (legacyHidden) stateAt(sides(j), Some(bases(sides(j))))
+                else touchedFor(sides(j))._2(fulls(j))
+                  .unionByName(deltas(j)._1)
+              } else fulls(j)
+            }
+            // statically-empty deltas drop their terms at
+            // construction: k terms for k TOUCHED tables, so a
+            // one-fact refresh of a 6-table view plans one term.
+            // MULTI-touched refreshes (round 19, guide §2.6) build,
+            // analyze and MATERIALIZE each term concurrently on the
+            // Par pool: the merge consumes every term, so the
+            // serial form executed one ~k·n-join action whose AQE
+            // stage-jobs ran back to back — per-term pin jobs
+            // overlap instead, and the merge then reads k pinned
+            // O(touched-reach) frames (the same bound as every
+            // other refresh pin; a pinned term is the term's
+            // grouped-contribution rows, never a partner scan).
+            // Item order through Par.all keeps the union order
+            // identical to the sequential construction.
+            val sideFrames = sides.indices.map(i =>
+              (deltas(i)._1, deltas(i)._2, fullOlds(i), fulls(i)))
+            val untouchedSet =
+              sides.indices.filterNot(touchedIdx.contains).toSet
+            val delta =
+              if (touchedIdx.size <= 1)
+                IncrementalView.joinSignedDelta(sh, stored, sideFrames,
+                  untouched = untouchedSet)
+              else tracer.span("delta-terms", s"${touchedIdx.size} terms") {
+                Par.all(spark.sparkContext,
+                    sides.indices.filterNot(untouchedSet)) { i =>
+                  val p = pin(IncrementalView.joinSignedDeltaTerm(
+                    sh, stored, sideFrames, i))
+                  p.count() // materialize the pinned blocks
+                  p
+                }.reduce(_ unionByName _)
+              }
+            val cds = IncrementalView.auxAggs(sh.aggs)
+            val acds = IncrementalView.sketchAggs(sh.aggs)
+            // A sketch cannot retract a row, and the union
+            // merge folds EVERY +1 row's value in — so it is sound
+            // only when every +1 (group, value) pair truly exists in
+            // the new joined state, EXACTLY ONCE. That holds when the
+            // delta carries NO negative-signed sketch-value rows at
+            // all: appends whose new rows join only pre-existing
+            // partner rows (facts landing against stable dims — the
+            // common shape) produce positive singleton terms only,
+            // while telescoping's partition property (a joined row
+            // enters the term of the FIRST side whose row is new)
+            // keeps each pair to exactly once. Any negative row
+            // means a retraction OR a cancelling cross-term pair —
+            // a DELETE dim + INSERT fact in one window puts a −1 in
+            // the dim's term (Δdim_old × fact_new) cancelled by a
+            // +1 in the fact's term (dim_old × Δfact_new), and that
+            // +1 is a PHANTOM that never existed in either state,
+            // which a net-support probe would wave through into the
+            // sketch. So the probe is the strictest
+            // cheap condition: one limit-1 job over the delta,
+            // no aggregation, all ACD value columns at once; a
+            // positive dispatches to the touched-group recompute over
+            // the (joined) current state. For one table the probe is
+            // "some touched row contributed at the old horizon"; a
+            // touched row whose value was NULL, or that the WHERE
+            // excluded, contributed nothing to a sketch. Conservative
+            // by design — a false positive costs a recompute, never
+            // correctness.
+            def retracts(sd: DataFrame): Boolean = acds.nonEmpty && {
+              val anyVal = acds.map(a =>
+                col(s"__val_${a.alias}").isNotNull).reduce(_ || _)
+              sd.where(col("__sign") === -1 && anyVal)
+                .limit(1).count() > 0
+            }
+            // persist the delta across its consumers (main merge, aux
+            // merges, overlays, the ACD probe) instead of re-running
+            // its joins per plan — unless it already is the union of
+            // the pinned per-term frames above, which those consumers
+            // re-read as cheaply as a second pin would. A one-table
+            // delta joins nothing: it is a projection of the pinned Δ
+            // sides, so the probe reads it as is (its −1 filter
+            // prunes the new side) and the pin is paid only when the
+            // aux merges or a sketch recompute follow.
+            val (sd, acdRetracts) =
+              if (sides.size == 1) {
+                val r = retracts(delta)
+                (if (cds.isEmpty && !r) delta else pin(delta), r)
+              } else {
+                val sd =
+                  if (cds.isEmpty && acds.isEmpty || touchedIdx.size > 1) delta
+                  else pin(delta)
+                (sd, retracts(sd))
+              }
+            val main = IncrementalView.mergeSigned(stored, sd, sh.groupCols,
+              sh.aggs)
+            val (merged0, auxWrites) =
+              if (cds.isEmpty) (main, Seq.empty[Long => Unit])
+              else mergeWithAux(name, prev, main, sd, sh.groupCols, cds)
+            val merged =
+              if (!acdRetracts) merged0
+              else IncrementalView.overlaySketches(merged0,
+                IncrementalView.recomputeSketches(
+                  pruneToTouchedGroups(
+                    recomputeJoinInput(sh, sides, adj,
+                      fullNew.indices.map(i =>
+                        if (i == sole) newState(i) else fullNew(i)),
+                      sd, pin),
+                    sd, sh.groupKeys),
+                  sh.groupKeys, acds),
+                sd, sh.groupCols, acds)
+            tracer.span("mview-write") {
+              encrypted(merged.write).mode("overwrite")
+                .parquet(catalog.mviewDataPath(name, prev + 1))
+              // bucketed aux store + manifests, after the main
+              // overwrite truncated the version dir
+              auxWrites.foreach(_(prev + 1))
+            }
+            // ONE atomic catalog save: a version bump without the
+            // horizon re-anchor would double-apply this delta on the
+            // next refresh
+            catalog.setMviewRefreshed(name, prev + 1, horizons)
+            } finally refreshPins.foreach(_.unpersist(false))
           }
           "refreshed_incremental"
-        case (None, true) => joinShapeOf(viewSql) match {
-          case Some(js) =>
-            // INCREMENTAL join view: the counting-algorithm
-            // TELESCOPING delta (round 17; for two tables,
-            //   ΔA⋈B_new + A_old⋈ΔB)
-            // over the touched rows of each side — exact under
-            // ARBITRARY updates/deletes (join views carry only
-            // retractable aggregates; a sketch-bearing join view
-            // additionally probes the delta for negative-signed
-            // sketch values — see the dispatch below).
-            // Each Δ side is touched-pk-restricted like the
-            // single-table path; every delta term carries at least
-            // one Δ side, and for two-table views each FULL side
-            // prunes to the other delta's join-key values when they
-            // inline (≤ cap), so a small refresh reads only the
-            // matching row groups of a 100 TB partner table instead
-            // of scanning it.
-            val bases = catalog.mviewBaseAll(name)
-            val sides = js.tables
-            if (!sides.forall(bases.contains))
-              throw new IllegalStateException(
-                s"$name has no recorded refresh horizon — run a full " +
-                  "REFRESH first")
-            for (tn <- sides) {
-              catalog.require(tn)
-              if (catalog.retentionFloor(tn) > bases(tn))
-                throw new IllegalStateException(
-                  s"events since the last refresh horizon " +
-                    s"@SEQ:${bases(tn)} of $name were vacuumed — run a " +
-                    "full (non-incremental) REFRESH")
-              if (catalog.lastSeq(tn) < bases(tn))
-                throw new IllegalStateException(
-                  s"$name's refresh horizon @SEQ:${bases(tn)} is ahead " +
-                    s"of $tn's sequence counter (${catalog.lastSeq(tn)}) " +
-                    "— the table was dropped and recreated. Run a full " +
-                    "(non-incremental) REFRESH")
-            }
-            val horizons = sides.map(tn => tn -> catalog.lastSeq(tn)).toMap
-            if (sides.exists(tn => horizons(tn) > bases(tn))) {
-              // Pin the touched delta sides (lazy — the cascade's
-              // hop-0 key collect is the first materialization): the
-              // k telescoping terms and the cascade sources each
-              // re-reference these frames, and without the cache
-              // every consumer would re-plan the touched-pk state
-              // reads. O(touched) rows, so the pin is bounded.
-              val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-              // every pin registers here and is released in the
-              // finally below — a refresh that throws mid-way (job
-              // failure, missing aux frame) must not leak cache
-              // entries into the engine's lifetime
-              val refreshPins =
-                scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-              // synchronized: cascade hops pin from Par fork threads
-              def pin(df: DataFrame): DataFrame = {
-                refreshPins.synchronized { refreshPins += df.persist(lvl) }
-                df
-              }
-              // old/new state of the touched pks; an untouched side
-              // contributes an empty delta (its terms vanish). Where
-              // the two bounds share a checkpoint source, BOTH sides
-              // come off one pinned two-bound collapse (round 16 —
-              // one scan + one Exchange per table instead of two).
-              // one touched-key collection per table, shared between
-              // the delta restrictors (semi) and the derived
-              // old-prefix anti filters below
-              val touchedFiltersFor = scala.collection.mutable
-                .Map.empty[String, (DataFrame => DataFrame, DataFrame => DataFrame)]
-              def touchedFor(tn: String) =
-                touchedFiltersFor.getOrElseUpdate(tn,
-                  touchedFilters(catalog.require(tn), bases(tn), horizons(tn)))
-              def deltaSides(tn: String): (DataFrame, DataFrame) =
-                if (horizons(tn) <= bases(tn)) {
-                  val empty = stateAt(tn, Some(horizons(tn))).where(lit(false))
-                  (empty, empty)
-                } else {
-                  val td = catalog.require(tn)
-                  val restrict = touchedFor(tn)._1
-                  fusedHorizonStates(td, bases(tn), horizons(tn)) match {
-                    case Some(f) => fusedSides(pin(restrict(f)))
-                    case None =>
-                      (pin(restrict(stateAt(tn, Some(bases(tn))))),
-                        pin(restrict(stateAt(tn, Some(horizons(tn))))))
-                  }
-                }
-              try {
-              // pre-warm the per-table touched-key collections in
-              // parallel: each is an independent pruned inline-key
-              // collect (span-profiled ~0.1–0.3 s apiece, serial in
-              // sides.map(deltaSides) otherwise); results land in the
-              // share map on the statement thread, so deltaSides below
-              // reads them back single-threaded
-              tracer.span("touched-keys-warm", s"${sides.size} sides") {
-                val touchedNames = sides.filter(tn => horizons(tn) > bases(tn))
-                for ((tn, f) <- Par.all(spark.sparkContext, touchedNames)(tn =>
-                    tn -> touchedFilters(catalog.require(tn), bases(tn),
-                      horizons(tn))))
-                  touchedFiltersFor(tn) = f
-              }
-              val deltas = sides.map(deltaSides)
-              // Full-side pruning, any chain length (round 15,
-              // generalizing the round-14 two-table case): every
-              // telescoping term joins its full sides against exactly
-              // one delta somewhere along the chain, so a full
-              // side only contributes rows that REACH some touched
-              // table's delta through the links. From each touched
-              // table, cascade its delta's join-key values outward:
-              // restrict the neighbor to those keys (a pruned scan by
-              // pushdown below the cap, a left-semi against the
-              // distributed distinct-key frame past it — round 16, no
-              // hop ever abandons the path), derive the neighbor's
-              // outgoing link keys from that restricted frame,
-              // continue to ITS neighbors. Reachability passes through
-              // full NEW state unioned with each hop table's OLD delta
-              // rows — a term's Δ side can carry old-state rows
-              // (deleted since the horizon) that a new-state-only
-              // cascade would miss. A full side is pruned to the OR of
-              // its per-source restrictions: a row reaching NO delta
-              // can contribute to no term (for the singleton term {j}
-              // it would have to reach Δj through full state — exactly
-              // the cascade's reach relation). At 100 TB this is the
-              // difference between a one-row refresh of a 4-table view
-              // reading matching row groups of each partner vs
-              // scanning every partner per term — and a bulk
-              // backfill touching thousands of keys now degrades to
-              // semi-joins on O(touched reach) key frames, never to
-              // raw full partner scans.
-              val fullNew = sides.map(tn => stateAt(tn, Some(horizons(tn))))
-              val idxOf = sides.zipWithIndex
-                .map { case (t, i) => t.toLowerCase -> i }.toMap
-              // the chain's links as an adjacency list (a tree: each
-              // link joins the new table to one earlier table)
-              val adj = Array.fill(sides.size)(
-                List.empty[(Int, String, String)])
-              for ((q1, c1, q2, c2) <- js.links) {
-                val (i1, i2) = (idxOf(q1.toLowerCase), idxOf(q2.toLowerCase))
-                adj(i1) ::= ((i2, c1, c2))
-                adj(i2) ::= ((i1, c2, c1))
-              }
-              val touchedIdx = sides.indices
-                .filter(i => horizons(sides(i)) > bases(sides(i)))
-              // legacy pre-r16 tables carrying __graft_ user columns
-              // would collide with the cascade's minted key frames —
-              // they skip pruning (unpruned full sides are correct,
-              // just slower); see carriesHiddenCols
-              val legacyHidden =
-                sides.exists(tn => carriesHiddenCols(catalog.require(tn)))
-              // preds(i): one restriction per touched source whose
-              // cascade reached table i — inline predicate or
-              // distributed key frame, always bounding
-              val preds = Array.fill(sides.size)(List.empty[CascRestrict])
-              // Each touched source's BFS is independent — it reads
-              // only the pinned deltas, the full-new frames and the
-              // adjacency, and every hop blocks on a driver-side key
-              // collect. Serially that is k sources × up to (k−1)
-              // hops of job latency back to back (span-profiled at
-              // ~6 s of the all-five-churned refresh, 20 join-keys
-              // collects); forked (Par.all) the refresh pays the
-              // LONGEST source chain, not the sum. Results merge in
-              // source order so the plan (the OR order of preds) is
-              // identical to the sequential construction; hop tags
-              // come off an atomic so minted key-frame columns stay
-              // unique. pin() synchronizes on the pin registry.
-              val hopTag = new java.util.concurrent.atomic.AtomicInteger(0)
-              def cascadeOf(s: Int): List[(Int, CascRestrict)] = {
-                val out = List.newBuilder[(Int, CascRestrict)]
-                val visited = scala.collection.mutable.Set(s)
-                var frontier: List[(Int, DataFrame)] =
-                  List(s -> deltas(s)._1.unionByName(deltas(s)._2))
-                while (frontier.nonEmpty) {
-                  val next = List.newBuilder[(Int, DataFrame)]
-                  for ((t, frame) <- frontier;
-                       (u, ct, cu) <- adj(t) if !visited(u)) {
-                    visited += u
-                    val (r, restricted) = cascadeHop(frame, ct,
-                      fullNew(u).unionByName(deltas(u)._1), cu, pin,
-                      hopTag.getAndIncrement())
-                    out += ((u, r))
-                    next += ((u, restricted))
-                  }
-                  frontier = next.result()
-                }
-                out.result()
-              }
-              if (!legacyHidden)
-                tracer.span("cascade-join", s"${touchedIdx.size} sources") {
-                  for (rs <- Par.all(spark.sparkContext, touchedIdx)(cascadeOf);
-                       (u, r) <- rs)
-                    preds(u) ::= r
-                }
-              // Key-pruned fulls pin too when the chain has 3+ tables
-              // (each full side then appears in 2^(n-1)−1 ≥ 3 terms;
-              // at n=2 a full sits in exactly ONE term, so a pin only
-              // costs) — but ONLY when every restriction is inline
-              // (≤ cap keys per source): a semi-join restriction's
-              // reach is unbounded relative to cache capacity (a bulk
-              // backfill can make the "pruned" partner ≈ the partner
-              // table), and caching ~a 100 TB table to executor disk
-              // is worse than rescanning it — there the pinned KEY
-              // frames keep the semi-join rebuild cheap and the plain
-              // scan is the right plan, as before round 16.
-              // Empty frames optimize to local relations, no pin.
-              val fulls: Seq[DataFrame] =
-                sides.indices.map { i =>
-                  val ps = preds(i)
-                  if (!touchedIdx.exists(_ != i))
-                    // the only touched table is i itself: no term uses
-                    // full_i (i sits in every nonvanishing S as a delta)
-                    fullNew(i).where(lit(false))
-                  else if (legacyHidden) fullNew(i)
-                  else {
-                    val pruned = applyCascade(fullNew(i), ps)
-                    val bounded = ps.forall(_.isInstanceOf[CascInline])
-                    if (sides.size >= 3 && bounded) pin(pruned) else pruned
-                  }
-                }
-              val stored = spark.read.parquet(catalog.mviewDataPath(name, prev))
-              // The telescoping delta's term for touched side i joins
-              // OLD state for every side before i — for an untouched
-              // side old equals new (reuse the pruned full), and a
-              // TOUCHED side that precedes another touched side
-              // DERIVES its old prefix from frames already in hand
-              // (round 18, retiring the k−1 extra old-horizon scans
-              // this branch used to pay): old state is exactly
-              // (new state − touched pks) ∪ old rows of touched pks,
-              // so the pruned-and-pinned full-new frame anti-filtered
-              // by the same touched-key set, unioned with the pinned
-              // old-delta side, IS the (pruned) old state — zero new
-              // scans, one broadcast-able anti filter over a pinned
-              // frame plus a churn-bounded union. Pruning stays sound:
-              // rows the cascade dropped from full-new can reach no
-              // delta in any term, and the delta-old rows ride in
-              // unpruned (bounded by churn; over-inclusion never
-              // changes a term's value, only its cost). Legacy
-              // hidden-column tables keep the raw two-scan fallback —
-              // their refresh path minted no touched-key frames.
-              val fullOlds: Seq[DataFrame] = sides.indices.map { j =>
-                if (touchedIdx.contains(j) && touchedIdx.exists(_ > j)) {
-                  if (legacyHidden) stateAt(sides(j), Some(bases(sides(j))))
-                  else touchedFor(sides(j))._2(fulls(j))
-                    .unionByName(deltas(j)._1)
-                } else fulls(j)
-              }
-              // statically-empty deltas drop their terms at
-              // construction: k terms for k TOUCHED tables, so a
-              // one-fact refresh of a 6-table view plans one term.
-              // MULTI-touched refreshes (round 19, guide §2.6) build,
-              // analyze and MATERIALIZE each term concurrently on the
-              // Par pool: the merge consumes every term, so the
-              // serial form executed one ~k·n-join action whose AQE
-              // stage-jobs ran back to back — per-term pin jobs
-              // overlap instead, and the merge then reads k pinned
-              // O(touched-reach) frames (the same bound as every
-              // other refresh pin; a pinned term is the term's
-              // grouped-contribution rows, never a partner scan).
-              // Item order through Par.all keeps the union order
-              // identical to the sequential construction.
-              val sideFrames = sides.indices.map(i =>
-                (deltas(i)._1, deltas(i)._2, fullOlds(i), fulls(i)))
-              val untouchedSet =
-                sides.indices.filterNot(touchedIdx.contains).toSet
-              val delta =
-                if (touchedIdx.size <= 1)
-                  IncrementalView.joinSignedDelta(js, stored, sideFrames,
-                    untouched = untouchedSet)
-                else tracer.span("delta-terms", s"${touchedIdx.size} terms") {
-                  Par.all(spark.sparkContext,
-                      sides.indices.filterNot(untouchedSet)) { i =>
-                    val p = pin(IncrementalView.joinSignedDeltaTerm(
-                      js, stored, sideFrames, i))
-                    p.count() // materialize the pinned blocks
-                    p
-                  }.reduce(_ unionByName _)
-                }
-              val cds = IncrementalView.auxAggs(js.aggs)
-              val acds = IncrementalView.sketchAggs(js.aggs)
-              // persist the k-term delta across its consumers
-              // (main merge, aux merges, overlays, the ACD probe),
-              // like the single-table path — unless it already is the
-              // union of the pinned per-term frames above, which those
-              // consumers re-read as cheaply as a second pin would
-              val sdOpt =
-                if (cds.isEmpty && acds.isEmpty) None
-                else Some(if (touchedIdx.size <= 1) pin(delta) else delta)
-              // A sketch cannot retract a joined row, and the union
-              // merge folds EVERY +1 row's value in — so it is sound
-              // only when every +1 (group, value) pair truly exists in
-              // the new joined state, EXACTLY ONCE. That holds when the
-              // delta carries NO negative-signed sketch-value rows at
-              // all: appends whose new rows join only pre-existing
-              // partner rows (facts landing against stable dims — the
-              // common shape) produce positive singleton terms only,
-              // while telescoping's partition property (a joined row
-              // enters the term of the FIRST side whose row is new)
-              // keeps each pair to exactly once. Any negative row
-              // means a retraction OR a cancelling cross-term pair —
-              // a DELETE dim + INSERT fact in one window puts a −1 in
-              // the dim's term (Δdim_old × fact_new) cancelled by a
-              // +1 in the fact's term (dim_old × Δfact_new), and that
-              // +1 is a PHANTOM that never existed in either state,
-              // which a net-support probe would wave through into the
-              // sketch. So the probe is the strictest
-              // cheap condition: one limit-1 job over the pinned delta,
-              // no aggregation, all ACD value columns at once; a
-              // positive dispatches to the touched-group recompute over
-              // the joined current state, exactly like the single-table
-              // path. Conservative by design — a false positive costs
-              // a recompute, never correctness.
-              val acdRetracts = acds.nonEmpty && {
-                val anyVal = acds.map(a =>
-                  col(s"__val_${a.alias}").isNotNull).reduce(_ || _)
-                sdOpt.get.where(col("__sign") === -1 && anyVal)
-                  .limit(1).count() > 0
-              }
-              val (merged0, auxWrites) =
-                if (cds.isEmpty)
-                  (IncrementalView.mergeSigned(stored,
-                    sdOpt.getOrElse(delta), js.groupCols, js.aggs),
-                    Seq.empty[Long => Unit])
-                else
-                  mergeWithAux(name, prev,
-                    IncrementalView.mergeSigned(stored, sdOpt.get,
-                      js.groupCols, js.aggs),
-                    sdOpt.get, js.groupCols, cds)
-              val merged =
-                if (!acdRetracts) merged0
-                else IncrementalView.overlaySketches(merged0,
-                  IncrementalView.recomputeSketches(
-                    pruneToTouchedGroups(
-                      recomputeJoinInput(js, sides, adj, fullNew,
-                        sdOpt.get, pin),
-                      sdOpt.get, js.groupKeys),
-                    js.groupKeys, acds),
-                  sdOpt.get, js.groupCols, acds)
-              tracer.span("mview-write") {
-                encrypted(merged.write).mode("overwrite")
-                  .parquet(catalog.mviewDataPath(name, prev + 1))
-                auxWrites.foreach(_(prev + 1))
-              }
-              catalog.setMviewRefreshed(name, prev + 1, horizons)
-              } finally refreshPins.foreach(_.unpersist(false))
-            }
-            "refreshed_incremental"
-          case None =>
-            throw new IllegalArgumentException(
-              s"$name is not incrementally maintainable: the view must be " +
-                "SELECT <group cols>, COUNT/SUM/AVG/COUNT(DISTINCT)/" +
-                "SUM(DISTINCT)/AVG(DISTINCT)/APPROX_COUNT_DISTINCT/" +
-                "APPROX_PERCENTILE(e, p)/" +
-                "MIN/MAX aggregates FROM " +
-                "<engine table> [WHERE ...] GROUP BY <group cols>, or the " +
-                "same aggregates FROM <table> JOIN <table> ON " +
-                "<t1>.<col> = <t2>.<col> [WHERE ...] GROUP BY ... — run " +
-                "a full REFRESH instead")
-        }
-        case (shapeOpt, false) =>
-          // FULL refresh; maintainable shapes re-materialize through the
-          // same aggregate (hidden support columns included) at a pinned
-          // horizon so a later INCREMENTALLY continues from here
-          shapeOpt match {
-            case Some(sh) =>
-              val horizon = catalog.lastSeq(sh.table)
-              val st0 = stateAt(sh.table, Some(horizon).filter(_ > 0))
-              encrypted(IncrementalView.aggregate(st0, sh).write)
-                .mode("overwrite").parquet(catalog.mviewDataPath(name, prev + 1))
-              writeAuxes(sh.filtered(st0),
-                sh.groupKeys, IncrementalView.auxAggs(sh.aggs),
-                name, prev + 1)
-              catalog.setMviewRefreshed(name, prev + 1, Map(sh.table -> horizon))
-            case None => joinShapeOf(viewSql) match {
-              case Some(js) =>
-                val hs = js.tables.map(tn => tn -> catalog.lastSeq(tn)).toMap
-                val frames0 = js.tables.map(tn =>
-                  stateAt(tn, Some(hs(tn)).filter(_ > 0)))
-                encrypted(IncrementalView.aggregateJoin(frames0, js).write)
-                  .mode("overwrite").parquet(catalog.mviewDataPath(name, prev + 1))
-                writeAuxes(js.joined(frames0), js.groupKeys,
-                  IncrementalView.auxAggs(js.aggs), name, prev + 1)
-                catalog.setMviewRefreshed(name, prev + 1, hs)
-              case None =>
-                encrypted(select(viewSql).write).mode("overwrite")
-                  .parquet(catalog.mviewDataPath(name, prev + 1))
-                catalog.setMviewVersion(name, prev + 1)
-            }
-          }
+        case (None, true) =>
+          throw new IllegalArgumentException(
+            s"$name is not incrementally maintainable: the view must be " +
+              "SELECT <group cols>, COUNT/SUM/AVG/COUNT(DISTINCT)/" +
+              "SUM(DISTINCT)/AVG(DISTINCT)/APPROX_COUNT_DISTINCT/" +
+              "APPROX_PERCENTILE(e, p)/" +
+              "MIN/MAX aggregates FROM " +
+              "<engine table> [WHERE ...] GROUP BY <group cols>, or the " +
+              "same aggregates FROM <table> JOIN <table> ON " +
+              "<t1>.<col> = <t2>.<col> [WHERE ...] GROUP BY ... — run " +
+              "a full REFRESH instead")
+        case (Some(sh), false) =>
+          // FULL refresh of a maintainable shape: re-materialize through
+          // the same aggregate (hidden support columns included) at
+          // pinned horizons so a later INCREMENTALLY continues from here
+          catalog.setMviewRefreshed(name, prev + 1,
+            populateShape(name, sh, prev + 1))
+          "refreshed"
+        case (None, false) =>
+          encrypted(select(viewSql).write).mode("overwrite")
+            .parquet(catalog.mviewDataPath(name, prev + 1))
+          catalog.setMviewVersion(name, prev + 1)
           "refreshed"
       }
       // a successful explicit refresh un-mutes a previously failed
@@ -1826,8 +1663,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // prev+1) points at one of its buckets; everything else —
         // including versions orphaned by a crash between bucket write
         // and catalog publish — reclaims here
-        val auxAliases = (incShapeOf(viewSql).map(_.aggs)
-          .orElse(joinShapeOf(viewSql).map(_.aggs)))
+        val auxAliases = shapeOf(viewSql).map(_.aggs)
           .map(IncrementalView.auxGroups).getOrElse(Nil).map(_._1.alias)
         for (alias <- auxAliases) {
           val referenced = Seq(prev, prev + 1).flatMap(v =>
@@ -1907,8 +1743,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         val viewSql = catalog.getView(n).get
         val op =
           if (incremental &&
-              (incShapeOf(viewSql).isDefined ||
-                joinShapeOf(viewSql).isDefined) &&
+              shapeOf(viewSql).isDefined &&
               catalog.mviewBaseAll(n).nonEmpty)
             try {
               sqlCurrent(s"REFRESH MATERIALIZED VIEW $n INCREMENTALLY")
@@ -1945,9 +1780,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // refusing), so an auto refresh can never fail a statement
         // that already committed
         val viewSql = catalog.getView(name).get
-        val retractable = incShapeOf(viewSql).isDefined ||
-          joinShapeOf(viewSql).isDefined
-        if (!retractable)
+        if (shapeOf(viewSql).isEmpty)
           throw new IllegalArgumentException(
             s"$name cannot AUTOREFRESH: only incrementally maintainable " +
               "views (COUNT/SUM/AVG/COUNT(DISTINCT)/SUM(DISTINCT)/" +
@@ -1966,8 +1799,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // would pass the shape check, then the FIRST auto refresh
         // would fail and mute — fail the ALTER now with the fix
         // instead of turning "always fresh" into "silently stale"
-        val auxAliases = incShapeOf(viewSql).map(_.aggs)
-          .orElse(joinShapeOf(viewSql).map(_.aggs))
+        val auxAliases = shapeOf(viewSql).map(_.aggs)
           .map(IncrementalView.auxGroups).getOrElse(Nil).map(_._1.alias)
         if (auxAliases.nonEmpty) {
           val ver = catalog.mviewVersion(name)
@@ -2001,17 +1833,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // report the per-group exactness regime
       import spark.implicits._
       catalog.matviewList.map { case (n, viewSql, ver) =>
-        val single = incShapeOf(viewSql)
-        val join = if (single.isEmpty) joinShapeOf(viewSql) else None
-        val kind =
-          if (single.isDefined) "incremental"
-          else if (join.isDefined) "incremental_join"
-          else "full_rerun"
+        val shape = shapeOf(viewSql)
+        val kind = shape.fold("full_rerun")(sh =>
+          if (sh.tables.size == 1) "incremental" else "incremental_join")
         // APPROX_PERCENTILE's maintainable form has a conditional
         // exactness contract (see PctlExpr) — surface it where the
         // operator looks, not only in scaladoc
         val pctlSupports: Seq[String] =
-          single.map(_.aggs).orElse(join.map(_.aggs)).getOrElse(Nil)
+          shape.map(_.aggs).getOrElse(Nil)
             .collect { case p: IncrementalView.PctlExpr =>
               IncrementalView.supportCol(p.alias) }
         val notes: Option[String] =
@@ -2707,8 +2536,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           // lacks those columns — its rows were filtered at population,
           // so the predicate is skipped rather than failed.
           val viewSql = catalog.getView(v).get
-          val having = IncrementalView.parse(viewSql).flatMap(_.having)
-            .orElse(IncrementalView.parseJoin(viewSql).flatMap(_.having))
+          val having = shapeOf(viewSql, parsedOnly = true)
+            .flatMap(_.having)
             .filter(h => IncrementalView.HavingAggRefRe.findAllIn(h)
               .forall(mv.columns.contains))
           val filtered = having.fold(mv)(h => mv.where(expr(h)))
@@ -4766,28 +4595,21 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     r
   }
 
-  /** Some(shape) iff the SQL is incrementally maintainable
-    * (IncrementalView.parse) over a (non-attached) engine table of
-    * this catalog — attached event logs have no sequence bookkeeping
-    * to anchor a refresh horizon to — and no SUM/AVG reads a
-    * FLOAT/DOUBLE expression (see floatSumAvg). */
-  private def incShapeOf(sql: String): Option[IncrementalView.Shape] =
-    IncrementalView.parse(sql)
-      .filter(sh => catalog.get(sh.table).exists(_.attached.isEmpty))
-      .filterNot(sh => floatSumAvg(sh.aggs,
-        emptyLogicalFrame(catalog.require(sh.table))))
-
-  /** Some(shape) iff the SQL is an incrementally maintainable
-    * two-table equi-join view (IncrementalView.parseJoin) whose sides
-    * are both non-attached engine tables of this catalog, with the
-    * same FLOAT/DOUBLE SUM/AVG rejection as incShapeOf (types resolve
-    * against the aliased empty join chain). */
-  private def joinShapeOf(sql: String): Option[IncrementalView.JoinShape] =
-    IncrementalView.parseJoin(sql)
-      .filter(_.tables.forall(tn =>
-        catalog.get(tn).exists(_.attached.isEmpty)))
-      .filterNot(js => floatSumAvg(js.aggs,
-        js.joined(js.tables.map(tn => emptyLogicalFrame(catalog.require(tn))))))
+  /** Some(shape) iff the SQL is an incrementally maintainable view
+    * (IncrementalView.parse: one table or an equi-join chain) whose
+    * tables are all non-attached engine tables of this catalog —
+    * attached event logs have no sequence bookkeeping to anchor a
+    * refresh horizon to — and no SUM/AVG reads a FLOAT/DOUBLE
+    * expression (see floatSumAvg; types resolve against the aliased
+    * empty join chain). `parsedOnly` skips those catalog gates: the
+    * read path applies a stored view's HAVING whatever its tables'
+    * state is now. */
+  private def shapeOf(sql: String, parsedOnly: Boolean = false)
+      : Option[IncrementalView.Shape] =
+    IncrementalView.parse(sql).filter(sh => parsedOnly || (
+      sh.tables.forall(tn => catalog.get(tn).exists(_.attached.isEmpty)) &&
+        !floatSumAvg(sh.aggs, sh.joined(
+          sh.tables.map(tn => emptyLogicalFrame(catalog.require(tn)))))))
 
   /** An empty local frame with `t`'s logical schema — for driver-side
     * expression-type resolution only (analysis, never a job). */
@@ -4963,6 +4785,33 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     (main, writes)
   }
 
+  /** Materialize a maintainable view's `version` from every table's
+    * current state — hidden support columns and aux frames included,
+    * so the stored schema is always merge-ready — and return the
+    * per-table horizons it was read at. CREATE and full REFRESH both
+    * land here. */
+  private def populateShape(name: String, sh: IncrementalView.Shape,
+      version: Long): Map[String, Long] = {
+    val hs = sh.tables.map(tn => tn -> catalog.lastSeq(tn)).toMap
+    val frames = sh.tables.map(tn => stateAt(tn, Some(hs(tn)).filter(_ > 0)))
+    val agged = IncrementalView.aggregate(frames, sh)
+    // HAVING resolves against the view's VISIBLE output columns plus
+    // the rewrite-minted __graft_h_* having accumulators —
+    // analysis-check it against that frame NOW so a typo (or a
+    // reference to a __graft_* support column the read path strips)
+    // fails the CREATE, not the first read (the filter itself applies
+    // at read time)
+    sh.having.foreach(h => agged
+      .drop(agged.columns.filter(c => IncrementalView.hidden(c) &&
+        !c.startsWith(IncrementalView.HavingAggPrefix)).toIndexedSeq: _*)
+      .where(expr(h)).queryExecution.analyzed)
+    encrypted(agged.write)
+      .mode("overwrite").parquet(catalog.mviewDataPath(name, version))
+    writeAuxes(sh.joined(frames), sh.groupKeys,
+      IncrementalView.auxAggs(sh.aggs), name, version)
+    hs
+  }
+
   /** Populate the aux frames (COUNT(DISTINCT), MIN, MAX) for a freshly
     * aggregated view version — `base` is the where-filtered state (or
     * joined relation) the main aggregation consumed; one bucketed
@@ -4978,23 +4827,19 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         Array.fill(IncrementalView.AuxBuckets)(version))
     }
 
-  /** A filter restricting a state read to the pks touched in
-    * (r, horizon]. A small touched set inlines TYPED pk values (from
-    * the event payload, not the canonical string pk) so the state
-    * reads prune their scans by pushdown — the filter passes through
-    * the collapse window because pk is its partitioning column. Past
-    * the cap, the semi join stands: O(touched) keys at 100 TB can be
-    * millions of rows, which must never collect. */
-  private def touchedRestrictor(t: TableDef, r: Long, horizon: Long)
-      : DataFrame => DataFrame = touchedFilters(t, r, horizon)._1
-
   /** Semi AND anti restrictors over ONE touched-key collection: the
     * semi side keeps state rows whose pk saw an event in (r, horizon]
     * (the delta frames), the anti side drops exactly those rows — the
     * join-view refresh derives each OLD-horizon prefix as
     * (new state − touched pks) ∪ old touched rows instead of a second
     * horizon scan, so both filters must come from the same key set
-    * (and the inline-key job must run once, not per filter). */
+    * (and the inline-key job must run once, not per filter). A small
+    * touched set inlines TYPED pk values (from the event payload, not
+    * the canonical string pk) so the state reads prune their scans by
+    * pushdown — the filter passes through the collapse window because
+    * pk is its partitioning column. Past the cap, the semi/anti joins
+    * stand: O(touched) keys at 100 TB can be millions of rows, which
+    * must never collect. */
   private def touchedFilters(t: TableDef, r: Long, horizon: Long)
       : (DataFrame => DataFrame, DataFrame => DataFrame) = {
     val touched = events(t)
@@ -5254,15 +5099,18 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * restricts nothing. With no owned key at all the join stays
     * unrestricted and the post-filter alone bounds the
     * re-aggregation, as before. */
-  private def recomputeJoinInput(js: IncrementalView.JoinShape,
+  private def recomputeJoinInput(js: IncrementalView.Shape,
       sides: Seq[String], adj: Array[List[(Int, String, String)]],
       fullNew: Seq[DataFrame], sd: DataFrame,
       pin: DataFrame => DataFrame): DataFrame = {
-    // legacy __graft_-columned base tables skip the value/cascade
+    // one table has no partner to prune, and pruneToTouchedGroups
+    // already restricts it by the touched key values; legacy
+    // __graft_-columned base tables skip the value/cascade
     // restrictions (which mint __graft_tv*/__graft_ck* frames) — the
     // unrestricted join is the pre-r16 fallback, still exact after
     // pruneToTouchedGroups' post-filter
-    if (sides.exists(tn => carriesHiddenCols(catalog.require(tn))))
+    if (sides.size == 1 ||
+        sides.exists(tn => carriesHiddenCols(catalog.require(tn))))
       return js.joined(fullNew)
     // the side owning a key expression: every column reference in it
     // resolves to the same single side. Qualifiers are the join

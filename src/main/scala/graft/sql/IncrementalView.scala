@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   *
   *   SELECT g1, ..., gk, COUNT(*) AS a, COUNT(e) AS b, SUM(e) AS c,
   *          AVG(e) AS d, ...
-  *   FROM <engine table> [WHERE <pred>] GROUP BY g1, ..., gk
+  *   FROM <engine table> [JOIN <table> ON <t1>.<c> = <t2>.<c> ...]
+  *   [WHERE <pred>] GROUP BY g1, ..., gk
   *   [HAVING <pred over the view's OUTPUT columns>]
   *
   * HAVING is a READ-TIME filter: the stored parquet keeps every group
@@ -145,66 +146,51 @@ object IncrementalView {
     * land in the same group on every evaluation). */
   final case class GroupKey(e: String, alias: String)
 
-  final case class Shape(table: String, where: Option[String],
-      groupKeys: Seq[GroupKey], aggs: Seq[Agg],
-      having: Option[String] = None) {
-    def groupCols: Seq[String] = groupKeys.map(_.alias)
-    /** The view's base relation: state with the WHERE applied — the
-      * ONE derivation both the main aggregation and the aux frames
-      * consume (hand-rolled copies could drift). */
-    def filtered(state: DataFrame): DataFrame =
-      where.fold(state)(w => state.where(expr(w)))
-    /** Only the SKETCH-backed aggregates (APPROX_COUNT_DISTINCT,
-      * APPROX_PERCENTILE) pay the refresh-time old-side
-      * probe (a sketch cannot retract a value, so a refresh that
-      * touches a contributing pre-horizon row dispatches to the
-      * touched-group recompute instead of the sketch union; see
-      * recomputeSketches). MIN/MAX retract exactly through their aux
-      * frames (round 15), like COUNT(DISTINCT). */
-    def hasSketch: Boolean = sketchAggs(aggs).nonEmpty
-  }
-
-  /** N-way (2..MaxJoinTables) equi-join view shape (round 14):
+  /** The maintainable view shape, a linear chain of 1..MaxJoinTables
+    * tables (round 14 added the joins; a single-table view is the
+    * one-table chain):
     *
-    *   SELECT g1..gk, COUNT/SUM/AVG aggs
-    *   FROM t1 JOIN t2 ON q.c = q.c [JOIN t3 ON ...] ...
-    *   [WHERE p] GROUP BY g1..gk
+    *   SELECT g1..gk, <aggs>
+    *   FROM t1 [JOIN t2 ON q.c = q.c [JOIN t3 ON ...] ...]
+    *   [WHERE p] GROUP BY g1..gk [HAVING p]
     *
-    * A linear chain of inner equi-joins, each ON linking the newly
-    * joined table to one earlier table. The telescoping signed delta
-    * (see
+    * Each ON is an inner equi-join linking the newly joined table to
+    * one earlier table. The telescoping signed delta (see
     * joinSignedDelta) subtracts as well as adds, so it is exact under
-    * arbitrary updates/deletes on ANY side. COUNT/SUM/AVG retract from
-    * the stored accumulators; COUNT(DISTINCT), SUM/AVG(DISTINCT) and
-    * MIN/MAX (round 15)
+    * arbitrary updates/deletes on ANY side; for one table it is just
+    * the touched rows' new state at +1 and old state at −1.
+    * COUNT/SUM/AVG retract from the stored accumulators;
+    * COUNT(DISTINCT), SUM/AVG(DISTINCT) and MIN/MAX (round 15)
     * retract through their aux frames, which the same signed delta
-    * maintains. APPROX_COUNT_DISTINCT's sketch cannot retract a joined
-    * row — and the union folds in EVERY +1 row, including a
-    * cancelling cross-term's +1 PHANTOM pair that never existed in
-    * either state — so the engine probes the signed delta for ANY
-    * negative-signed sketch-value row: none — appends whose new rows
-    * join only PRE-EXISTING partner rows, the common facts-landing-
-    * against-stable-dims shape — means the
-    * sketch union stands; any means only the touched groups' sketches
-    * recompute from the joined current state (round 15; the probe is
-    * conservative — a false positive costs a recompute, never
-    * correctness — and strict enough to exclude phantoms: a
-    * cancelling old×new cross-pair always emits its matching NEGATIVE
-    * row in the earlier touched side's term, which the probe sees —
-    * joinSignedDelta's phantom note). Telescoping's partition
-    * property (a joined row enters the term of the FIRST side whose
-    * row is new) is what makes the pure-append union fold every
-    * (group, value) pair in exactly once.
+    * maintains. A sketch (APPROX_COUNT_DISTINCT's HLL,
+    * APPROX_PERCENTILE's KLL) cannot retract a row — and across a
+    * join the union folds in EVERY +1 row, including a cancelling
+    * cross-term's +1 PHANTOM pair that never existed in either state
+    * — so the engine probes the signed delta for ANY negative-signed
+    * sketch-value row: none — appends, or appends whose new rows join
+    * only PRE-EXISTING partner rows, the common
+    * facts-landing-against-stable-dims shape — means the sketch union
+    * stands; any means only the touched groups' sketches recompute
+    * from current state (round 15; the probe is conservative — a
+    * false positive costs a recompute, never correctness — and strict
+    * enough to exclude phantoms: a cancelling old×new cross-pair
+    * always emits its matching NEGATIVE row in the earlier touched
+    * side's term, which the probe sees — joinSignedDelta's phantom
+    * note). Telescoping's partition property (a joined row enters the
+    * term of the FIRST side whose row is new) is what makes the
+    * pure-append union fold every (group, value) pair in exactly once.
     * Table names double as the join aliases; group columns are
     * bare identifiers that must be unambiguous in the joined relation
     * (the stored view exposes them unqualified). */
-  final case class JoinShape(tables: Seq[String], onExprs: Seq[String],
+  final case class Shape(tables: Seq[String], onExprs: Seq[String],
       links: Seq[(String, String, String, String)], where: Option[String],
       groupKeys: Seq[GroupKey], aggs: Seq[Agg],
       having: Option[String] = None) {
     def groupCols: Seq[String] = groupKeys.map(_.alias)
-    /** The aliased join chain (+ view WHERE) over one state frame per
-      * table, in `tables` order. */
+    /** The view's base relation: the aliased join chain (+ view WHERE)
+      * over one state frame per table, in `tables` order — the ONE
+      * derivation the main aggregation, the aux frames and every
+      * signed-delta term consume (hand-rolled copies could drift). */
     def joined(frames: Seq[DataFrame]): DataFrame = {
       val aliased = tables.zip(frames).map { case (t, f) => f.alias(t) }
       val j = aliased.tail.zip(onExprs).foldLeft(aliased.head) {
@@ -212,17 +198,12 @@ object IncrementalView {
       }
       where.fold(j)(p => j.where(expr(p)))
     }
-    /** See Shape.hasSketch: sketch-bearing join refreshes probe the
-      * signed delta for negative-signed sketch values to dispatch
-      * union vs recompute. */
+    /** Only the SKETCH-backed aggregates (APPROX_COUNT_DISTINCT,
+      * APPROX_PERCENTILE) pay the refresh-time probe of the signed
+      * delta that dispatches union vs touched-group recompute (see
+      * recomputeSketches). MIN/MAX retract exactly through their aux
+      * frames (round 15), like COUNT(DISTINCT). */
     def hasSketch: Boolean = sketchAggs(aggs).nonEmpty
-    /** For the 2-table shape: the single link's key column on each
-      * side, in `tables` order — the engine's full-side pruning. */
-    def twoTableKeys: Option[(String, String)] = links match {
-      case Seq((q1, c1, _, c2)) if tables.size == 2 =>
-        Some(if (q1.equalsIgnoreCase(tables.head)) (c1, c2) else (c2, c1))
-      case _ => None
-    }
   }
 
   /** Join chains cap. The telescoping delta (round 17) emits ONE
@@ -349,9 +330,6 @@ object IncrementalView {
     grouped.values.map(ms => (ms.head, ms.toSeq)).toSeq
   }
 
-  private val ShapeRe =
-    ("""(?is)^\s*SELECT\s+(.+?)\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.+?))?""" +
-      """\s+GROUP\s+BY\s+(.+?)(?:\s+HAVING\s+(.+?))?\s*;?\s*$""").r
   private val CountStarRe = """(?is)^COUNT\s*\(\s*\*\s*\)\s+AS\s+(\w+)$""".r
   private val CdRe =
     """(?is)^COUNT\s*\(\s*DISTINCT\b\s*(.+)\)\s+AS\s+(\w+)$""".r
@@ -438,7 +416,7 @@ object IncrementalView {
       // the case-insensitive parse — `COUNT(*)` and `count( * )` are
       // the same accumulator, whether it lives in the select list or
       // was minted by an earlier call in this same predicate
-      val probe = parseAgg(
+      val probe = aggOf(
         s"${call.replaceAll("\\s+", " ").trim} AS __probe") match {
         case Some(p) => p
         case None => return None
@@ -449,7 +427,7 @@ object IncrementalView {
         .orElse(minted.values.find(same).map(_.alias))
         .getOrElse {
           val a = s"$HavingAggPrefix${minted.size}"
-          parseAgg(s"$call AS $a") match {
+          aggOf(s"$call AS $a") match {
             case Some(agg) => minted(a) = agg; a
             case None => return None
           }
@@ -464,7 +442,7 @@ object IncrementalView {
   /** Parse one `AGG(args) AS alias` item into its maintainable Agg,
     * None when the call is not one the engine maintains. Shared by
     * the select-list classifier and the HAVING rewrite. */
-  private def parseAgg(item: String): Option[Agg] = item match {
+  private def aggOf(item: String): Option[Agg] = item match {
     case CountStarRe(a) => Some(CountStar(a))
     // before CountRe, which would otherwise swallow the DISTINCT
     // keyword into its expression; multi-column COUNT(DISTINCT a, b)
@@ -489,10 +467,9 @@ object IncrementalView {
       Some(SumExpr(e.trim, a))
     case AvgRe(e, a) if SqlText.splitTopLevel(e).size == 1 =>
       Some(AvgExpr(e.trim, a))
-    // admitted into BOTH shapes: single-table and join refreshes
-    // each probe for retraction and dispatch union vs recompute; the
-    // 2-arg relative-error form has no fixed-k mergeable sketch and
-    // falls back
+    // the refresh probes the signed delta for retraction and
+    // dispatches union vs recompute; the 2-arg relative-error form
+    // has no fixed-k mergeable sketch and falls back
     case AcdRe(e, a) if SqlText.splitTopLevel(e).size == 1 =>
       Some(AcdExpr(e.trim, a))
     // two args, LITERAL quantile in [0, 1] (a column-valued p has no
@@ -540,7 +517,7 @@ object IncrementalView {
       : Option[(Seq[GroupKey], Seq[Agg])] = {
     val aggs = Vector.newBuilder[Agg]
     val keys = Vector.newBuilder[GroupKey]
-    for (i <- items) parseAgg(i) match {
+    for (i <- items) aggOf(i) match {
       // __graft_* is the engine's hidden-column namespace (HAVING
       // accumulators, aux/sketch columns — `hidden`): a user alias
       // inside it would collide with a minted accumulator mid-CREATE
@@ -550,7 +527,7 @@ object IncrementalView {
       case Some(a) if hidden(a.alias) => return None
       case Some(a) => aggs += a
       case None => i match {
-        // an agg-shaped item parseAgg rejected (COUNT(DISTINCT a,b),
+        // an agg-shaped item aggOf rejected (COUNT(DISTINCT a,b),
         // SUM(DISTINCT …) over multiple exprs) must fail the shape,
         // not fall through into the group keys
         case b if BareRe.matches(b) =>
@@ -571,53 +548,18 @@ object IncrementalView {
     else None
   }
 
-  /** Some(shape) iff `sql` is the maintainable form above: one table,
-    * bare-identifier group columns (select list and GROUP BY must
-    * agree), every aggregate a COUNT/SUM/AVG/APPROX_COUNT_DISTINCT/
-    * MIN/MAX with an alias. APPROX_COUNT_DISTINCT parses into the
-    * shape here; its extra refresh-time precondition (no touched pk
-    * was contributing at the old horizon) is the ENGINE's gate, not
-    * the parser's. */
-  def parse(sql: String): Option[Shape] = sql match {
-    case ShapeRe(selectList, table, where, groupBy, having) =>
-      val items = SqlText.splitTopLevel(selectList).map(_.trim)
-      val gcols = SqlText.splitTopLevel(groupBy).map(_.trim)
-      if (gcols.isEmpty || !gcols.forall(BareRe.matches(_))) return None
-      // COUNT/SUM/AVG(DISTINCT) maintain via the aux frame; the other
-      // DISTINCT-qualified aggregates fall back to full rerun
-      if (items.exists(i => NonCdDistinctRe.findFirstIn(i).isDefined))
-        return None
-      // a read-time HAVING filters the view's stored rows; aggregate
-      // calls in it (HAVING COUNT(*) >= 2, standard SQL) rewrite to
-      // hidden maintained accumulators (rewriteHaving) — only a
-      // trailing ORDER BY/LIMIT (not a predicate at all) or an
-      // unmaintainable call falls back to full rerun
-      if (Option(having).exists(h =>
-          TrailingClauseRe.findFirstIn(h).isDefined)) return None
-      classify(items, gcols).flatMap {
-        case (keys, aggs) =>
-          Option(having).map(_.trim) match {
-            case None => Some(Shape(table, Option(where).map(_.trim),
-              keys, aggs, None))
-            case Some(h) => rewriteHaving(h, aggs).map {
-              case (rewritten, extra) =>
-                Shape(table, Option(where).map(_.trim),
-                  keys, aggs ++ extra, Some(rewritten))
-            }
-          }
-      }
-    case _ => None
-  }
-
   // SUM/AVG(DISTINCT) maintain via the aux frame since round 15;
   // MIN/MAX(DISTINCT) (a legal no-op spelling) and
   // APPROX_COUNT_DISTINCT(DISTINCT) stay full-rerun
   private val NonCdDistinctRe =
     """(?is)\b(?:MIN|MAX|APPROX_COUNT_DISTINCT)\s*\(\s*DISTINCT\b""".r
 
-  private val JoinShapeRe =
-    ("""(?is)^\s*SELECT\s+(.+?)\s+FROM\s+(\w+(?:\s+(?:INNER\s+)?JOIN\s+""" +
-      """\w+\s+ON\s+\w+\s*\.\s*\w+\s*=\s*\w+\s*\.\s*\w+)+)""" +
+  // FROM is one table — dotted names are flat identifiers (`app.t`) —
+  // or an equi-join chain of bare table names, which double as the
+  // join aliases
+  private val ShapeRe =
+    ("""(?is)^\s*SELECT\s+(.+?)\s+FROM\s+([\w.]+(?:\s+(?:INNER\s+)?JOIN\s+""" +
+      """\w+\s+ON\s+\w+\s*\.\s*\w+\s*=\s*\w+\s*\.\s*\w+)*)""" +
       """(?:\s+WHERE\s+(.+?))?\s+GROUP\s+BY\s+(.+?)""" +
       """(?:\s+HAVING\s+(.+?))?\s*;?\s*$""").r
   private val JoinLinkRe =
@@ -625,21 +567,24 @@ object IncrementalView {
       """(\w+)\s*\.\s*(\w+)\s*=\s*(\w+)\s*\.\s*(\w+)""").r
   private val BareRe = """^\w+$""".r
 
-  /** Some(shape) iff `sql` is the maintainable join-chain form: 2 to
-    * MaxJoinTables distinct tables, each ON an equality linking the
-    * newly joined table to ONE earlier table (qualifiers are table
-    * names, either order), bare unqualified group columns matching
-    * the select list, and only retractable aggregates — COUNT/SUM/AVG
-    * plus the aux-frame-backed COUNT(DISTINCT) and MIN/MAX
-    * (APPROX_COUNT_DISTINCT's sketch cannot retract a joined row — a
-    * join view holding one falls back to full REFRESH). */
-  def parseJoin(sql: String): Option[JoinShape] = sql match {
-    case JoinShapeRe(selectList, fromChain, where, groupBy, having) =>
+  /** Some(shape) iff `sql` is the maintainable form (see Shape): one
+    * table, or 2 to MaxJoinTables distinct bare-named tables, each ON
+    * an equality linking the newly joined table to ONE earlier table
+    * (qualifiers are table names, either order); bare unqualified
+    * group columns matching the select list; every aggregate one the
+    * engine maintains (aggOf), APPROX_COUNT_DISTINCT and
+    * APPROX_PERCENTILE included — whether their sketch unions or
+    * recomputes is the ENGINE's refresh-time dispatch, not the
+    * parser's. */
+  def parse(sql: String): Option[Shape] = sql match {
+    case ShapeRe(selectList, fromChain, where, groupBy, having) =>
       val first =
-        """^\w+""".r.findFirstIn(fromChain.trim).getOrElse(return None)
+        """^[\w.]+""".r.findFirstIn(fromChain.trim).getOrElse(return None)
       val linkMs = JoinLinkRe.findAllMatchIn(fromChain).toSeq
       val tables = first +: linkMs.map(_.group(1))
-      if (tables.size < 2 || tables.size > MaxJoinTables) return None
+      if (tables.size > MaxJoinTables) return None
+      // a join alias must be a bare name
+      if (tables.size > 1 && !BareRe.matches(first)) return None
       // duplicate names would collide the table-name aliases
       if (tables.map(_.toLowerCase).distinct.size != tables.size) return None
       val links = linkMs.zipWithIndex.map { case (m, i) =>
@@ -658,18 +603,25 @@ object IncrementalView {
       val items = SqlText.splitTopLevel(selectList).map(_.trim)
       val gcols = SqlText.splitTopLevel(groupBy).map(_.trim)
       if (gcols.isEmpty || !gcols.forall(BareRe.matches(_))) return None
+      // COUNT/SUM/AVG(DISTINCT) maintain via the aux frame; the other
+      // DISTINCT-qualified aggregates fall back to full rerun
       if (items.exists(i => NonCdDistinctRe.findFirstIn(i).isDefined))
         return None
+      // a read-time HAVING filters the view's stored rows; aggregate
+      // calls in it (HAVING COUNT(*) >= 2, standard SQL) rewrite to
+      // hidden maintained accumulators (rewriteHaving) — only a
+      // trailing ORDER BY/LIMIT (not a predicate at all) or an
+      // unmaintainable call falls back to full rerun
       if (Option(having).exists(h =>
           TrailingClauseRe.findFirstIn(h).isDefined)) return None
       classify(items, gcols).flatMap {
         case (keys, aggs) =>
           Option(having).map(_.trim) match {
-            case None => Some(JoinShape(tables, onExprs, links,
+            case None => Some(Shape(tables, onExprs, links,
               Option(where).map(_.trim), keys, aggs, None))
             case Some(h) => rewriteHaving(h, aggs).map {
               case (rewritten, extra) =>
-                JoinShape(tables, onExprs, links,
+                Shape(tables, onExprs, links,
                   Option(where).map(_.trim), keys, aggs ++ extra,
                   Some(rewritten))
             }
@@ -678,21 +630,12 @@ object IncrementalView {
     case _ => None
   }
 
-  /** The view query over a state frame, INCLUDING the hidden support
-    * columns — population at CREATE and full REFRESH both use this so
-    * the stored schema is always merge-ready. */
-  def aggregate(state: DataFrame, shape: Shape): DataFrame =
-    aggregateFrom(shape.filtered(state), shape.groupKeys, shape.aggs)
-
-  /** Join-view population: the aliased equi-join chain of the tables'
-    * state (+ WHERE), through the same aggregation as `aggregate`. */
-  def aggregateJoin(frames: Seq[DataFrame], shape: JoinShape): DataFrame =
-    aggregateFrom(shape.joined(frames), shape.groupKeys, shape.aggs)
-
-  private def aggregateFrom(base: DataFrame, groupKeys: Seq[GroupKey],
-      aggs: Seq[Agg]): DataFrame = {
+  /** The view query over one state frame per table, INCLUDING the
+    * hidden support columns — population at CREATE and full REFRESH
+    * both use this so the stored schema is always merge-ready. */
+  def aggregate(frames: Seq[DataFrame], shape: Shape): DataFrame = {
     val aggCols: Seq[Column] =
-      aggs.map {
+      shape.aggs.map {
         case CountStar(a) => count(lit(1)).as(a)
         case CountExpr(e, a) => count(expr(e)).as(a)
         case SumExpr(e, a) => sum(expr(e)).as(a)
@@ -727,7 +670,7 @@ object IncrementalView {
           val v = expr(e).cast("double")
           when(count(v) > 0, kllQuantile(kllAgg(v), p)).as(a)
       } ++ Seq(count(lit(1)).as(RowsCol)) ++
-        aggs.flatMap {
+        shape.aggs.flatMap {
           case SumExpr(e, a) => Seq(count(expr(e)).as(supportCol(a)))
           case AvgExpr(e, a) => Seq(sum(expr(e)).as(avgSumCol(a)),
             count(expr(e)).as(supportCol(a)))
@@ -737,7 +680,8 @@ object IncrementalView {
             Seq(kllAgg(v).as(kllCol(a)), count(v).as(supportCol(a)))
           case _ => Nil
         }
-    base.groupBy(groupKeys.map(k => expr(k.e).as(k.alias)): _*)
+    shape.joined(frames)
+      .groupBy(shape.groupKeys.map(k => expr(k.e).as(k.alias)): _*)
       .agg(aggCols.head, aggCols.tail: _*)
   }
 
@@ -764,47 +708,11 @@ object IncrementalView {
       case MaxExpr(e, a) => expr(e).cast(storedType(a)).as(s"__val_$a")
     }
 
-  /** Merge the stored view with the signed contributions of the
-    * touched rows: `oldRows` (state at the last refresh horizon,
-    * touched pks only) contribute −1, `newRows` (current state,
-    * touched pks only) +1. Groups whose live row count reaches zero
-    * vanish; SUMs whose non-null support reaches zero return to NULL.
-    * One aggregation over O(touched) rows + one join on the view key.
-    *
-    * MIN/MAX pass through here as `least`/`greatest(stored, new-side
-    * agg)` — a sound value only under pure appends — and the ENGINE
-    * then overlays every TOUCHED group's exact extreme from the
-    * merged aux frame (overlayAux), which is what makes them correct
-    * under arbitrary updates/deletes; only untouched groups keep the
-    * pass-through value, and for those it equals the stored extreme. */
-  def merge(stored: DataFrame, oldRows: DataFrame, newRows: DataFrame,
-      shape: Shape): DataFrame =
-    mergeSigned(stored, signedDelta(stored, oldRows, newRows, shape),
-      shape.groupCols, shape.aggs)
-
-  /** The single-table signed contribution frame: old-horizon touched
-    * rows at −1, new-state touched rows at +1, WHERE applied, group
-    * keys evaluated, agg values projected. Exposed so the engine can
-    * feed the SAME frame to both the main merge and the
-    * COUNT(DISTINCT) aux maintenance. */
-  def signedDelta(stored: DataFrame, oldRows: DataFrame,
-      newRows: DataFrame, shape: Shape): DataFrame = {
-    val storedType = stored.schema.map(f => f.name -> f.dataType).toMap
-    def signed(rows: DataFrame, sign: Int): DataFrame = {
-      val base = shape.filtered(rows)
-      base.select(
-        shape.groupKeys.map(k => expr(k.e).as(k.alias)) ++
-          Seq(lit(sign).as("__sign")) ++
-          signedVals(shape.aggs, storedType): _*)
-    }
-    signed(oldRows, -1).unionByName(signed(newRows, 1))
-  }
-
   /** The merge core over an already-SIGNED contribution frame
     * (groupCols + `__sign` ±1 + the `signedVals` columns): aggregate
     * the signed deltas per group, full-outer-join on the view key,
-    * combine with the stored accumulators. The single-table `merge`
-    * and the join-view delta both land here. */
+    * combine with the stored accumulators. The view's signed delta
+    * (joinSignedDelta) and every aux frame's merge land here. */
   def mergeSigned(stored: DataFrame, signedRows: DataFrame,
       groupCols: Seq[String], aggs: Seq[Agg]): DataFrame = {
     val storedType = stored.schema.map(f => f.name -> f.dataType).toMap
@@ -956,7 +864,7 @@ object IncrementalView {
       .where(col(RowsCol) > 0)
   }
 
-  /** Signed contribution frame of a join view's refresh — the
+  /** Signed contribution frame of a view's refresh — the
     * TELESCOPING delta (round 17, replacing the 2ⁿ−1-term
     * inclusion-exclusion): with ΔAᵢ = Aᵢ_new[touchedᵢ] −
     * Aᵢ_old[touchedᵢ] (signed multisets),
@@ -964,7 +872,9 @@ object IncrementalView {
     *   ⋈ᵢAᵢ_new − ⋈ᵢAᵢ_old
     *     = Σᵢ ( A₁_old ⋈ … ⋈ Aᵢ₋₁_old ⋈ ΔAᵢ ⋈ Aᵢ₊₁_new ⋈ … ⋈ Aₙ_new )
     *
-    * (check n=2: ΔA⋈B_new + A_old⋈ΔB — the sum telescopes exactly).
+    * (check n=2: ΔA⋈B_new + A_old⋈ΔB — the sum telescopes exactly;
+    * a one-table view's delta is ΔA alone, its touched rows' new state
+    * at +1 and old state at −1).
     * ONE term per TOUCHED side — k terms, not 2^k−1 — and each term's
     * row sign is simply its Δ row's own sign, no products. An
     * untouched side's delta is statically empty, so its term is
@@ -998,7 +908,7 @@ object IncrementalView {
     * (oldᵢ, newᵢ, fullOldᵢ, fullNewᵢ) in `shape.tables` order; the
     * engine pre-prunes the full frames and passes fullNew for
     * fullOld on untouched sides. */
-  def joinSignedDelta(shape: JoinShape, stored: DataFrame,
+  def joinSignedDelta(shape: Shape, stored: DataFrame,
       sides: Seq[(DataFrame, DataFrame, DataFrame, DataFrame)],
       untouched: Set[Int] = Set.empty): DataFrame = {
     val terms = sides.indices.filterNot(untouched)
@@ -1016,7 +926,7 @@ object IncrementalView {
     * (guide §2.6): the union's value is order-independent term
     * algebra, so per-term pinning changes execution overlap, never
     * the merged delta. */
-  def joinSignedDeltaTerm(shape: JoinShape, stored: DataFrame,
+  def joinSignedDeltaTerm(shape: Shape, stored: DataFrame,
       sides: Seq[(DataFrame, DataFrame, DataFrame, DataFrame)],
       i: Int): DataFrame = {
     require(sides.size == shape.tables.size,

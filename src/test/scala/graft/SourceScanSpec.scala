@@ -8,10 +8,13 @@ import scala.jdk.CollectionConverters._
 
 /** Source-level guards on the engine's single primitives: one function
   * builds a pin (GraftBridge.pin), one helper starts pool work
-  * (graft.exec.Par) and one builds one-row result frames
-  * (QueryEngine.oneRow). A new pin variant or a hand-rolled thread fails
-  * here instead of quietly growing a second copy of either. Comment
-  * lines are ignored, so docs may name what the code must not do. */
+  * (graft.exec.Par), one builds one-row result frames
+  * (QueryEngine.oneRow) and one shape describes an incrementally
+  * maintained view (IncrementalView.Shape, read through
+  * QueryEngine.shapeOf). A new pin variant, a hand-rolled thread or a
+  * second view shape fails here instead of quietly growing a second
+  * copy. Comment lines are ignored, so docs may name what the code
+  * must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -51,6 +54,22 @@ class SourceScanSpec extends AnyFunSuite {
     assert(occurrences("spark.range(1).select(").isEmpty)
     assert(occurrences("private def oneRow(") ==
       Map("graft/exec/QueryEngine.scala" -> 1))
+  }
+
+  test("one incremental-view shape, one parser, parsed only by shapeOf") {
+    val ivm = sources.collectFirst {
+      case ("graft/sql/IncrementalView.scala", code) => code }.get
+    def count(re: String): Int = ivm.count(re.r.findFirstIn(_).isDefined)
+    assert(count("""case class \w*Shape\(""") == 1)
+    assert(count("""def parse\w*\(""") == 1)
+    val engine = sources.collectFirst {
+      case ("graft/exec/QueryEngine.scala", code) => code }.get.toIndexedSeq
+    val calls = engine.indices.filter(engine(_).contains("IncrementalView.parse"))
+    val shapeOf = engine.indexWhere(_.contains("private def shapeOf("))
+    assert(shapeOf >= 0, "QueryEngine.shapeOf is gone")
+    // the one call sits in shapeOf's body, right under its signature
+    assert(calls.size == 1 && calls.head > shapeOf && calls.head - shapeOf <= 3,
+      calls.map(i => engine(i).trim))
   }
 
   test("only Par starts pool work; PgServer keeps its own threads") {

@@ -53,27 +53,6 @@ class DedupSpec extends AnyFunSuite {
     graft.Pins.free(now)
   }
 
-  test("prefix-filtered pairs equal the direct self-join exactly") {
-    // the AllPairs/PPJoin pruning may only shrink CANDIDATES, never
-    // results: compare against the direct form at two thresholds, and
-    // against the independent vocab-join oracle
-    for (tau <- Seq(0.3, 0.5, 0.7)) {
-      val pf = Dedup.shingleJaccardPairs(docs, 3, tau, 0.8, 100L,
-        prefixFilter = true)
-      val direct = Dedup.shingleJaccardPairs(docs, 3, tau, 0.8, 100L)
-      assert(pf.exceptAll(direct).count() === 0, s"extra pairs at $tau")
-      assert(direct.exceptAll(pf).count() === 0, s"missing pairs at $tau")
-      graft.Pins.free(pf); graft.Pins.free(direct)
-    }
-    // word-level too (different token generator, same machinery)
-    val pfw = Dedup.jaccardPairs(docs, 0.4, 0.8, 100L, prefixFilter = true)
-    val dw = Dedup.jaccardPairs(docs, 0.4, 0.8, 100L)
-    assert(pfw.exceptAll(dw).count() === 0)
-    assert(dw.exceptAll(pfw).count() === 0)
-    assert(dw.count() > 0, "word-level fixture produced no pairs")
-    graft.Pins.free(pfw); graft.Pins.free(dw)
-  }
-
   test("the pair plan reads ONE materialized token frame, never re-exploding") {
     // the corpus-sized explode must execute exactly once: the capped
     // token frame is pinned (localCheckpoint), so the downstream plan
