@@ -11,10 +11,10 @@ import scala.jdk.CollectionConverters._
   * (graft.exec.Par), one builds one-row result frames
   * (QueryEngine.oneRow) and one shape describes an incrementally
   * maintained view (IncrementalView.Shape, read through
-  * QueryEngine.shapeOf). A new pin variant, a hand-rolled thread or a
-  * second view shape fails here instead of quietly growing a second
-  * copy. Comment lines are ignored, so docs may name what the code
-  * must not do. */
+  * MatViews.shapeOf, and only MatViews reads it). A new pin variant, a
+  * hand-rolled thread or a second view shape fails here instead of
+  * quietly growing a second copy. Comment lines are ignored, so docs
+  * may name what the code must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -46,6 +46,10 @@ class SourceScanSpec extends AnyFunSuite {
     val bridge = "org/apache/spark/sql/GraftBridge.scala"
     for (p <- Seq("toRdd.map(_.copy())", "LogicalRDD.fromDataset"))
       assert(occurrences(p) == Map(bridge -> 1), p)
+    // the one cache call outside it: a refresh's lazy pins
+    // (MatViews.RefreshPins), which fill inside their first reader's job
+    assert(occurrences(".persist(") ==
+      Map(bridge -> 1, "graft/exec/MatViews.scala" -> 1))
   }
 
   test("one-row result frames come from QueryEngine.oneRow, not a range job") {
@@ -62,14 +66,20 @@ class SourceScanSpec extends AnyFunSuite {
     def count(re: String): Int = ivm.count(re.r.findFirstIn(_).isDefined)
     assert(count("""case class \w*Shape\(""") == 1)
     assert(count("""def parse\w*\(""") == 1)
-    val engine = sources.collectFirst {
-      case ("graft/exec/QueryEngine.scala", code) => code }.get.toIndexedSeq
-    val calls = engine.indices.filter(engine(_).contains("IncrementalView.parse"))
-    val shapeOf = engine.indexWhere(_.contains("private def shapeOf("))
-    assert(shapeOf >= 0, "QueryEngine.shapeOf is gone")
+    val views = sources.collectFirst {
+      case ("graft/exec/MatViews.scala", code) => code }.get.toIndexedSeq
+    val calls = views.indices.filter(views(_).contains("IncrementalView.parse"))
+    val shapeOf = views.indexWhere(_.contains("private def shapeOf("))
+    assert(shapeOf >= 0, "MatViews.shapeOf is gone")
     // the one call sits in shapeOf's body, right under its signature
     assert(calls.size == 1 && calls.head > shapeOf && calls.head - shapeOf <= 3,
-      calls.map(i => engine(i).trim))
+      calls.map(i => views(i).trim))
+    assert(occurrences("IncrementalView.parse").keySet ==
+      Set("graft/exec/MatViews.scala"))
+  }
+
+  test("materialized views live in MatViews, not QueryEngine") {
+    assert(!occurrences("IncrementalView.").contains("graft/exec/QueryEngine.scala"))
   }
 
   test("only Par starts pool work; PgServer keeps its own threads") {

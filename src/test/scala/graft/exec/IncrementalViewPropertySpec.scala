@@ -546,7 +546,7 @@ class IncrementalViewPropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val eF = QueryEngine.scratch(spark) // fusion eligible
     val eD = QueryEngine.scratch(spark) // fusion forcibly declined
-    eD.disableFusedReads = true
+    eD.matViews.disableFusedReads = true
     val engines = Seq(eF, eD)
     def both(sql: String): Unit = engines.foreach(_.sql(sql))
     both("CREATE TABLE t (k BIGINT PRIMARY KEY, grp STRING, v BIGINT)")

@@ -62,7 +62,7 @@ class TracingSpec extends AnyFunSuite {
             |SELECT g, COUNT(*) AS n, SUM(v) AS sv
             |FROM tf GROUP BY g""".stripMargin)
     e.sql("INSERT INTO tf VALUES (2,'b',7)")
-    e.disableFusedReads = true
+    e.matViews.disableFusedReads = true
     try {
       e.sql("SET TRACE ON")
       e.sql("REFRESH MATERIALIZED VIEW tfv INCREMENTALLY")
@@ -73,7 +73,7 @@ class TracingSpec extends AnyFunSuite {
       assert(decline.nonEmpty, s"no decline span among ${spans.map(_._3)}")
       assert(decline.exists(_._4.contains("forced by test hook")),
         decline.map(_._4))
-    } finally e.disableFusedReads = false
+    } finally e.matViews.disableFusedReads = false
     // and a normal refresh records NO decline span
     e.sql("INSERT INTO tf VALUES (3,'a',9)")
     e.sql("REFRESH MATERIALIZED VIEW tfv INCREMENTALLY")
