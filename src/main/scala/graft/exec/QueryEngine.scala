@@ -95,7 +95,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   def close(): Unit = {
     flushAudit() // the buffered audit tail lands with the lock still held
     dropAllCached() // free the result cache's executor blocks with the engine
-    freeStatementPins() // and every statement-path localCheckpoint pin
+    freeStatementPins() // and every statement-path pin
     if (writeLockHeld) {
       BaseDirLock.release(spark, baseDir, engineId)
       writeLockHeld = false
@@ -283,11 +283,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   sweepStaging() // crash recovery at open
 
-  /** PK-uniqueness enforcement on INSERT, as in the reference
-    * (sql_bridge.rs:3543-3570). Two extra jobs per insert — switch off
-    * for bulk ingestion where the source is known-unique. */
-  var enforcePkUniqueness: Boolean = true
-
   // ======================================================= transactions
 
   /** A buffered multi-statement transaction (sql_bridge.rs:453-568,
@@ -301,7 +296,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * batch by the table's offset so flushed sequences stay unique and
     * contiguous.
     *
-    * Scale note: the buffer holds `localCheckpoint`-pinned DataFrames
+    * Scale note: the buffer holds pinned DataFrames
     * (executor block storage, not driver heap), so a large transaction
     * costs the same memory as the same statements outside one. */
   private final class Txn {
@@ -2137,37 +2132,32 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   // ========================================================= write path
 
-  /** Append one batch of payload rows (logical columns) as events.
-    * Returns the last assigned sequence. `direct = true` (streaming
-    * micro-batches) always writes storage, bypassing any open
-    * transaction's buffer — the stream's rows must not be captured by
-    * (and dropped with) a user transaction. `streamMeta` rides the
-    * publish manifest so a micro-batch's id commits atomically with its
-    * data (exactly-once replay skipping). */
+  /** Append one pinned batch of payload rows (logical columns) as
+    * `eventType` events — the one write path of INSERT, COPY, UPDATE
+    * and DELETE. Inside a transaction the event frame buffers until
+    * COMMIT; otherwise it lands in one atomic publish. Returns (events
+    * appended, last assigned sequence).
+    *
+    * The caller pins the batch (`pinBatch`) and passes the pin's
+    * layout as `pinnedCounts`, so the guard probes read blocks instead
+    * of re-running the source and sequence assignment runs no job (see
+    * `eventFrame`). `pkChecked` says the probes establish pk
+    * uniqueness: only such an INSERT keeps the table's flat-log
+    * certificate and may seed a first-load snapshot. Stream batches
+    * publish through `publishStream` instead, outside any open
+    * transaction and without probes. */
   private def append(t: TableDef, rowsLogical: DataFrame, eventType: String,
-      direct: Boolean = false,
-      streamMeta: Option[(String, Long)] = None,
-      prePinned: Boolean = false,
       pkChecked: Boolean = false,
-      uniqueCertified: Boolean = false,
       probes: () => Seq[DataFrame] = QueryEngine.NoProbes,
       pinnedCounts: Option[Array[Long]] = None): (Long, Long) = {
-    if (t.attached.isDefined)
-      throw new UnsupportedOperationException(
-        s"table ${t.name} is an attached read-only event log")
-    // logical -> physical payload, cast to declared types (loose-schema
-    // writes are a [REF-GAP] we do NOT replicate: our tables are typed)
-    val physical = rowsLogical.select(t.columns.map(c =>
-      col(c.logical).cast(c.dataType).as(c.physical)): _*)
-    val viaTxn = if (direct) None else txn
+    requireWritable(t)
     // guard probes: buffered (transaction) writes validate inline —
     // nothing becomes visible before COMMIT anyway — while the
-    // direct-publish path runs them CONCURRENTLY with the
-    // sequence-count job and the staging write below (all independent
-    // until the manifest-rename commit point, where publishAtomic
-    // joins the probe task before anything becomes visible). Halves a
-    // DML statement's critical path: probe jobs and staging I/O were
-    // the two serial halves of its fixed floor.
+    // direct-publish path runs them CONCURRENTLY with the staging
+    // write below (independent until the manifest-rename commit point,
+    // where publishAtomic joins the probe task before anything becomes
+    // visible). Halves a DML statement's critical path: probe jobs and
+    // staging I/O were the two serial halves of its fixed floor.
     // `probes` is a THUNK: for the direct-publish path its evaluation
     // — which itself plans state reads and may run an inline-key
     // collect job — moves into a Par fork, overlapping probe
@@ -2176,8 +2166,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // row-local probes driver-side first (dropFoldedProbes): a doomed
     // literal statement raises HERE, with zero jobs and no staging dir
     // ever created.
-    def isLocal(df: DataFrame) = df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     // any failure between probe submission and the publish-time join
     // must still join the fork: the probe verdict may be the better
     // error. An unjoined probe fork is cancelled and awaited when the
@@ -2186,106 +2174,63 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // call below stay as they are.
     Par.scope(spark.sparkContext) { par =>
     def probe(ps: => Seq[DataFrame]): () => Unit =
-      if (viaTxn.isDefined) { raiseFirstViolation(ps); () => () }
+      if (txn.isDefined) { raiseFirstViolation(ps); () => () }
       else { val f = par.fork(raiseFirstViolation(ps)); () => f.join() }
     val awaitProbes: () => Unit =
       if (probes eq QueryEngine.NoProbes) () => ()
-      else if (isLocal(physical)) {
+      else if (isLiteral(rowsLogical)) {
         val remaining = dropFoldedProbes(probes())
         if (remaining.isEmpty) () => () else probe(remaining)
       }
       else probe(probes())
     def sequenceAndPublish(): (Long, Long) = {
     // inside a transaction, sequences continue from the buffered tail
-    val base = viaTxn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
-    // pin the batch before sequencing: assignSequencesCounted computes
-    // partition offsets in one job and leaves the assignment lazy, so
-    // the consuming write must see the exact same row-to-partition
-    // layout — and the source reads the very log we append to. A
-    // caller that already pinned the batch (DML paths pin once so
-    // PK/FK probe jobs read blocks instead of re-executing the source)
-    // skips the second materialization.
-    // A literal batch needs no pin, for the reasons pinBatch gives.
-    val pinned =
-      if (prePinned || isLocal(physical)) physical else pinBatch(physical).df
-    // a caller that pinned through pinBatch passes the pin's layout:
-    // sequence assignment is then job-free. A batch that came back
-    // LITERALIZED (small matched set → LocalRelation) has no layout
-    // and must NOT take the offsets path — assignWithOffsets goes
-    // through .rdd, re-launching the job the literalization exists to
-    // skip; assignSequencesCounted's LocalRelation branch sequences it
-    // driver-side instead.
-    val (withSeq, n) = pinnedCounts match {
-      case Some(cs) =>
-        (EventLog.assignWithOffsets(pinned, base, cs), cs.sum)
-      case _ => EventLog.assignSequencesCounted(pinned, base)
-    }
+    val base = txn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
+    val (ev, last) = eventFrame(t, rowsLogical, base, eventType, pinnedCounts)
+    val n = last - base
     // the flat-log certificate survives this batch only when it is an
-    // INSERT whose pk uniqueness was actually established — by the
-    // guard probes (insertFrom) or by the caller's construction
-    // (ordered streaming dedup). COPY and plain stream ingest skip the
-    // probes, so they revoke; PATCH/SOFT_DELETE always revoke.
-    val keepsFlat = eventType == EventLog.INSERT && (pkChecked || uniqueCertified)
-    if (n > 0) {
-      val ev0 = withSeq.select(
-        col("sequence"),
-        timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")).as("ts"),
-        lit(eventType).as("event_type"),
-        col(t.pkPhysical).cast("string").as("pk"),
-        struct(t.columns.map(c => col(c.physical)): _*).as("payload"))
-      // a small batch lands as ONE staged file: the write job runs one
-      // task instead of one per pinned partition, the publish renames
-      // one file, and the log stays compact — a tombstone batch
-      // spread over 32 near-empty part-files would fan out every later
-      // state read's scan. Large batches keep the parallel multi-file
-      // write. coalesce AFTER sequence assignment is layout-safe: the
-      // per-partition offsets were computed against the pinned layout,
-      // and a CoalescedRDD computes its parents with their original
-      // split indices.
-      val ev = if (n <= EventLog.SmallBatchRows) ev0.coalesce(1) else ev0
-      viaTxn match {
-        case Some(tx) => // buffer; flushed at COMMIT, dropped at ROLLBACK
-          snapSeqFor(tx, t.name) // a write also pins the conflict horizon
-          tx.baseSeqs.getOrElseUpdate(t.name, catalog.lastSeq(t.name))
-          tx.pending += ((t.name, ev, base + n))
-          tx.seqs(t.name) = base + n
-          if (!keepsFlat) tx.mutated += t.name
-        case None =>
-          // stage → manifest → publish, same all-or-nothing protocol as
-          // COMMIT: a crash mid-statement either leaves the log
-          // untouched or (via the reopen sweep) lands the whole batch +
-          // counter together — never orphan events past the counter,
-          // which a plain append-then-commitSeq would duplicate on
-          // the next statement's sequence assignment
-          try publishAtomic(Seq((t.name, ev)), Map(t.name -> (base + n)),
-            streamMeta,
-            mutated = if (keepsFlat) Set.empty else Set(t.name),
-            validate = awaitProbes)
-          catch {
-            case e: Throwable =>
-              // a concurrent probe violation outranks a staging fault —
-              // the sequential path raised probes before staging ever
-              // started, so a doomed statement keeps its probe error
-              awaitProbes()
-              throw e
-          }
-          maybeAutoSnapshot(t.name, base + n,
-            // the first-load checkpoint shortcut requires the batch to
-            // BE the collapsed state: empty table before this append,
-            // INSERT events only, and pk uniqueness probes ACTUALLY
-            // RAN on this batch (`pkChecked` — only insertFrom's path
-            // sets it; COPY/stream ingestion skips the probes, and an
-            // at-least-once stream's duplicates must go through the
-            // real collapse)
-            firstLoad = if (base == 0L && eventType == EventLog.INSERT &&
-              pkChecked) Some(ev) else None)
-      }
+    // INSERT whose pk uniqueness the guard probes established (INSERT
+    // VALUES/SELECT). COPY skips the pk probes, so it revokes;
+    // PATCH/SOFT_DELETE always revoke.
+    val keepsFlat = eventType == EventLog.INSERT && pkChecked
+    if (n > 0) txn match {
+      case Some(tx) => // buffer; flushed at COMMIT, dropped at ROLLBACK
+        snapSeqFor(tx, t.name) // a write also pins the conflict horizon
+        tx.baseSeqs.getOrElseUpdate(t.name, catalog.lastSeq(t.name))
+        tx.pending += ((t.name, ev, last))
+        tx.seqs(t.name) = last
+        if (!keepsFlat) tx.mutated += t.name
+      case None =>
+        // stage → manifest → publish, same all-or-nothing protocol as
+        // COMMIT: a crash mid-statement either leaves the log
+        // untouched or (via the reopen sweep) lands the whole batch +
+        // counter together — never orphan events past the counter,
+        // which a plain append-then-commitSeq would duplicate on
+        // the next statement's sequence assignment
+        try publishAtomic(Seq((t.name, ev)), Map(t.name -> last), None,
+          mutated = if (keepsFlat) Set.empty else Set(t.name),
+          validate = awaitProbes)
+        catch {
+          case e: Throwable =>
+            // a concurrent probe violation outranks a staging fault —
+            // the sequential path raised probes before staging ever
+            // started, so a doomed statement keeps its probe error
+            awaitProbes()
+            throw e
+        }
+        maybeAutoSnapshot(t.name, last,
+          // the first-load checkpoint shortcut requires the batch to
+          // BE the collapsed state: empty table before this append,
+          // INSERT events only, and pk uniqueness probes ACTUALLY RAN
+          // on this batch (COPY skips them, and its duplicates must go
+          // through the real collapse)
+          firstLoad = if (base == 0L && keepsFlat) Some(ev) else None)
     }
     // an empty batch never publishes, but its probes still gate the
     // statement; the join handle is idempotent, so a second call after
     // the publish path already consumed it is free
     awaitProbes()
-    (n, base + n)
+    (n, last)
     }
     try sequenceAndPublish()
     catch {
@@ -2298,6 +2243,17 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     }
     }
   }
+
+  private def requireWritable(t: TableDef): Unit =
+    if (t.attached.isDefined)
+      throw new UnsupportedOperationException(
+        s"table ${t.name} is an attached read-only event log")
+
+  /** True when the batch's rows live on the driver: its optimized plan
+    * is a LocalRelation (literal VALUES, a literalized pin). */
+  private def isLiteral(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   // ---------------------------------------------------- auto-snapshot
 
@@ -2743,10 +2699,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * skipped; NOT NULL and CHECK always probe (full-row images make
     * the probe one filter either way). NULLs never conflict in UNIQUE
     * (PG NULLS DISTINCT; constraints.rs:430-447 skips nulls too);
-    * CHECK passes on TRUE or NULL (PG). */
+    * CHECK passes on TRUE or NULL (PG). The primary key is an implicit
+    * NOT NULL wherever the statement writes it (every INSERT and COPY,
+    * an UPDATE that assigns it): an event needs its key (SURVEY §5,
+    * "PK required"). */
   private def constraintViolations(t: TableDef, batch: DataFrame,
       survivors: => DataFrame, touched: Option[Set[String]]): Seq[DataFrame] =
-    catalog.constraintsOf(t.name).flatMap {
+    ((if (touched.forall(_(t.pk))) Seq(graft.catalog.Constraint.NotNull(t.pk))
+      else Nil) ++ catalog.constraintsOf(t.name)).distinct.flatMap {
       case graft.catalog.Constraint.NotNull(c) =>
         Seq(batch.where(col(c).isNull).select(
           lit(s"null value in column $c of ${t.name} violates NOT NULL").as("_err")))
@@ -3048,7 +3008,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * fingerprint (policies/grants/gates) — any DML, ALTER, REFRESH, or
     * policy change produces a different key, so staleness is
     * impossible and old entries simply age out of the LRU. Results pin
-    * via localCheckpoint (executor block storage, not driver heap),
+    * through GraftBridge.pin (executor block storage, not driver heap),
     * capped by entry count and row count; statements that are
     * nondeterministic, draw sequences, or run inside a transaction
     * (snapshot horizons differ) never cache — the reference's
@@ -3063,7 +3023,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, DataFrame]): Boolean = {
         val evict = size() > CacheMaxEntries
-        // the evicted entry's localCheckpoint blocks live in executor
+        // the evicted entry's pinned blocks live in executor
         // storage until explicitly freed — without this they leak until
         // GC happens to collect the RDD
         if (evict) unpersistPinned(e.getValue)
@@ -3071,8 +3031,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       }
     }
 
-  /** Free the executor blocks a cached (localCheckpoint-pinned) result
-    * holds. The checkpoint RDD sits behind the plan's leaf; unpersist
+  /** Free the executor blocks a cached (pinned) result holds. The
+    * persisted RDD sits behind the plan's leaf; unpersist
     * is async and best-effort — a caller still holding the evicted
     * handle loses it, which is the LRU contract. */
   private def unpersistPinned(df: DataFrame): Unit = graft.Pins.free(df)
@@ -3141,10 +3101,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         case Some(df) => cacheHits += 1; df
         case None =>
           cacheMisses += 1
-          val res = select(q).localCheckpoint()
-          // the pin already materialized the blocks; the count is local
-          if (res.count() <= CacheMaxRows) resultCache.put(key, res)
-          res
+          // one job materializes the blocks and counts the rows
+          val p = org.apache.spark.sql.GraftBridge.pin(select(q))
+          if (p.counts.sum <= CacheMaxRows) resultCache.put(key, p.df)
+          p.df
       }
   }
 
@@ -3437,11 +3397,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * additionally inline their keys so the parent scan prunes to the
     * probed row groups (inlineKeyFilter). A self-referencing FK also
     * sees keys from the batch itself (a row may reference a sibling
-    * inserted by the same statement). Returns message frames the
-    * caller unions into its single guard job alongside the PK and
+    * written by the same statement). `touched`: UPDATE's assigned
+    * columns — an FK column the SET list leaves alone is not
+    * re-checked (PG behavior, fk.rs:150-181). Returns message frames
+    * the caller unions into its single guard job alongside the PK and
     * constraint probes. */
-  private def fkOutgoingProbes(t: TableDef, rowsLogical: DataFrame): Seq[DataFrame] =
-    for ((c, rt, rc) <- catalog.foreignKeysOf(t.name)) yield {
+  private def fkOutgoingProbes(t: TableDef, rowsLogical: DataFrame,
+      touched: Option[Set[String]] = None): Seq[DataFrame] =
+    for ((c, rt, rc) <- catalog.foreignKeysOf(t.name) if touched.forall(_(c))) yield {
       val parent0 = inlineKeyFilter(stateAt(rt, None), rc, rowsLogical, c)
         .select(col(rc).as("_fk_parent"))
       val parent = if (rt == t.name)
@@ -3517,11 +3480,16 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     }
   }
 
-  /** INSERT (VALUES or SELECT): align source columns to the target
-    * column list (by position, like the reference — sql_bridge.rs:
-    * 3505-3663), unnamed columns default to NULL, enforce PK
-    * uniqueness against current state and within the batch. */
-  private def insertFrom(table: String, cols: Option[Seq[String]], src: DataFrame): DataFrame = {
+  /** INSERT (VALUES or SELECT) and COPY: align source columns to the
+    * target column list (by position, like the reference —
+    * sql_bridge.rs:3505-3663); an omitted column takes its DEFAULT,
+    * else NULL, and an omitted AUTO_INCREMENT column draws its ids.
+    * INSERT enforces pk uniqueness against current state and within
+    * the batch. `bulk` (COPY FROM, the `graft` data source) skips the
+    * pk-uniqueness probes — the documented bulk-ingest contract: a
+    * duplicate key collapses last-write-wins instead of raising. */
+  private def insertFrom(table: String, cols: Option[Seq[String]], src: DataFrame,
+      bulk: Boolean = false): DataFrame = {
     val t = catalog.require(table)
     checkPrivilege(table, "INSERT")
     val target = cols.getOrElse(t.columns.map(_.logical))
@@ -3534,6 +3502,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // (constraints.rs Default; an explicit NULL still inserts NULL, as
     // in PG)
     val defaults = defaultsOf(table)
+    def complete(df: DataFrame, autoId: Option[String]): DataFrame =
+      df.select(t.columns.map(c =>
+        (if (autoId.contains(c.logical)) col("_auto_id")
+         else if (target.contains(c.logical)) col(c.logical)
+         else expr(defaults.getOrElse(c.logical, "NULL")))
+          .cast(c.dataType).as(c.logical)): _*)
     // pin the batch ONCE: the PK/FK/constraint probe jobs and the
     // append below all read the pinned blocks instead of re-executing
     // the source lineage per action (an INSERT ... SELECT would
@@ -3542,50 +3516,22 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val (full, fullCounts) = catalog.autoIncSequenceFor(table)
       .filterNot { case (_, c) => target.contains(c) } match {
       case Some((seqName, idCol)) =>
-        // omitted AUTO_INCREMENT column: pin the source, size the block
-        // in one count job, reserve it with ONE catalog write, and let
-        // executors assign the ids distributed (the reference draws
-        // per row under a lock — sequences.rs:108-142; a block
-        // reservation is the 100 TB shape). A literal-scale batch
-        // (LocalRelation, incl. collect-literalized bounded sources)
-        // assigns ids DRIVER-SIDE instead: the collect is job-free on
-        // a LocalTableScan and the result stays a LocalRelation, so
-        // the batch keeps the whole literal fast path — driver-folded
-        // guards, job-free sequencing, single-file staging — which the
-        // RDD-zip assignment would otherwise forfeit for every literal
-        // VALUES insert into an auto-increment table.
+        // omitted AUTO_INCREMENT column: pin the source (the pin knows
+        // its row count), reserve the id block with ONE catalog write,
+        // and assign the ids from the pin's layout, distributed (the
+        // reference draws per row under a lock — sequences.rs:108-142;
+        // a block reservation is the 100 TB shape). A literal-scale
+        // batch (LocalRelation, incl. collect-literalized bounded
+        // sources) assigns ids DRIVER-SIDE and stays a LocalRelation,
+        // so it keeps the whole literal fast path — driver-folded
+        // guards, job-free sequencing, single-file staging.
         val p = pinBatch(positioned, literal = true)
-        val withId = p.layout match {
-          case None =>
-            val rows = p.df.collect()
-            val n = rows.length
-            val first =
-              if (n > 0) catalog.reserveSequenceBlock(seqName, n.toLong) else 1L
-            val out = org.apache.spark.sql.types.StructType(
-              p.df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                "_auto_id", org.apache.spark.sql.types.LongType, nullable = false))
-            val seqd: java.util.List[org.apache.spark.sql.Row] =
-              java.util.Arrays.asList(rows.zipWithIndex.map { case (r, i) =>
-                org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (first + i))
-              }.toIndexedSeq: _*)
-            spark.createDataFrame(seqd, out)
-          case Some(counts) =>
-            val n = counts.sum
-            val first = if (n > 0) catalog.reserveSequenceBlock(seqName, n) else 1L
-            EventLog.assignWithOffsets(p.df, first - 1, counts, "_auto_id")
-        }
-        (withId.select(t.columns.map(c =>
-          if (c.logical == idCol) col("_auto_id").cast(c.dataType).as(c.logical)
-          else if (target.contains(c.logical))
-            col(c.logical).cast(c.dataType).as(c.logical)
-          else expr(defaults.getOrElse(c.logical, "NULL"))
-            .cast(c.dataType).as(c.logical)): _*), p.layout)
+        val n = p.counts.sum
+        val first = if (n > 0) catalog.reserveSequenceBlock(seqName, n) else 1L
+        (complete(EventLog.assignSequences(p.df, first - 1, p.layout, "_auto_id")._1,
+          Some(idCol)), p.layout)
       case None =>
-        val p = pinBatch(
-          positioned.select(t.columns.map(c =>
-            if (target.contains(c.logical)) col(c.logical).cast(c.dataType).as(c.logical)
-            else expr(defaults.getOrElse(c.logical, "NULL"))
-              .cast(c.dataType).as(c.logical)): _*), literal = true)
+        val p = pinBatch(complete(positioned, None), literal = true)
         (p.df, p.layout)
     }
     fireTriggers(table, "INSERT", "BEFORE", None, Some(full))
@@ -3608,56 +3554,66 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           org.apache.spark.sql.types.StructType(t.columns.map(c =>
             org.apache.spark.sql.types.StructField(c.logical, c.dataType))))
       else stateAt(table, None)
-    def pkProbes = if (!enforcePkUniqueness) Nil else {
-      val pk = t.pk
-      val dupMsg = s"duplicate primary key within INSERT batch on $table"
-      // a literal VALUES batch settles its within-batch duplicates on
-      // the driver (aggregates don't constant-fold, so the groupBy
-      // probe would otherwise be the one job a doomed literal INSERT
-      // still pays); the state-collision semi-join always needs its job
-      val batchDup = literalBatchDup(full, Seq(pk), skipNulls = false) match {
-        case Some(true) => throw new IllegalArgumentException(dupMsg)
-        case Some(false) => Nil
-        case None => Seq(
-          full.groupBy(col(pk)).agg(count(lit(1)).as("_n")).where(col("_n") > 1)
-            .select(lit(dupMsg).as("_err")))
-      }
-      val existsMsg = s"primary key already exists in $table"
-      // a literal-scale batch inlines its pk values so the state scan
-      // prunes to the probed row groups (pushdown + bloom stamping) —
-      // the FK-probe discipline (inlineKeyFilter), which a left-semi
-      // join's runtime key set can never push down. The collect is
-      // job-free on a LocalTableScan. Larger batches keep the
-      // set-based semi join.
-      val stateCollision = full.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if lr.data.length <= InlineKeyCap =>
-          val ks = full.select(col(pk)).collect().map(_.get(0))
-            .filter(_ != null).toIndexedSeq
-          if (ks.isEmpty) Nil // an all-NULL-pk batch can collide with nothing
-          else Seq(state.where(col(pk).isin(ks: _*))
-            .select(lit(existsMsg).as("_err")))
-        case _ => Seq(
-          full.join(state.select(col(pk)), Seq(pk), "left_semi")
-            .select(lit(existsMsg).as("_err")))
-      }
-      batchDup ++ stateCollision
-    }
-    val (n, last) = append(t, full, EventLog.INSERT, prePinned = true,
-      pkChecked = enforcePkUniqueness,
-      probes = () => pkProbes ++
+    val (n, last) = append(t, full, EventLog.INSERT, pkChecked = !bulk,
+      probes = () =>
+        (if (bulk) Nil
+         else pkProbes(t, full, state,
+           s"duplicate primary key within INSERT batch on $table")) ++
         constraintViolations(t, full, state, None) ++
         rlsCheckProbes(table, full, "INSERT") ++
         fkOutgoingProbes(t, full),
       pinnedCounts = fullCounts)
     fireTriggers(table, "INSERT", "AFTER", None, Some(full))
-    summary("insert", n, last)
+    summary(if (bulk) "ingest" else "insert", n, last)
+  }
+
+  /** PK uniqueness of a batch of row images about to land in `t` (PG
+    * duplicate-key semantics, sql_bridge.rs:3543-3570 and 5473-5668):
+    * no two batch rows share a key (`dupMsg`), and no batch key
+    * collides with a row of `survivors` — the rows that outlive the
+    * statement (INSERT: the current state; a pk-changing UPDATE: the
+    * state minus the rows it rewrites). A literal batch settles its
+    * within-batch duplicates on the driver (aggregates don't
+    * constant-fold, so the groupBy probe would otherwise be the one
+    * job a doomed literal statement still pays), and a literal batch of
+    * at most InlineKeyCap rows inlines its keys so the survivors' scan
+    * prunes to the probed row groups (pushdown + bloom stamping) — the
+    * FK-probe discipline (inlineKeyFilter), which a left-semi join's
+    * runtime key set can never push down. Larger batches keep the
+    * set-based semi join. */
+  private def pkProbes(t: TableDef, batch: DataFrame, survivors: => DataFrame,
+      dupMsg: String): Seq[DataFrame] = {
+    val pk = t.pk
+    val batchDup = literalBatchDup(batch, Seq(pk), skipNulls = false) match {
+      case Some(true) => throw new IllegalArgumentException(dupMsg)
+      case Some(false) => Nil
+      case None => Seq(
+        batch.groupBy(col(pk)).agg(count(lit(1)).as("_n")).where(col("_n") > 1)
+          .select(lit(dupMsg).as("_err")))
+    }
+    val existsMsg = s"primary key already exists in ${t.name}"
+    val collision = batch.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if lr.data.length <= InlineKeyCap =>
+        // the collect is job-free on a LocalTableScan
+        val ks = batch.select(col(pk)).collect().map(_.get(0))
+          .filter(_ != null).toIndexedSeq
+        if (ks.isEmpty) Nil // an all-NULL-pk batch can collide with nothing
+        else Seq(survivors.where(col(pk).isin(ks: _*))
+          .select(lit(existsMsg).as("_err")))
+      case _ => Seq(
+        batch.join(survivors.select(col(pk)), Seq(pk), "left_semi")
+          .select(lit(existsMsg).as("_err")))
+    }
+    batchDup ++ collision
   }
 
   /** UPDATE: fetch matching current-state rows, apply assignments (RHS
     * may reference old row values — Catalyst `expr`), emit full-row
     * PATCH events; a PK-changing update is SoftDelete + Insert (PG
-    * semantics, sql_bridge.rs:5473-5668). */
+    * semantics, sql_bridge.rs:5473-5668). Both shapes share the pin,
+    * the triggers and the guard probes; the pk-changing one adds the
+    * pk-uniqueness probes against the rows that survive it. */
   def update(table: String, assigns: Seq[(String, String)], where: Option[String]): DataFrame = {
     val t = catalog.require(table)
     checkPrivilege(table, "UPDATE")
@@ -3666,87 +3622,45 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val state = stateAt(table, None, dmlRead = true)
     // row policies narrow which rows this session's UPDATE can touch;
     // rows it cannot see survive untouched (PG UPDATE-USING semantics)
-    val rlsUsing = rlsFilter(table, "UPDATE")
     val matching0 = {
       val m = where.fold(state)(w => state.where(expr(w)))
-      rlsUsing.fold(m)(m.where)
+      rlsFilter(table, "UPDATE").fold(m)(m.where)
     }
-    def applyAssigns(src: DataFrame): DataFrame = src.select(t.columns.map { c =>
+    // pin the matched batch once: trigger/FK probe jobs and the appends
+    // read blocks instead of replaying the state collapse per action, a
+    // trigger body writing this table cannot change what the batch
+    // lineage re-reads, and a pk-changing update's INSERT append works
+    // from the materialized copy, not a re-scan of the log its
+    // tombstone append just mutated
+    val mp = pinBatch(matching0, literal = true)
+    val matching = mp.df
+    val updated = matching.select(t.columns.map { c =>
       assigns.find(_._1 == c.logical) match {
         case Some((_, e)) => expr(e).cast(c.dataType).as(c.logical)
         case None => col(c.logical)
       }
     }: _*)
-    if (assigns.exists(_._1 == t.pk)) {
-      // pin the matched batch first: the tombstone append below mutates
-      // the very log this lineage reads, so the second (INSERT) append
-      // must work from a materialized copy, not a log re-scan
-      val mp = pinBatch(matching0, literal = true)
-      val matching = mp.df
-      val updated = applyAssigns(matching)
-      fireTriggers(table, "UPDATE", "BEFORE", Some(matching), Some(updated))
-      val touched = assigns.map(_._1).toSet
-      def survivors = state.join(matching.select(col(t.pk)), Seq(t.pk), "left_anti")
-      def pkProbes = if (!enforcePkUniqueness) Nil else {
-        // PG duplicate-key semantics (sql_bridge.rs:5473-5668): a new pk
-        // may not collide with any row that survives this statement
-        val pk = t.pk
-        Seq(
-          updated.groupBy(col(pk)).agg(count(lit(1)).as("_n")).where(col("_n") > 1)
-            .select(lit(s"UPDATE produces duplicate primary keys on $table").as("_err")),
-          updated.join(survivors.select(col(pk)), Seq(pk), "left_semi")
-            .select(lit(s"primary key already exists in $table").as("_err")))
-      }
-      val (nd, _) = append(t, matching, EventLog.SOFT_DELETE, prePinned = true,
-        probes = () => pkProbes ++
-          constraintViolations(t, updated, survivors, Some(touched)) ++
-          rlsCheckProbes(table, updated, "UPDATE") ++
-          fkChangedProbes(t, assigns, updated) ++
-          fkIncomingOnUpdateProbes(t, assigns, state, matching, updated),
-        pinnedCounts = mp.layout)
-      val (_, last) = append(t, updated, EventLog.INSERT, prePinned = true,
-        pinnedCounts = mp.layout)
-      fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
-      summary("update", nd, last)
-    } else {
-      // pin the matched batch once: trigger/FK probe jobs and the append
-      // read blocks instead of replaying the state collapse per action,
-      // and a trigger body writing this table cannot change what the
-      // batch lineage re-reads
-      val mp = pinBatch(matching0, literal = true)
-      val matching = mp.df
-      val updated = applyAssigns(matching)
-      fireTriggers(table, "UPDATE", "BEFORE", Some(matching), Some(updated))
-      val (n, last) = append(t, updated, EventLog.PATCH, prePinned = true,
-        probes = () => constraintViolations(t, updated,
-          state.join(matching.select(col(t.pk)), Seq(t.pk), "left_anti"),
-          Some(assigns.map(_._1).toSet)) ++
-          rlsCheckProbes(table, updated, "UPDATE") ++
-          fkChangedProbes(t, assigns, updated) ++
-          fkIncomingOnUpdateProbes(t, assigns, state, matching, updated),
-        pinnedCounts = mp.layout)
-      fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
-      summary("update", n, last)
-    }
-  }
-
-  /** UPDATE re-validates only FK columns the SET list touches — an
-    * update that leaves an FK column alone doesn't re-check the parent
-    * (PG behavior, fk.rs:150-181). */
-  private def fkChangedProbes(t: TableDef, assigns: Seq[(String, String)],
-      updated: DataFrame): Seq[DataFrame] = {
+    fireTriggers(table, "UPDATE", "BEFORE", Some(matching), Some(updated))
     val touched = assigns.map(_._1).toSet
-    for ((c, rt, rc) <- catalog.foreignKeysOf(t.name) if touched(c)) yield {
-      // small updated batches inline their new FK values so the parent
-      // scan prunes to the probed row groups (same as fkOutgoingProbes)
-      val parent = inlineKeyFilter(stateAt(rt, None), rc, updated, c)
-        .select(col(rc).as("_fk_parent"))
-      updated.where(col(c).isNotNull)
-        .join(parent, col(c) === col("_fk_parent"), "left_anti")
-        .select(lit(
-          s"foreign key violation: ${t.name}.$c references missing key in $rt.$rc")
-          .as("_err"))
-    }
+    val pkChanges = touched(t.pk)
+    def survivors = state.join(matching.select(col(t.pk)), Seq(t.pk), "left_anti")
+    val probes = () =>
+      (if (pkChanges)
+        pkProbes(t, updated, survivors, s"UPDATE produces duplicate primary keys on $table")
+       else Nil) ++
+      constraintViolations(t, updated, survivors, Some(touched)) ++
+      rlsCheckProbes(table, updated, "UPDATE") ++
+      fkOutgoingProbes(t, updated, Some(touched)) ++
+      fkIncomingOnUpdateProbes(t, touched, state, matching, updated)
+    val (n, last) =
+      if (pkChanges) {
+        val (nd, _) = append(t, matching, EventLog.SOFT_DELETE, probes = probes,
+          pinnedCounts = mp.layout)
+        (nd, append(t, updated, EventLog.INSERT, pinnedCounts = mp.layout)._2)
+      } else append(t, updated, EventLog.PATCH, probes = probes,
+        pinnedCounts = mp.layout)
+    fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
+    summary("update", n, last)
   }
 
   /** RESTRICT for the parent side of an UPDATE, mirroring the DELETE
@@ -3755,9 +3669,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * counts as removed when it exists before the statement but is held
     * by no row after it — matched rows carry their new values, rows the
     * WHERE didn't touch keep their old ones. */
-  private def fkIncomingOnUpdateProbes(t: TableDef, assigns: Seq[(String, String)],
+  private def fkIncomingOnUpdateProbes(t: TableDef, touched: Set[String],
       state: DataFrame, matching: DataFrame, updated: DataFrame): Seq[DataFrame] = {
-    val touched = assigns.map(_._1).toSet
     val incoming = catalog.referencingFks(t.name).filter(f => touched(f._3))
     if (incoming.isEmpty) Nil
     else {
@@ -3797,7 +3710,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val mp = pinBatch(matching0, literal = true)
     val matching = mp.df
     fireTriggers(table, "DELETE", "BEFORE", Some(matching), None)
-    val (n, last) = append(t, matching, EventLog.SOFT_DELETE, prePinned = true,
+    val (n, last) = append(t, matching, EventLog.SOFT_DELETE,
       probes = () => fkIncomingProbes(t, matching),
       pinnedCounts = mp.layout)
     fireTriggers(table, "DELETE", "AFTER", Some(matching), None)
@@ -4051,36 +3964,20 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     }
 
   /** Bulk-append an arbitrary DataFrame — the shared tail of COPY FROM
-    * and the `graft` data-source write path (`df.write.format("graft")`).
-    * Columns match the catalog by name (missing → DEFAULT, else NULL)
-    * and cast to declared types. */
+    * and the `graft` data-source write path (`df.write.format("graft")`):
+    * an INSERT of the table columns the frame carries, matched by name,
+    * without the pk-uniqueness probes (see insertFrom). */
   def ingestFrame(table: String, raw: DataFrame): DataFrame = {
-    val t = catalog.require(table)
-    // governed like INSERT (it IS a bulk insert): the privilege gate
-    // and the write-side RLS policies both apply — without them an
-    // ungranted session could bulk-load, and an RLS-restricted session
-    // could land rows its WITH CHECK vetoes
-    checkPrivilege(table, "INSERT")
-    val defaults = defaultsOf(table)
-    val fp = pinBatch(byName(raw, t,
-      c => expr(defaults.getOrElse(c.logical, "NULL"))), literal = true)
-    val full = fp.df
-    fireTriggers(table, "INSERT", "BEFORE", None, Some(full))
-    val (n, last) = append(t, full, EventLog.INSERT, prePinned = true,
-      probes = () => constraintViolations(t, full, stateAt(table, None), None) ++
-        fkOutgoingProbes(t, full) ++ rlsCheckProbes(table, full, "INSERT"),
-      pinnedCounts = fp.layout)
-    fireTriggers(table, "INSERT", "AFTER", None, Some(full))
-    summary("ingest", n, last)
+    val present = catalog.require(table).columns.map(_.logical)
+      .filter(raw.columns.contains)
+    insertFrom(table, Some(present), raw.select(present.map(col): _*), bulk = true)
   }
 
   /** `batch` projected onto `t`'s columns by name and cast to their
-    * declared types; a column the batch lacks takes `missing` (NULL
-    * unless the caller fills DEFAULTs). */
-  private def byName(batch: DataFrame, t: TableDef,
-      missing: ColumnDef => Column = _ => lit(null)): DataFrame =
+    * declared types; a column the batch lacks reads NULL. */
+  private def byName(batch: DataFrame, t: TableDef): DataFrame =
     batch.select(t.columns.map(c =>
-      (if (batch.columns.contains(c.logical)) col(c.logical) else missing(c))
+      (if (batch.columns.contains(c.logical)) col(c.logical) else lit(null))
         .cast(c.dataType).as(c.logical)): _*)
 
   /** The envelope of every streaming micro-batch: the write lock, the
@@ -4113,12 +4010,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   /** One micro-batch from a streaming source (graft.streaming
     * .StreamIngest): columns matched by name like JSONL ingest, missing
     * ones NULL, appended as INSERT events. PK/FK guards are skipped —
-    * a stream is bulk ingestion (see enforcePkUniqueness) and guard
-    * jobs per micro-batch would double its latency. Runs on the
-    * streaming thread: the write lock serializes it against SQL
-    * statements, and `direct = true` keeps the batch out of any open
-    * transaction's buffer (a ROLLBACK must never drop streamed rows —
-    * the txn's provisional sequences re-shift at COMMIT instead). */
+    * a stream is bulk ingestion (like COPY) and guard jobs per
+    * micro-batch would double its latency. Runs on the streaming
+    * thread: the write lock serializes it against SQL statements, and
+    * publishStream keeps the batch out of any open transaction's
+    * buffer (a ROLLBACK must never drop streamed rows — the txn's
+    * provisional sequences re-shift at COMMIT instead). */
   private[graft] def ingestStream(table: String, batch: DataFrame): Unit =
     ingestStream(table, batch, None, -1L)
 
@@ -4127,30 +4024,75 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       streamId: Option[String], batchId: Long): Unit =
     streamBatch(s"INGEST STREAM $table", streamId, batchId) {
       val t = catalog.require(table)
-      append(t, byName(batch, t), EventLog.INSERT, direct = true,
-        streamMeta = streamId.map(_ -> batchId))
+      val rows = byName(batch, t)
+      // a literal batch stays on the driver and stages without a job;
+      // anything else pins, so its sequence offsets and the staging
+      // write see one partition layout
+      publishStream(Seq(t -> (if (isLiteral(rows)) rows else pinBatch(rows).df)),
+        streamId, batchId, mutated = Set(t.name))
     }
 
-  /** Physical-cast, sequence-assign, and event-shape one INSERT batch
-    * — the body `append` applies, shared with the multi-table
-    * streaming-dedup publish. Returns (events, new last sequence).
-    * The batch must be a pin or a narrow derivation of one: partition
-    * layout is then deterministic and nothing re-reads the log being
-    * appended to. */
-  private def insertEventFrame(t: TableDef, rowsLogical: DataFrame,
-      base: Long): (DataFrame, Long) = {
+  /** Physical-cast, sequence-assign and event-shape one batch of
+    * payload rows (logical columns) as `eventType` events numbered from
+    * `base` + 1 — the one event-frame builder, under `append` and
+    * `publishStream`. Returns (events, new last sequence).
+    *
+    * The batch must be a pin, a literal batch or a narrow derivation of
+    * one: sequence offsets are computed once, so the consuming write
+    * must see the same row-to-partition layout, and nothing may
+    * re-read the log being appended to. `layout` (a distributed pin's
+    * per-partition counts) makes the assignment job-free; a literal
+    * batch is sequenced on the driver; anything else pays one
+    * partition-counts job (EventLog.assignSequences). */
+  private def eventFrame(t: TableDef, rowsLogical: DataFrame, base: Long,
+      eventType: String = EventLog.INSERT,
+      layout: Option[Array[Long]] = None): (DataFrame, Long) = {
+    // logical -> physical payload, cast to declared types (loose-schema
+    // writes are a [REF-GAP] we do NOT replicate: our tables are typed)
     val physical = rowsLogical.select(t.columns.map(c =>
       col(c.logical).cast(c.dataType).as(c.physical)): _*)
-    val (withSeq, n) = EventLog.assignSequencesCounted(physical, base)
+    val (withSeq, n) = EventLog.assignSequences(physical, base, layout)
     val ev0 = withSeq.select(
       col("sequence"),
       timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")).as("ts"),
-      lit(EventLog.INSERT).as("event_type"),
+      lit(eventType).as("event_type"),
       col(t.pkPhysical).cast("string").as("pk"),
       struct(t.columns.map(c => col(c.physical)): _*).as("payload"))
-    // same small-batch single-file discipline as append()
+    // a small batch lands as ONE staged file: the write job runs one
+    // task instead of one per pinned partition, the publish renames
+    // one file, and the log stays compact — a tombstone batch spread
+    // over 32 near-empty part-files would fan out every later state
+    // read's scan. Large batches keep the parallel multi-file write.
+    // coalesce AFTER sequence assignment is layout-safe: the
+    // per-partition offsets were computed against the pinned layout,
+    // and a CoalescedRDD computes its parents with their original
+    // split indices.
     val ev = if (n <= EventLog.SmallBatchRows) ev0.coalesce(1) else ev0
     (ev, base + n)
+  }
+
+  /** The publish every stream batch ends in. Each table's rows become
+    * one INSERT event frame sequenced from the table's last sequence —
+    * outside any open transaction — and the frames that carry events
+    * land in ONE atomic publish with the micro-batch id (see
+    * streamBatch), the watermarks `marks` and the flat-log revocations
+    * `mutated`; then each table may auto-snapshot. A batch that
+    * advanced nothing publishes only to record its id, and without an
+    * id not at all. */
+  private def publishStream(parts: Seq[(TableDef, DataFrame)],
+      streamId: Option[String], batchId: Long, mutated: Set[String],
+      marks: Map[String, Long] = Map.empty): Unit = {
+    val framed = for ((t, rows) <- parts) yield {
+      requireWritable(t)
+      val (ev, last) = eventFrame(t, rows, catalog.lastSeq(t.name))
+      (t.name, ev, last)
+    }
+    val advanced = framed.filter { case (n, _, last) => last > catalog.lastSeq(n) }
+    if (advanced.isEmpty && streamId.isEmpty) return
+    publishAtomic(advanced.map { case (n, ev, _) => n -> ev },
+      framed.map { case (n, _, last) => n -> last }.toMap,
+      streamId.map(_ -> batchId), marks, mutated)
+    framed.foreach { case (n, _, last) => maybeAutoSnapshot(n, last) }
   }
 
   /** Exactly-once streaming ingest with EXACT DEDUP against a
@@ -4197,28 +4139,19 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         .select(col(r.pk).cast("string").as("__seen_fp"))
       val admitted = pinBatch(firsts
         .join(seen, col("__fp") === col("__seen_fp"), "left_anti")).df
-      val (evT, hiT) = insertEventFrame(t, admitted.drop("__fp"),
-        catalog.lastSeq(t.name))
       val regRows = admitted.select(r.columns.map(c =>
         if (c.logical == r.pk) col("__fp").cast(c.dataType).as(c.logical)
         else if (admitted.columns.contains(c.logical))
           col(c.logical).cast(c.dataType).as(c.logical)
         else lit(null).cast(c.dataType).as(c.logical)): _*)
-      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name))
-      // an all-duplicates batch still publishes when a batch id must be
-      // recorded; without one there is nothing to make durable
-      if (hiT == catalog.lastSeq(t.name) && hiR == catalog.lastSeq(r.name) &&
-        streamId.isEmpty) return
-      publishAtomic(Seq((t.name, evT), (r.name, evR)),
-        Map(t.name -> hiT, r.name -> hiR), streamId.map(_ -> batchId),
+      publishStream(Seq(t -> admitted.drop("__fp"), r -> regRows),
+        streamId, batchId,
         // the REGISTRY's pk (the fingerprint) is unique by construction
         // — one row per fp inside the batch, anti-joined against every
         // seen fp — so it keeps its flat-log certificate; the TABLE's
         // pk was never probed (two different-fingerprint rows may share
         // a pk), so it revokes
         mutated = Set(t.name))
-      maybeAutoSnapshot(t.name, hiT)
-      maybeAutoSnapshot(r.name, hiR)
     }
 
   /** Exactly-once streaming ingest with NEAR-dup dedup against a
@@ -4405,7 +4338,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // join the overlapped guard before any event frame exists — an
       // ordering violation must surface exactly as it did serially
       val (batchPkUnique, batchMax) = guard.join()
-      val (evT, hiT) = insertEventFrame(t, admitted, catalog.lastSeq(t.name))
       // ALL batch docs' postings land in the registry (seen semantics);
       // toks already carries __n, and is a narrow re-read of the pinned
       // batch — no checkpoint copy, no join
@@ -4418,16 +4350,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           case "n" => col("__n").cast(c.dataType).as("n")
           case other => lit(null).cast(c.dataType).as(other)
         }): _*)
-      val (evR, hiR) = insertEventFrame(r, regRows, catalog.lastSeq(r.name))
-      if (hiT == catalog.lastSeq(t.name) && hiR == catalog.lastSeq(r.name) &&
-        streamId.isEmpty) return
-      // a batch of shingle-less docs advances only the table; skip the
-      // registry's empty event frame rather than landing a 0-row part
-      val parts = Seq(t.name -> evT, r.name -> evR).zip(Seq(
-        hiT != catalog.lastSeq(t.name), hiR != catalog.lastSeq(r.name)))
-        .collect { case (p, true) => p }
-      publishAtomic(parts, Map(t.name -> hiT, r.name -> hiR),
-        streamId.map(_ -> batchId),
+      publishStream(Seq(t -> admitted, r -> regRows), streamId, batchId,
         marks = batchMax.map(r.name -> _).toMap,
         // certified: every table pk is distinct within the batch and
         // above the registry watermark, and every registry pk embeds a
@@ -4437,8 +4360,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // a batch revoke: id reuse across batches would collide pks.
         mutated = if (requireOrdered && batchPkUnique) Set.empty
           else Set(t.name, r.name))
-      maybeAutoSnapshot(t.name, hiT)
-      maybeAutoSnapshot(r.name, hiR)
       }
     }
 

@@ -63,38 +63,41 @@ object EventLog {
       payload.as("payload"))
   }
 
-  /** Assign contiguous sequences base+1 .. base+count to a batch,
-    * distributed: one explicit per-partition count job computes the
-    * partition offsets (what zipWithIndex does internally) and the
-    * batch size together, so callers that need both the sequenced
-    * frame AND its row count pay a single Spark job instead of
-    * zipWithIndex-count + count. Assignment itself stays lazy — it
-    * runs inside whatever action consumes the frame (usually the
-    * parquet write), never collapsing to a single partition (a
-    * window-based row_number would). The write path is
+  /** Assign contiguous sequences base+1 .. base+count to a batch as
+    * column `colName`; returns the frame and the count. Assignment
+    * stays lazy — it runs inside whatever action consumes the frame
+    * (usually the parquet write), never collapsing to a single
+    * partition (a window-based row_number would). The write path is
     * driver-serialized — same single-writer discipline as the
     * reference (index.rs:22-26) — so contiguity per batch is safe.
-    * The batch must be pinned (localCheckpoint) by the caller: the
+    *   - `layout` (a distributed pin's per-partition counts, see
+    *     GraftBridge.pin) gives the offsets with no job;
+    *   - a literal batch is sequenced on the driver: executeCollect is
+    *     job-free on a LocalTableScan, and the result goes back out as
+    *     a LocalRelation — no partition-counts job (and its ~200 ms of
+    *     per-statement floor) for a VALUES insert;
+    *   - anything else pays ONE per-partition count job for offsets
+    *     and size together (what zipWithIndex does internally).
+    * The batch must be pinned (GraftBridge.pin) by the caller: the
     * offsets are computed once, so the row-to-partition mapping must
-    * not change between the count job and the consuming action. */
-  def assignSequencesCounted(batch: DataFrame, base: Long): (DataFrame, Long) =
-    batch.queryExecution.optimizedPlan match {
+    * not change between the count and the consuming action. */
+  def assignSequences(batch: DataFrame, base: Long,
+      layout: Option[Array[Long]] = None,
+      colName: String = "sequence"): (DataFrame, Long) =
+    layout.map(cs => (assignWithOffsets(batch, base, cs, colName), cs.sum))
+      .getOrElse(batch.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        // literal rows are driver-resident: executeCollect is job-free
-        // on a LocalTableScan, and the sequenced batch goes back out as
-        // a LocalRelation — the partition-counts job (and its ~200 ms
-        // of per-statement floor) disappears from every VALUES insert
         val rows = batch.collect()
         val out = StructType(batch.schema.fields :+
-          StructField("sequence", LongType, nullable = false))
+          StructField(colName, LongType, nullable = false))
         val seqd: java.util.List[Row] = java.util.Arrays.asList(
           rows.zipWithIndex.map { case (r, i) =>
             Row.fromSeq(r.toSeq :+ (base + i + 1L)) }.toIndexedSeq: _*)
         (batch.sparkSession.createDataFrame(seqd, out), rows.length.toLong)
       case _ =>
         val counts = partitionCounts(batch)
-        (assignWithOffsets(batch, base, counts), counts.sum)
-    }
+        (assignWithOffsets(batch, base, counts, colName), counts.sum)
+    })
 
   /** Batches at or under this row count publish as a single staged
     * parquet file (one write task, one rename, one file for every

@@ -68,7 +68,9 @@ final class DriverTails(rowCap: Long, byteCap: Long) {
   /** After a publish: continue each table's tail (as it stood before
     * the publish) with the batches written, in order — Some(schema,
     * rows) for a batch the driver wrote itself, None for one a Spark
-    * job wrote. */
+    * job wrote. A batch carrying a NULL pk breaks the tail: the
+    * driver-side fold keys on the pk (stream batches skip the guards
+    * that reject one), so such a log reads through the keyed plan. */
   def extend(before: Map[String, Option[Tail]],
       written: Seq[(String, Option[(StructType, Seq[InternalRow])])],
       lastSeq: String => Long): Unit =
@@ -80,7 +82,9 @@ final class DriverTails(rowCap: Long, byteCap: Long) {
           val bytes = tl.bytes + add.map(_.getSizeInBytes.toLong).sum
           val chained = add.iterator.map(_.getLong(0))
             .sameElements(Iterator.range(1, add.length + 1).map(tl.upTo + _))
-          if (chained && samePayload(schema("payload").dataType, tl.payload) &&
+          val pkAt = schema.fieldIndex("pk")
+          if (chained && !add.exists(_.isNullAt(pkAt)) &&
+              samePayload(schema("payload").dataType, tl.payload) &&
               tl.rows.length + add.length <= rowCap && bytes <= byteCap)
             Some(tl.copy(upTo = tl.upTo + add.length, rows = tl.rows ++ add,
               bytes = bytes))

@@ -9,12 +9,15 @@ import scala.jdk.CollectionConverters._
 /** Source-level guards on the engine's single primitives: one function
   * builds a pin (GraftBridge.pin), one helper starts pool work
   * (graft.exec.Par), one builds one-row result frames
-  * (QueryEngine.oneRow) and one shape describes an incrementally
-  * maintained view (IncrementalView.Shape, read through
-  * MatViews.shapeOf, and only MatViews reads it). A new pin variant, a
-  * hand-rolled thread or a second view shape fails here instead of
-  * quietly growing a second copy. Comment lines are ignored, so docs
-  * may name what the code must not do. */
+  * (QueryEngine.oneRow), one builds event frames
+  * (QueryEngine.eventFrame), four writers publish (COMMIT, the
+  * statement append, the stream publish, replication) and one shape
+  * describes an incrementally maintained view (IncrementalView.Shape,
+  * read through MatViews.shapeOf, and only MatViews reads it). A new
+  * pin variant, a hand-rolled thread, a second event-frame builder or
+  * a second view shape fails here instead of quietly growing a second
+  * copy. Comment lines are ignored, so docs may name what the code
+  * must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -50,6 +53,30 @@ class SourceScanSpec extends AnyFunSuite {
     // (MatViews.RefreshPins), which fill inside their first reader's job
     assert(occurrences(".persist(") ==
       Map(bridge -> 1, "graft/exec/MatViews.scala" -> 1))
+  }
+
+  test("engine pins go through GraftBridge.pin, not localCheckpoint") {
+    assert(occurrences(".localCheckpoint(").keySet.filter(_.startsWith("graft/exec/"))
+      .isEmpty)
+  }
+
+  test("one event-frame builder, one publish per writer kind") {
+    val qe = "graft/exec/QueryEngine.scala"
+    assert(occurrences(""".cast("string").as("pk")""").getOrElse(qe, 0) <= 1)
+    // every publishAtomic call sits in one of its four callers (engine
+    // members, declared two spaces in): COMMIT, the statement append,
+    // the stream publish and replication
+    val code = sources.collectFirst { case (`qe`, c) => c }.get.toIndexedSeq
+    val Member = """^  (?:private\S* )?def (\w+)""".r.unanchored
+    val callers = code.indices.filter { i =>
+      code(i).contains("publishAtomic(") && !code(i).contains("def publishAtomic(")
+    }.map { i =>
+      (i to 0 by -1).iterator.map(code(_))
+        .collectFirst { case Member(name) => name }.getOrElse("?")
+    }
+    assert(callers.toSet == Set("commitTxn", "append", "publishStream",
+      "applyReplicated"), callers)
+    assert(occurrences("publishAtomic(").keySet == Set(qe))
   }
 
   test("one-row result frames come from QueryEngine.oneRow, not a range job") {

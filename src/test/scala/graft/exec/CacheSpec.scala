@@ -36,6 +36,22 @@ class CacheSpec extends AnyFunSuite {
     assert(first === second && first === Seq(Row(1L, "a"), Row(2L, "b")))
   }
 
+  test("a cache miss pins its result and counts its rows in one job") {
+    val e = fresh()
+    val g = graft.GroupJobs(spark, "cache-miss")
+    val sc = spark.sparkContext
+    sc.setJobGroup(g.group, "cache miss")
+    try e.sql("SELECT k, v FROM t WHERE k > 0") finally sc.clearJobGroup()
+    g.sync()
+    g.close()
+    // the pin job, which also counts the rows the cache caps
+    assert(g.started.size <= 1, s"${g.started.size} jobs")
+    assert(stats(e) === ((1L, 0L, 1L)))
+    assert(e.sql("SELECT k, v FROM t WHERE k > 0").collect().toSet ===
+      Set(Row(1L, "a"), Row(2L, "b")))
+    assert(stats(e) === ((1L, 1L, 1L)))
+  }
+
   test("DML and ALTER invalidate exactly (new key, fresh result)") {
     val e = fresh()
     val q = "SELECT COUNT(*) AS n FROM t"

@@ -70,9 +70,10 @@ class GraftSourceSpec extends AnyFunSuite {
       .write.format("graft").option("dir", dir).option("table", "t")
       .mode(SaveMode.Append).save()
     assert(read(dir).count() === 3)
-    // bulk append is COPY-semantics: no PK probe jobs (the documented
-    // bulk-ingest contract, QueryEngine.enforcePkUniqueness) — a
-    // duplicate pk event collapses last-write-wins instead of raising
+    // bulk append is COPY-semantics: an INSERT without the pk
+    // uniqueness probes (the documented bulk-ingest contract of
+    // QueryEngine.ingestFrame) — a duplicate pk event collapses
+    // last-write-wins instead of raising
     Seq((3L, "carol2", 31L)).toDF("id", "owner", "v")
       .write.format("graft").option("dir", dir).option("table", "t")
       .mode(SaveMode.Append).save()
