@@ -63,6 +63,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   val catalog = new TableCatalog(spark, baseDir)
 
+  // pk point reads over a snapshot decode on the driver (PointReads)
+  PointReads.install(spark)
+
   /** Materialized views: every MATERIALIZED VIEW statement, the
     * auto-refresh hook and the stored-view read. */
   private[exec] val matViews = new MatViews(this)
@@ -2030,7 +2033,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * row order, a transaction's buffered-union read serves window
     * order, and the same statement must emit identically-sequenced
     * events whether it runs bare or inside BEGIN..COMMIT. Pure reads
-    * (SELECT, probe joins, registry lookups) keep the fast paths. */
+    * (SELECT, probe joins, registry lookups) keep the fast paths, and
+    * so does a matched batch the flat plan folds to at most one row
+    * (`matchedBatch`): one row has one order. */
   /** While true, every stateAt read pins the keyed plan — set around
     * the building of an INSERT ... SELECT source, whose row order
     * becomes event order (see the dmlRead scaladoc). Statements are
@@ -2072,7 +2077,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val base = Snapshots.nearest(spark, catalog.snapshotPath(table), bound)
     def snapshotScan(snapSeq: Long): DataFrame =
       Snapshots.read(spark, catalog.snapshotPath(table), snapSeq,
-        Some(EventLog.schema(t.payloadSchema)))
+        Some(EventLog.schema(t.payloadSchema)), pk = Some(t.pkPhysical))
     def payloadFlat(df: DataFrame): DataFrame = {
       val fields = df.schema("payload").dataType
         .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -2176,9 +2181,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     def probe(ps: => Seq[DataFrame]): () => Unit =
       if (txn.isDefined) { raiseFirstViolation(ps); () => () }
       else { val f = par.fork(raiseFirstViolation(ps)); () => f.join() }
+    // the physical batch decides literal-ness once, for the probes and
+    // for sequencing: a pin's layout says distributed; otherwise one
+    // optimization of the plan sequencing runs anyway
+    val physical = physicalPayload(t, rowsLogical)
+    val literal = pinnedCounts.isEmpty && isLiteral(physical)
     val awaitProbes: () => Unit =
       if (probes eq QueryEngine.NoProbes) () => ()
-      else if (isLiteral(rowsLogical)) {
+      else if (literal) {
         val remaining = dropFoldedProbes(probes())
         if (remaining.isEmpty) () => () else probe(remaining)
       }
@@ -2186,7 +2196,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     def sequenceAndPublish(): (Long, Long) = {
     // inside a transaction, sequences continue from the buffered tail
     val base = txn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
-    val (ev, last) = eventFrame(t, rowsLogical, base, eventType, pinnedCounts)
+    val (ev, last) = eventFrame(t, physical, literal, base, eventType,
+      pinnedCounts)
     val n = last - base
     // the flat-log certificate survives this batch only when it is an
     // INSERT whose pk uniqueness the guard probes established (INSERT
@@ -3008,9 +3019,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * fingerprint (policies/grants/gates) — any DML, ALTER, REFRESH, or
     * policy change produces a different key, so staleness is
     * impossible and old entries simply age out of the LRU. Results pin
-    * through GraftBridge.pin (executor block storage, not driver heap),
-    * capped by entry count and row count; statements that are
-    * nondeterministic, draw sequences, or run inside a transaction
+    * through `pinBatch` (executor block storage, not driver heap),
+    * capped by entry count and row count; a result that is already
+    * driver-resident (a LocalRelation) caches as it is. Statements that
+    * are nondeterministic, draw sequences, or run inside a transaction
     * (snapshot horizons differ) never cache — the reference's
     * should_cache gate (cache.rs:132-165) makes the same calls. */
   private var cacheEnabled = false
@@ -3101,10 +3113,17 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         case Some(df) => cacheHits += 1; df
         case None =>
           cacheMisses += 1
-          // one job materializes the blocks and counts the rows
-          val p = org.apache.spark.sql.GraftBridge.pin(select(q))
-          if (p.counts.sum <= CacheMaxRows) resultCache.put(key, p.df)
-          p.df
+          val df = select(q)
+          // a driver-resident result (a point read) caches as it is;
+          // anything else pins in one job that also counts its rows, and
+          // registers with the statement pins, so close() frees an
+          // over-cap result the cache does not keep
+          if (isLiteral(df)) { resultCache.put(key, df); df }
+          else {
+            val p = pinBatch(df)
+            if (p.counts.sum <= CacheMaxRows) resultCache.put(key, p.df)
+            p.df
+          }
       }
   }
 
@@ -3528,7 +3547,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         val p = pinBatch(positioned, literal = true)
         val n = p.counts.sum
         val first = if (n > 0) catalog.reserveSequenceBlock(seqName, n) else 1L
-        (complete(EventLog.assignSequences(p.df, first - 1, p.layout, "_auto_id")._1,
+        // a pin without a layout is a LocalRelation
+        (complete(EventLog.assignSequences(p.df, first - 1, p.layout,
+          literal = p.layout.isEmpty, "_auto_id")._1,
           Some(idCol)), p.layout)
       case None =>
         val p = pinBatch(complete(positioned, None), literal = true)
@@ -3608,6 +3629,37 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     batchDup ++ collision
   }
 
+  /** The rows an UPDATE or DELETE touches — `where` and the session's
+    * `command` row policies over the current state — and the state
+    * read. Their order becomes event order, so they come from the keyed
+    * dmlRead plan, except outside a transaction when the driver holds
+    * the table's tail and the flat state plan folds to a LocalRelation
+    * of at most one row: a pk point read over the snapshot and the tail
+    * (PointReads), run on the driver with no Spark job. One row has one
+    * order, so the statement emits the same events bare or inside
+    * BEGIN..COMMIT. */
+  private def matchedBatch(table: String, where: Option[String],
+      command: String): (DataFrame, DataFrame) = {
+    def over(state: DataFrame): (DataFrame, DataFrame) = {
+      val m = where.fold(state)(w => state.where(expr(w)))
+      (rlsFilter(table, command).fold(m)(m.where), state)
+    }
+    val t = catalog.require(table)
+    val tailKnown = txn.isEmpty && tailAbove(t,
+      Snapshots.nearest(spark, catalog.snapshotPath(table), None), None,
+      dmlRead = false).isDefined
+    Option.when(tailKnown)(over(stateAt(table, None))).flatMap { case (m, state) =>
+      m.queryExecution.optimizedPlan match {
+        // a frame over the rows themselves: frames derived from `m`
+        // would plan (and read) the snapshot again
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+            if lr.data.length <= 1 =>
+          Some((GraftBridge.localFrame(spark, m.schema, lr.data), state))
+        case _ => None
+      }
+    }.getOrElse(over(stateAt(table, None, dmlRead = true)))
+  }
+
   /** UPDATE: fetch matching current-state rows, apply assignments (RHS
     * may reference old row values — Catalyst `expr`), emit full-row
     * PATCH events; a PK-changing update is SoftDelete + Insert (PG
@@ -3619,13 +3671,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     checkPrivilege(table, "UPDATE")
     val bad = assigns.map(_._1).filterNot(a => t.columns.exists(_.logical == a))
     require(bad.isEmpty, s"unknown UPDATE columns: ${bad.mkString(",")}")
-    val state = stateAt(table, None, dmlRead = true)
     // row policies narrow which rows this session's UPDATE can touch;
     // rows it cannot see survive untouched (PG UPDATE-USING semantics)
-    val matching0 = {
-      val m = where.fold(state)(w => state.where(expr(w)))
-      rlsFilter(table, "UPDATE").fold(m)(m.where)
-    }
+    val (matching0, state) = matchedBatch(table, where, "UPDATE")
     // pin the matched batch once: trigger/FK probe jobs and the appends
     // read blocks instead of replaying the state collapse per action, a
     // trigger body writing this table cannot change what the batch
@@ -3697,12 +3745,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   def delete(table: String, where: Option[String]): DataFrame = {
     val t = catalog.require(table)
     checkPrivilege(table, "DELETE")
-    val state = stateAt(table, None, dmlRead = true)
     // rows the session cannot see (RLS DELETE-USING) are not deletable
-    val matching0 = {
-      val m = where.fold(state)(w => state.where(expr(w)))
-      rlsFilter(table, "DELETE").fold(m)(m.where)
-    }
+    val (matching0, _) = matchedBatch(table, where, "DELETE")
     // pin the doomed batch once — FK/trigger probe jobs and the append
     // read blocks instead of replaying state collapse per action, and a
     // trigger body writing this table cannot change what the lazy
@@ -4032,26 +4076,30 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         streamId, batchId, mutated = Set(t.name))
     }
 
-  /** Physical-cast, sequence-assign and event-shape one batch of
-    * payload rows (logical columns) as `eventType` events numbered from
-    * `base` + 1 — the one event-frame builder, under `append` and
-    * `publishStream`. Returns (events, new last sequence).
+  /** Payload rows (logical columns) as `t`'s physical payload columns,
+    * cast to their declared types (loose-schema writes are a [REF-GAP]
+    * we do NOT replicate: our tables are typed). */
+  private def physicalPayload(t: TableDef, rowsLogical: DataFrame): DataFrame =
+    rowsLogical.select(t.columns.map(c =>
+      col(c.logical).cast(c.dataType).as(c.physical)): _*)
+
+  /** Sequence-assign and event-shape one batch of physical payload rows
+    * (`physicalPayload`) as `eventType` events numbered from `base` + 1
+    * — the one event-frame builder, under `append` and `publishStream`.
+    * Returns (events, new last sequence).
     *
     * The batch must be a pin, a literal batch or a narrow derivation of
     * one: sequence offsets are computed once, so the consuming write
     * must see the same row-to-partition layout, and nothing may
     * re-read the log being appended to. `layout` (a distributed pin's
-    * per-partition counts) makes the assignment job-free; a literal
-    * batch is sequenced on the driver; anything else pays one
+    * per-partition counts) makes the assignment job-free; a `literal`
+    * batch (its plan optimizes to a LocalRelation, as the caller found)
+    * is sequenced on the driver; anything else pays one
     * partition-counts job (EventLog.assignSequences). */
-  private def eventFrame(t: TableDef, rowsLogical: DataFrame, base: Long,
-      eventType: String = EventLog.INSERT,
+  private def eventFrame(t: TableDef, physical: DataFrame, literal: Boolean,
+      base: Long, eventType: String = EventLog.INSERT,
       layout: Option[Array[Long]] = None): (DataFrame, Long) = {
-    // logical -> physical payload, cast to declared types (loose-schema
-    // writes are a [REF-GAP] we do NOT replicate: our tables are typed)
-    val physical = rowsLogical.select(t.columns.map(c =>
-      col(c.logical).cast(c.dataType).as(c.physical)): _*)
-    val (withSeq, n) = EventLog.assignSequences(physical, base, layout)
+    val (withSeq, n) = EventLog.assignSequences(physical, base, layout, literal)
     val ev0 = withSeq.select(
       col("sequence"),
       timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")).as("ts"),
@@ -4084,7 +4132,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       marks: Map[String, Long] = Map.empty): Unit = {
     val framed = for ((t, rows) <- parts) yield {
       requireWritable(t)
-      val (ev, last) = eventFrame(t, rows, catalog.lastSeq(t.name))
+      val physical = physicalPayload(t, rows)
+      val (ev, last) = eventFrame(t, physical, isLiteral(physical),
+        catalog.lastSeq(t.name))
       (t.name, ev, last)
     }
     val advanced = framed.filter { case (n, _, last) => last > catalog.lastSeq(n) }

@@ -78,6 +78,8 @@ final class Tracer {
     else if (owner ne null) body // foreign thread mid-trace: skip
     else {
       owner = Thread.currentThread()
+      val outer = Tracer.live.get
+      Tracer.live.set(this)
       liveTrace = nextTraceId; nextTraceId += 1
       liveT0 = System.nanoTime()
       nextSpanId = 0
@@ -96,6 +98,7 @@ final class Tracer {
         }
         buf = null
         owner = null
+        Tracer.live.set(outer)
       }
     }
   }
@@ -106,7 +109,16 @@ final class Tracer {
     if (!enabled || (owner ne Thread.currentThread())) body
     else record(name, detail)(body)
 
-  private def record[T](name: String, detail: String)(body: => T): T = {
+  /** `span` whose detail describes what the body returned (counts it
+    * learned while running). */
+  def spanOf[T](name: String)(body: => T)(detail: T => String): T =
+    if (!enabled || (owner ne Thread.currentThread())) body
+    else {
+      var d = ""
+      record(name, d) { val r = body; d = detail(r); r }
+    }
+
+  private def record[T](name: String, detail: => String)(body: => T): T = {
     val id = nextSpanId; nextSpanId += 1
     val parent = stack.headOption.getOrElse(-1L)
     stack = id :: stack
@@ -146,4 +158,13 @@ final class Tracer {
     ring.synchronized { ring.find(_.traceId == traceId) }
 
   def clear(): Unit = ring.synchronized { ring.clear() }
+}
+
+object Tracer {
+  private val live = new ThreadLocal[Tracer]
+
+  /** The tracer whose statement trace is live on this thread: lets work
+    * below the engine's own calls (an optimizer rule running while the
+    * statement plans) record spans into the statement's trace. */
+  def current: Option[Tracer] = Option(live.get)
 }

@@ -72,7 +72,8 @@ object EventLog {
     * reference (index.rs:22-26) — so contiguity per batch is safe.
     *   - `layout` (a distributed pin's per-partition counts, see
     *     GraftBridge.pin) gives the offsets with no job;
-    *   - a literal batch is sequenced on the driver: executeCollect is
+    *   - a `literal` batch (the caller found its plan optimizes to a
+    *     LocalRelation) is sequenced on the driver: executeCollect is
     *     job-free on a LocalTableScan, and the result goes back out as
     *     a LocalRelation — no partition-counts job (and its ~200 ms of
     *     per-statement floor) for a VALUES insert;
@@ -82,11 +83,10 @@ object EventLog {
     * offsets are computed once, so the row-to-partition mapping must
     * not change between the count and the consuming action. */
   def assignSequences(batch: DataFrame, base: Long,
-      layout: Option[Array[Long]] = None,
+      layout: Option[Array[Long]], literal: Boolean,
       colName: String = "sequence"): (DataFrame, Long) =
     layout.map(cs => (assignWithOffsets(batch, base, cs, colName), cs.sum))
-      .getOrElse(batch.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+      .getOrElse(if (literal) {
         val rows = batch.collect()
         val out = StructType(batch.schema.fields :+
           StructField(colName, LongType, nullable = false))
@@ -94,10 +94,10 @@ object EventLog {
           rows.zipWithIndex.map { case (r, i) =>
             Row.fromSeq(r.toSeq :+ (base + i + 1L)) }.toIndexedSeq: _*)
         (batch.sparkSession.createDataFrame(seqd, out), rows.length.toLong)
-      case _ =>
+      } else {
         val counts = partitionCounts(batch)
         (assignWithOffsets(batch, base, counts, colName), counts.sum)
-    })
+      })
 
   /** Batches at or under this row count publish as a single staged
     * parquet file (one write task, one rename, one file for every

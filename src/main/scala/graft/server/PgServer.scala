@@ -721,7 +721,7 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
           sendCommandComplete(out, commandTag(w1, w2, aff))
         } else {
           val df = portalFrame(session, p)
-          if (p.it.isEmpty) p.it = Some(df.toLocalIterator())
+          if (p.it.isEmpty) p.it = Some(rowsOf(df))
           val (n, exhausted) = streamRows(df.schema, p.it.get, maxRows, out)
           if (exhausted) sendCommandComplete(out, s"SELECT $n")
           else { out.write('s'); out.writeInt(4); out.flush() } // PortalSuspended
@@ -805,7 +805,7 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
               sendCommandComplete(out, commandTag(w1, w2, affectedRows(df)))
             else {
               sendRowDescription(df.schema, out)
-              val (n, _) = streamRows(df.schema, df.toLocalIterator(), 0, out)
+              val (n, _) = streamRows(df.schema, rowsOf(df), 0, out)
               sendCommandComplete(out, s"SELECT $n")
             }
         }
@@ -968,8 +968,8 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
   }
 
   /** COPY TO STDOUT: CopyOutResponse + one CopyData per row (PG text
-    * or CSV line syntax), streamed via toLocalIterator — one
-    * partition resident, like every other result path. */
+    * or CSV line syntax), streamed via `rowsOf` — one partition
+    * resident, like every other result path. */
   private def copyOutStdout(session: QueryEngine#Session,
       table: Option[String], cols: Option[String], query: Option[String],
       fmt: String, out: DataOutputStream): Unit = {
@@ -982,7 +982,7 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
     out.write('H'); out.writeInt(4 + 1 + 2 + 2 * nCols)
     out.write(0); out.writeShort(nCols)
     df.schema.fields.foreach(_ => out.writeShort(0))
-    val it = df.toLocalIterator()
+    val it = rowsOf(df)
     var n = 0L
     while (it.hasNext) {
       val row = it.next()
@@ -1042,9 +1042,22 @@ final class PgServer(engine: QueryEngine, port: Int = 0,
     out.flush()
   }
 
+  /** A result's rows as a cursor. toLocalIterator keeps memory bounded
+    * to one partition, but it runs a job per partition even over a
+    * LocalTableScan (which overrides executeCollect, executeTake and
+    * executeTail, not executeToIterator); a result already on the
+    * driver (a point read, a summary row) is collected instead, at no
+    * extra memory since its rows live in the plan. */
+  private def rowsOf(df: DataFrame): java.util.Iterator[org.apache.spark.sql.Row] =
+    df.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.LocalTableScanExec =>
+        java.util.Arrays.asList(df.collect(): _*).iterator()
+      case _ => df.toLocalIterator()
+    }
+
   /** Stream up to `maxRows` DataRows from the cursor (`<= 0` = all);
-    * toLocalIterator keeps memory bounded to one partition — no
-    * collect, no silent row cap. Returns (rows sent, cursor
+    * the cursor (`rowsOf`) holds one partition or a driver-resident
+    * result, and there is no silent row cap. Returns (rows sent, cursor
     * exhausted) — the caller picks CommandComplete vs
     * PortalSuspended. */
   private def streamRows(schema: StructType,

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * sequence). A read AS OF T >= S is this snapshot plus the events in
   * (S, T]. When the engine holds those events on the driver (the
   * literal batches it wrote since the newest snapshot), it folds them
-  * there and the read is a flat scan of the snapshot with no shuffle.
+  * there and the read is a flat scan of the snapshot with no shuffle;
+  * a pk point read of that flat scan decodes the matching row groups
+  * on the driver and runs no Spark job at all (see `read`).
   * Otherwise it unions the snapshot with the sequence-pruned log slice
   * and collapses — replay cost is proportional to the tail, not the
   * full history. At 100 TB this is the difference between scanning
@@ -139,13 +141,26 @@ object Snapshots {
     }
   }
 
+  /** Reader option that tags a snapshot scan with its table's pk
+    * payload field. Parquet ignores it; `graft.exec.PointReads` looks
+    * for it to serve a pk point read from the driver. */
+  val PkOption = "graft.pk"
+
   /** Read a snapshot. With `schema` (the catalog's event schema) the
     * scan skips footer inference and absorbs ALTERs the same way the
-    * log read does — absent fields are NULL. */
+    * log read does — absent fields are NULL. With `pk` (the pk's
+    * physical payload field) the scan is tagged for point reads: a plan
+    * that filters it by `pk = literal` or `pk IN (literals)` decodes the
+    * few row groups that can hold those keys on the driver at optimize
+    * time, within a byte budget, and runs no Spark job for them
+    * (`graft.exec.PointReads`). */
   def read(spark: SparkSession, dir: String, seq: Long,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s))
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      pk: Option[String] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
+    pk.fold(reader)(reader.option(PkOption, _))
       .parquet(s"$dir/${servingDir(spark, dir, seq)}")
+  }
 
   /** Delete every version dir of the snapshot at `seq` (VACUUM pruning
     * snapshots below the retention floor). */

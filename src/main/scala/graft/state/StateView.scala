@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * When the driver holds those events itself (the engine keeps the
   * literal batches it wrote since the newest snapshot), `overTail`
   * folds them on the driver and the read is a flat snapshot scan with
-  * no shuffle at all. Otherwise the collapse variants below are a
+  * no shuffle at all, and a pk point read of it no Spark job. Otherwise the collapse variants below are a
   * single hash shuffle on pk (all windows share the partitioning, so
   * Catalyst plans one Exchange). `sequence` is monotonically
   * increasing, so time-travel predicates prune whole parquet files via
@@ -158,8 +158,13 @@ object StateView {
     *   - union the events' live rows as a LocalRelation.
     * No window, no exchange and no broadcast, so a read runs one job
     * (none without a snapshot). The pk column is the scan's own, so a
-    * pk predicate pushes into the snapshot scan; it prunes the
-    * LocalRelation on the driver. */
+    * pk predicate pushes into the snapshot scan and prunes the
+    * LocalRelation on the driver. A pk point read goes further: the
+    * tagged snapshot scan (`Snapshots.read`) becomes the rows of the
+    * row groups that can hold the key, decoded on the driver within a
+    * byte budget (`graft.exec.PointReads`), and the filter, the PATCH
+    * lookup and the union fold at optimize time — the read runs no
+    * Spark job at all. */
   def overTail(spark: SparkSession, snapshot: Option[DataFrame],
       events: Seq[InternalRow], payload: StructType,
       pkPhysical: String): DataFrame = {

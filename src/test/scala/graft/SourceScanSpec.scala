@@ -13,10 +13,12 @@ import scala.jdk.CollectionConverters._
   * (QueryEngine.eventFrame), four writers publish (COMMIT, the
   * statement append, the stream publish, replication) and one shape
   * describes an incrementally maintained view (IncrementalView.Shape,
-  * read through MatViews.shapeOf, and only MatViews reads it). A new
-  * pin variant, a hand-rolled thread, a second event-frame builder or
-  * a second view shape fails here instead of quietly growing a second
-  * copy. Comment lines are ignored, so docs may name what the code
+  * read through MatViews.shapeOf, and only MatViews reads it), one
+  * function reads parquet on the driver (GraftBridge.readLocalParquet)
+  * and one site installs optimizer rules (PointReads.install). A new
+  * pin variant, a hand-rolled thread, a second event-frame builder, a
+  * second view shape or a second driver parquet reader fails here
+  * instead of quietly growing a second copy. Comment lines are ignored, so docs may name what the code
   * must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -107,6 +109,18 @@ class SourceScanSpec extends AnyFunSuite {
 
   test("materialized views live in MatViews, not QueryEngine") {
     assert(!occurrences("IncrementalView.").contains("graft/exec/QueryEngine.scala"))
+  }
+
+  test("driver parquet reads live only in GraftBridge") {
+    val bridge = "org/apache/spark/sql/GraftBridge.scala"
+    for (p <- Seq("ParquetFooterReader", "ParquetFileReader",
+        "buildReaderWithPartitionValues"))
+      assert(occurrences(p).keySet.subsetOf(Set(bridge)), p)
+  }
+
+  test("one optimizer-rule install site: PointReads.install") {
+    assert(occurrences("extraOptimizations =") ==
+      Map("graft/exec/PointReads.scala" -> 1))
   }
 
   test("only Par starts pool work; PgServer keeps its own threads") {

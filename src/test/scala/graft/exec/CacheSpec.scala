@@ -52,6 +52,44 @@ class CacheSpec extends AnyFunSuite {
     assert(stats(e) === ((1L, 1L, 1L)))
   }
 
+  test("a point-read miss over a snapshot caches its driver rows with no job") {
+    val e = fresh()
+    e.sql("CREATE TABLE s (k BIGINT PRIMARY KEY, v BIGINT)")
+    e.sql("INSERT INTO s SELECT id, id * 2 FROM range(1, 1001)")
+    e.sql("SNAPSHOT s")
+    e.sql("UPDATE s SET v = -1 WHERE k = 7")
+    e.sql("SELECT k, v FROM s WHERE k = 9").collect() // warm
+    val q = "SELECT k, v FROM s WHERE k = 7"
+    val g = graft.GroupJobs(spark, "cache-point")
+    val sc = spark.sparkContext
+    sc.setJobGroup(g.group, "cache point miss")
+    try assert(e.sql(q).collect().toSeq === Seq(Row(7L, -1L)))
+    finally sc.clearJobGroup()
+    g.sync()
+    g.close()
+    assert(g.started.isEmpty, s"${g.started.size} jobs")
+    val (entries, hits, _) = stats(e)
+    assert(e.sql(q).collect().toSeq === Seq(Row(7L, -1L)))
+    assert(stats(e)._1 === entries && stats(e)._2 === hits + 1)
+    e.close()
+  }
+
+  test("a result over the row cap is not cached, and close() frees its pin") {
+    val e = fresh()
+    e.sql("CREATE TABLE big (k BIGINT PRIMARY KEY)")
+    e.sql("INSERT INTO big SELECT id FROM range(100001)")
+    val df = e.sql("SELECT k FROM big WHERE k >= 0")
+    val pinned = df.queryExecution.logical.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(pinned.size == 1, df.queryExecution.logical)
+    assert(stats(e)._1 === 0L, "an over-cap result must not be cached")
+    assert(spark.sparkContext.getPersistentRDDs.contains(pinned.head))
+    e.close()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(pinned.head),
+      "close() left the over-cap result pinned")
+  }
+
   test("DML and ALTER invalidate exactly (new key, fresh result)") {
     val e = fresh()
     val q = "SELECT COUNT(*) AS n FROM t"

@@ -2,6 +2,8 @@ package graft.exec
 
 import graft.{GroupJobs, TestSpark}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -13,7 +15,10 @@ import scala.util.Random
   * window collapse as a set — at the current state and at every bound
   * from the newest snapshot to the last sequence — and while the tail is
   * known the read's plan has no Window. Fallbacks (reopen, a batch past
-  * the literal cap, RESTORE) must keep the same answers. */
+  * the literal cap, RESTORE) must keep the same answers. Pk point reads
+  * over a snapshot, which decode its row groups on the driver, must
+  * equal the same keys picked out of an unfiltered keyed read, over
+  * every snapshot layout and within and past the driver's byte budget. */
 class DriverTailSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -37,6 +42,48 @@ class DriverTailSpec extends AnyFunSuite {
     for (b <- math.max(newest, from) to last)
       assert(rows(e.stateAt(t, Some(b))) ===
         rows(e.stateAt(t, Some(b), dmlRead = true)), s"AS OF $b after $what")
+  }
+
+  /** Pk point reads (`id = k` for each key, then `id IN (keys)`) equal
+    * the same keys picked out of an unfiltered keyed read — which has
+    * no pk predicate, so no driver read — at the current state and at
+    * every bound from the newest snapshot to the last sequence. With
+    * `local`, each current-state point read is a LocalRelation. */
+  private def assertPointAgrees(e: QueryEngine, t: String, keys: Seq[Long],
+      what: String, local: Boolean = true): Unit = {
+    val last = e.catalog.lastSeq(t)
+    val newest = graft.state.Snapshots.nearest(spark,
+      e.catalog.snapshotPath(t), None).getOrElse(0L)
+    for (b <- None +: (newest to last).map(Some(_))) {
+      val keyed = e.stateAt(t, b, dmlRead = true).collect()
+      def want(ks: Seq[Long]): Seq[String] = keyed.filter(r => ks.contains(r.getLong(0)))
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+      for (k <- keys) {
+        val df = e.stateAt(t, b).where(col("id") === k)
+        assert(rows(df) === want(Seq(k)), s"id = $k at ${b.getOrElse("current")} after $what")
+        if (local && b.isEmpty)
+          assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+            s"id = $k after $what did not fold to the driver:\n" +
+              df.queryExecution.optimizedPlan)
+      }
+      assert(rows(e.stateAt(t, b).where(col("id").isin(keys: _*))) === want(keys),
+        s"id IN (${keys.mkString(",")}) at ${b.getOrElse("current")} after $what")
+    }
+  }
+
+  /** Run `stmt` traced; (files, row groups kept, row groups total) of
+    * the one driver point read it did. */
+  private def pointRead(e: QueryEngine, stmt: String): (Int, Int, Int) = {
+    e.sql("SET TRACE ON")
+    e.sql(stmt).collect()
+    val reads = e.tracer.traces.head.spans.filter(_.name == "point-read")
+    e.sql("SET TRACE OFF")
+    assert(reads.length == 1, reads)
+    val R = """files=(\d+) row_groups=(\d+)/(\d+) .*""".r
+    reads.head.detail match {
+      case R(f, k, n) => (f.toInt, k.toInt, n.toInt)
+      case d => fail(d)
+    }
   }
 
   private def windowless(e: QueryEngine, t: String): Boolean =
@@ -196,20 +243,22 @@ class DriverTailSpec extends AnyFunSuite {
       e.sql(s"SELECT id, bal FROM a FOR SYSTEM_TIME AS OF @SEQ:${snap + 1} " +
         "WHERE id = 9").collect()
     }
+    // the snapshot's row groups that can hold the key decode on the
+    // driver, so a point statement runs no Spark job at all
     assert(jobs(assert(e.sql("SELECT id, bal FROM a WHERE id = 9").collect()
-      .map(_.getLong(1)).toSeq === Seq(90L))) === 1, "PK SELECT")
-    // a key the tail only PATCHes reads through the same single scan
+      .map(_.getLong(1)).toSeq === Seq(90L))) === 0, "PK SELECT")
+    // a key the tail only PATCHes folds over the same driver read
     assert(jobs(assert(e.sql("SELECT id, bal FROM a WHERE id = 7").collect()
-      .map(_.getLong(1)).toSeq === Seq(71L))) === 1, "PK SELECT, patched key")
+      .map(_.getLong(1)).toSeq === Seq(71L))) === 0, "PK SELECT, patched key")
     assert(jobs(assert(e.sql("SELECT id FROM a WHERE id = 8").collect()
-      .isEmpty)) === 1, "PK SELECT, deleted key")
+      .isEmpty)) === 0, "PK SELECT, deleted key")
     assert(jobs(assert(e.sql(s"SELECT id, bal FROM a FOR SYSTEM_TIME AS OF " +
-      s"@SEQ:${snap + 2} WHERE id = 5002").collect().length === 1)) === 1,
+      s"@SEQ:${snap + 2} WHERE id = 5002").collect().length === 1)) === 0,
       "AS OF above the snapshot")
     assert(jobs(assert(e.sql("INSERT INTO a VALUES (6001, 3)").collect()
-      .head.getLong(1) === 1L)) === 1, "INSERT VALUES")
+      .head.getLong(1) === 1L)) === 0, "INSERT VALUES")
     assert(jobs(assert(e.sql("UPDATE a SET bal = bal + 1 WHERE id = 11")
-      .collect().head.getLong(1) === 1L)) === 2, "UPDATE by pk")
+      .collect().head.getLong(1) === 1L)) === 0, "UPDATE by pk")
     assert(e.sql("SELECT bal FROM a WHERE id = 11").collect().head.getLong(0) === 111L)
 
     e.sql("CREATE TABLE lit (id BIGINT PRIMARY KEY, v STRING)")
@@ -219,6 +268,76 @@ class DriverTailSpec extends AnyFunSuite {
     assert(jobs(assert(e.sql("SELECT id, v FROM lit").collect()
       .map(r => s"${r.getLong(0)}${r.getString(1)}").sorted.toSeq ===
       Seq("1a", "2bb"))) === 0, "SELECT on a literal-built table")
+    e.close()
+  }
+
+  test("property: pk point reads over snapshot layouts equal keyed reads") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE p (id BIGINT PRIMARY KEY, v BIGINT, s STRING)")
+    e.sql("INSERT INTO p SELECT id, id * 10, concat('s', id) FROM range(1, 3001)")
+    // 4 KB row groups hold a few hundred rows each
+    def smallRowGroups(stmt: String): Unit = {
+      spark.conf.set("parquet.block.size", "4096")
+      try e.sql(stmt) finally spark.conf.unset("parquet.block.size")
+    }
+    smallRowGroups("SNAPSHOT p")
+    // a tail that inserts, patches, deletes, and deletes then re-inserts
+    e.sql("INSERT INTO p VALUES (5001, 1, 'n')")
+    val (files, kept, total) = pointRead(e, "UPDATE p SET v = -1 WHERE id = 7")
+    assert(total > files && kept >= 1, s"$kept/$total row groups in $files files")
+    e.sql("DELETE FROM p WHERE id = 8")
+    e.sql("DELETE FROM p WHERE id = 9")
+    e.sql("INSERT INTO p VALUES (9, 99, 'again')")
+    // 777777 is absent everywhere
+    val keys = Seq(1L, 7L, 8L, 9L, 42L, 2999L, 5001L, 777777L)
+    assertPointAgrees(e, "p", keys, "multi-row-group snapshot and tail")
+    // OPTIMIZE ... ZORDER writes a new version dir of the same snapshot,
+    // clustered on the pk, so the footers prune row groups
+    smallRowGroups("OPTIMIZE p ZORDER BY (id)")
+    val (_, zKept, zTotal) = pointRead(e, "UPDATE p SET v = -2 WHERE id = 42")
+    assert(zKept < zTotal, s"$zKept/$zTotal row groups kept")
+    assertPointAgrees(e, "p", keys, "ZORDER version")
+    // a column added after the snapshot reads NULL from its files; the
+    // tail is unknown after ALTER, so the read is the keyed plan with
+    // the snapshot side read on the driver
+    e.sql("ALTER TABLE p ADD COLUMN x BIGINT")
+    e.sql("UPDATE p SET x = 5 WHERE id = 11")
+    assertPointAgrees(e, "p", keys :+ 11L, "ALTER ADD after the snapshot", local = false)
+    e.sql("SNAPSHOT p")
+    e.sql("UPDATE p SET x = 6 WHERE id = 12")
+    assertPointAgrees(e, "p", keys ++ Seq(11L, 12L), "SNAPSHOT after ALTER")
+    e.close()
+  }
+
+  test("pk point reads over an encrypted snapshot decode on the driver") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("SET ENCRYPTION KEY '" + java.util.Base64.getEncoder
+      .encodeToString(Array.tabulate(32)(_.toByte)) + "'")
+    try {
+      e.sql("CREATE TABLE c (id BIGINT PRIMARY KEY, v BIGINT, s STRING)")
+      e.sql("INSERT INTO c SELECT id, id * 3, concat('c', id) FROM range(1, 501)")
+      e.sql("SNAPSHOT c")
+      e.sql("UPDATE c SET v = 0 WHERE id = 3")
+      e.sql("DELETE FROM c WHERE id = 4")
+      assertPointAgrees(e, "c", Seq(3L, 4L, 5L, 499L, 9999L), "encrypted snapshot")
+    } finally e.sql("SET ENCRYPTION OFF")
+    e.close()
+  }
+
+  test("a point read over the byte budget keeps the one-job scan and the same rows") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE big (id BIGINT PRIMARY KEY, s STRING)")
+    // ~10 MB of 512-character strings, hash-ordered by the snapshot
+    // write, so every row group is a candidate for any key
+    e.sql("INSERT INTO big SELECT id, repeat(sha2(CAST(id AS STRING), 512), 4) " +
+      "FROM range(1, 20001)")
+    e.sql("SNAPSHOT big")
+    e.sql("UPDATE big SET s = 'patched' WHERE id = 5")
+    e.sql("SELECT id, s FROM big WHERE id = 77").collect() // warm
+    val df = e.sql("SELECT id, s FROM big WHERE id = 77")
+    assert(plan(df).contains("FileScan"), plan(df))
+    assert(jobs(assert(df.collect().length === 1)) === 1)
+    assertPointAgrees(e, "big", Seq(5L, 77L, 30000L), "over the budget", local = false)
     e.close()
   }
 }

@@ -50,6 +50,22 @@ class TracingSpec extends AnyFunSuite {
     assert(spans.forall(_._5), "all spans of a successful statement are ok")
   }
 
+  test("a pk point statement over a snapshot shows its driver read") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE pr (k BIGINT PRIMARY KEY, v BIGINT)")
+    e.sql("INSERT INTO pr SELECT id, id FROM range(1, 101)")
+    e.sql("SNAPSHOT pr")
+    e.sql("SET TRACE ON")
+    e.sql("UPDATE pr SET v = 0 WHERE k = 5")
+    val update = e.sql("SHOW TRACES").collect().head
+    assert(update.getString(1).startsWith("UPDATE pr"))
+    val reads = spansOf(e, update.getLong(0)).filter(_._3 == "point-read")
+    assert(reads.length == 1, reads)
+    assert(reads.head._4.matches("files=\\d+ row_groups=\\d+/\\d+ bytes=\\d+ rows=\\d+"),
+      reads.head._4)
+    e.close()
+  }
+
   test("a declined fused horizon read names its reason in the trace") {
     // the decline is correct-but-slower (two stateAt reads instead of
     // one fused scan); round 17 makes it OBSERVABLE — a zero-duration

@@ -146,14 +146,29 @@ class PlanQualitySpec extends AnyFunSuite {
       "pk predicate did not reach the scan:\n" + p.take(3000))
     assert(df.collect().map(_.getString(1)).toSeq === Seq("u"))
     // a snapshot plus a driver-held tail that PATCHes the key: the
-    // predicate reaches the snapshot scan, and no collapse remains
+    // snapshot row groups that can hold the key decode on the driver at
+    // optimize time, and the filter, the tail fold and the union fold
+    // with them into one LocalTableScan — no collapse, no scan, no job
     e.sql("SNAPSHOT pt")
     e.sql("UPDATE pt SET v = 't' WHERE k = 77")
     val dt = e.sql("SELECT k, v FROM pt WHERE k = 77")
     val pt = plan(dt)
-    assert(!pt.contains("Window") && pt.contains("EqualTo(payload.k,77)"),
-      "pk predicate did not reach the snapshot scan:\n" + pt.take(3000))
+    assert(pt.contains("LocalTableScan") && !pt.contains("Window") &&
+      !pt.contains("Scan parquet"), "pk read did not fold to the driver:\n" + pt.take(3000))
     assert(dt.collect().map(_.getString(1)).toSeq === Seq("t"))
+    // past the driver read's byte budget (~10 MB of candidate row
+    // groups) the snapshot scan stays, and the pk predicate still
+    // reaches it as a pushed nested filter
+    e.sql("CREATE TABLE pw (k BIGINT PRIMARY KEY, v STRING)")
+    e.sql("INSERT INTO pw SELECT id, repeat(sha2(CAST(id AS STRING), 512), 4) " +
+      "FROM range(20000)")
+    e.sql("SNAPSHOT pw")
+    e.sql("UPDATE pw SET v = 'w' WHERE k = 77")
+    val dw = e.sql("SELECT k, v FROM pw WHERE k = 77")
+    val pw = plan(dw)
+    assert(!pw.contains("Window") && pw.contains("EqualTo(payload.k,77)"),
+      "pk predicate did not reach the snapshot scan:\n" + pw.take(3000))
+    assert(dw.collect().map(_.getString(1)).toSeq === Seq("w"))
     e.close()
   }
 

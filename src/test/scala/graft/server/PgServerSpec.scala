@@ -265,6 +265,33 @@ class PgServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a PK SELECT over a snapshot runs no Spark job over the wire") {
+    withServer { (e, port) =>
+      e.sql("CREATE TABLE pk (k BIGINT PRIMARY KEY, v BIGINT)")
+      e.sql("INSERT INTO pk SELECT id, id * 2 FROM range(1, 2001)")
+      e.sql("SNAPSHOT pk")
+      e.sql("UPDATE pk SET v = -1 WHERE k = 7")
+      assert(psql(port, "SELECT k, v FROM pk WHERE k = 9")._2.trim === "9|18")
+      // every statement the server runs sits in a graft-pg-* job group
+      val wire = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+              .exists(_.startsWith("graft-pg-"))) wire.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val (code, out, err) = psql(port, "SELECT k, v FROM pk WHERE k = 7")
+        assert(code === 0 && out.trim === "7|-1", err)
+        // listener events arrive asynchronously: wait for all of them
+        val g = graft.GroupJobs(spark, "wire-sync")
+        g.sync()
+        g.close()
+      } finally spark.sparkContext.removeSparkListener(l)
+      assert(wire.get === 0, s"${wire.get} jobs")
+    }
+  }
+
   test("command tags carry the statement type and affected count") {
     withServer { (_, port) =>
       // drivers/ORMs parse update counts from these tags (JDBC
