@@ -84,6 +84,10 @@ final case class TableDef(
       .getOrElse(throw new IllegalStateException(s"pk $pk not in $name"))
       .physical
 
+  /** Logical row struct (what a state read returns). */
+  def logicalSchema: StructType =
+    StructType(columns.map(c => StructField(c.logical, c.dataType)))
+
   /** Physical payload struct (what event parquet stores). */
   def payloadSchema: StructType =
     StructType(columns.map(c => StructField(c.physical, c.dataType)))

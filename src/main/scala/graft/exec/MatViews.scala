@@ -5,9 +5,9 @@ import graft.log.EventLog
 import graft.sql.IncrementalView
 import graft.state.{Snapshots, StateView}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Materialized views, in one place (the reference keeps views in their
   * own module too, views.rs:40-123): CREATE MATERIALIZED VIEW
@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructTyp
   * engine's write lock, inside the statement that called it. */
 final class MatViews private[exec] (engine: QueryEngine) {
   import MatViews._
-  import engine.{catalog, collectInlineKeys, encrypted, events, select,
-    spark, stateAt, summary, tracer, InlineKeyCap}
+  import Guards.{cappedValues, collectInlineKeys, InlineKeyCap}
+  import engine.{catalog, encrypted, events, select, spark, stateAt,
+    summary, tracer}
 
   // ========================================================= statements
 
@@ -839,13 +840,7 @@ final class MatViews private[exec] (engine: QueryEngine) {
     IncrementalView.parse(sql).filter(sh => parsedOnly || (
       sh.tables.forall(tn => catalog.get(tn).exists(_.attached.isEmpty)) &&
         !floatSumAvg(sh.aggs, sh.joined(
-          sh.tables.map(tn => emptyLogicalFrame(catalog.require(tn)))))))
-
-  /** An empty local frame with `t`'s logical schema — for driver-side
-    * expression-type resolution only (analysis, never a job). */
-  private def emptyLogicalFrame(t: TableDef): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType(t.columns.map(c => StructField(c.logical, c.dataType))))
+          sh.tables.map(tn => engine.emptyFrame(catalog.require(tn).logicalSchema))))))
 
   /** True when any SUM/AVG aggregate reads a FLOAT/DOUBLE-typed
     * expression — such views must NOT enter the maintainable shape:
@@ -1229,15 +1224,14 @@ final class MatViews private[exec] (engine: QueryEngine) {
     groupKeys match {
       case Seq(k) =>
         val vals = tracer.span("acd-touched-groups") {
-          touched.limit(InlineKeyCap + 1).collect().map(_.get(0)).toIndexedSeq
+          cappedValues(touched)
         }
         colPred(k, vals).map(state.where)
           .getOrElse(semiOnTouched(state, touched, groupKeys))
       case _ =>
         val preds = groupKeys.map { k =>
           val vals = tracer.span("acd-touched-groups") {
-            sd.select(col(k.alias)).distinct()
-              .limit(InlineKeyCap + 1).collect().map(_.get(0)).toIndexedSeq
+            cappedValues(sd.select(col(k.alias)).distinct())
           }
           colPred(k, vals)
         }
@@ -1294,7 +1288,7 @@ final class MatViews private[exec] (engine: QueryEngine) {
       tag: Int): DataFrame = {
     val touched = sd.select(col(alias)).distinct()
     val vals = tracer.span("recompute-root-keys") {
-      touched.limit(InlineKeyCap + 1).collect().map(_.get(0)).toIndexedSeq
+      cappedValues(touched)
     }
     if (vals.length <= InlineKeyCap) {
       state.where(touchedInList(keyExpr, vals))

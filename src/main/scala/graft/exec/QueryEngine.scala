@@ -70,6 +70,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * auto-refresh hook and the stored-view read. */
   private[exec] val matViews = new MatViews(this)
 
+  /** Integrity guards: every DML statement's probe set and verdict. */
+  private val guards = new Guards(this)
+
   /** Identity for the base-dir write lock (BaseDirLock). */
   private val engineId = java.util.UUID.randomUUID().toString
   private var writeLockHeld = false
@@ -2153,47 +2156,21 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * transaction and without probes. */
   private def append(t: TableDef, rowsLogical: DataFrame, eventType: String,
       pkChecked: Boolean = false,
-      probes: () => Seq[DataFrame] = QueryEngine.NoProbes,
+      probes: () => Seq[DataFrame] = Guards.NoProbes,
       pinnedCounts: Option[Array[Long]] = None): (Long, Long) = {
     requireWritable(t)
-    // guard probes: buffered (transaction) writes validate inline —
-    // nothing becomes visible before COMMIT anyway — while the
-    // direct-publish path runs them CONCURRENTLY with the staging
-    // write below (independent until the manifest-rename commit point,
-    // where publishAtomic joins the probe task before anything becomes
-    // visible). Halves a DML statement's critical path: probe jobs and
-    // staging I/O were the two serial halves of its fixed floor.
-    // `probes` is a THUNK: for the direct-publish path its evaluation
-    // — which itself plans state reads and may run an inline-key
-    // collect job — moves into a Par fork, overlapping probe
-    // CONSTRUCTION with the staging write alongside probe execution.
-    // A literal batch instead evaluates it here and decides its
-    // row-local probes driver-side first (dropFoldedProbes): a doomed
-    // literal statement raises HERE, with zero jobs and no staging dir
-    // ever created.
-    // any failure between probe submission and the publish-time join
-    // must still join the fork: the probe verdict may be the better
-    // error. An unjoined probe fork is cancelled and awaited when the
-    // scope exits, never left running Spark jobs with no consumer. The
-    // join is idempotent, so the publish path's own catch and the tail
-    // call below stay as they are.
+    // the guard verdict (Guards.verdict) runs beside the staging write
+    // below and is joined at the publish's commit point; a fork still
+    // unjoined when the scope exits is cancelled and awaited, never
+    // left running Spark jobs with no consumer
     Par.scope(spark.sparkContext) { par =>
-    def probe(ps: => Seq[DataFrame]): () => Unit =
-      if (txn.isDefined) { raiseFirstViolation(ps); () => () }
-      else { val f = par.fork(raiseFirstViolation(ps)); () => f.join() }
     // the physical batch decides literal-ness once, for the probes and
     // for sequencing: a pin's layout says distributed; otherwise one
     // optimization of the plan sequencing runs anyway
     val physical = physicalPayload(t, rowsLogical)
     val literal = pinnedCounts.isEmpty && isLiteral(physical)
-    val awaitProbes: () => Unit =
-      if (probes eq QueryEngine.NoProbes) () => ()
-      else if (literal) {
-        val remaining = dropFoldedProbes(probes())
-        if (remaining.isEmpty) () => () else probe(remaining)
-      }
-      else probe(probes())
-    def sequenceAndPublish(): (Long, Long) = {
+    val verdict = guards.verdict(par, probes, literal)
+    verdict.outranks {
     // inside a transaction, sequences continue from the buffered tail
     val base = txn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
     val (ev, last) = eventFrame(t, physical, literal, base, eventType,
@@ -2218,17 +2195,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // counter together — never orphan events past the counter,
         // which a plain append-then-commitSeq would duplicate on
         // the next statement's sequence assignment
-        try publishAtomic(Seq((t.name, ev)), Map(t.name -> last), None,
+        publishAtomic(Seq((t.name, ev)), Map(t.name -> last), None,
           mutated = if (keepsFlat) Set.empty else Set(t.name),
-          validate = awaitProbes)
-        catch {
-          case e: Throwable =>
-            // a concurrent probe violation outranks a staging fault —
-            // the sequential path raised probes before staging ever
-            // started, so a doomed statement keeps its probe error
-            awaitProbes()
-            throw e
-        }
+          validate = verdict)
         maybeAutoSnapshot(t.name, last,
           // the first-load checkpoint shortcut requires the batch to
           // BE the collapsed state: empty table before this append,
@@ -2240,17 +2209,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // an empty batch never publishes, but its probes still gate the
     // statement; the join handle is idempotent, so a second call after
     // the publish path already consumed it is free
-    awaitProbes()
+    verdict()
     (n, last)
-    }
-    try sequenceAndPublish()
-    catch {
-      case e: Throwable =>
-        // a probe violation outranks a derivative failure (the same
-        // preference the publish path applies)
-        try awaitProbes()
-        catch { case pe: Throwable if pe ne e => throw pe }
-        throw e
     }
     }
   }
@@ -2259,6 +2219,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     if (t.attached.isDefined)
       throw new UnsupportedOperationException(
         s"table ${t.name} is an attached read-only event log")
+
+  /** An empty driver-resident frame of `schema`: a LocalRelation, so
+    * PropagateEmptyRelation erases what reads it, and analysis against
+    * it never runs a job. */
+  private[exec] def emptyFrame(schema: StructType): DataFrame =
+    GraftBridge.localFrame(spark, schema, Nil)
 
   /** True when the batch's rows live on the driver: its optimized plan
     * is a LocalRelation (literal VALUES, a literalized pin). */
@@ -2697,54 +2663,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     catalog.constraintsOf(table).collect {
       case graft.catalog.Constraint.Default(c, e) => c -> e
     }.toMap
-
-  /** Violation probes for the declared constraints over a batch of row
-    * images about to land in `t` — message frames the caller unions
-    * into its single guard job (the same one-job shape as the PK
-    * probes; the reference checks row-by-row, constraints.rs:330-520).
-    *
-    * `survivors`: current rows still present after the statement, for
-    * UNIQUE clashes (inserts: full state; updates: state minus matched
-    * rows). `touched`: UPDATE's assigned columns — a UNIQUE set none of
-    * whose columns are assigned cannot be violated, so its join is
-    * skipped; NOT NULL and CHECK always probe (full-row images make
-    * the probe one filter either way). NULLs never conflict in UNIQUE
-    * (PG NULLS DISTINCT; constraints.rs:430-447 skips nulls too);
-    * CHECK passes on TRUE or NULL (PG). The primary key is an implicit
-    * NOT NULL wherever the statement writes it (every INSERT and COPY,
-    * an UPDATE that assigns it): an event needs its key (SURVEY §5,
-    * "PK required"). */
-  private def constraintViolations(t: TableDef, batch: DataFrame,
-      survivors: => DataFrame, touched: Option[Set[String]]): Seq[DataFrame] =
-    ((if (touched.forall(_(t.pk))) Seq(graft.catalog.Constraint.NotNull(t.pk))
-      else Nil) ++ catalog.constraintsOf(t.name)).distinct.flatMap {
-      case graft.catalog.Constraint.NotNull(c) =>
-        Seq(batch.where(col(c).isNull).select(
-          lit(s"null value in column $c of ${t.name} violates NOT NULL").as("_err")))
-      case graft.catalog.Constraint.Check(e) =>
-        Seq(batch.where(not(coalesce(expr(e), lit(true)))).select(
-          lit(s"row in ${t.name} violates CHECK ($e)").as("_err")))
-      case graft.catalog.Constraint.Unique(cs)
-          if touched.forall(ts => cs.exists(ts)) =>
-        val nn = cs.map(col(_).isNotNull).reduce(_ && _)
-        val msg = s"duplicate key violates UNIQUE (${cs.mkString(", ")}) on ${t.name}"
-        // literal VALUES batches settle within-batch duplicates on the
-        // driver (same discipline as the pk probe in insertFrom —
-        // aggregate probes don't constant-fold); NULL keys never
-        // collide, per UNIQUE semantics
-        val dups = literalBatchDup(batch, cs, skipNulls = true) match {
-          case Some(true) => throw new IllegalArgumentException(msg)
-          case Some(false) => Nil
-          case None => Seq(batch.where(nn).groupBy(cs.map(col): _*)
-            .agg(count(lit(1)).as("_n")).where(col("_n") > 1)
-            .select(lit(msg).as("_err")))
-        }
-        val clash = batch.where(nn)
-          .join(survivors.where(nn).select(cs.map(col): _*), cs, "left_semi")
-          .select(lit(msg).as("_err"))
-        dups :+ clash
-      case _ => Nil
-    }
 
   // =========================================================== metrics
 
@@ -3243,7 +3161,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** The write-side predicate (WITH CHECK) for rows `command` is about
     * to land; a policy without WITH CHECK falls back to USING (PG). */
-  private def rlsCheckPredicate(table: String, command: String)
+  private[exec] def rlsCheckPredicate(table: String, command: String)
       : Option[org.apache.spark.sql.Column] =
     rlsPredicate(table, command, p => p.checkExpr.orElse(p.usingExpr))
 
@@ -3279,224 +3197,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       last = m.end
     }
     if (last == 0) e else { sb.append(e.substring(last)); sb.toString }
-  }
-
-  /** Probe frames for WITH CHECK violations in a written batch — one
-    * message row per violating row, unioned into the statement's
-    * single guard job (PG raises `new row violates row-level security
-    * policy`; the reference's check_access does the same per row —
-    * row_level_security.rs:289-340, set-based here). */
-  private def rlsCheckProbes(table: String, rows: DataFrame,
-      command: String): Seq[DataFrame] =
-    rlsCheckPredicate(table, command).toSeq.map(c =>
-      rows.where(!c).select(lit(
-        s"new row violates row-level security policy for $table").as("_err")))
-
-  /** Decide driver-side every guard probe Catalyst constant-folds to a
-    * LocalRelation, returning only the probes that still need a job.
-    * For a literal VALUES batch the row-local guards — NOT NULL,
-    * CHECK, RLS WITH CHECK — are Filter+Project chains over the
-    * batch's LocalRelation, and ConvertToLocalRelation evaluates them
-    * entirely at optimization time: a folded non-empty probe IS the
-    * violation (raised here, before any staging I/O or Spark job — a
-    * doomed literal statement costs zero jobs), a folded empty probe
-    * is proof the guard holds and drops from the union. Only called
-    * when the batch itself is literal, so state-reading probes never
-    * pay a standalone optimizer pass just to learn they don't fold. */
-  private def dropFoldedProbes(probes: Seq[DataFrame]): Seq[DataFrame] =
-    probes.filter { p =>
-      p.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          if (lr.data.nonEmpty)
-            throw new IllegalArgumentException(lr.data.head.getString(0))
-          false
-        case _ => true
-      }
-    }
-
-  /** Some(true/false) = the (literal LocalRelation) batch does/doesn't
-    * carry two rows sharing values in `cols`, decided driver-side with
-    * no job; None = the batch isn't literal — use the distributed
-    * aggregate probe. `skipNulls` gives UNIQUE-constraint semantics
-    * (rows with any NULL key never collide); primary keys keep
-    * null-equals-null so two NULL pks still raise, matching the
-    * groupBy probe they replace. */
-  private def literalBatchDup(df: DataFrame, cols: Seq[String],
-      skipNulls: Boolean): Option[Boolean] =
-    df.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val idx = cols.map(c => lr.output.indexWhere(_.name == c))
-        if (idx.exists(_ < 0)) None
-        else {
-          val dts = idx.map(lr.output(_).dataType)
-          // SQL grouping normalizes -0.0 to 0.0 (NormalizeFloatingNumbers
-          // under the distributed groupBy probe); boxed
-          // Double/Float.equals does not — normalize here so the
-          // driver-side verdict matches the probe it replaces. Boxed
-          // NaN.equals(NaN) is true, which already matches grouping.
-          def norm(v: Any): Any = v match {
-            case d: Double if d == 0.0 => 0.0
-            case f: Float if f == 0.0f => 0.0f
-            case other => other
-          }
-          val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
-          Some(lr.data.exists { r =>
-            val anyNull = idx.exists(r.isNullAt)
-            if (anyNull && skipNulls) false
-            else !seen.add(idx.indices.map(i =>
-              if (r.isNullAt(idx(i))) null else norm(r.get(idx(i), dts(i)))))
-          })
-        }
-      case _ => None
-    }
-
-  /** Union the guard probes into ONE job and raise on the first hit. */
-  private def raiseFirstViolation(probes: Seq[DataFrame]): Unit =
-    if (probes.nonEmpty) {
-      val bad = probes.reduce(_ unionByName _).limit(1).collect()
-      if (bad.nonEmpty) throw new IllegalArgumentException(bad(0).getString(0))
-    }
-
-  // ------------------------------------------------------ foreign keys
-
-  /** Max distinct keys inlined as an IN-list into a probe's scanned
-    * side. Below the cap, a DML statement's FK probe prunes the OTHER
-    * table's scan to the row groups holding the probed keys (the
-    * keyed collapse pushes pk predicates; min/max + bloom do the
-    * skipping) — a point probe instead of a full-table collapse per
-    * statement. Past the cap the anti-join shape alone is correct and
-    * scale-right (AQE broadcasts the smaller side). */
-  private[exec] val InlineKeyCap = 256
-
-  /** The shared inline-key overflow probe: `batch`'s distinct
-    * non-null `keyCol` values, collected through limit(cap+1) so a
-    * result LONGER than the cap means "does not inline". NULLs drop
-    * BEFORE the limit — filtered after it, a NULL in the sample would
-    * mask the (cap+1)-th key and silently truncate the key set.
-    *
-    * Two-phase (round 16): a RAW limit probe first — CollectLimit
-    * over the pruned scan, no exchange — which is exact whenever the
-    * batch itself has at most cap+1 non-null rows (the 1-row refresh,
-    * the OLTP DML probe: the overwhelmingly common case, measured
-    * ~230 ms -> ~80 ms on a warm refresh's touched-keys job). The
-    * trade: a batch with MORE non-null rows than the cap now pays TWO
-    * actions (the raw probe, wasted, plus the distinct collect) where
-    * the single-phase shape paid one — acceptable because the raw
-    * probe is a pushdown-pruned CollectLimit (no exchange, first
-    * cap+1 rows), its cost is noise next to the bulk work that always
-    * follows an over-cap batch, and the common small batch saves a
-    * full distinct exchange. */
-  private[exec] def collectInlineKeys(batch: DataFrame,
-      keyCol: String): IndexedSeq[Any] = {
-    val proj = batch.select(col(keyCol)).where(col(keyCol).isNotNull)
-    val raw = proj.limit(InlineKeyCap + 1).collect().map(_.get(0))
-    if (raw.length <= InlineKeyCap) raw.distinct.toIndexedSeq
-    else proj.distinct().limit(InlineKeyCap + 1).collect()
-      .map(_.get(0)).toIndexedSeq
-  }
-
-  /** Restrict `df` to rows whose `column` is among the (pinned,
-    * small) batch's distinct `keyCol` values — semantics-preserving
-    * for the FK probes: a parent/child row with a key outside the
-    * batch can never produce a violation row. Falls back to `df`
-    * unchanged when the batch exceeds the cap. */
-  private def inlineKeyFilter(df: DataFrame, column: String,
-      batch: DataFrame, keyCol: String): DataFrame = {
-    val vals = collectInlineKeys(batch, keyCol)
-    if (vals.nonEmpty && vals.length <= InlineKeyCap)
-      df.where(col(column).isin(vals: _*))
-    else df
-  }
-
-  /** Rows about to land in `t` must reference existing parent keys; a
-    * NULL FK value passes (MATCH SIMPLE, the PG default — fk.rs:73-77).
-    * Set-based: one left-anti join per FK instead of the reference's
-    * per-row parent scan (fk.rs:92-101) — the scale-correct shape, and
-    * AQE broadcasts the parent key set when it is small. Small batches
-    * additionally inline their keys so the parent scan prunes to the
-    * probed row groups (inlineKeyFilter). A self-referencing FK also
-    * sees keys from the batch itself (a row may reference a sibling
-    * written by the same statement). `touched`: UPDATE's assigned
-    * columns — an FK column the SET list leaves alone is not
-    * re-checked (PG behavior, fk.rs:150-181). Returns message frames
-    * the caller unions into its single guard job alongside the PK and
-    * constraint probes. */
-  private def fkOutgoingProbes(t: TableDef, rowsLogical: DataFrame,
-      touched: Option[Set[String]] = None): Seq[DataFrame] =
-    for ((c, rt, rc) <- catalog.foreignKeysOf(t.name) if touched.forall(_(c))) yield {
-      val parent0 = inlineKeyFilter(stateAt(rt, None), rc, rowsLogical, c)
-        .select(col(rc).as("_fk_parent"))
-      val parent = if (rt == t.name)
-        parent0.unionByName(rowsLogical.select(col(rc).as("_fk_parent")))
-      else parent0
-      rowsLogical.where(col(c).isNotNull)
-        .join(parent, col(c) === col("_fk_parent"), "left_anti")
-        .select(lit(
-          s"foreign key violation: ${t.name}.$c references missing key in $rt.$rc")
-          .as("_err"))
-    }
-
-  /** RESTRICT on delete, like the reference (fk.rs:20-23, 113-147): a
-    * parent row cannot go away while any child row references it. Rows
-    * removed by this same statement do not block it (self-FK chains
-    * delete together). */
-  private def fkIncomingProbes(t: TableDef, deleted: DataFrame): Seq[DataFrame] = {
-    val incoming = catalog.referencingFks(t.name)
-    if (incoming.isEmpty) return Nil
-    // one bounded collect per referenced column, shared by every child
-    // probe: Some(keys) below the cap, Some(Nil) when the batch holds
-    // no non-null values (probe provably empty), None above the cap.
-    // The caller pinned `deleted`, so each collect reads blocks.
-    val keyCache = scala.collection.mutable.HashMap.empty[String, Option[Seq[Any]]]
-    def keysOf(c: String): Option[Seq[Any]] = keyCache.getOrElseUpdate(c, {
-      val vals = deleted.select(col(c)).where(col(c).isNotNull)
-        .distinct().limit(InlineKeyCap + 1).collect().map(_.get(0)).toSeq
-      if (vals.length <= InlineKeyCap) Some(vals) else None
-    })
-    for ((child, childCol, parentCol) <- incoming) yield {
-      val msg = lit(
-        s"foreign key violation: cannot delete from ${t.name} — $child.$childCol references it")
-        .as("_err")
-      def joinProbe: DataFrame = {
-        // above the inline cap: the set-based shape — prune the child
-        // scan where possible, then a semi join against the batch
-        val childState0 = inlineKeyFilter(stateAt(child, None), childCol,
-          deleted, parentCol)
-        val childState = if (child == t.name)
-          childState0.join(deleted.select(col(t.pk)), Seq(t.pk), "left_anti")
-        else childState0
-        childState.where(col(childCol).isNotNull)
-          .join(deleted.select(col(parentCol).as("_fk_key")),
-            col(childCol) === col("_fk_key"), "left_semi")
-          .select(msg)
-      }
-      keysOf(parentCol) match {
-        case Some(Nil) =>
-          // no deletable keys -> nothing can reference them; an empty
-          // LocalRelation lets PropagateEmptyRelation erase the probe
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("_err",
-                org.apache.spark.sql.types.StringType))))
-        case Some(vals) =>
-          // small batch: the probe is a pure scan-stage IN-list filter
-          // on the child state — row groups prune by min/max + bloom,
-          // and the plan carries NO join or exchange at all
-          val base = stateAt(child, None)
-            .where(col(childCol).isNotNull &&
-              col(childCol).isin(vals: _*))
-          if (child != t.name) base.select(msg)
-          else keysOf(t.pk) match {
-            // self-FK: rows deleted by this same statement never block
-            case Some(pks) if pks.nonEmpty =>
-              base.where(!col(t.pk).isin(pks: _*)).select(msg)
-            case Some(_) => base.select(msg)
-            case None => joinProbe
-          }
-        case None => joinProbe
-      }
-    }
   }
 
   /** INSERT (VALUES or SELECT) and COPY: align source columns to the
@@ -3570,63 +3270,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     lazy val state: DataFrame =
       if (catalog.lastSeq(t.name) == 0L &&
           txn.forall(_.seqs.get(t.name).isEmpty) && t.attached.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(t.columns.map(c =>
-            org.apache.spark.sql.types.StructField(c.logical, c.dataType))))
+        emptyFrame(t.logicalSchema)
       else stateAt(table, None)
     val (n, last) = append(t, full, EventLog.INSERT, pkChecked = !bulk,
-      probes = () =>
-        (if (bulk) Nil
-         else pkProbes(t, full, state,
-           s"duplicate primary key within INSERT batch on $table")) ++
-        constraintViolations(t, full, state, None) ++
-        rlsCheckProbes(table, full, "INSERT") ++
-        fkOutgoingProbes(t, full),
+      probes = () => guards.ofWrite(t, full, state, None, pkUnique = !bulk),
       pinnedCounts = fullCounts)
     fireTriggers(table, "INSERT", "AFTER", None, Some(full))
     summary(if (bulk) "ingest" else "insert", n, last)
-  }
-
-  /** PK uniqueness of a batch of row images about to land in `t` (PG
-    * duplicate-key semantics, sql_bridge.rs:3543-3570 and 5473-5668):
-    * no two batch rows share a key (`dupMsg`), and no batch key
-    * collides with a row of `survivors` — the rows that outlive the
-    * statement (INSERT: the current state; a pk-changing UPDATE: the
-    * state minus the rows it rewrites). A literal batch settles its
-    * within-batch duplicates on the driver (aggregates don't
-    * constant-fold, so the groupBy probe would otherwise be the one
-    * job a doomed literal statement still pays), and a literal batch of
-    * at most InlineKeyCap rows inlines its keys so the survivors' scan
-    * prunes to the probed row groups (pushdown + bloom stamping) — the
-    * FK-probe discipline (inlineKeyFilter), which a left-semi join's
-    * runtime key set can never push down. Larger batches keep the
-    * set-based semi join. */
-  private def pkProbes(t: TableDef, batch: DataFrame, survivors: => DataFrame,
-      dupMsg: String): Seq[DataFrame] = {
-    val pk = t.pk
-    val batchDup = literalBatchDup(batch, Seq(pk), skipNulls = false) match {
-      case Some(true) => throw new IllegalArgumentException(dupMsg)
-      case Some(false) => Nil
-      case None => Seq(
-        batch.groupBy(col(pk)).agg(count(lit(1)).as("_n")).where(col("_n") > 1)
-          .select(lit(dupMsg).as("_err")))
-    }
-    val existsMsg = s"primary key already exists in ${t.name}"
-    val collision = batch.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.data.length <= InlineKeyCap =>
-        // the collect is job-free on a LocalTableScan
-        val ks = batch.select(col(pk)).collect().map(_.get(0))
-          .filter(_ != null).toIndexedSeq
-        if (ks.isEmpty) Nil // an all-NULL-pk batch can collide with nothing
-        else Seq(survivors.where(col(pk).isin(ks: _*))
-          .select(lit(existsMsg).as("_err")))
-      case _ => Seq(
-        batch.join(survivors.select(col(pk)), Seq(pk), "left_semi")
-          .select(lit(existsMsg).as("_err")))
-    }
-    batchDup ++ collision
   }
 
   /** The rows an UPDATE or DELETE touches — `where` and the session's
@@ -3692,14 +3342,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val touched = assigns.map(_._1).toSet
     val pkChanges = touched(t.pk)
     def survivors = state.join(matching.select(col(t.pk)), Seq(t.pk), "left_anti")
-    val probes = () =>
-      (if (pkChanges)
-        pkProbes(t, updated, survivors, s"UPDATE produces duplicate primary keys on $table")
-       else Nil) ++
-      constraintViolations(t, updated, survivors, Some(touched)) ++
-      rlsCheckProbes(table, updated, "UPDATE") ++
-      fkOutgoingProbes(t, updated, Some(touched)) ++
-      fkIncomingOnUpdateProbes(t, touched, state, matching, updated)
+    val probes = () => guards.ofWrite(t, updated, survivors, Some(touched),
+      pkUnique = pkChanges, Some(matching))
     val (n, last) =
       if (pkChanges) {
         val (nd, _) = append(t, matching, EventLog.SOFT_DELETE, probes = probes,
@@ -3709,35 +3353,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         pinnedCounts = mp.layout)
     fireTriggers(table, "UPDATE", "AFTER", Some(matching), Some(updated))
     summary("update", n, last)
-  }
-
-  /** RESTRICT for the parent side of an UPDATE, mirroring the DELETE
-    * guard: rewriting a column other tables reference must not orphan
-    * their rows (ON UPDATE actions parse but act as RESTRICT). A key
-    * counts as removed when it exists before the statement but is held
-    * by no row after it — matched rows carry their new values, rows the
-    * WHERE didn't touch keep their old ones. */
-  private def fkIncomingOnUpdateProbes(t: TableDef, touched: Set[String],
-      state: DataFrame, matching: DataFrame, updated: DataFrame): Seq[DataFrame] = {
-    val incoming = catalog.referencingFks(t.name).filter(f => touched(f._3))
-    if (incoming.isEmpty) Nil
-    else {
-      val pk = t.pk
-      val untouchedRows = state.join(matching.select(col(pk)), Seq(pk), "left_anti")
-      for ((child, childCol, parentCol) <- incoming) yield {
-        val after = untouchedRows.select(col(parentCol).as("_fk_key"))
-          .unionByName(updated.select(col(parentCol).as("_fk_key")))
-        val removed = matching.select(col(parentCol).as("_fk_key")).except(after)
-        // a self-referencing child is judged on its own post-update rows
-        val childRows = if (child == t.name) untouchedRows.unionByName(updated)
-          else stateAt(child, None)
-        childRows.where(col(childCol).isNotNull)
-          .join(removed, col(childCol) === col("_fk_key"), "left_semi")
-          .select(lit(
-            s"foreign key violation: cannot change ${t.name}.$parentCol — $child.$childCol references it")
-            .as("_err"))
-      }
-    }
   }
 
   /** DELETE: matching current-state rows become SoftDelete tombstones
@@ -3755,7 +3370,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val matching = mp.df
     fireTriggers(table, "DELETE", "BEFORE", Some(matching), None)
     val (n, last) = append(t, matching, EventLog.SOFT_DELETE,
-      probes = () => fkIncomingProbes(t, matching),
+      probes = () => guards.ofDelete(t, matching),
       pinnedCounts = mp.layout)
     fireTriggers(table, "DELETE", "AFTER", Some(matching), None)
     summary("delete", n, last)
@@ -4184,8 +3799,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       val fp = pinBatch(firsts0,
         tally = row => if (row.isNullAt(fpAt)) 0L else 1L)
       val firsts = fp.df
-      val seen = (if (fp.tally > InlineKeyCap) stateAt(r.name, None)
-          else inlineKeyFilter(stateAt(r.name, None), r.pk, firsts, "__fp"))
+      val seen = (if (fp.tally > Guards.InlineKeyCap) stateAt(r.name, None)
+          else Guards.inlineKeyFilter(stateAt(r.name, None), r.pk, firsts, "__fp"))
         .select(col(r.pk).cast("string").as("__seen_fp"))
       val admitted = pinBatch(firsts
         .join(seen, col("__fp") === col("__seen_fp"), "left_anti")).df
@@ -4366,8 +3981,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // correctness — the unfiltered registry join is the same
       // fallback an overflowed probe took.
       val probed0 =
-        if (postings > InlineKeyCap) stateAt(r.name, None)
-        else inlineKeyFilter(stateAt(r.name, None), "tok", toks, "__tok")
+        if (postings > Guards.InlineKeyCap) stateAt(r.name, None)
+        else Guards.inlineKeyFilter(stateAt(r.name, None), "tok", toks, "__tok")
       val probed =
         if (maxDf == Long.MaxValue) probed0
         else probed0.join(
@@ -4900,10 +4515,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 }
 
 object QueryEngine {
-  /** Sentinel for "no guard probes" — lets append skip the probe fork
-    * handoff entirely for probe-free paths (COPY, stream ingest). */
-  private[exec] val NoProbes: () => Seq[org.apache.spark.sql.DataFrame] = () => Nil
-
   /** Engine over a fresh scratch dir (tests, per-query fixtures).
     * Inside a scratchScope, the engine is registered for teardown when
     * the scope ends. */

@@ -14,11 +14,13 @@ import scala.jdk.CollectionConverters._
   * statement append, the stream publish, replication) and one shape
   * describes an incrementally maintained view (IncrementalView.Shape,
   * read through MatViews.shapeOf, and only MatViews reads it), one
-  * function reads parquet on the driver (GraftBridge.readLocalParquet)
-  * and one site installs optimizer rules (PointReads.install). A new
-  * pin variant, a hand-rolled thread, a second event-frame builder, a
-  * second view shape or a second driver parquet reader fails here
-  * instead of quietly growing a second copy. Comment lines are ignored, so docs may name what the code
+  * function reads parquet on the driver (GraftBridge.readLocalParquet),
+  * one site installs optimizer rules (PointReads.install) and one module
+  * builds DML guard probes, owns the inline-key cap and reaches the
+  * guard verdict (Guards). A new pin variant, a hand-rolled thread, a
+  * second event-frame builder, a second view shape, a second driver
+  * parquet reader or a guard probe outside Guards fails here instead
+  * of quietly growing a second copy. Comment lines are ignored, so docs may name what the code
   * must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -121,6 +123,19 @@ class SourceScanSpec extends AnyFunSuite {
   test("one optimizer-rule install site: PointReads.install") {
     assert(occurrences("extraOptimizations =") ==
       Map("graft/exec/PointReads.scala" -> 1))
+  }
+
+  test("DML guard probes and the inline-key cap live in Guards") {
+    val guards = "graft/exec/Guards.scala"
+    // the probes' message column and the cap's overflow probe are each
+    // spelled once
+    assert(occurrences("\"_err\"") == Map(guards -> 1))
+    assert(occurrences("InlineKeyCap + 1") == Map(guards -> 1))
+    val ProbeDef = """def \w*Probes\(""".r
+    val builders = sources.collect {
+      case (f, code) if code.exists(ProbeDef.findFirstIn(_).isDefined) => f
+    }
+    assert(builders.toSet == Set(guards), builders)
   }
 
   test("only Par starts pool work; PgServer keeps its own threads") {

@@ -71,16 +71,23 @@ class DriverTailSpec extends AnyFunSuite {
     }
   }
 
-  /** Run `stmt` traced; (files, row groups kept, row groups total) of
-    * the one driver point read it did. */
-  private def pointRead(e: QueryEngine, stmt: String): (Int, Int, Int) = {
+  /** Run `stmt` traced; the details of the driver point reads its
+    * statement thread recorded. */
+  private def pointReads(e: QueryEngine, stmt: String): Seq[String] = {
     e.sql("SET TRACE ON")
     e.sql(stmt).collect()
     val reads = e.tracer.traces.head.spans.filter(_.name == "point-read")
     e.sql("SET TRACE OFF")
+    reads.map(_.detail).toSeq
+  }
+
+  /** Run `stmt` traced; (files, row groups kept, row groups total) of
+    * the one driver point read it did. */
+  private def pointRead(e: QueryEngine, stmt: String): (Int, Int, Int) = {
+    val reads = pointReads(e, stmt)
     assert(reads.length == 1, reads)
     val R = """files=(\d+) row_groups=(\d+)/(\d+) .*""".r
-    reads.head.detail match {
+    reads.head match {
       case R(f, k, n) => (f.toInt, k.toInt, n.toInt)
       case d => fail(d)
     }
@@ -268,6 +275,32 @@ class DriverTailSpec extends AnyFunSuite {
     assert(jobs(assert(e.sql("SELECT id, v FROM lit").collect()
       .map(r => s"${r.getLong(0)}${r.getString(1)}").sorted.toSeq ===
       Seq("1a", "2bb"))) === 0, "SELECT on a literal-built table")
+    e.close()
+  }
+
+  test("a literal INSERT above a snapshot plans one driver read for its guards") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE pko (id BIGINT PRIMARY KEY)")
+    e.sql("INSERT INTO pko SELECT id FROM range(1, 501)")
+    e.sql("SNAPSHOT pko")
+    e.sql("INSERT INTO pko VALUES (9000)") // warm
+    // the pk collision probe is the only guard that reads the state
+    assert(pointReads(e, "INSERT INTO pko VALUES (9001)").length === 1)
+    assert(e.sql("SELECT COUNT(*) FROM pko").collect().head.getLong(0) === 502L)
+    // a child with an FK, a UNIQUE and a CHECK: recorded, not asserted
+    e.sql("CREATE TABLE dept (id BIGINT PRIMARY KEY, name STRING)")
+    e.sql("INSERT INTO dept SELECT id, concat('d', CAST(id AS STRING)) FROM range(1, 11)")
+    e.sql("CREATE TABLE emp (id BIGINT PRIMARY KEY, " +
+      "dept_id BIGINT REFERENCES dept(id), email STRING UNIQUE, " +
+      "sal BIGINT CHECK (sal >= 0))")
+    e.sql("INSERT INTO emp SELECT id, id % 5 + 1, " +
+      "concat('e', CAST(id AS STRING)), id * 100 FROM range(1, 41)")
+    e.sql("SNAPSHOT dept")
+    e.sql("SNAPSHOT emp")
+    e.sql("INSERT INTO emp VALUES (100, 2, 'x100', 5)") // warm
+    val child = pointReads(e, "INSERT INTO emp VALUES (101, 3, 'x101', 6)")
+    info(s"guarded child INSERT: ${child.length} point-read spans")
+    assert(e.sql("SELECT COUNT(*) FROM emp").collect().head.getLong(0) === 42L)
     e.close()
   }
 
