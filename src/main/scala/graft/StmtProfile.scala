@@ -2,10 +2,12 @@ package graft
 import graft.exec.QueryEngine
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round measurement helper: replay an engine.sql
-  * scenario statement by statement with wall timing and the engine's
-  * own trace spans, to locate the per-statement floor. Not part of the
-  * driver contract. */
+/** Optimization-round measurement helper: replay the five-table join
+  * view scenario (churn, then an incremental refresh) statement by
+  * statement with wall timing and the engine's own trace spans, to
+  * locate the per-statement floor. The streaming near-dup batch is
+  * measured by perfbench (`curation --trace 1`) instead. Not part of
+  * the driver contract. */
 object StmtProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -81,38 +83,6 @@ object StmtProfile {
       "DELETE FROM l5 WHERE l % 19 = 0",
       "REFRESH MATERIALIZED VIEW j5v INCREMENTALLY",
       "SELECT zone, seg, n, sv FROM j5v ORDER BY zone, seg")
-
-    if (args.headOption.contains("neardup")) {
-      import org.apache.spark.sql.functions._
-      for (rep <- 1 to reps) {
-        val e = QueryEngine.scratch(spark)
-        e.attachExternal("docs_src", s"$sfDir/documents.parquet")
-        e.sql("CREATE TABLE ndocs (doc_id BIGINT PRIMARY KEY, text STRING)")
-        e.sql("""CREATE TABLE nidx (pk STRING PRIMARY KEY, tok STRING,
-                |doc_id BIGINT, n BIGINT)""".stripMargin)
-        e.sql("CREATE INDEX nidx_tok ON nidx (tok)")
-        val src = e.spark.table("docs_src").select(col("doc_id"), col("text"))
-        val t00 = System.nanoTime()
-        for ((lo, hi) <- Seq((0L, 150L), (150L, 300L), (300L, Long.MaxValue))) {
-          val (j0, s0, k0, m0) = (jobs.get, stages.get, tasks.get, taskMs.get)
-          val t0 = System.nanoTime()
-          e.ingestStreamNearDedup("ndocs", "nidx",
-            src.where(col("doc_id") >= lo && col("doc_id") < hi),
-            col("text"), shingleN = 3, minJaccard = 0.5,
-            maxDf = Long.MaxValue, None, -1L)
-          val dt = (System.nanoTime() - t0) / 1e6
-          println(f"[stmt] $dt%8.0f ms  j=${jobs.get - j0}%3d st=${stages.get - s0}%3d tk=${tasks.get - k0}%5d tkms=${taskMs.get - m0}%6d  batch $lo-$hi")
-        }
-        val t0 = System.nanoTime()
-        e.sql("SELECT doc_id, length(text) AS n_chars FROM ndocs ORDER BY doc_id").count()
-        println(f"[stmt] ${(System.nanoTime() - t0) / 1e6}%8.0f ms  final select")
-        println(f"[stmt] TOTAL ${(System.nanoTime() - t00) / 1e9}%.2f s (rep $rep)")
-        e.close()
-        Pins.sweep(spark)
-      }
-      spark.stop()
-      return
-    }
 
     for (rep <- 1 to reps) {
       val e = QueryEngine.scratch(spark)

@@ -135,7 +135,7 @@ final class TableCatalog(spark: SparkSession, val baseDir: String) {
   // upgrades foreachBatch ingestion from at-least-once to exactly-once
   private val streamBatches = mutable.HashMap.empty[String, Long]
   // per-table ingest watermark: max pk ever admitted through an
-  // ordered streaming ingest (ingestStreamNearDedup's registry).
+  // ordered streaming ingest (StreamingDedup.ingestNearDedup's registry).
   // Persisted so the ordered-ingest guard is a metadata compare, not a
   // full-registry aggregate per micro-batch; max-merged like the
   // sequence counters so manifest replay is a no-op

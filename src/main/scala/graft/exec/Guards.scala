@@ -83,14 +83,7 @@ final class Guards private[exec] (engine: QueryEngine) {
   def ofDelete(t: TableDef, deleted: DataFrame): Seq[DataFrame] = {
     val incoming = catalog.referencingFks(t.name)
     if (incoming.isEmpty) return Nil
-    // one bounded collect per referenced column, shared by every child
-    // probe: Some(keys) below the cap (empty when the batch holds no
-    // non-null value: the probe is provably empty), None above it. The
-    // caller pinned `deleted`, so each collect reads blocks, and it is
-    // free on a LocalRelation
-    val keyCache = scala.collection.mutable.HashMap.empty[String, Option[IndexedSeq[Any]]]
-    def keysOf(c: String): Option[IndexedSeq[Any]] = keyCache.getOrElseUpdate(c,
-      Some(collectInlineKeys(deleted, c)).filter(_.length <= InlineKeyCap))
+    val keysOf = inlineKeys(deleted)
     for ((child, childCol, parentCol) <- incoming) yield {
       val msg = s"foreign key violation: cannot delete from ${t.name} — $child.$childCol references it"
       def joinProbe: DataFrame = {
@@ -245,23 +238,46 @@ final class Guards private[exec] (engine: QueryEngine) {
     * rows (ON UPDATE actions parse but act as RESTRICT). A key counts as
     * removed when a matched row held it before the statement and no row
     * holds it after it — matched rows carry their new values, the
-    * survivors keep their old ones. */
+    * survivors keep their old ones. Only a matched key can be removed,
+    * so when the matched batch's keys fit the inline cap (one collect
+    * from the pinned batch, as in `ofDelete`) the survivors and the
+    * child read are filtered by that IN-list: both scans prune to the
+    * row groups holding the keys. */
   private def fkOnUpdateProbes(t: TableDef, touched: Set[String],
       survivors: => DataFrame, matched: DataFrame,
       updated: DataFrame): Seq[DataFrame] = {
     val incoming = catalog.referencingFks(t.name).filter(f => touched(f._3))
     if (incoming.isEmpty) return Nil
     val untouched = survivors
+    val keysOf = inlineKeys(matched)
     for ((child, childCol, parentCol) <- incoming) yield {
-      val after = untouched.select(col(parentCol).as(FkKey))
-        .unionByName(updated.select(col(parentCol).as(FkKey)))
-      val removed = matched.select(col(parentCol).as(FkKey)).except(after)
-      // a self-referencing child is judged on its own post-update rows
-      val childRows = if (child == t.name) untouched.unionByName(updated)
-        else stateAt(child, None)
-      restricted(childRows, childCol, removed,
-        s"foreign key violation: cannot change ${t.name}.$parentCol — $child.$childCol references it")
+      val keys = keysOf(parentCol)
+      if (keys.exists(_.isEmpty)) engine.emptyFrame(ErrSchema) // nothing held a key
+      else {
+        def inKeys(df: DataFrame, c: String): DataFrame =
+          keys.fold(df)(ks => df.where(col(c).isin(ks: _*)))
+        val after = inKeys(untouched, parentCol).select(col(parentCol).as(FkKey))
+          .unionByName(updated.select(col(parentCol).as(FkKey)))
+        val removed = matched.select(col(parentCol).as(FkKey)).except(after)
+        // a self-referencing child is judged on its own post-update rows
+        val childRows = if (child == t.name) untouched.unionByName(updated)
+          else stateAt(child, None)
+        restricted(inKeys(childRows, childCol), childCol, removed,
+          s"foreign key violation: cannot change ${t.name}.$parentCol — $child.$childCol references it")
+      }
     }
+  }
+
+  /** The inline keys of a RESTRICT's parent-side batch (DELETE's
+    * deleted rows, UPDATE's matched rows), one bounded collect per
+    * referenced column shared by every child probe: Some(keys) below
+    * the cap (empty when the batch holds no non-null value: the probe
+    * is provably empty), None above it. The caller pinned the batch, so
+    * each collect reads blocks, and it is free on a LocalRelation. */
+  private def inlineKeys(batch: DataFrame): String => Option[IndexedSeq[Any]] = {
+    val cache = scala.collection.mutable.HashMap.empty[String, Option[IndexedSeq[Any]]]
+    c => cache.getOrElseUpdate(c,
+      Some(collectInlineKeys(batch, c)).filter(_.length <= InlineKeyCap))
   }
 
   /** RESTRICT's per-child tail: the child's rows after the statement

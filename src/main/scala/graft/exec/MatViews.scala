@@ -699,9 +699,7 @@ final class MatViews private[exec] (engine: QueryEngine) {
       }
       if (due.nonEmpty) {
         inAutoRefresh = true
-        val prevSession = engine.current
-        engine.current = autoRefreshSession
-        try due.foreach { n =>
+        try engine.asSession(autoRefreshSession)(due.foreach { n =>
           try {
             engine.sqlCurrent(s"REFRESH MATERIALIZED VIEW $n INCREMENTALLY")
             runs += 1
@@ -716,7 +714,7 @@ final class MatViews private[exec] (engine: QueryEngine) {
                 s"[graft] AUTOREFRESH of $n failed (muted until an " +
                   s"explicit REFRESH): ${e.getMessage}")
           }
-        } finally { engine.current = prevSession; inAutoRefresh = false }
+        }) finally inAutoRefresh = false
       }
     }
 

@@ -225,7 +225,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * schemas never literalize. Streaming batches pin with `literal =
     * false`: they publish through the distributed staged write
     * regardless of size. */
-  private def pinBatch(df: DataFrame, literal: Boolean = false,
+  private[graft] def pinBatch(df: DataFrame, literal: Boolean = false,
       tally: org.apache.spark.sql.catalyst.InternalRow => Long =
         org.apache.spark.sql.GraftBridge.NoTally)
       : org.apache.spark.sql.GraftBridge.Pin = {
@@ -398,19 +398,25 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       * bytes transferred instead of after a multi-GiB spool. Raises
       * the same SecurityException the statement itself would. */
     def requirePrivilege(table: String, priv: String): Unit =
-      writeLock.synchronized {
-        val prev = current
-        current = this
-        try { catalog.require(table); checkPrivilege(table, priv) }
-        finally current = prev
-      }
+      asSession(this) { catalog.require(table); checkPrivilege(table, priv) }
   }
 
   private val defaultSession = new Session()
-  // the session whose statement is currently executing — swapped by
-  // sqlAs under the write lock (statements, including nested trigger/
-  // procedure bodies, run single-threaded per engine)
-  private[exec] var current: Session = defaultSession
+  // the session whose statement is currently executing — swapped only
+  // by asSession, under the write lock (statements, including nested
+  // trigger/procedure bodies, run single-threaded per engine)
+  private var current: Session = defaultSession
+
+  /** Run `body` as session `s`: under the write-lock monitor, with
+    * `current` swapped to `s` and restored afterwards. Reentrant, like
+    * the monitor: a trigger body or an auto refresh nests inside the
+    * statement that runs it. The one place `current` changes. */
+  private[exec] def asSession[T](s: Session)(body: => T): T =
+    writeLock.synchronized {
+      val prev = current
+      current = s
+      try body finally current = prev
+    }
 
   /** A fresh session with independent transaction state. The engine's
     * own `sql` is the default session. */
@@ -419,11 +425,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private def txn: Option[Txn] = current.txn
   private def txn_=(v: Option[Txn]): Unit = current.txn = v
 
-  /** Serializes every state-changing entry point — SQL statements and
-    * streaming micro-batches — the same single-writer discipline the
-    * reference enforces with its process write lock (index.rs:22-26).
-    * Without it a micro-batch and a statement could read the same
-    * lastSeq and assign duplicate sequences. */
+  /** Serializes every state-changing entry point — SQL statements
+    * (sqlAs) and every other write (writeBatch: stream, replicated and
+    * data-source batches), both entered through asSession — the same
+    * single-writer discipline the reference enforces with its process
+    * write lock (index.rs:22-26). Without it a micro-batch and a
+    * statement could read the same lastSeq and assign duplicate
+    * sequences. */
   private val writeLock = new Object
 
   def inTransaction: Boolean = txn.isDefined
@@ -743,6 +751,16 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * so in-process reads heal without a reopen. */
   @volatile private var publishIncomplete = false
 
+  /** Heal a stranded post-commit-point publish before a statement or a
+    * batch reads or writes anything: the sweep is idempotent, the
+    * caller holds the write lock, and once it succeeds in-process reads
+    * see the whole batch — no reopen required. */
+  private def healPublish(): Unit =
+    if (publishIncomplete) {
+      sweepStaging()
+      publishIncomplete = false
+    }
+
   /** Parquet modular encryption for data-bearing writes (event-log
     * batches, snapshots, matviews) — toggled by SET ENCRYPTION KEY /
     * OFF. Uniform mode: footer + every column under keys wrapped by
@@ -906,9 +924,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * session); the write-lock monitor serializes sessions on different
     * threads. */
   private def sqlAs(session: Session, statement: String): DataFrame =
-    writeLock.synchronized {
-      val prev = current
-      current = session
+    asSession(session) {
       session.stmtDepth += 1
       // the security monitor sees each TOP-LEVEL statement once (nested
       // trigger/procedure bodies are the statement's own work, same
@@ -935,7 +951,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         if (top && security.enabled)
           security.recordStatement(session, session.user, statement, ok,
             if (ok) lastAffected else None)
-        session.stmtDepth -= 1; current = prev
+        session.stmtDepth -= 1
       }
     }
 
@@ -983,14 +999,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   private def sqlCurrentInner(statement: String): DataFrame = {
     checkRateLimit(current)
-    // heal a stranded post-commit-point publish before the statement
-    // reads or writes anything: the sweep is idempotent, we hold the
-    // write lock, and once it succeeds in-process reads see the whole
-    // batch — no reopen required
-    if (publishIncomplete) {
-      sweepStaging()
-      publishIncomplete = false
-    }
+    healPublish()
     val parsed = tracer.span("parse")(StatementRouter.parse(statement))
     if (isMutating(parsed)) ensureWriteLock()
     def run(): DataFrame = parsed match {
@@ -3572,11 +3581,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     summary("vacuumed", deleted, floor)
   }
 
-  /** JSONL bulk ingest (driftdb-cli main.rs:40-50): columns matched by
-    * name, missing ones NULL. */
-  def ingestJsonl(table: String, path: String): DataFrame =
-    ingestFile(table, path, "jsonl")
-
   private def inferCopyFormat(path: String): String = {
     val p = path.toLowerCase
     if (p.endsWith(".parquet") || p.endsWith(".pq")) "parquet"
@@ -3589,7 +3593,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * 100 TB load arrives as parquet; every column casts to the
     * catalog's declared type, so CSV's all-string read types up
     * correctly). */
-  def ingestFile(table: String, path: String, format: String): DataFrame = {
+  private def ingestFile(table: String, path: String, format: String): DataFrame = {
     // gate BEFORE touching the file: JSON schema inference scans the
     // whole input, so an ungranted session (or a typo'd table) must be
     // rejected with zero I/O, not after a full-file read
@@ -3613,20 +3617,20 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   /** `ingestFrame` under `session`'s security context — the governed
     * write surface of the `graft` data source
     * (`df.write.format("graft").option("user", u)`): the privilege
-    * gate and write-side RLS policies see the session, not root. */
+    * gate and write-side RLS policies see the session, not root. Runs
+    * in the batch envelope (writeBatch) with no replay id, so it takes
+    * the base-dir lock like every other write. */
   def ingestFrameAs(session: Session, table: String, df: DataFrame): DataFrame =
-    writeLock.synchronized {
-      val prev = current
-      current = session
-      try ingestFrame(table, df)
-      finally current = prev
-    }
+    writeBatch(s"INGEST FRAME $table", None, session)(ingestFrame(table, df))
+      .get // no replay id: never skipped
 
   /** Bulk-append an arbitrary DataFrame — the shared tail of COPY FROM
     * and the `graft` data-source write path (`df.write.format("graft")`):
     * an INSERT of the table columns the frame carries, matched by name,
-    * without the pk-uniqueness probes (see insertFrom). */
-  def ingestFrame(table: String, raw: DataFrame): DataFrame = {
+    * without the pk-uniqueness probes (see insertFrom). Private, like
+    * ingestFile: both run only inside a statement (COPY) or the batch
+    * envelope (ingestFrameAs), which hold the locks. */
+  private def ingestFrame(table: String, raw: DataFrame): DataFrame = {
     val present = catalog.require(table).columns.map(_.logical)
       .filter(raw.columns.contains)
     insertFrom(table, Some(present), raw.select(present.map(col): _*), bulk = true)
@@ -3634,36 +3638,44 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** `batch` projected onto `t`'s columns by name and cast to their
     * declared types; a column the batch lacks reads NULL. */
-  private def byName(batch: DataFrame, t: TableDef): DataFrame =
+  private[graft] def byName(batch: DataFrame, t: TableDef): DataFrame =
     batch.select(t.columns.map(c =>
       (if (batch.columns.contains(c.logical)) col(c.logical) else lit(null))
         .cast(c.dataType).as(c.logical)): _*)
 
-  /** The envelope of every streaming micro-batch: the write lock, the
-    * base-dir lock, the replay skip, the statement trace and the auto
-    * refresh. `streamId` (the stream's checkpoint location) + `batchId`
-    * identify a micro-batch; the id commits in the SAME manifest as the
-    * batch's events, so a restart that replays a committed batch (Spark
-    * only guarantees at-least-once delivery to foreachBatch) is
-    * detected here and skipped — the Delta-commit idempotent-sink
-    * pattern. Without a `streamId` nothing is skipped. */
-  private def streamBatch(label: String, streamId: Option[String],
-      batchId: Long)(body: => Unit): Unit =
-    writeLock.synchronized {
+  /** The envelope of every write that is not a SQL statement — stream
+    * micro-batches (graft.streaming), replicated batches and the `graft`
+    * data-source append — run as `session` (asSession), in order:
+    *   1. heal a stranded publish (healPublish, as a statement does);
+    *   2. take the base-dir lock (ensureWriteLock);
+    *   3. skip a replayed batch: `replay` is (stream id, batch id), the
+    *      stream id being the stream's checkpoint location. The id
+    *      commits in the SAME manifest as the batch's events, so a
+    *      restart that replays a committed batch (Spark only guarantees
+    *      at-least-once delivery to foreachBatch) is detected here and
+    *      skipped — the Delta-commit idempotent-sink pattern. A batch
+    *      whose publish faulted after its commit point is healed in
+    *      step 1 first, so the skip never hides its events. Without a
+    *      replay id nothing is skipped;
+    *   4. run `body` as a traced statement named `label`;
+    *   5. run the AUTOREFRESH due check (the continuous
+    *      always-fresh-dashboard shape); a skipped batch advanced
+    *      nothing, so it skips this too.
+    * None means the batch was skipped. Batch writes skip the statement
+    * rate limit, audit and statement metrics. */
+  private[graft] def writeBatch[T](label: String,
+      replay: Option[(String, Long)], session: Session = defaultSession)(
+      body: => T): Option[T] =
+    asSession(session) {
+      healPublish()
       ensureWriteLock()
-      // a batch id can be durably recorded with its files stranded in
-      // staging (publish fault mid-batch, then Spark restarts the query
-      // IN-PROCESS, so no engine reopen runs recovery) — roll any
-      // committed manifest forward before the replay-skip decision, or
-      // the skip would hide those events until the next reopen. One
-      // listStatus per micro-batch; we hold the lock, so it's safe.
-      if (streamId.isDefined) sweepStaging()
-      if (streamId.flatMap(catalog.lastStreamBatch).exists(_ >= batchId)) return
-      tracer.statement(s"$label batch=$batchId")(body)
-      // streaming batches keep AUTOREFRESH views fresh too — the
-      // continuous always-fresh-dashboard shape (replayed/skipped
-      // batches advanced nothing, so the due check no-ops)
-      matViews.maybeAutoRefresh()
+      if (replay.exists { case (id, b) => catalog.lastStreamBatch(id).exists(_ >= b) })
+        None
+      else {
+        val out = tracer.statement(label + replay.fold("")(r => s" batch=${r._2}"))(body)
+        matViews.maybeAutoRefresh()
+        Some(out)
+      }
     }
 
   /** One micro-batch from a streaming source (graft.streaming
@@ -3678,18 +3690,20 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private[graft] def ingestStream(table: String, batch: DataFrame): Unit =
     ingestStream(table, batch, None, -1L)
 
-  /** Exactly-once variant (see streamBatch). */
+  /** Exactly-once variant (see writeBatch). */
   private[graft] def ingestStream(table: String, batch: DataFrame,
-      streamId: Option[String], batchId: Long): Unit =
-    streamBatch(s"INGEST STREAM $table", streamId, batchId) {
+      streamId: Option[String], batchId: Long): Unit = {
+    val replay = streamId.map(_ -> batchId)
+    writeBatch(s"INGEST STREAM $table", replay) {
       val t = catalog.require(table)
       val rows = byName(batch, t)
       // a literal batch stays on the driver and stages without a job;
       // anything else pins, so its sequence offsets and the staging
       // write see one partition layout
       publishStream(Seq(t -> (if (isLiteral(rows)) rows else pinBatch(rows).df)),
-        streamId, batchId, mutated = Set(t.name))
+        replay, mutated = Set(t.name))
     }
+  }
 
   /** Payload rows (logical columns) as `t`'s physical payload columns,
     * cast to their declared types (loose-schema writes are a [REF-GAP]
@@ -3737,13 +3751,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   /** The publish every stream batch ends in. Each table's rows become
     * one INSERT event frame sequenced from the table's last sequence —
     * outside any open transaction — and the frames that carry events
-    * land in ONE atomic publish with the micro-batch id (see
-    * streamBatch), the watermarks `marks` and the flat-log revocations
+    * land in ONE atomic publish with the micro-batch's `replay` id (see
+    * writeBatch), the watermarks `marks` and the flat-log revocations
     * `mutated`; then each table may auto-snapshot. A batch that
     * advanced nothing publishes only to record its id, and without an
     * id not at all. */
-  private def publishStream(parts: Seq[(TableDef, DataFrame)],
-      streamId: Option[String], batchId: Long, mutated: Set[String],
+  private[graft] def publishStream(parts: Seq[(TableDef, DataFrame)],
+      replay: Option[(String, Long)], mutated: Set[String],
       marks: Map[String, Long] = Map.empty): Unit = {
     val framed = for ((t, rows) <- parts) yield {
       requireWritable(t)
@@ -3753,280 +3767,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       (t.name, ev, last)
     }
     val advanced = framed.filter { case (n, _, last) => last > catalog.lastSeq(n) }
-    if (advanced.isEmpty && streamId.isEmpty) return
+    if (advanced.isEmpty && replay.isEmpty) return
     publishAtomic(advanced.map { case (n, ev, _) => n -> ev },
       framed.map { case (n, _, last) => n -> last }.toMap,
-      streamId.map(_ -> batchId), marks, mutated)
+      replay, marks, mutated)
     framed.foreach { case (n, _, last) => maybeAutoSnapshot(n, last) }
   }
-
-  /** Exactly-once streaming ingest with EXACT DEDUP against a
-    * persistent fingerprint registry table — the continuous-ingest
-    * complement of the batch dedup operators
-    * (graft.streaming.StreamingDedup): new shards admit only
-    * never-seen documents without ever re-scanning the corpus. Per
-    * micro-batch:
-    *   1. fingerprint each row; the lowest-pk row per fingerprint
-    *      wins inside the batch;
-    *   2. probe the registry's collapsed state for already-seen
-    *      fingerprints — small batches inline their fingerprint list
-    *      so the (bloom-indexable) registry scan prunes to the probed
-    *      row groups, the FK-probe discipline; past the cap the
-    *      anti-join shape stands on its own;
-    *   3. land the admitted rows AND their fingerprints in ONE atomic
-    *      publish carrying the micro-batch id — a crash replay skips
-    *      whole, so a document can neither duplicate nor vanish, and
-    *      the registry can never drift from the table it guards.
-    * The registry's primary key holds the fingerprint; its other
-    * columns fill from same-named batch columns (NULL otherwise). */
-  private[graft] def ingestStreamDeduped(table: String, registry: String,
-      batch: DataFrame, fingerprint: Column,
-      streamId: Option[String], batchId: Long): Unit =
-    streamBatch(s"INGEST DEDUP $table", streamId, batchId) {
-      val t = catalog.require(table)
-      val r = catalog.require(registry)
-      val full = byName(batch, t).withColumn("__fp", fingerprint)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__fp")).orderBy(col(t.pk))
-      // firsts is one row per DISTINCT fingerprint, so the pin job's
-      // count of non-null fingerprints IS the probe's key set size
-      // (the NULL-fingerprint group's row is no key): past InlineKeyCap
-      // the inline collect MUST overflow — skip its two probe jobs and
-      // take the unfiltered registry anti-join directly
-      val firsts0 = full.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn")
-      val fpAt = firsts0.schema.fieldIndex("__fp")
-      val fp = pinBatch(firsts0,
-        tally = row => if (row.isNullAt(fpAt)) 0L else 1L)
-      val firsts = fp.df
-      val seen = (if (fp.tally > Guards.InlineKeyCap) stateAt(r.name, None)
-          else Guards.inlineKeyFilter(stateAt(r.name, None), r.pk, firsts, "__fp"))
-        .select(col(r.pk).cast("string").as("__seen_fp"))
-      val admitted = pinBatch(firsts
-        .join(seen, col("__fp") === col("__seen_fp"), "left_anti")).df
-      val regRows = admitted.select(r.columns.map(c =>
-        if (c.logical == r.pk) col("__fp").cast(c.dataType).as(c.logical)
-        else if (admitted.columns.contains(c.logical))
-          col(c.logical).cast(c.dataType).as(c.logical)
-        else lit(null).cast(c.dataType).as(c.logical)): _*)
-      publishStream(Seq(t -> admitted.drop("__fp"), r -> regRows),
-        streamId, batchId,
-        // the REGISTRY's pk (the fingerprint) is unique by construction
-        // — one row per fp inside the batch, anti-joined against every
-        // seen fp — so it keeps its flat-log certificate; the TABLE's
-        // pk was never probed (two different-fingerprint rows may share
-        // a pk), so it revokes
-        mutated = Set(t.name))
-    }
-
-  /** Exactly-once streaming ingest with NEAR-dup dedup against a
-    * persistent shingle inverted-index registry — the continuous form
-    * of `Dedup.shingleJaccardPairs` (the batch operator family): new
-    * shards admit only documents that are not near-duplicates of
-    * anything already seen, without ever re-scanning the corpus.
-    *
-    * Policy ("seen semantics"): a document is DROPPED iff some SEEN
-    * document — any earlier batch's doc, or an earlier-pk row of its
-    * own batch — shares >= `minJaccard` shingle-set Jaccard overlap
-    * with it. Seen means seen, admitted or not: comparing against all
-    * prior documents (rather than only admitted ones) makes the result
-    * independent of drop chains, so the final state is reproducible in
-    * PLAIN SQL — a doc survives iff no smaller-id doc in the whole
-    * corpus clears the threshold — which is exactly what the
-    * q_stream_neardup oracle computes. It is also the conservative
-    * policy a curation pipeline wants: "similar to anything we have
-    * seen" is a stronger dedup than "similar to something we kept".
-    *
-    * Registry index table (caller creates): a string PRIMARY KEY
-    * (filled with tok + '#' + doc id) plus columns `tok` STRING,
-    * `doc_id` BIGINT, `n` BIGINT (the doc's shingle count). Every
-    * batch appends ALL its docs' postings (seen semantics); probes
-    * filter the registry scan with inlined batch tokens when small
-    * (bloom-indexable via CREATE INDEX ON (tok)), the FK-probe
-    * discipline. `maxDf` drops tokens whose REGISTRY posting list
-    * exceeds it — the bucket-size bound of the batch operators; pass
-    * Long.MaxValue to disable (the oracle-exact configuration).
-    *
-    * Per micro-batch: shingle each doc (one scan-stage pass), build
-    * within-batch edges (inverted-index self-join, earlier pk wins)
-    * and cross edges (probe join against the registry), drop receivers
-    * clearing the threshold, then land admitted rows AND all postings
-    * in ONE atomic publish carrying the micro-batch id — replayed
-    * batches skip whole, so neither table nor registry can drift. */
-  private[graft] def ingestStreamNearDedup(table: String, registry: String,
-      batch: DataFrame, textCol: Column, shingleN: Int, minJaccard: Double,
-      maxDf: Long, streamId: Option[String], batchId: Long,
-      requireOrdered: Boolean = true): Unit =
-    streamBatch(s"INGEST NEARDUP $table", streamId, batchId) {
-      val t = catalog.require(table)
-      val r = catalog.require(registry)
-      val shaped = byName(batch, t)
-        .withColumn("__sh",
-          graft.operators.Dedup.shingleSet(textCol, shingleN))
-      // total posting count (Σ shingle-array lengths, null arrays 0)
-      // rides the pin job (round 19): it bounds the batch's
-      // distinct-token count from above, which decides below whether
-      // the registry probe's inline-key collect can possibly fit the
-      // cap — past it, the two probe jobs ALWAYS overflowed and were
-      // pure waste on every realistic batch
-      val shAt = shaped.schema.fieldIndex("__sh")
-      val sp = pinBatch(shaped, tally = row =>
-        if (row.isNullAt(shAt)) 0L else row.getArray(shAt).numElements().toLong)
-      val (full, postings) = (sp.df, sp.tally)
-      // the seen-before-wins policy equals the SQL "no smaller-id doc
-      // clears the threshold" semantics ONLY when batches arrive in
-      // ascending pk ranges — cross-batch drops are temporal (registry
-      // doc wins regardless of id), so an out-of-order id would
-      // silently invert who survives. Enforce the precondition rather
-      // than let the advertised semantics drift; pipelines that want
-      // pure arrival-order (temporal) semantics opt out with
-      // requireOrdered = false, accepting that the result then depends
-      // on delivery order, not ids.
-      // the metadata watermark stores a Long, so only INTEGRAL pks use
-      // the fast guard; other orderable pk types keep the
-      // content-derived guard (correct, one registry aggregate per
-      // batch — a cast-to-long "guard" would silently null out and
-      // never fire, the quiet corruption this check exists to prevent)
-      val pkIntegral = t.columns.find(_.logical == t.pk)
-        .exists(_.dataType match {
-          case org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.ByteType => true
-          case _ => false
-        })
-      // one batch-sized job over the pinned checkpoint: min drives the
-      // ordered guard, max becomes the registry's new watermark, and
-      // total-vs-distinct pk counts certify within-batch uniqueness
-      // (above-watermark + distinct-in-batch = the whole log stays
-      // unique-pk INSERTs, so both tables keep their flat-log
-      // certificate and reads skip the keyed collapse).
-      // FORKED (round 19, guide §2.6): nothing before publishAtomic has
-      // a side effect, so the guard aggregate need not serialize ahead
-      // of the batch's dedup-join materialization — it overlaps the
-      // admitted-pin job and joins (surfacing any ordering violation)
-      // before the event frames are built. If the statement fails
-      // first, the scope cancels and awaits the guard before the
-      // failure propagates.
-      Par.scope(spark.sparkContext) { par =>
-      val guard = par.fork {
-        if (pkIntegral) {
-          val bounds = full.agg(min(col(t.pk)).cast("long"),
-            max(col(t.pk)).cast("long"),
-            count(lit(1)), countDistinct(col(t.pk))).head()
-          val unique = bounds.getLong(2) == bounds.getLong(3)
-          val batchMin =
-            if (bounds.isNullAt(0)) None else Some(bounds.getLong(0))
-          if (requireOrdered) {
-            // the guard is a CATALOG-METADATA compare — the registry
-            // is never collapsed per batch. The watermark (max pk ever
-            // admitted) commits in the same atomic manifest as the
-            // postings, so it can never lag registry content.
-            // Registries filled before the watermark existed fall back
-            // to ONE registry aggregate; the first publish records it.
-            val regMax = catalog.watermark(r.name).orElse {
-              val m = stateAt(r.name, None)
-                .agg(max(col("doc_id")).cast("long")).head()
-              if (m.isNullAt(0)) None else Some(m.getLong(0))
-            }
-            for (rm <- regMax; bm <- batchMin)
-              if (bm <= rm) throw new IllegalArgumentException(
-                s"ingestStreamNearDedup: batch contains pk <= the registry's " +
-                  s"max doc_id ($rm) — batches must arrive in " +
-                  "ascending pk ranges for id-order semantics, or pass " +
-                  "requireOrdered = false for arrival-order semantics")
-          }
-          (unique, if (bounds.isNullAt(1)) None else Some(bounds.getLong(1)))
-        } else {
-          if (requireOrdered) {
-            // content-derived guard for non-integral pks (native ordering)
-            val regMax = stateAt(r.name, None).agg(max(col("doc_id"))).head()
-            if (!regMax.isNullAt(0) &&
-                full.where(col(t.pk) <= lit(regMax.get(0))).limit(1).count() > 0)
-              throw new IllegalArgumentException(
-                s"ingestStreamNearDedup: batch contains pk <= the registry's " +
-                  s"max doc_id (${regMax.get(0)}) — batches must arrive in " +
-                  "ascending pk ranges for id-order semantics, or pass " +
-                  "requireOrdered = false for arrival-order semantics")
-          }
-          (false, None)
-        }
-      }
-      // shingle-set size rides every posting row (scan-stage, computed
-      // before the explode) so no edge aggregation ever joins back to a
-      // separate sizes table — four shuffle joins per micro-batch fold
-      // into the token explode itself
-      val toks = full.select(col(t.pk).as("__id"),
-        size(col("__sh")).cast("long").as("__n"), explode(col("__sh")).as("__tok"))
-      def jacc(i: Column, en: Column, dn: Column): Column =
-        i.cast("double") / (en + dn - i)
-      // within-batch edges: inverted-index self-join, earlier pk wins;
-      // __n is functionally dependent on the grouped doc ids, so max()
-      // just carries it through
-      val wiDrop = toks.as("a")
-        .join(toks.as("b"),
-          col("a.__tok") === col("b.__tok") && col("a.__id") < col("b.__id"))
-        .groupBy(col("a.__id").as("__e"), col("b.__id").as("__d"))
-        .agg(count(lit(1)).as("__i"), max(col("a.__n")).as("__en"),
-          max(col("b.__n")).as("__dn"))
-        .where(jacc(col("__i"), col("__en"), col("__dn")) >= minJaccard)
-        .select(col("__d"))
-      // cross edges: probe the registry's postings for batch tokens.
-      // The inline probe only applies when the batch's distinct-token
-      // count fits InlineKeyCap; `postings` (measured in the pin job)
-      // bounds it from above, so a batch past the cap skips the probe
-      // jobs outright instead of paying two guaranteed overflows. A
-      // batch whose >cap postings collapse to <=cap distinct tokens
-      // (an all-duplicates shard) loses only the scan pruning, never
-      // correctness — the unfiltered registry join is the same
-      // fallback an overflowed probe took.
-      val probed0 =
-        if (postings > Guards.InlineKeyCap) stateAt(r.name, None)
-        else Guards.inlineKeyFilter(stateAt(r.name, None), "tok", toks, "__tok")
-      val probed =
-        if (maxDf == Long.MaxValue) probed0
-        else probed0.join(
-          probed0.groupBy("tok").agg(count(lit(1)).as("__df"))
-            .where(col("__df") > maxDf).select(col("tok").as("__hot")),
-          col("tok") === col("__hot"), "left_anti")
-      val crDrop = toks.join(probed, col("__tok") === col("tok"))
-        .groupBy(col("doc_id").as("__e"), col("__id").as("__d"))
-        .agg(count(lit(1)).as("__i"), first(col("n")).as("__en"),
-          max(col("__n")).as("__dn"))
-        .where(jacc(col("__i"), col("__en"), col("__dn")) >= minJaccard)
-        .select(col("__d"))
-      val dropped = wiDrop.union(crDrop).distinct()
-        .select(col("__d").as("__dropped"))
-      val admitted = pinBatch(full
-        .join(dropped, col(t.pk) === col("__dropped"), "left_anti")
-        .drop("__sh")).df
-      // join the overlapped guard before any event frame exists — an
-      // ordering violation must surface exactly as it did serially
-      val (batchPkUnique, batchMax) = guard.join()
-      // ALL batch docs' postings land in the registry (seen semantics);
-      // toks already carries __n, and is a narrow re-read of the pinned
-      // batch — no checkpoint copy, no join
-      val regRows = toks.select(r.columns.map(c =>
-        if (c.logical == r.pk)
-          concat(col("__tok"), lit("#"), col("__id")).cast(c.dataType).as(c.logical)
-        else c.logical match {
-          case "tok" => col("__tok").cast(c.dataType).as("tok")
-          case "doc_id" => col("__id").cast(c.dataType).as("doc_id")
-          case "n" => col("__n").cast(c.dataType).as("n")
-          case other => lit(null).cast(c.dataType).as(other)
-        }): _*)
-      publishStream(Seq(t -> admitted, r -> regRows), streamId, batchId,
-        marks = batchMax.map(r.name -> _).toMap,
-        // certified: every table pk is distinct within the batch and
-        // above the registry watermark, and every registry pk embeds a
-        // batch doc id (tok#id, shingles pre-distinct per doc) — both
-        // logs stay unique-pk INSERT-only, so reads keep the flat scan.
-        // Arrival-order mode (requireOrdered=false) or duplicate ids in
-        // a batch revoke: id reuse across batches would collide pks.
-        mutated = if (requireOrdered && batchPkUnique) Set.empty
-          else Set(t.name, r.name))
-      }
-    }
 
   /** Apply one replicated micro-batch of RAW events (the primary's
     * event frame, verbatim — sequence/ts/event_type/pk/payload) into
@@ -4037,12 +3783,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * regresses). Exactly-once: the batch id commits in the same atomic
     * manifest as the events. */
   private[graft] def applyReplicated(table: String, batch: DataFrame,
-      streamId: String, batchId: Long): Unit =
-    writeLock.synchronized {
-      ensureWriteLock()
-      sweepStaging() // roll a stranded prior publish forward (see streamBatch)
-      val committed = catalog.lastStreamBatch(streamId)
-      if (committed.exists(_ >= batchId)) return
+      streamId: String, batchId: Long): Unit = {
+    val replay = Some(streamId -> batchId)
+    writeBatch(s"APPLY REPLICATED $table", replay) {
       val t = catalog.require(table)
       require(t.attached.isEmpty, s"cannot replicate into attached table $table")
       val pinned = pinBatch(batch).df
@@ -4050,12 +3793,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       val hi =
         if (mx.isNullAt(0)) catalog.lastSeq(t.name) // empty batch: record the id only
         else math.max(mx.getLong(0), catalog.lastSeq(t.name))
-      publishAtomic(Seq((t.name, pinned)), Map(t.name -> hi),
-        Some(streamId -> batchId),
+      publishAtomic(Seq((t.name, pinned)), Map(t.name -> hi), replay,
         // raw replicated frames carry whatever event types the primary
         // landed — the replica cannot certify anything about them
         mutated = Set(t.name))
     }
+  }
 
   // ========================================================== utilities
 

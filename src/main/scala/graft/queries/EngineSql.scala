@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.exec.QueryEngine
+import graft.streaming.StreamingDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat_ws, lit, max, md5, min, slice, split}
 
@@ -1761,7 +1762,7 @@ object EngineSql {
             |FROM docs""".stripMargin)
   }
 
-  /** Incremental streaming dedup (StreamingDedup / ingestStreamDeduped):
+  /** Incremental streaming dedup (StreamingDedup.ingestDeduped):
     * three ordered micro-batches of the documents fixture, each
     * admitting only fingerprints absent from the persistent registry —
     * the final state must equal the BATCH dedup of the whole corpus
@@ -1786,13 +1787,13 @@ object EngineSql {
     val src = e.spark.table("docs_src").select(col("doc_id"), col("text"))
     val fp = md5(concat_ws(" ", slice(split(col("text"), " "), 1, 10)))
     for ((lo, hi) <- Seq((0L, 150L), (150L, 300L), (300L, Long.MaxValue)))
-      e.ingestStreamDeduped("sdocs", "sseen",
+      StreamingDedup.ingestDeduped(e, "sdocs", "sseen",
         src.where(col("doc_id") >= lo && col("doc_id") < hi), fp, None, -1L)
     e.sql("SELECT doc_id, length(text) AS n_chars FROM sdocs ORDER BY doc_id")
   }
 
   /** Incremental streaming NEAR-dup dedup (StreamingDedup.startNearDup
-    * / ingestStreamNearDedup): three ordered micro-batches, each
+    * / ingestNearDedup): three ordered micro-batches, each
     * dropping documents whose 3-shingle Jaccard against any SEEN
     * document reaches 0.5 — within the batch (earlier doc_id wins) or
     * across batches via the persistent inverted-index registry. Seen
@@ -1830,7 +1831,7 @@ object EngineSql {
     e.sql("CREATE INDEX nidx_tok ON nidx (tok)")
     val src = e.spark.table("docs_src").select(col("doc_id"), col("text"))
     for ((lo, hi) <- Seq((0L, 150L), (150L, 300L), (300L, Long.MaxValue)))
-      e.ingestStreamNearDedup("ndocs", "nidx",
+      StreamingDedup.ingestNearDedup(e, "ndocs", "nidx",
         src.where(col("doc_id") >= lo && col("doc_id") < hi),
         col("text"), shingleN = 3, minJaccard = 0.5,
         maxDf = Long.MaxValue, None, -1L)

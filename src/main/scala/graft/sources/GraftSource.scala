@@ -36,9 +36,14 @@ import org.apache.spark.sql.types.StructType
   *
   * Write: `SaveMode.Append` bulk-appends through the same governed
   * path as COPY FROM (privileges, RLS WITH CHECK, constraints,
-  * triggers, atomic publish); `SaveMode.Overwrite` is TRUNCATE +
-  * append — and because tables are event-sourced, the overwritten
-  * state remains queryable with FOR SYSTEM_TIME. */
+  * triggers, atomic publish), inside the engine's batch envelope
+  * (`QueryEngine.writeBatch`). The envelope takes the base-dir write
+  * lock (BaseDirLock), so an append into a dir that a live engine
+  * holds (a running PG server, say) fails with "locked by live engine"
+  * instead of assigning sequences from a second copy of the catalog.
+  * `SaveMode.Overwrite` is TRUNCATE + append — and because tables are
+  * event-sourced, the overwritten state remains queryable with FOR
+  * SYSTEM_TIME. */
 final class GraftSource extends RelationProvider
     with CreatableRelationProvider with DataSourceRegister {
 

@@ -23,11 +23,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * its sequence counters continue from the replicated high-water mark
   * (the reference's promote path, failover.rs).
   *
-  * Delivery is exactly-once per checkpoint: the follower commits each
-  * micro-batch's id inside the SAME atomic manifest as its events
-  * (the StreamIngest idempotent-sink pattern), so crash-replays skip.
-  * Leadership/consensus (raft.rs) is out of scope — the base-dir
-  * write lock already guarantees at most one live writer per dir.
+  * Delivery is exactly-once per checkpoint: each applied batch runs in
+  * the replica's batch envelope (`QueryEngine.writeBatch`, shared with
+  * every stream and the data-source write), which takes the replica's
+  * base-dir lock, skips a replayed batch id, records a trace and runs
+  * the AUTOREFRESH due check; the batch id commits inside the SAME
+  * atomic manifest as its events (the StreamIngest idempotent-sink
+  * pattern), so crash-replays skip. Leadership/consensus (raft.rs) is
+  * out of scope — the base-dir write lock already guarantees at most
+  * one live writer per dir.
   */
 object Replication {
 
@@ -54,16 +58,12 @@ object Replication {
     if (!fs.exists(p)) fs.mkdirs(p)
     // the RAW event frame (payload struct, physical names) — apply is
     // byte-for-byte the primary's events, not a re-derivation
-    primary.spark.readStream
+    val events = primary.spark.readStream
       .schema(EventLog.schema(t.payloadSchema))
       .parquet(dir)
       .where(col("sequence") > fromSeq)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        replica.applyReplicated(table, batch, checkpointDir, batchId)
-      }
-      .start()
+    StreamIngest.sink(events, checkpointDir, trigger) { (batch, batchId) =>
+      replica.applyReplicated(table, batch, checkpointDir, batchId)
+    }
   }
 }

@@ -16,17 +16,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Scale design: the micro-batch body runs on the driver but the data
   * never does — `ingestStream` hands the batch DataFrame straight to
-  * the engine's distributed append (zipWithIndex + parquet write), so
-  * executors carry the rows. Sequence assignment stays single-writer
-  * per table, the same discipline the reference enforces with its
-  * process write lock (index.rs:22-26).
+  * the engine's stream publish (a literal batch stages on the driver,
+  * anything else pins and writes distributed), so executors carry the
+  * rows. Every micro-batch runs in the engine's batch envelope
+  * (`QueryEngine.writeBatch`), the one entry of every non-SQL write:
+  * the write-lock monitor and the base-dir lock keep sequence
+  * assignment single-writer per table, the discipline the reference
+  * enforces with its process write lock (index.rs:22-26).
   *
   * Delivery is exactly-once across restarts: Spark's foreachBatch is
   * at-least-once (a micro-batch whose epoch wasn't checkpointed replays
   * after a crash), so the engine commits each batch's id in the SAME
   * atomic manifest as its events (keyed by the checkpoint location) and
-  * skips any batch id at or below the committed one — the Delta-commit
-  * idempotent-sink pattern.
+  * the envelope skips any batch id at or below the committed one — the
+  * Delta-commit idempotent-sink pattern. `sink` is the one
+  * foreachBatch wiring the engine's streams share.
   */
 object StreamIngest {
 
@@ -41,12 +45,21 @@ object StreamIngest {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(stream.isStreaming, "StreamIngest.start needs a streaming DataFrame")
     engine.catalog.require(table) // fail fast before the query starts
+    sink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      engine.ingestStream(table, batch, Some(checkpointDir), batchId)
+    }
+  }
+
+  /** The one foreachBatch wiring of every engine-bound stream (plain
+    * ingest, both dedup ingests, replication): `stream` checkpointed at
+    * `checkpointDir` under `trigger`, each micro-batch handed to
+    * `batch` with its id. The checkpoint location doubles as the stream
+    * id the engine's replay skip is keyed by. */
+  private[streaming] def sink(stream: DataFrame, checkpointDir: String,
+      trigger: Trigger)(batch: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        engine.ingestStream(table, batch, Some(checkpointDir), batchId)
-      }
+      .foreachBatch { (b: DataFrame, batchId: Long) => batch(b, batchId) }
       .start()
-  }
 }

@@ -17,11 +17,15 @@ import scala.jdk.CollectionConverters._
   * function reads parquet on the driver (GraftBridge.readLocalParquet),
   * one site installs optimizer rules (PointReads.install) and one module
   * builds DML guard probes, owns the inline-key cap and reaches the
-  * guard verdict (Guards). A new pin variant, a hand-rolled thread, a
-  * second event-frame builder, a second view shape, a second driver
-  * parquet reader or a guard probe outside Guards fails here instead
-  * of quietly growing a second copy. Comment lines are ignored, so docs may name what the code
-  * must not do. */
+  * guard verdict (Guards), one function swaps the engine's session
+  * (QueryEngine.asSession) and one envelope wraps every write that is
+  * not a SQL statement (QueryEngine.writeBatch, the only replay-skip
+  * check), while the dedup stream bodies live in StreamingDedup. A new
+  * pin variant, a hand-rolled thread, a second event-frame builder, a
+  * second view shape, a second driver parquet reader, a guard probe
+  * outside Guards, a hand-rolled session swap or batch envelope fails
+  * here instead of quietly growing a second copy. Comment lines are
+  * ignored, so docs may name what the code must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -64,23 +68,50 @@ class SourceScanSpec extends AnyFunSuite {
       .isEmpty)
   }
 
-  test("one event-frame builder, one publish per writer kind") {
-    val qe = "graft/exec/QueryEngine.scala"
-    assert(occurrences(""".cast("string").as("pk")""").getOrElse(qe, 0) <= 1)
-    // every publishAtomic call sits in one of its four callers (engine
-    // members, declared two spaces in): COMMIT, the statement append,
-    // the stream publish and replication
+  private val qe = "graft/exec/QueryEngine.scala"
+
+  /** The engine member (declared two spaces in) enclosing each
+    * QueryEngine code line that satisfies `hit`. */
+  private def enclosingMembers(hit: String => Boolean): Seq[String] = {
     val code = sources.collectFirst { case (`qe`, c) => c }.get.toIndexedSeq
     val Member = """^  (?:private\S* )?def (\w+)""".r.unanchored
-    val callers = code.indices.filter { i =>
-      code(i).contains("publishAtomic(") && !code(i).contains("def publishAtomic(")
-    }.map { i =>
+    code.indices.filter(i => hit(code(i))).map { i =>
       (i to 0 by -1).iterator.map(code(_))
         .collectFirst { case Member(name) => name }.getOrElse("?")
     }
+  }
+
+  test("one event-frame builder, one publish per writer kind") {
+    assert(occurrences(""".cast("string").as("pk")""").getOrElse(qe, 0) <= 1)
+    // every publishAtomic call sits in one of its four callers: COMMIT,
+    // the statement append, the stream publish and replication
+    val callers = enclosingMembers(l =>
+      l.contains("publishAtomic(") && !l.contains("def publishAtomic("))
     assert(callers.toSet == Set("commitTxn", "append", "publishStream",
       "applyReplicated"), callers)
     assert(occurrences("publishAtomic(").keySet == Set(qe))
+  }
+
+  test("one session swap (asSession) and one batch envelope (writeBatch)") {
+    // an assignment to the engine's `current` session: not a named
+    // argument (TableCatalog's `copy(current = ...)`), not a `val` or
+    // `var` declaration, not a comparison
+    val CurrentEq = """\bcurrent\s*=(?![=>])""".r
+    def assignsCurrent(l: String): Boolean = CurrentEq.findAllMatchIn(l).exists { m =>
+      val before = l.substring(0, m.start).trim
+      !before.endsWith("(") && !before.endsWith(",") &&
+        !before.endsWith("val") && !before.endsWith("var")
+    }
+    val swaps = sources.collect { case (f, code) if code.exists(assignsCurrent) => f }
+    assert(swaps.toSet == Set(qe), swaps)
+    assert(enclosingMembers(assignsCurrent).toSet == Set("asSession"))
+    // the replay skip is decided in one place
+    assert(occurrences("catalog.lastStreamBatch(").keySet == Set(qe))
+    assert(enclosingMembers(_.contains("catalog.lastStreamBatch(")) == Seq("writeBatch"))
+    // the dedup stream bodies live in StreamingDedup
+    val DedupDef = """def ingestStream\w*Dedup""".r
+    assert(!sources.collectFirst { case (`qe`, c) => c }.get
+      .exists(DedupDef.findFirstIn(_).isDefined))
   }
 
   test("one-row result frames come from QueryEngine.oneRow, not a range job") {

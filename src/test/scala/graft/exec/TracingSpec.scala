@@ -229,6 +229,25 @@ class TracingSpec extends AnyFunSuite {
       .count(_.getString(1).startsWith("INGEST STREAM st"))
     assert(after == 1, s"replayed batch must not trace (got $after)")
     assert(e.sql("SELECT COUNT(*) AS n FROM st").collect().head.getLong(0) == 2L)
+    // the data-source append and replicated batches share the envelope:
+    // each records one trace, and a replayed replicated batch none
+    def traced(label: String): Int =
+      e.sql("SHOW TRACES").collect().count(_.getString(1).startsWith(label))
+    e.ingestFrameAs(e.newSession(), "st", Seq((4L, "d")).toDF("k", "v"))
+    assert(traced("INGEST FRAME st") == 1)
+    val p = QueryEngine.scratch(spark)
+    p.sql("CREATE TABLE rt (k BIGINT PRIMARY KEY, v STRING)")
+    p.sql("INSERT INTO rt VALUES (1, 'r')")
+    e.sql("CREATE TABLE rt (k BIGINT PRIMARY KEY, v STRING)")
+    val raw = spark.read
+      .schema(graft.log.EventLog.schema(p.catalog.require("rt").payloadSchema))
+      .parquet(p.catalog.logPath("rt"))
+    val rck = java.nio.file.Files.createTempDirectory("graft-tr-rk-").toString
+    e.applyReplicated("rt", raw, rck, 0L)
+    e.applyReplicated("rt", raw, rck, 0L) // replay: skipped
+    assert(traced("APPLY REPLICATED rt") == 1)
+    assert(e.sql("SELECT COUNT(*) AS n FROM rt").collect().head.getLong(0) == 1L)
+    p.close()
   }
 
   test("SNAPSHOT records a snapshot span; SELECT records state-plan") {

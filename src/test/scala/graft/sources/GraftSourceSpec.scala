@@ -107,4 +107,24 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(read(dir).orderBy("id").collect()
       === Array(Row(1L, "alice", 11L), Row(2L, "bob", 20L)))
   }
+
+  test("a data-source append respects the base-dir lock of a live engine") {
+    val dir = freshDb()
+    val e1 = new QueryEngine(spark, dir)
+    e1.sql("INSERT INTO t VALUES (5, 'eve', 50)") // e1 wrote: it holds the lock
+    def count(): Long = e1.sql("SELECT COUNT(*) FROM t").collect().head.getLong(0)
+    val (rows0, seq0) = (count(), e1.catalog.lastSeq("t"))
+    import spark.implicits._
+    def append(): Unit = Seq((6L, "frank", 60L)).toDF("id", "owner", "v")
+      .write.format("graft").option("dir", dir).option("table", "t")
+      .mode(SaveMode.Append).save()
+    val err = intercept[IllegalStateException](append())
+    assert(err.getMessage.contains("locked by live engine"), err.getMessage)
+    assert(count() === rows0)
+    assert(e1.catalog.lastSeq("t") === seq0)
+    e1.close()
+    append()
+    assert(read(dir).where("id = 6").collect() === Array(Row(6L, "frank", 60L)))
+    assert(read(dir).count() === rows0 + 1)
+  }
 }

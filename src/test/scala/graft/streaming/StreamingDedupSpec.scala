@@ -114,14 +114,14 @@ class StreamingDedupSpec extends AnyFunSuite {
     setup(e)
     def batch(rows: Seq[(Long, String)]) =
       spark.createDataFrame(rows).toDF("doc_id", "text")
-    e.ingestStreamDeduped("docs", "seen", batch(Seq(1L -> "t0")),
+    StreamingDedup.ingestDeduped(e, "docs", "seen", batch(Seq(1L -> "t0")),
       md5(col("text")), None, 0L)
     val rows = (0 until 256).map(i => (100L + i, s"t$i")) ++
       Seq((1000L, null: String), (1001L, null: String))
     val jobs = graft.GroupJobs(spark, "dedup-inline-cap")
     val sc = spark.sparkContext
     sc.setJobGroup(jobs.group, "boundary batch")
-    try e.ingestStreamDeduped("docs", "seen", batch(rows), md5(col("text")),
+    try StreamingDedup.ingestDeduped(e, "docs", "seen", batch(rows), md5(col("text")),
       None, 1L)
     finally sc.clearJobGroup()
     try {

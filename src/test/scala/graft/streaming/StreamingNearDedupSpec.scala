@@ -125,7 +125,7 @@ class StreamingNearDedupSpec extends AnyFunSuite {
       val cuts = (Seq(0, 24) ++ Seq.fill(rnd.nextInt(3))(rnd.nextInt(24)))
         .distinct.sorted
       for (Seq(lo, hi) <- cuts.sliding(2))
-        e.ingestStreamNearDedup("docs", "idx",
+        StreamingDedup.ingestNearDedup(e, "docs", "idx",
           docs.slice(lo, hi).toDF("doc_id", "text"), col("text"),
           shingleN = 2, minJaccard = 0.5, maxDf = Long.MaxValue, None, -1L)
       val got = e.sql("SELECT doc_id FROM docs ORDER BY doc_id")
@@ -140,7 +140,7 @@ class StreamingNearDedupSpec extends AnyFunSuite {
     val e = QueryEngine.scratch(spark)
     setup(e)
     def ingest(docs: Seq[(Long, String)], ordered: Boolean = true): Unit =
-      e.ingestStreamNearDedup("docs", "idx", docs.toDF("doc_id", "text"),
+      StreamingDedup.ingestNearDedup(e, "docs", "idx", docs.toDF("doc_id", "text"),
         col("text"), shingleN = 2, minJaccard = 0.5,
         maxDf = Long.MaxValue, None, -1L, requireOrdered = ordered)
     ingest(Seq((100L, "alpha beta gamma delta")))
@@ -161,7 +161,7 @@ class StreamingNearDedupSpec extends AnyFunSuite {
     val e = QueryEngine.scratch(spark)
     setup(e)
     def ingest(docs: Seq[(Long, String)]): Unit =
-      e.ingestStreamNearDedup("docs", "idx", docs.toDF("doc_id", "text"),
+      StreamingDedup.ingestNearDedup(e, "docs", "idx", docs.toDF("doc_id", "text"),
         col("text"), shingleN = 2, minJaccard = 0.5,
         maxDf = Long.MaxValue, None, -1L)
     ingest(Seq((1L, "alpha beta gamma delta"),
@@ -229,7 +229,7 @@ class StreamingNearDedupSpec extends AnyFunSuite {
     val e = QueryEngine.scratch(spark)
     setup(e)
     def ingest(docs: Seq[(Long, String)]): Unit =
-      e.ingestStreamNearDedup("docs", "idx", docs.toDF("doc_id", "text"),
+      StreamingDedup.ingestNearDedup(e, "docs", "idx", docs.toDF("doc_id", "text"),
         col("text"), shingleN = 2, minJaccard = 0.5,
         maxDf = Long.MaxValue, None, -1L)
     ingest(Seq((100L, "alpha beta gamma delta")))
@@ -251,7 +251,7 @@ class StreamingNearDedupSpec extends AnyFunSuite {
     e.sql("""CREATE TABLE sidx (pk STRING PRIMARY KEY, tok STRING,
             |doc_id STRING, n BIGINT)""".stripMargin)
     def ingest(docs: Seq[(String, String)], ordered: Boolean = true): Unit =
-      e.ingestStreamNearDedup("sdocs", "sidx", docs.toDF("doc_id", "text"),
+      StreamingDedup.ingestNearDedup(e, "sdocs", "sidx", docs.toDF("doc_id", "text"),
         col("text"), shingleN = 2, minJaccard = 0.5,
         maxDf = Long.MaxValue, None, -1L, requireOrdered = ordered)
     ingest(Seq(("doc-b", "alpha beta gamma delta")))
