@@ -1,7 +1,7 @@
 package graft.exec
 
 import graft.catalog.{Constraint, TableDef}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -383,15 +383,18 @@ object Guards {
     * a folded empty probe is proof the guard holds and drops from the
     * union. Only called when the batch itself is literal, so
     * state-reading probes never pay a standalone optimizer pass just to
-    * learn they don't fold. */
+    * learn they don't fold. A probe that stays is returned as a frame
+    * of its optimized plan: the union job plans from what this pass
+    * already did, so a driver point read it made (an FK probe's read
+    * of its parent by key) is not made again on the verdict fork. */
   private def dropFoldedProbes(probes: Seq[DataFrame]): Seq[DataFrame] =
-    probes.filter { p =>
+    probes.flatMap { p =>
       p.queryExecution.optimizedPlan match {
         case lr: LocalRelation =>
           if (lr.data.nonEmpty)
             throw new IllegalArgumentException(lr.data.head.getString(0))
-          false
-        case _ => true
+          None
+        case plan => Some(GraftBridge.frameOf(p.sparkSession, plan))
       }
     }
 

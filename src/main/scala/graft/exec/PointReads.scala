@@ -1,6 +1,6 @@
 package graft.exec
 
-import graft.state.Snapshots
+import graft.state.{Snapshots, StateView}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UpdateAttributeNullability
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, EqualTo, Expression, GetStructField, In, InSet, Literal, PredicateHelper}
@@ -13,29 +13,47 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import scala.util.control.NonFatal
 
 /** Point reads served on the driver: the optimizer rule that turns a pk
-  * lookup over a snapshot into a LocalRelation, so PK SELECT, AS OF
-  * above the newest snapshot, INSERT's collision probe and the matched
-  * batch of UPDATE/DELETE by pk run no Spark job (the reference answers
-  * them from state it holds — `reconstruct_state_at`, SURVEY §1.1).
+  * lookup over a snapshot or the event log into rows decoded on the
+  * driver, so PK SELECT, AS OF at any sequence, INSERT's collision
+  * probe and the matched batch of UPDATE/DELETE by pk run no Spark job
+  * (the reference answers them from state it holds —
+  * `reconstruct_state_at`, SURVEY §1.1).
   *
-  * It matches `Filter(cond, relation)` where the relation is a snapshot
-  * scan tagged with its pk field (`Snapshots.PkOption`) and `cond` has a
-  * conjunct `payload.<pk> = literal` or `payload.<pk> IN (literals)` —
-  * the shape the state plans take once Catalyst pushed a pk predicate
-  * through `StateView.overTail`'s flat plan, or below the keyed
-  * collapse's window. `GraftBridge.readLocalParquet` reads the row
-  * groups that can hold those keys on the driver and the relation
-  * becomes a LocalRelation of them; when the candidate row groups are
-  * over its byte budget, or the read fails, the scan stays. A plan the
-  * rule changed is then folded with ConvertToLocalRelation and
-  * PropagateEmptyRelation (the built-in LocalRelation batch runs before
-  * user rules) plus a fold of a Union of LocalRelations, so the filter,
-  * the driver-tail fold and the union above collapse into one
+  * Leaves: it matches `Filter(cond, relation)` where the relation is a
+  * scan tagged with its table's pk field (`Snapshots.PkOption`: the
+  * snapshot read and the log read) and `cond` has a conjunct
+  * `payload.<pk> = literal` or `payload.<pk> IN (literals)` — the shape
+  * the state plans take once Catalyst pushed a pk predicate through
+  * `StateView.overTail`'s flat plan, or below the keyed collapse's
+  * windows. `GraftBridge.readLocalParquet` reads the row groups that can
+  * hold rows matching `cond` on the driver and the relation becomes a
+  * LocalRelation of them; when the candidate row groups are over its
+  * byte budget, or the read fails, the scan stays and loses its tag, so
+  * the optimizer's next pass does not try it again.
+  *
+  * Collapses: a keyed collapse (`StateView.KeyedCollapse`) whose every
+  * leaf is such a tagged scan — the log alone, or a snapshot and the
+  * log slice after it — has its leaves read the same way. When they
+  * all fold to one LocalRelation of candidate events (snapshot rows are
+  * INSERTs older than the slice), `StateView.foldCollapse` folds them
+  * with the fold `overTail` uses and the windows, the exchange and
+  * their jobs go away. This rule codes no event semantics itself. Any
+  * other shape keeps the windowed plan over whatever leaves were read:
+  * a leaf that is not a tagged scan (a transaction's buffered events),
+  * a read over budget or one that throws, and an ordered collapse (a
+  * read whose row order becomes event order) that folds to more than
+  * one row.
+  *
+  * A plan the rule changed is then folded with ConvertToLocalRelation
+  * and PropagateEmptyRelation (the built-in LocalRelation batch runs
+  * before user rules) plus a fold of a Union of LocalRelations, so the
+  * filter, the driver-tail fold and the union above collapse into one
   * LocalRelation. A plan without a tagged relation pays one walk.
   *
-  * Each driver read records a `point-read` span (files, row groups
-  * kept/total, candidate bytes, rows decoded) when a statement trace is
-  * live on the planning thread. */
+  * Each leaf read, and each collapse with its leaf reads, records a
+  * `point-read` span (files, row groups kept/total, candidate bytes,
+  * rows decoded; a folded collapse adds the events it folded) when a
+  * statement trace is live on the planning thread. */
 object PointReads extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Add the rule to the session's optimizer once; a second engine on
@@ -47,24 +65,19 @@ object PointReads extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    var served = false
+    var changed = false
     val out = plan.transformDown {
-      case p @ Project(list, Filter(cond, rel @ Tagged(fs, pk))) =>
-        val needed = AttributeSet(list.flatMap(_.references)) ++ cond.references
-        driverRows(cond, rel, fs, pk, needed).fold(p: LogicalPlan) { lr =>
-          served = true
-          Project(list, Filter(cond, lr))
-        }
-      case f @ Filter(cond, rel @ Tagged(fs, pk)) =>
-        driverRows(cond, rel, fs, pk, rel.outputSet).fold(f: LogicalPlan) { lr =>
-          served = true
-          Filter(cond, lr)
-        }
+      case StateView.KeyedCollapse(c) if c.input.exists(Leaf.unapply(_).isDefined) =>
+        changed = true
+        traced(collapse(c))(_._2)._1
+      case p @ Leaf(r) =>
+        changed = true
+        traced(serve(p, r))(r => detail(Seq(r._2)))._1
     }
-    if (served) Fold.execute(out) else plan
+    if (changed) Fold.execute(out) else plan
   }
 
-  /** A snapshot scan tagged with its pk payload field. */
+  /** A tagged scan: its HadoopFsRelation and pk payload field. */
   private object Tagged {
     def unapply(rel: LogicalRelation): Option[(HadoopFsRelation, String)] =
       rel.relation match {
@@ -84,9 +97,9 @@ object PointReads extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** The first conjunct of `cond` that pins the pk to literal keys. */
-  private def keyConjunct(cond: Expression, pk: String): Option[Expression] =
-    splitConjunctivePredicates(cond).find {
+  /** Whether some conjunct of `cond` pins the pk to literal keys. */
+  private def hasKey(cond: Expression, pk: String): Boolean =
+    splitConjunctivePredicates(cond).exists {
       case EqualTo(PayloadField(f), Literal(v, _)) => f == pk && v != null
       case EqualTo(Literal(v, _), PayloadField(f)) => f == pk && v != null
       case In(PayloadField(f), list) =>
@@ -95,23 +108,81 @@ object PointReads extends Rule[LogicalPlan] with PredicateHelper {
       case _ => false
     }
 
-  /** The LocalRelation that replaces `rel` under `cond`: the `needed`
-    * columns of the row groups that can hold `cond`'s pk keys. */
-  private def driverRows(cond: Expression, rel: LogicalRelation,
-      fs: HadoopFsRelation, pk: String, needed: AttributeSet): Option[LocalRelation] =
-    keyConjunct(cond, pk).flatMap { key =>
-      val out = rel.output.filter(needed.contains)
-      def run() = GraftBridge.readLocalParquet(fs.sparkSession, fs,
-        DataTypeUtils.fromAttributes(out), key, splitConjunctivePredicates(cond))
-      val read =
-        try Some(Tracer.current.fold(run())(_.spanOf("point-read")(run())(r =>
-          s"files=${r.files} row_groups=${r.kept}/${r.total} bytes=${r.bytes} " +
-            r.rows.fold("over budget: scan kept")(rs => s"rows=${rs.length}"))))
-        // a read the driver cannot do (an unreadable key, a vanished
-        // file) leaves the scan, which raises its own error if it fails
-        catch { case NonFatal(_) => None }
-      read.flatMap(_.rows).map(LocalRelation(out, _))
+  /** A pk-keyed filter over a tagged scan — the node a leaf read
+    * serves — with the scan's columns it must keep. */
+  private final case class LeafRead(cond: Expression, rel: LogicalRelation,
+      fs: HadoopFsRelation, needed: AttributeSet)
+
+  private object Leaf {
+    def unapply(p: LogicalPlan): Option[LeafRead] = p match {
+      case Project(list, Filter(cond, rel @ Tagged(fs, pk))) if hasKey(cond, pk) =>
+        Some(LeafRead(cond, rel, fs,
+          AttributeSet(list.flatMap(_.references)) ++ cond.references))
+      case Filter(cond, rel @ Tagged(fs, pk)) if hasKey(cond, pk) =>
+        Some(LeafRead(cond, rel, fs, rel.outputSet))
+      case _ => None
     }
+  }
+
+  /** `p` with its scan replaced by a LocalRelation of the row groups
+    * that can hold rows matching its filter, and the read (None when it
+    * threw). A read over budget or one that threw leaves the scan,
+    * untagged: a read the driver cannot do (an unreadable key, a
+    * vanished file) raises its own error in the scan if it fails. */
+  private def serve(p: LogicalPlan, r: LeafRead)
+      : (LogicalPlan, Option[GraftBridge.LocalRead]) = {
+    val out = r.rel.output.filter(r.needed.contains)
+    val read =
+      try Some(GraftBridge.readLocalParquet(r.fs.sparkSession, r.fs,
+        DataTypeUtils.fromAttributes(out), splitConjunctivePredicates(r.cond)))
+      catch { case NonFatal(_) => None }
+    val leaf = read.flatMap(_.rows) match {
+      case Some(rows) => LocalRelation(out, rows)
+      case None => r.rel.copy(relation = r.fs.copy(options =
+        r.fs.options.filterNot(_._1.equalsIgnoreCase(Snapshots.PkOption)))(r.fs.sparkSession))
+    }
+    (p.transformUp { case l: LogicalRelation if l eq r.rel => leaf }, read)
+  }
+
+  /** `c` with its leaves read on the driver, and folded away into one
+    * LocalRelation when every leaf was a tagged scan the driver read and
+    * `StateView.foldCollapse` applies; otherwise the windowed plan over
+    * the leaves as read. With it, the span detail: the reads, then the
+    * number of events folded or that the window stayed. */
+  private def collapse(c: StateView.Collapse): (LogicalPlan, String) = {
+    val allTagged = c.input.collectLeaves().forall {
+      case Tagged(_, _) => true
+      case _ => false
+    }
+    val reads = Seq.newBuilder[Option[GraftBridge.LocalRead]]
+    val in = Fold.execute(c.input.transformDown {
+      case p @ Leaf(r) => val (q, read) = serve(p, r); reads += read; q
+    })
+    val folded = in match {
+      case lr: LocalRelation if allTagged =>
+        StateView.foldCollapse(c, lr).map((_, lr.data.length))
+      case _ => None
+    }
+    (folded.fold(c.withInput(in))(_._1),
+      detail(reads.result()) + folded.fold(" window kept")(f => s" events=${f._2}"))
+  }
+
+  /** `body` under a `point-read` span when a statement trace is live on
+    * this thread. */
+  private def traced[T](body: => T)(detail: T => String): T =
+    Tracer.current.fold(body)(_.spanOf("point-read")(body)(detail))
+
+  /** Span detail of leaf reads: files, row groups kept/total and
+    * candidate bytes summed, then the rows decoded — or why a scan
+    * stayed. */
+  private def detail(reads: Seq[Option[GraftBridge.LocalRead]]): String = {
+    val ok = reads.flatten
+    s"files=${ok.map(_.files).sum} row_groups=${ok.map(_.kept).sum}/" +
+      s"${ok.map(_.total).sum} bytes=${ok.map(_.bytes).sum} " +
+      (if (reads.exists(_.isEmpty)) "read failed: scan kept"
+       else if (ok.exists(_.rows.isEmpty)) "over budget: scan kept"
+       else s"rows=${ok.flatMap(_.rows).map(_.length).sum}")
+  }
 
   /** The folds that finish what the rule started. */
   private object Fold extends RuleExecutor[LogicalPlan] {

@@ -1983,8 +1983,11 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     t.attached.getOrElse {
       val p = new Path(logDir(t.name))
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // tagged with the pk like a snapshot scan, so a pk point read of
+      // the log decodes its candidate row groups on the driver
       if (fs.exists(p))
-        spark.read.schema(EventLog.schema(t.payloadSchema)).parquet(p.toString)
+        spark.read.schema(EventLog.schema(t.payloadSchema))
+          .option(Snapshots.PkOption, t.pkPhysical).parquet(p.toString)
       else
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           EventLog.schema(t.payloadSchema))
@@ -2117,12 +2120,14 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         // Also valid inside a transaction while the table has no
         // buffered writes: events(t) is already horizon-capped, and a
         // first-access read sees exactly the bare log
-        val flat = !dmlRead && !dmlReadScope &&
+        val ordered = dmlRead || dmlReadScope
+        val flat = !ordered &&
           t.attached.isEmpty && catalog.isFlatLog(t.name) &&
           txn.forall(tx => !tx.pending.exists(_._1 == t.name))
         // else the keyed collapse: the pk output column IS the window
         // partition attribute, so pk predicates push below the collapse
-        // to the scan
+        // to the scans, and a pk point read folds on the driver
+        // (PointReads) — an ordered one only when it folds to one row
         base match {
           case Some(snapSeq) =>
             val tail = asOf.fold(ev.where(col("sequence") > snapSeq))(s =>
@@ -2133,10 +2138,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
             // pks (all new inserts) are disjoint by the certificate, so
             // the union IS the state
             if (flat) payloadFlat(union)
-            else StateView.stateAtKeyed(union, None, t.pkPhysical)
+            else StateView.stateAtKeyed(union, None, t.pkPhysical, ordered)
           case None if flat =>
             payloadFlat(asOf.fold(ev)(s => ev.where(col("sequence") <= s)))
-          case None => StateView.stateAtKeyed(ev, asOf, t.pkPhysical)
+          case None => StateView.stateAtKeyed(ev, asOf, t.pkPhysical, ordered)
         }
     }
     // column mapping: physical payload fields -> logical names; a
@@ -3294,8 +3299,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * dmlRead plan, except outside a transaction when the driver holds
     * the table's tail and the flat state plan folds to a LocalRelation
     * of at most one row: a pk point read over the snapshot and the tail
-    * (PointReads), run on the driver with no Spark job. One row has one
-    * order, so the statement emits the same events bare or inside
+    * (PointReads), run on the driver with no Spark job. The keyed plan
+    * of a pk point read folds on the driver as well when it holds at
+    * most one row (`StateView.stateAtKeyed`'s `ordered`). One row has
+    * one order, so the statement emits the same events bare or inside
     * BEGIN..COMMIT. */
   private def matchedBatch(table: String, where: Option[String],
       command: String): (DataFrame, DataFrame) = {

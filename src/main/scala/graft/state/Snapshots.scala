@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions._
   * on the driver and runs no Spark job at all (see `read`).
   * Otherwise it unions the snapshot with the sequence-pruned log slice
   * and collapses — replay cost is proportional to the tail, not the
-  * full history. At 100 TB this is the difference between scanning
+  * full history — and a pk point read of that collapse, at any
+  * sequence, decodes the candidate rows of the snapshot and of the
+  * slice on the driver and folds them there (the log read is tagged
+  * like the snapshot scan; `StateView.foldCollapse`). At 100 TB this is the difference between scanning
   * the whole log and scanning one checkpoint + a sequence-pruned slice
   * (parquet min/max on `sequence` skips all pre-snapshot files).
   *
@@ -141,9 +144,10 @@ object Snapshots {
     }
   }
 
-  /** Reader option that tags a snapshot scan with its table's pk
-    * payload field. Parquet ignores it; `graft.exec.PointReads` looks
-    * for it to serve a pk point read from the driver. */
+  /** Reader option that tags a scan with its table's pk payload field:
+    * set by `read` on a snapshot scan and by the engine's one read of a
+    * table's event log. Parquet ignores it; `graft.exec.PointReads`
+    * looks for it to serve a pk point read from the driver. */
   val PkOption = "graft.pk"
 
   /** Read a snapshot. With `schema` (the catalog's event schema) the

@@ -224,10 +224,11 @@ object GraftBridge {
   }
 
   /** What one `readLocalParquet` call found: the files it looked at,
-    * the row groups whose footer statistics may hold a key (`kept`) out
-    * of all of theirs, the uncompressed bytes of the requested columns
-    * in those row groups, and the rows it decoded — None when `bytes`
-    * is over the byte budget and nothing was decoded. */
+    * the row groups whose footer statistics may hold matching rows
+    * (`kept`) out of all of theirs, the uncompressed bytes of the
+    * requested columns in those row groups, and the rows it decoded —
+    * None when `bytes` is over the byte budget and nothing was
+    * decoded. */
   final case class LocalRead(files: Int, kept: Int, total: Int, bytes: Long,
       rows: Option[Seq[InternalRow]])
 
@@ -243,7 +244,12 @@ object GraftBridge {
     * is the reader's Hadoop-conf broadcast. Serial decode of D ms breaks
     * even with a 4-way job at D·(1 − 1/4) ≈ 85 ms, about 8 MB. A
     * snapshot whose pk is clustered (a first load) prunes to one page of
-    * one row group and reads in a few ms. */
+    * one row group and reads in a few ms. The log read pays the same
+    * budget: its files outside the read's `sequence` bounds drop at the
+    * footer and do not count, and a bulk load whose pks are clustered
+    * (150k rows in one 6.95 MB row group, all columns) stays inside it
+    * and prunes to a page; a bulk batch with unordered pks makes every
+    * row group a candidate and past the budget keeps the job. */
   private val PointReadByteBudget: Long = 8L << 20
 
   /** Footers of the parquet files driver reads have opened, keyed by
@@ -274,16 +280,18 @@ object GraftBridge {
   }
 
   /** Driver-side parquet read of the rows of `relation` that may match
-    * `key` — the read-side twin of `writeLocalParquet`, and the only
-    * place the engine opens parquet files itself. `key` and `filters`
-    * are predicates over the relation's output, translated as a scan
+    * `filters` — the read-side twin of `writeLocalParquet`, and the only
+    * place the engine opens parquet files itself. `filters` are
+    * conjuncts over the relation's output, translated as a scan
     * translates its data filters. It works from the footers first: the
-    * row groups whose min/max statistics can hold `key` (through
-    * Spark's own ParquetFilters, so every pushable type prunes as it
-    * does in a scan) are the candidates. With none, no reader is built;
-    * when their bytes exceed the budget nothing is decoded (rows =
-    * None; the caller keeps the scan). Otherwise each candidate row
-    * group is read through
+    * row groups whose min/max statistics can hold rows matching every
+    * translatable conjunct (through Spark's own ParquetFilters, so every
+    * pushable type prunes as it does in a scan) are the candidates — a
+    * pk key prunes by the key's range, and a `sequence` bound drops
+    * whole log files outside it before they count against the budget.
+    * With none, no reader is built; when their bytes exceed the budget
+    * nothing is decoded (rows = None; the caller keeps the scan).
+    * Otherwise each candidate row group is read through
     * `ParquetFileFormat.buildReaderWithPartitionValues` as a split of
     * its own, under the session's Hadoop conf plus the relation's
     * options, with `filters` as the pushed filters — so
@@ -295,14 +303,11 @@ object GraftBridge {
     * its filter above them. */
   def readLocalParquet(spark: SparkSession,
       relation: execution.datasources.HadoopFsRelation,
-      required: types.StructType, key: Expression,
-      filters: Seq[Expression]): LocalRead = {
+      required: types.StructType, filters: Seq[Expression]): LocalRead = {
     import scala.jdk.CollectionConverters._
     import execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetOptions}
-    def translate(e: Expression) = execution.datasources.DataSourceStrategy
-      .translateFilter(e, supportNestedPredicatePushdown = true)
-    val keyFilter = translate(key)
-    val pushed = filters.flatMap(translate)
+    val pushed = filters.flatMap(execution.datasources.DataSourceStrategy
+      .translateFilter(_, supportNestedPredicatePushdown = true))
     val cs = spark.asInstanceOf[classic.SparkSession]
     val sqlConf = cs.sessionState.conf
     val conf = cs.sessionState.newHadoopConfWithOptions(relation.options)
@@ -312,13 +317,15 @@ object GraftBridge {
       val footer = footerOf(st, conf)
       val meta = footer.getFileMetaData
       val blocks = footer.getBlocks
-      val pred = keyFilter.filter(_ => sqlConf.parquetFilterPushDown).flatMap(
-        new ParquetFilters(meta.getSchema, sqlConf.parquetFilterPushDownDate,
-          sqlConf.parquetFilterPushDownTimestamp, sqlConf.parquetFilterPushDownDecimal,
-          sqlConf.parquetFilterPushDownStringPredicate,
-          sqlConf.parquetFilterPushDownInFilterThreshold, sqlConf.caseSensitiveAnalysis,
-          execution.datasources.DataSourceUtils.datetimeRebaseSpec(
-            meta.getKeyValueMetaData.get, rebaseMode)).createFilter)
+      val parquetFilters = new ParquetFilters(meta.getSchema,
+        sqlConf.parquetFilterPushDownDate, sqlConf.parquetFilterPushDownTimestamp,
+        sqlConf.parquetFilterPushDownDecimal, sqlConf.parquetFilterPushDownStringPredicate,
+        sqlConf.parquetFilterPushDownInFilterThreshold, sqlConf.caseSensitiveAnalysis,
+        execution.datasources.DataSourceUtils.datetimeRebaseSpec(
+          meta.getKeyValueMetaData.get, rebaseMode))
+      val pred = pushed.filter(_ => sqlConf.parquetFilterPushDown)
+        .flatMap(parquetFilters.createFilter)
+        .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and)
       val kept = pred.fold(blocks)(p =>
         org.apache.parquet.filter2.compat.RowGroupFilter.filterRowGroups(
           org.apache.parquet.filter2.compat.FilterCompat.get(p), blocks, meta.getSchema))
@@ -357,6 +364,14 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       catalyst.plans.logical.LocalRelation(
         catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** A frame over an already-optimized plan (another frame's
+    * `optimizedPlan`): its own optimization starts from what that pass
+    * did, so rules that read data at optimize time (a driver point
+    * read) do not read it again. */
+  def frameOf(spark: SparkSession,
+      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Register a SQL function on an ALREADY-RUNNING session (notebooks,
     * tests). `spark.sql.extensions` is a static conf applied only at

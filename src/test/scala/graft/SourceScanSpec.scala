@@ -20,10 +20,14 @@ import scala.jdk.CollectionConverters._
   * guard verdict (Guards), one function swaps the engine's session
   * (QueryEngine.asSession) and one envelope wraps every write that is
   * not a SQL statement (QueryEngine.writeBatch, the only replay-skip
-  * check), while the dedup stream bodies live in StreamingDedup. A new
+  * check), while the dedup stream bodies live in StreamingDedup; one
+  * driver-side event fold (StateView.foldTail) serves the driver tail
+  * and the point reads, and only the snapshot read and the engine's log
+  * read tag a scan for them (Snapshots.PkOption). A new
   * pin variant, a hand-rolled thread, a second event-frame builder, a
   * second view shape, a second driver parquet reader, a guard probe
-  * outside Guards, a hand-rolled session swap or batch envelope fails
+  * outside Guards, a hand-rolled session swap or batch envelope, a
+  * second event fold or another tagged scan fails
   * here instead of quietly growing a second copy. Comment lines are
   * ignored, so docs may name what the code must not do. */
 class SourceScanSpec extends AnyFunSuite {
@@ -70,10 +74,10 @@ class SourceScanSpec extends AnyFunSuite {
 
   private val qe = "graft/exec/QueryEngine.scala"
 
-  /** The engine member (declared two spaces in) enclosing each
-    * QueryEngine code line that satisfies `hit`. */
-  private def enclosingMembers(hit: String => Boolean): Seq[String] = {
-    val code = sources.collectFirst { case (`qe`, c) => c }.get.toIndexedSeq
+  /** The member (declared two spaces in) enclosing each code line of
+    * `file` (QueryEngine by default) that satisfies `hit`. */
+  private def enclosingMembers(hit: String => Boolean, file: String = qe): Seq[String] = {
+    val code = sources.collectFirst { case (`file`, c) => c }.get.toIndexedSeq
     val Member = """^  (?:private\S* )?def (\w+)""".r.unanchored
     code.indices.filter(i => hit(code(i))).map { i =>
       (i to 0 by -1).iterator.map(code(_))
@@ -154,6 +158,31 @@ class SourceScanSpec extends AnyFunSuite {
   test("one optimizer-rule install site: PointReads.install") {
     assert(occurrences("extraOptimizations =") ==
       Map("graft/exec/PointReads.scala" -> 1))
+  }
+
+  test("one event fold (StateView.foldTail); only the snapshot and log reads tag a scan") {
+    val sv = "graft/state/StateView.scala"
+    // the driver reads reach event semantics only through StateView
+    for (f <- Seq("graft/exec/PointReads.scala", "org/apache/spark/sql/GraftBridge.scala"))
+      assert(!sources.collectFirst { case (`f`, c) => c }.get.exists(_.contains("EventLog.")), f)
+    // a test of an event's type on the driver is an event fold, and
+    // foldTail holds the only one
+    // (Scala `==`/`!=`, not a Column's `===`/`=!=`)
+    val DriverTest =
+      """(?<![=!])(==|!=)(?!=)\s*([\w.]*\.)?EventLog\.SOFT_DELETE|case\s+([\w.]*\.)?EventLog\.SOFT_DELETE|"SOFT_DELETE"""".r
+    def tests(l: String) = DriverTest.findFirstIn(l).isDefined
+    assert(sources.collect { case (f, c) if c.exists(tests) => f }.toSet ==
+      Set(sv, "graft/log/EventLog.scala"))
+    assert(enclosingMembers(tests, sv).toSet == Set("foldTail"))
+    assert(occurrences("def foldTail") == Map(sv -> 1))
+    // the pk tag (Snapshots.PkOption) is set by Snapshots.read and by the
+    // engine's one log read
+    val SetsTag = """PkOption\s*(,|->)""".r
+    def sets(l: String) = SetsTag.findFirstIn(l).isDefined
+    assert(sources.collect { case (f, c) if c.exists(sets) => f }.toSet ==
+      Set("graft/state/Snapshots.scala", qe))
+    assert(enclosingMembers(sets, "graft/state/Snapshots.scala") == Seq("read"))
+    assert(enclosingMembers(sets) == Seq("baseEvents"))
   }
 
   test("DML guard probes and the inline-key cap live in Guards") {

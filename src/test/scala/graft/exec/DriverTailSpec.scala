@@ -2,7 +2,10 @@ package graft.exec
 
 import graft.{GroupJobs, TestSpark}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +21,11 @@ import scala.util.Random
   * the literal cap, RESTORE) must keep the same answers. Pk point reads
   * over a snapshot, which decode its row groups on the driver, must
   * equal the same keys picked out of an unfiltered keyed read, over
-  * every snapshot layout and within and past the driver's byte budget. */
+  * every snapshot layout and within and past the driver's byte budget.
+  * Pk point reads of the keyed collapse (AS OF below or between
+  * snapshots, an unknown tail) fold their candidate events on the
+  * driver, and must equal a fold of the table's history written here,
+  * at every sequence. */
 class DriverTailSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -95,6 +102,147 @@ class DriverTailSpec extends AnyFunSuite {
 
   private def windowless(e: QueryEngine, t: String): Boolean =
     !plan(e.stateAt(t, None)).contains("Window")
+
+  /** The rows at bound `b` of a table whose history (`FOR SYSTEM_TIME
+    * ALL` rows: sequence, ts, event_type, pk, then the columns) is
+    * `hist`, keyed by the `id` column and rendered as `rows` renders
+    * them — folded here, independently of the engine: per key in
+    * sequence order, an INSERT sets the row, a SOFT_DELETE removes it,
+    * and any other event replaces a row that is there and leaves an
+    * absent key absent. */
+  private def foldLog(hist: Seq[org.apache.spark.sql.Row], idAt: Int,
+      b: Long): Map[Long, String] = {
+    val st = scala.collection.mutable.Map.empty[Long, String]
+    for (r <- hist.filter(_.getLong(0) <= b).sortBy(_.getLong(0))) {
+      val id = r.getLong(idAt)
+      val row = r.toSeq.drop(4).mkString("|")
+      r.getString(2) match {
+        case "INSERT" => st(id) = row
+        case "SOFT_DELETE" => st -= id
+        case _ => if (st.contains(id)) st(id) = row
+      }
+    }
+    st.toMap
+  }
+
+  /** AS OF at every bound in `bounds` (default 0 to the last sequence),
+    * for each key (`id = k`) and for all of them (`id IN`), equals
+    * `foldLog` of `hist` (default the table's history now). With
+    * `local`, every point read folds to a LocalRelation on the driver;
+    * without, it keeps its Window. */
+  private def assertTimeTravel(e: QueryEngine, t: String, keys: Seq[Long],
+      what: String, hist: Option[Seq[org.apache.spark.sql.Row]] = None,
+      bounds: Option[Seq[Long]] = None, local: Boolean = true): Unit = {
+    val h = hist.getOrElse(e.sql(s"SELECT * FROM $t FOR SYSTEM_TIME ALL").collect().toSeq)
+    val idAt = h.headOption.fold(0)(_.fieldIndex("id"))
+    for (b <- bounds.getOrElse(0L to e.catalog.lastSeq(t))) {
+      val want = foldLog(h, idAt, b)
+      def check(where: String, ks: Seq[Long]): Unit = {
+        val df = e.sql(s"SELECT * FROM $t FOR SYSTEM_TIME AS OF @SEQ:$b WHERE $where")
+        assert(rows(df) === ks.flatMap(want.get).sorted, s"$where AS OF $b, $what")
+        val opt = df.queryExecution.optimizedPlan
+        if (local) assert(opt.isInstanceOf[LocalRelation],
+          s"$where AS OF $b, $what, did not fold on the driver:\n$opt")
+        else assert(plan(df).contains("Window"), s"$where AS OF $b, $what:\n${plan(df)}")
+      }
+      keys.foreach(k => check(s"id = $k", Seq(k)))
+      check(s"id IN (${keys.mkString(", ")})", keys)
+    }
+  }
+
+  test("property: AS OF at every sequence equals an independent fold of the log") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE h (id BIGINT PRIMARY KEY, v BIGINT, s STRING)")
+    e.sql("INSERT INTO h VALUES (1, 10, 'a'), (2, 20, 'b'), (3, 30, 'c')")
+    e.sql("UPDATE h SET v = 11 WHERE id = 1")
+    e.sql("SNAPSHOT h")
+    // after the first snapshot: keys the slice only PATCHes, a DELETE
+    // then a re-INSERT of the same key, and a new key
+    e.sql("UPDATE h SET v = 21 WHERE id = 2")
+    e.sql("DELETE FROM h WHERE id = 3")
+    e.sql("INSERT INTO h VALUES (3, 33, 'again'), (4, 40, 'd')")
+    e.sql("UPDATE h SET s = 'b2' WHERE id IN (2, 4)")
+    e.sql("SNAPSHOT h")
+    e.sql("DELETE FROM h WHERE id = 1")
+    e.sql("UPDATE h SET v = v + 1 WHERE id = 3")
+    e.sql("INSERT INTO h VALUES (5, 50, 'e')")
+    val keys = Seq(1L, 2L, 3L, 4L, 5L, 99L)
+    assertTimeTravel(e, "h", keys, "two snapshots, tail known")
+    e.close()
+    // a reopened engine knows no tail: above the newest snapshot too,
+    // the read is the keyed collapse of the snapshot and the log slice
+    val r = new QueryEngine(spark, e.baseDir)
+    assertTimeTravel(r, "h", keys, "two snapshots, reopened")
+    // the matched batch of an UPDATE by pk is the same collapse: one
+    // span for its reads of the snapshot and the slice (the log files
+    // below the snapshot drop at their footers by the sequence bound)
+    // and the events it folded
+    val spans = pointReads(r, "UPDATE h SET v = v + 100 WHERE id = 3")
+    val R = """files=(\d+) row_groups=(\d+)/(\d+) bytes=\d+ rows=\d+ events=(\d+)""".r
+    val folded = spans.collect { case R(_, k, n, ev) => (k.toInt, n.toInt, ev.toInt) }
+    assert(folded.nonEmpty && folded.forall { case (k, n, ev) => k < n && ev >= 2 }, spans)
+    // ALTER ADD: older events read the new column as NULL; DROP
+    r.sql("ALTER TABLE h ADD COLUMN x BIGINT")
+    r.sql("UPDATE h SET x = 7 WHERE id = 2")
+    r.sql("INSERT INTO h VALUES (6, 60, 'f', 6)")
+    assertTimeTravel(r, "h", keys :+ 6L, "ALTER ADD")
+    r.sql("ALTER TABLE h DROP COLUMN s")
+    r.sql("UPDATE h SET v = 0 WHERE id = 6")
+    assertTimeTravel(r, "h", keys :+ 6L, "ALTER DROP")
+    // VACUUM RETAIN: below the floor the read raises; from it on, the
+    // snapshot at the floor stands for the vacuumed events
+    val before = r.sql("SELECT * FROM h FOR SYSTEM_TIME ALL").collect().toSeq
+    val floor = r.catalog.lastSeq("h") - 3
+    r.sql(s"VACUUM h RETAIN @SEQ:$floor")
+    val kept = r.catalog.retentionFloor("h")
+    assert(kept > 0 && kept <= floor)
+    intercept[IllegalStateException](
+      r.sql(s"SELECT * FROM h FOR SYSTEM_TIME AS OF @SEQ:${kept - 1} WHERE id = 2").collect())
+    assertTimeTravel(r, "h", keys :+ 6L, "VACUUM RETAIN", hist = Some(before),
+      bounds = Some(kept to r.catalog.lastSeq("h")))
+    r.close()
+  }
+
+  test("property: AS OF over an encrypted log equals an independent fold") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("SET ENCRYPTION KEY '" + java.util.Base64.getEncoder
+      .encodeToString(Array.tabulate(32)(_.toByte)) + "'")
+    try {
+      e.sql("CREATE TABLE ce (id BIGINT PRIMARY KEY, v BIGINT)")
+      e.sql("INSERT INTO ce VALUES (1, 1), (2, 2), (3, 3)")
+      e.sql("DELETE FROM ce WHERE id = 2")
+      e.sql("SNAPSHOT ce")
+      e.sql("INSERT INTO ce VALUES (2, 22)")
+      e.sql("UPDATE ce SET v = 9 WHERE id = 1")
+      e.sql("SNAPSHOT ce")
+      e.sql("UPDATE ce SET v = 10 WHERE id = 1")
+      e.sql("DELETE FROM ce WHERE id = 3")
+      assertTimeTravel(e, "ce", Seq(1L, 2L, 3L, 4L), "encrypted log")
+    } finally e.sql("SET ENCRYPTION OFF")
+    e.close()
+  }
+
+  test("property: AS OF over the driver's byte budget keeps the window and the rows") {
+    val e = QueryEngine.scratch(spark)
+    e.sql("CREATE TABLE hb (id BIGINT PRIMARY KEY, s STRING)")
+    // ~10 MB of 512-character strings in hashed key order, so every row
+    // group of the log is a candidate for any key
+    e.sql("INSERT INTO hb SELECT id, repeat(sha2(CAST(id AS STRING), 512), 4) " +
+      "FROM range(1, 20001) ORDER BY sha2(CAST(id AS STRING), 256)")
+    val loaded = e.catalog.lastSeq("hb")
+    e.sql("UPDATE hb SET s = 'patched' WHERE id = 5")
+    e.sql("DELETE FROM hb WHERE id = 6")
+    e.sql("SNAPSHOT hb")
+    e.sql("UPDATE hb SET s = 'again' WHERE id = 5")
+    // (every key in the loaded range: an absent one prunes at the footers)
+    val keys = Seq(5L, 6L, 77L)
+    val hist = e.sql("SELECT * FROM hb FOR SYSTEM_TIME ALL WHERE id IN (5, 6, 77)")
+      .collect().toSeq
+    // below the snapshot the log alone is over the budget
+    assertTimeTravel(e, "hb", keys, "over the budget", hist = Some(hist),
+      bounds = Some(Seq(1L, loaded / 2, loaded, loaded + 1)), local = false)
+    e.close()
+  }
 
   test("property: tail reads equal keyed reads across seeded literal scripts") {
     val rnd = new Random(11)
@@ -275,7 +423,25 @@ class DriverTailSpec extends AnyFunSuite {
     assert(jobs(assert(e.sql("SELECT id, v FROM lit").collect()
       .map(r => s"${r.getLong(0)}${r.getString(1)}").sorted.toSeq ===
       Seq("1a", "2bb"))) === 0, "SELECT on a literal-built table")
+
+    // below the snapshot the read is the keyed collapse of the log
+    // alone: its candidate events fold on the driver
+    val below = s"SELECT id, bal FROM a FOR SYSTEM_TIME AS OF @SEQ:${snap - 1} WHERE id = 7"
+    e.sql(below).collect() // warm
+    assert(jobs(assert(e.sql(below).collect().map(_.getLong(1)).toSeq ===
+      Seq(70L))) === 0, "AS OF below the snapshot")
+    // a second snapshot, then a reopened engine, which knows no tail:
+    // between the two the read is the older snapshot plus a log slice
+    e.sql("SNAPSHOT a")
     e.close()
+    val r = new QueryEngine(spark, e.baseDir)
+    val between = s"SELECT id, bal FROM a FOR SYSTEM_TIME AS OF @SEQ:${snap + 3} " +
+      "WHERE id IN (7, 8, 5002)"
+    r.sql(between).collect() // warm
+    assert(jobs(assert(r.sql(between).collect().map(x => x.getLong(0) -> x.getLong(1))
+      .sorted.toSeq === Seq(7L -> 71L, 8L -> 80L, 5002L -> 2L))) === 0,
+      "AS OF between two snapshots, reopened")
+    r.close()
   }
 
   test("a literal INSERT above a snapshot plans one driver read for its guards") {
@@ -298,8 +464,37 @@ class DriverTailSpec extends AnyFunSuite {
     e.sql("SNAPSHOT dept")
     e.sql("SNAPSHOT emp")
     e.sql("INSERT INTO emp VALUES (100, 2, 'x100', 5)") // warm
-    val child = pointReads(e, "INSERT INTO emp VALUES (101, 3, 'x101', 6)")
+    // the probes that do not fold run as one union job; it plans from
+    // their optimized plans, so the point reads they made on the
+    // statement thread are not made again on the verdict fork
+    val unions = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[LogicalPlan]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("_err")) unions.add(qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val child = try {
+      val spans = pointReads(e, "INSERT INTO emp VALUES (101, 3, 'x101', 6)")
+      // the listener shares the listener bus queue: sync drains it
+      val g = GroupJobs(spark, "probe-union")
+      g.sync()
+      g.close()
+      spans
+    } finally spark.listenerManager.unregister(listener)
     info(s"guarded child INSERT: ${child.length} point-read spans")
+    assert(unions.size === 1, unions)
+    // the FK probe read its parent by key on the driver: no tagged scan
+    // of dept is left for the union to read again
+    val parentScans = unions.get(0).collect {
+      case l: LogicalRelation if (l.relation match {
+        case f: HadoopFsRelation => f.options.contains(graft.state.Snapshots.PkOption) &&
+          f.location.rootPaths.exists(_.toString.contains("/tables/dept/"))
+        case _ => false
+      }) => l
+    }
+    assert(parentScans.isEmpty, s"probe union re-plans a tagged scan:\n${unions.get(0)}")
     assert(e.sql("SELECT COUNT(*) FROM emp").collect().head.getLong(0) === 42L)
     e.close()
   }

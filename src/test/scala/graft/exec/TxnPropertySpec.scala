@@ -16,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The script space is generated from a seeded RNG (deterministic
   * runs), mixing inserts, expression updates, pk-changing updates,
-  * deletes, and savepoint pairs. Spark jobs per statement make each
+  * deletes, UPDATE/DELETE by literal key lists, and savepoint pairs.
+  * COMMIT-equivalence also runs from a table with a snapshot and a
+  * bulk batch past the literal cap above it, where the engine holds no
+  * driver tail and every state read is the keyed collapse — which a pk
+  * point read may fold on the driver. Spark jobs per statement make each
   * case ~seconds, so this runs a handful of random scripts rather than
   * scalacheck's default 100 — the invariant coverage comes from the
   * statement mix, not case volume. */
@@ -31,12 +35,34 @@ class TxnPropertySpec extends AnyFunSuite {
     e
   }
 
+  /** Keys the generator's IN lists draw from: the seeded rows and the
+    * INSERT band, live or not. */
+  private val smallKeys: Seq[Long] = Seq(1L, 2L, 3L, 4L) ++ (100L to 140L by 5L)
+
+  /** `freshSeeded` with a snapshot and, above it, a bulk INSERT past
+    * the literal cap, so the engine knows no driver tail: every state
+    * read is the keyed collapse of the snapshot and the log slice. The
+    * bulk ids are spaced wider than every pk-shift the generator can
+    * apply; `bulkKeys` are some of them. */
+  private def bulkSeeded(): QueryEngine = {
+    val e = freshSeeded()
+    e.sql("SNAPSHOT t")
+    e.sql("INSERT INTO t SELECT 10000000 + 10000 * id, id FROM range(9000)")
+    e
+  }
+
+  private val bulkKeys: Seq[Long] = Seq(0L, 1L, 2L, 8998L, 8999L).map(10000000L + 10000L * _)
+
   /** A random DML statement that is always valid against any state the
     * generator can reach (ids stay inside disjoint ranges, so inserts
-    * never collide and pk-shifts move to a vacant band). */
-  private def randomScript(rnd: scala.util.Random, len: Int): Seq[String] =
+    * never collide and pk-shifts move to a vacant band). IN lists pick
+    * from `keys`. */
+  private def randomScript(rnd: scala.util.Random, len: Int,
+      keys: Seq[Long] = smallKeys): Seq[String] =
     (0 until len).map { i =>
-      rnd.nextInt(5) match {
+      def someKeys = Seq.fill(1 + rnd.nextInt(3))(keys(rnd.nextInt(keys.length)))
+        .distinct.mkString(", ")
+      rnd.nextInt(7) match {
         case 0 => s"INSERT INTO t VALUES (${100 + 10 * i + rnd.nextInt(5)}, ${rnd.nextInt(50)})"
         case 1 => s"UPDATE t SET v = v * 2 + $i WHERE id % ${2 + rnd.nextInt(3)} = 0"
         case 2 => s"UPDATE t SET id = id + 1000 WHERE id >= ${100 + rnd.nextInt(40)}"
@@ -47,6 +73,10 @@ class TxnPropertySpec extends AnyFunSuite {
           // any read path whose plan (flat scan vs windowed union)
           // depends on transaction mode — each target band is disjoint
           s"INSERT INTO t SELECT id + ${5000 * (1 + rnd.nextInt(400))}, v + 1 FROM t WHERE id < 100"
+        // point statements by literal keys: a matched batch of at most
+        // one row may fold on the driver, a larger one keeps its order
+        case 5 => s"UPDATE t SET v = v + ${i + 1} WHERE id IN ($someKeys)"
+        case 6 => s"DELETE FROM t WHERE id IN ($someKeys)"
       }
     }
 
@@ -65,6 +95,22 @@ class TxnPropertySpec extends AnyFunSuite {
       script.foreach(txn.sql(_))
       txn.sql("COMMIT")
       assert(dump(bare) === dump(txn), s"seed=$seed script=$script")
+    }
+  }
+
+  test("property: BEGIN..COMMIT equals the bare script over a snapshot and an unknown tail") {
+    val keys = smallKeys ++ bulkKeys
+    for (seed <- 21 to 22) {
+      val script = randomScript(new scala.util.Random(seed), 4, keys)
+      val bare = bulkSeeded()
+      script.foreach(bare.sql(_))
+      val txn = bulkSeeded()
+      txn.sql("BEGIN")
+      script.foreach(txn.sql(_))
+      txn.sql("COMMIT")
+      assert(dump(bare) === dump(txn), s"seed=$seed script=$script")
+      bare.close()
+      txn.close()
     }
   }
 

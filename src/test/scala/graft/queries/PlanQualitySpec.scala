@@ -136,14 +136,24 @@ class PlanQualitySpec extends AnyFunSuite {
     // would stay on the driver and read as a LocalRelation)
     e.sql("INSERT INTO pt SELECT id, CONCAT('v', id) FROM range(9000)")
     e.sql("UPDATE pt SET v = 'u' WHERE k < 2000") // PATCHes: a real collapse
+    // the collapse is keyed on the payload pk attribute, so a pk
+    // predicate must reach the parquet scan as a pushed nested filter -
+    // a plan that collapses the whole log first fails a 100 TB point
+    // lookup no matter how fast everything above it is. A range keeps
+    // the collapse over the pruned scan
+    val dr = e.sql("SELECT k, v FROM pt WHERE k BETWEEN 76 AND 77")
+    val pr = plan(dr)
+    assert(pr.contains("Window") && pr.contains("GreaterThanOrEqual(payload.k,76)") &&
+      pr.contains("LessThanOrEqual(payload.k,77)"),
+      "pk predicate did not reach the scan:\n" + pr.take(3000))
+    assert(dr.collect().map(_.getString(1)).toSeq === Seq("u", "u"))
+    // a literal key goes further: the log's candidate row groups decode
+    // on the driver and the collapse folds there with them - no
+    // window, no scan, no job
     val df = e.sql("SELECT k, v FROM pt WHERE k = 77")
     val p = plan(df)
-    // the collapse is keyed on the payload pk attribute, so the
-    // equality must reach the parquet scan as a pushed nested filter -
-    // a plan that collapses the whole log first fails a 100 TB point
-    // lookup no matter how fast everything above it is
-    assert(p.contains("Window") && p.contains("EqualTo(payload.k,77)"),
-      "pk predicate did not reach the scan:\n" + p.take(3000))
+    assert(p.contains("LocalTableScan") && !p.contains("Window") &&
+      !p.contains("Scan parquet"), "pk read did not fold to the driver:\n" + p.take(3000))
     assert(df.collect().map(_.getString(1)).toSeq === Seq("u"))
     // a snapshot plus a driver-held tail that PATCHes the key: the
     // snapshot row groups that can hold the key decode on the driver at

@@ -292,6 +292,38 @@ class PgServerSpec extends AnyFunSuite {
     }
   }
 
+  test("an AS OF point read below the snapshot runs no Spark job over the wire") {
+    withServer { (e, port) =>
+      e.sql("CREATE TABLE ao (k BIGINT PRIMARY KEY, v BIGINT)")
+      e.sql("INSERT INTO ao SELECT id, id * 2 FROM range(1, 2001)")
+      val loaded = e.catalog.lastSeq("ao")
+      e.sql("UPDATE ao SET v = -1 WHERE k = 7")
+      e.sql("SNAPSHOT ao")
+      e.sql("UPDATE ao SET v = -2 WHERE k = 7")
+      // below the snapshot the read replays the log alone
+      val below = s"SELECT k, v FROM ao FOR SYSTEM_TIME AS OF @SEQ:$loaded WHERE k = 7"
+      assert(psql(port, below)._2.trim === "7|14")
+      val wire = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+              .exists(_.startsWith("graft-pg-"))) wire.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val (code, out, err) = psql(port, below)
+        assert(code === 0 && out.trim === "7|14", err)
+        val (code2, out2, err2) = psql(port,
+          s"SELECT k, v FROM ao FOR SYSTEM_TIME AS OF @SEQ:${loaded + 1} WHERE k = 7")
+        assert(code2 === 0 && out2.trim === "7|-1", err2)
+        val g = graft.GroupJobs(spark, "wire-sync")
+        g.sync()
+        g.close()
+      } finally spark.sparkContext.removeSparkListener(l)
+      assert(wire.get === 0, s"${wire.get} jobs")
+    }
+  }
+
   test("command tags carry the statement type and affected count") {
     withServer { (_, port) =>
       // drivers/ORMs parse update counts from these tags (JDBC
