@@ -166,7 +166,7 @@ final class Leadership(spark: SparkSession, coordDir: String,
       * SHOW CLUSTER's leadership row (lease epoch vs current epoch +
       * current leader id). */
     def attach(engine: graft.exec.QueryEngine): Unit = {
-      engine.setCommitFence(() => fence())
+      engine.commit.setCommitFence(() => fence())
       engine.setLeaseStatus(() => {
         val cur = currentEpoch()
         (epoch, cur, leaderOf(cur))

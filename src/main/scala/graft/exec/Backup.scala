@@ -87,7 +87,7 @@ object Backup {
     def walk(dir: Path): Seq[(String, Long)] =
       fs.listStatus(dir).toSeq.flatMap { st =>
         val name = st.getPath.getName
-        if (name.startsWith(".txn-staging-") || Excluded(name)) Nil
+        if (name.startsWith(Commit.StagingPrefix) || Excluded(name)) Nil
         else if (st.isDirectory) walk(st.getPath)
         else {
           val rel = st.getPath.toUri.getPath.stripPrefix(baseUri)

@@ -27,7 +27,8 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 final class MatViews private[exec] (engine: QueryEngine) {
   import MatViews._
   import Guards.{cappedValues, collectInlineKeys, InlineKeyCap}
-  import engine.{catalog, encrypted, events, select, spark, stateAt,
+  import engine.commit.encrypted
+  import engine.{catalog, events, select, spark, stateAt,
     summary, tracer}
 
   // ========================================================= statements

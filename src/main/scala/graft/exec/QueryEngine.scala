@@ -3,7 +3,7 @@ package graft.exec
 import graft.catalog.{ColumnDef, TableCatalog, TableDef}
 import graft.log.EventLog
 import graft.sql.{SqlText, Statement, StatementRouter, SystemTime, TemporalPre}
-import graft.state.{DriverTails, Snapshots, StateView}
+import graft.state.{Snapshots, StateView}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -74,25 +74,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private val guards = new Guards(this)
 
   /** Identity for the base-dir write lock (BaseDirLock). */
-  private val engineId = java.util.UUID.randomUUID().toString
-  private var writeLockHeld = false
-
-  /** Take the base-dir write lock before the first state-changing
-    * operation — a second live engine writing the same base dir would
-    * duplicate sequences (the reference's process write lock,
-    * index.rs:22-26, guards the same hazard). Read-only engines never
-    * lock, so concurrent readers stay free. */
-  private def ensureWriteLock(): Unit =
-    if (!writeLockHeld) {
-      BaseDirLock.acquire(spark, baseDir, engineId)
-      writeLockHeld = true
-      closed = false // a write through a closed engine re-opens it
-      // construction skipped recovery if a live writer held the dir at
-      // the time; we may have just stolen that writer's now-stale lock,
-      // so its committed-but-unpublished manifests (and counters) must
-      // land before we assign any sequence
-      sweepStaging()
-    }
+  private[exec] val engineId = java.util.UUID.randomUUID().toString
 
   /** Release the base-dir write lock. Call when done with an engine
     * whose base dir another engine should take over. Idempotent; the
@@ -102,10 +84,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     flushAudit() // the buffered audit tail lands with the lock still held
     dropAllCached() // free the result cache's executor blocks with the engine
     freeStatementPins() // and every statement-path pin
-    if (writeLockHeld) {
-      BaseDirLock.release(spark, baseDir, engineId)
-      writeLockHeld = false
-    }
+    commit.releaseWriteLock() // readiness probes 503 until a write re-opens
     // replication links die with the engine: a closed replica must not
     // linger in its primary's SHOW CLUSTER (phantom link, unbounded
     // apparent lag, and a strong reference pinning the dead engine),
@@ -114,13 +93,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     followsFrom.clear()
     followedBy.forEach((k, f) => f.followsFrom.remove(k._1, this))
     followedBy.clear()
-    closed = true // readiness probes 503 until a write re-opens
   }
-
-  /** True between close() and the next lock re-acquisition — the
-    * window where the owner has declared the engine done and a
-    * readiness probe must stop routing traffic to it. */
-  @volatile private var closed = false
 
   // ------------------------------------------------------- pin registry
 
@@ -150,7 +123,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * (1 MB total), so the row bound is a plan-size guard, not a memory
     * guard. 8192 rows of any literalizable schema under 1 MB embed
     * safely in a driver plan. */
-  private val PinLiteralizeMaxRows = 8192L
+  private[exec] val PinLiteralizeMaxRows = 8192L
 
   /** Tighter cap when the schema carries any STRING column. Row-count
     * bounds don't bound BYTES, and strings are unbounded exactly like
@@ -266,84 +239,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     }
   }
 
-  /** Recovery sweep over COMMIT staging dirs. A staging dir WITH a
-    * `manifest` file passed its commit point — the crash hit
-    * mid-publish, so roll it forward (catalog counters + file renames,
-    * both idempotent). A dir WITHOUT one never committed and never will
-    * — discard it, or repeated failures would accumulate parquet copies
-    * forever. Skipped entirely while another LIVE engine holds the
-    * write lock: its in-flight staging must not be touched. (While WE
-    * hold the lock it is always safe: publishAtomic only runs under the
-    * statement write lock, so no staging of our own is in flight.) */
-  private def sweepStaging(): Unit = {
-    val base = new Path(baseDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base) && !BaseDirLock.heldByLiveOther(spark, baseDir, engineId))
-      for (st <- fs.listStatus(base)
-          if st.getPath.getName.startsWith(".txn-staging-")) {
-        if (fs.exists(new Path(st.getPath, "manifest")))
-          completePublish(st.getPath)
-        else scala.util.Try(fs.delete(st.getPath, true))
-      }
-  }
-
-  sweepStaging() // crash recovery at open
+  /** The commit path (write lock, transactions, publish, driver tails);
+    * built after everything its crash-recovery sweep at open reads. */
+  private[graft] val commit = new Commit(this)
 
   // ======================================================= transactions
 
-  /** A buffered multi-statement transaction (sql_bridge.rs:453-568,
-    * transaction.rs). DML inside BEGIN...COMMIT appends pinned event
-    * batches to this buffer instead of the parquet log; reads union
-    * the buffer back in (read-your-writes); COMMIT flushes the batches
-    * in order, ROLLBACK discards them. Catalog DDL stays immediate
-    * (non-transactional), like most engines. Buffered sequence numbers
-    * are PROVISIONAL: if a concurrent direct writer (streaming ingest)
-    * advances the log while the transaction is open, COMMIT shifts each
-    * batch by the table's offset so flushed sequences stay unique and
-    * contiguous.
-    *
-    * Scale note: the buffer holds pinned DataFrames
-    * (executor block storage, not driver heap), so a large transaction
-    * costs the same memory as the same statements outside one. */
-  private final class Txn {
-    // (table, pinned event frame, last provisional sequence in batch)
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame, Long)]
-    // tables whose buffered writes revoke the flat-log certificate at
-    // COMMIT (PATCH/SOFT_DELETE or unprobed INSERT). A savepoint
-    // rollback may leave a table here whose mutating writes were all
-    // rolled back — the certificate is then revoked unnecessarily,
-    // which is conservative (reads fall back to the keyed collapse),
-    // never wrong
-    val mutated = scala.collection.mutable.HashSet.empty[String]
-    val seqs = scala.collection.mutable.HashMap.empty[String, Long]
-    // catalog.lastSeq at the first buffered append per table — the
-    // anchor for the commit-time re-sequencing offset
-    val baseSeqs = scala.collection.mutable.HashMap.empty[String, Long]
-    // snapshot-isolation read horizon: catalog.lastSeq at this table's
-    // FIRST access (read or write) inside the transaction. Reads see
-    // the durable log only up to this sequence (plus own buffered
-    // writes); COMMIT detects write-write conflicts against events
-    // other writers landed past it (mvcc.rs snapshot semantics).
-    // Deliberately NOT restored by savepoint rollback — the snapshot
-    // is transaction-wide, like PG REPEATABLE READ.
-    val snapSeqs = scala.collection.mutable.HashMap.empty[String, Long]
-    // (name, pending length, seq snapshot); later entries shadow earlier
-    val savepoints =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Int, Map[String, Long])]
-    /** PG-style abort: any failed statement inside the transaction
-      * blocks everything except COMMIT (treated as ROLLBACK), ROLLBACK,
-      * and ROLLBACK TO SAVEPOINT (sql_bridge.rs:330-345). */
-    var aborted = false
-
-    def restore(len: Int, seqSnap: Map[String, Long]): Unit = {
-      pending.dropRightInPlace(pending.length - len)
-      seqs.clear(); seqs ++= seqSnap
-      // a table whose every batch was rolled away must re-anchor on its
-      // next append — a stale anchor would over-shift the new batches
-      // at COMMIT and leave a permanent sequence gap
-      baseSeqs.filterInPlace { case (tbl, _) => pending.exists(_._1 == tbl) }
-    }
-  }
   /** An independent client session over this engine — its own
     * transaction state, sharing the engine's storage, catalog, and
     * single-writer lock (the reference's MVCC runs one transaction per
@@ -355,7 +256,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * sessions serialize on the engine's write lock; sessions are not
     * for intra-statement parallelism. */
   final class Session private[QueryEngine] () {
-    private[QueryEngine] var txn: Option[Txn] = None
+    private[QueryEngine] var txn: Option[Commit.Txn] = None
     // security context (row_level_security.rs:130-162): row policies
     // filter reads/writes for non-superusers once a table enables RLS.
     // The default context is the superuser — engine-internal work
@@ -401,18 +302,18 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       asSession(this) { catalog.require(table); checkPrivilege(table, priv) }
   }
 
-  private val defaultSession = new Session()
+  private[exec] val defaultSession = new Session()
   // the session whose statement is currently executing — swapped only
   // by asSession, under the write lock (statements, including nested
   // trigger/procedure bodies, run single-threaded per engine)
-  private var current: Session = defaultSession
+  private var current: QueryEngine#Session = defaultSession
 
-  /** Run `body` as session `s`: under the write-lock monitor, with
-    * `current` swapped to `s` and restored afterwards. Reentrant, like
-    * the monitor: a trigger body or an auto refresh nests inside the
-    * statement that runs it. The one place `current` changes. */
-  private[exec] def asSession[T](s: Session)(body: => T): T =
-    writeLock.synchronized {
+  /** Run `body` as session `s` under the write-lock monitor
+    * (Commit.locked), with `current` swapped to `s` and restored after.
+    * Reentrant like the monitor: a trigger body or an auto refresh
+    * nests inside its statement. The one place `current` changes. */
+  private[exec] def asSession[T](s: QueryEngine#Session)(body: => T): T =
+    commit.locked {
       val prev = current
       current = s
       try body finally current = prev
@@ -422,144 +323,16 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * own `sql` is the default session. */
   def newSession(): Session = new Session()
 
-  private def txn: Option[Txn] = current.txn
-  private def txn_=(v: Option[Txn]): Unit = current.txn = v
-
-  /** Serializes every state-changing entry point — SQL statements
-    * (sqlAs) and every other write (writeBatch: stream, replicated and
-    * data-source batches), both entered through asSession — the same
-    * single-writer discipline the reference enforces with its process
-    * write lock (index.rs:22-26). Without it a micro-batch and a
-    * statement could read the same lastSeq and assign duplicate
-    * sequences. */
-  private val writeLock = new Object
+  private[exec] def txn: Option[Commit.Txn] = current.txn
+  private[exec] def txn_=(v: Option[Commit.Txn]): Unit = current.txn = v
 
   def inTransaction: Boolean = txn.isDefined
 
-  private def begin(): DataFrame = {
-    // idempotent, like the reference (sql_bridge.rs:454-460)
-    if (txn.isEmpty) txn = Some(new Txn)
-    summary("begin", 0L, 0L)
-  }
-
-  private def commitTxn(): DataFrame = txn match {
-    case None => summary("commit", 0L, 0L) // PG: COMMIT outside txn is a no-op
-    case Some(tx) if tx.aborted =>
-      txn = None
-      metricTxnRollbacks += 1
-      summary("rollback", 0L, 0L) // PG: COMMIT of aborted = ROLLBACK
-    case Some(tx) if tx.pending.isEmpty =>
-      // a read-only transaction publishes nothing — in particular it
-      // must NOT take the base-dir write lock (isMutating agrees)
-      txn = None
-      metricTxnCommits += 1
-      summary("commit", 0L, 0L)
-    case Some(tx) =>
-      ensureWriteLock()
-      // first-committer-wins write-write conflict detection (snapshot
-      // isolation, mvcc.rs): an event any other writer landed after
-      // this transaction's per-table snapshot, on a pk this
-      // transaction also writes, aborts the COMMIT (PG 40001). The
-      // probe is one set-based semi join per written table, and is
-      // skipped entirely when the table's log never advanced past the
-      // snapshot — the zero-interleave case costs a counter lookup.
-      for ((tbl, evs) <- tx.pending.groupBy(_._1); t <- catalog.get(tbl)) {
-        val snap = tx.snapSeqs.getOrElse(tbl,
-          tx.baseSeqs.getOrElse(tbl, catalog.lastSeq(tbl)))
-        if (catalog.lastSeq(tbl) > snap) {
-          val mine = evs.map(_._2.select(col("pk")))
-            .reduce(_ unionByName _).distinct()
-          val theirs = baseEvents(t).where(col("sequence") > snap)
-            .select(col("pk"))
-          if (theirs.join(mine, Seq("pk"), "left_semi").limit(1).count() > 0) {
-            txn = None // the transaction is aborted, not retryable as-is
-            throw new QueryEngine.SerializationFailureException(
-              s"could not serialize access: concurrent update on $tbl " +
-                s"committed after this transaction's snapshot ($snap)")
-          }
-        }
-      }
-      // per-table shift for concurrent direct appends (streaming
-      // ingest) that advanced the log past this txn's provisional
-      // sequences; 0 when nothing interleaved
-      val offsets = tx.baseSeqs.map { case (tbl, base) =>
-        tbl -> (catalog.lastSeq(tbl) - base)
-      }
-      val batches = tx.pending.toSeq.map { case (table, ev, _) =>
-        (table, shiftSequences(ev, offsets.getOrElse(table, 0L)))
-      }
-      val finalSeqs = tx.pending.groupBy(_._1).map { case (table, bs) =>
-        table -> (bs.map(_._3).max + offsets.getOrElse(table, 0L))
-      }.toMap
-      val n = tx.pending.length.toLong
-      // all-or-nothing: every batch stages first (invisible to readers;
-      // a failure there aborts with the log untouched and the
-      // transaction intact for ROLLBACK), then ONE manifest rename is
-      // the commit point — a crash on either side of it leaves either
-      // nothing or (after the reopen sweep) everything visible
-      try {
-        publishAtomic(batches, finalSeqs, None, mutated = tx.mutated.toSet)
-        txn = None
-        metricTxnCommits += 1
-        summary("commit", n, 0L)
-      } catch {
-        case e: CommitIncompleteException =>
-          // past the commit point: durable, completes at next engine
-          // open — clear the txn (it IS committed) and surface the
-          // incomplete in-process visibility instead of masking it
-          txn = None
-          throw e
-        case e: Throwable =>
-          throw new IllegalStateException(
-            s"COMMIT aborted while staging (log untouched, transaction still open): ${e.getMessage}", e)
-      }
-  }
-
-  /** Thrown when a commit passed its manifest commit point but the
-    * publish into the logs did not finish (injected fault or I/O
-    * error). The data is durable: the next engine open on this base dir
-    * rolls the manifest forward. In-process reads may miss part of the
-    * batch until then — close() and reopen. */
-  final class CommitIncompleteException(msg: String, cause: Throwable)
-    extends IllegalStateException(msg, cause)
-
-  /** Test-only fault injection for the crash-atomicity specs: thrown
-    * exceptions simulate a crash just before the manifest rename (commit
-    * point) or before the i-th post-commit-point publish rename. */
-  private[graft] var testFailBeforeManifestRename: () => Unit = () => ()
-  private[graft] var testFailBeforePublishRename: Int => Unit = _ => ()
-
-  private def enc(s: String) =
-    java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
-  private def dec(s: String) =
-    java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Atomically land event batches + the matching catalog updates.
-    *
-    * Protocol (the classic write-ahead manifest, same job the
-    * reference's WAL does for its transactions — wal.rs,
-    * tests/wal_crash_recovery_test.rs):
-    *   1. every batch writes its parquet under a fresh staging dir
-    *      (parallel, multi-file — no coalesce bottleneck);
-    *   2. a manifest listing every staged file, the per-table final
-    *      sequence counters, and any stream batch-id lands via ONE
-    *      atomic rename — this is the commit point;
-    *   3. the publish applies the catalog updates (counters before data:
-    *      a fault between the two leaves a harmless sequence hole, never
-    *      a duplicate) and renames the staged files into the logs.
-    * A failure before 2 deletes staging and rethrows — nothing
-    * happened. A failure after 2 throws CommitIncompleteException — the
-    * engine-open sweep replays step 3, which is idempotent (counters
-    * max-merge; a missing staged file means it already moved). */
-  /** Optional pre-commit fence, run immediately before every atomic
-    * publish's commit point (the manifest rename).
-    * graft.cluster.Leadership installs its stale-epoch check here so
-    * a deposed leader (raft.rs term fencing, re-expressed for shared
-    * storage) aborts BEFORE its write becomes durable — the statement
-    * fails whole and staging is cleaned, leaving the successor's log
-    * untouched. */
-  @volatile private var commitFence: () => Unit = () => ()
-  def setCommitFence(f: () => Unit): Unit = commitFence = f
+  /** Raise for `what` inside a transaction: it changes storage that a
+    * ROLLBACK could not take back, or would capture buffered writes. */
+  private def outsideTxn(what: String): Unit =
+    if (txn.isDefined)
+      throw new IllegalStateException(s"$what cannot run inside a transaction")
 
   // ------------------------------------------------ cluster visibility
   // SHOW CLUSTER's data: replication links registered by
@@ -612,17 +385,12 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       .toDF("kind", "subject", "role", "peer", "local_seq", "peer_seq", "lag")
   }
 
-  // wall-clock of the last completed publish, for the health probe's
-  // "last publish age" (health.rs reports the same freshness signal);
-  // -1 until this engine publishes
-  @volatile private var lastPublishAtMs = -1L
-
   /** Health-probe snapshot (served by graft.server.HttpAdmin /health;
     * the reference's health endpoint reports the same shape,
     * driftdb-server/src/health.rs:1-272): engine liveness facts that
     * cost no Spark job — catalog size, write-lock state, and the age
     * of the last durable publish. */
-  def healthSnapshot: Map[String, String] = writeLock.synchronized {
+  def healthSnapshot: Map[String, String] = commit.locked {
     // under the statement lock: the probe runs on HttpAdmin's
     // dispatcher thread and would otherwise iterate the catalog's
     // mutable maps mid-DDL (torn reads / CME → a healthy server 500s
@@ -630,240 +398,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // microseconds; a probe blocking behind a long statement is the
     // intended "hung engine = hung probe" signal anyway.
     Map(
-      "status" -> (if (closed) "closed" else "ok"),
+      "status" -> (if (commit.closed) "closed" else "ok"),
       "tables" -> catalog.tableNames.size.toString,
       "views" -> catalog.viewNames.size.toString,
-      "write_lock_held" -> writeLockHeld.toString,
+      "write_lock_held" -> commit.writeLockHeld.toString,
       "last_publish_age_ms" ->
-        (if (lastPublishAtMs < 0) "-1"
-         else (System.currentTimeMillis() - lastPublishAtMs).toString))
-  }
-
-  private def publishAtomic(batches: Seq[(String, DataFrame)],
-      seqs: Map[String, Long], stream: Option[(String, Long)],
-      marks: Map[String, Long] = Map.empty,
-      mutated: Set[String] = Set.empty,
-      validate: () => Unit = () => ()): Unit = {
-    val stagingRoot = new Path(s"$baseDir/.txn-staging-${System.nanoTime()}")
-    val fs = stagingRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // each touched table's tail as it stands before this publish, and
-    // the rows of every batch the driver writes itself
-    val tailsBefore = batches.map(_._1).distinct
-      .map(n => n -> catalog.get(n).flatMap(knownTail)).toMap
-    val written = Seq.newBuilder[(String, Option[(StructType, Seq[InternalRow])])]
-    try {
-      val lines = new StringBuilder
-      batches.zipWithIndex.foreach { case ((table, ev), i) =>
-        val dir = new Path(stagingRoot, s"batch-$i")
-        // staging-only committer trims: direct task-commit renames (v2)
-        // and no _SUCCESS marker — the manifest is this protocol's
-        // commit record, and the files are listed right below, so the
-        // extra rename pass and marker write buy nothing here.
-        // Snapshots keep the default committer: their _SUCCESS IS the
-        // version-dir completeness marker.
-        tracer.span("stage-write", table) {
-          val opts = catalog.get(table).map(bloomOptions).getOrElse(Map.empty) ++
-            (if (encryptionOn)
-              Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId)
-            else Map.empty)
-          // literal batches (LocalRelation — VALUES rows and
-          // literalized small query batches) stage with a DRIVER-side
-          // parquet write: the rows never left the driver, so a Spark
-          // job would pay scheduling + task launch + committer
-          // protocol to produce the identical file. Since round 17
-          // encrypted writes take this path too — writeLocalParquet
-          // loads the same modular-encryption factory the job path
-          // uses, so SET ENCRYPTION KEY no longer forfeits the OLTP
-          // statement floor (measured A/B in EncryptionSpec /
-          // SURVEY §8); ANY driver-write failure falls back to the
-          // job path after clearing partial output.
-          val drove =
-            try org.apache.spark.sql.GraftBridge.writeLocalParquet(ev,
-              dir.toString, opts)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                scala.util.Try(fs.delete(dir, true))
-                System.err.println(
-                  s"[graft] driver-side staging of $table fell back " +
-                    s"to the job write: ${e.getMessage}")
-                None
-            }
-          written += table -> drove.map(ev.schema -> _)
-          if (drove.isEmpty)
-            encrypted(ev.write)
-              .options(opts)
-              .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-              .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-              .parquet(dir.toString)
-        }
-        for (f <- fs.listStatus(dir) if f.getPath.getName.startsWith("part-"))
-          lines.append(s"file\tbatch-$i/${f.getPath.getName}\t${enc(table)}\n")
-      }
-      seqs.foreach { case (t, s) => lines.append(s"seq\t${enc(t)}\t$s\n") }
-      stream.foreach { case (id, b) => lines.append(s"stream\t${enc(id)}\t$b\n") }
-      marks.foreach { case (t, v) => lines.append(s"wmark\t${enc(t)}\t$v\n") }
-      // flat-log revocations commit atomically with the events that
-      // cause them — a crash can never leave a mutated log marked flat
-      mutated.foreach(t => lines.append(s"mut\t${enc(t)}\n"))
-      val tmp = new Path(stagingRoot, "manifest.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(lines.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      // join the concurrent guard probes — abort pre-commit
-      tracer.span("probe-join")(validate())
-      commitFence() // HA epoch check — abort while still pre-commit
-      testFailBeforeManifestRename()
-      if (!fs.rename(tmp, new Path(stagingRoot, "manifest")))
-        throw new java.io.IOException(s"manifest rename failed: $stagingRoot")
-    } catch {
-      case e: Throwable =>
-        scala.util.Try(fs.delete(stagingRoot, true))
-        throw e
-    }
-    // ---- commit point passed ----
-    lastPublishAtMs = System.currentTimeMillis()
-    // roll-forward: completePublish is idempotent, so a transient I/O
-    // fault gets ONE immediate in-process retry (the reference replays
-    // its WAL without a restart the same way — wal.rs). A fault that
-    // persists through the retry surfaces as CommitIncomplete and the
-    // next statement's healing sweep (or the reopen sweep) finishes it.
-    tracer.span("publish") {
-      try completePublish(stagingRoot, hooked = true)
-      catch {
-        case _: Throwable =>
-          try completePublish(stagingRoot, hooked = true)
-          catch {
-            case e: Throwable =>
-              tailsBefore.keys.foreach(tails.forget)
-              publishIncomplete = true
-              throw new CommitIncompleteException(
-                s"commit is durable but its publish did not finish; it " +
-                  s"completes on the next statement or engine open " +
-                  s"(staging: $stagingRoot): ${e.getMessage}", e)
-          }
-      }
-    }
-    tails.extend(tailsBefore, written.result(), catalog.lastSeq)
-  }
-
-  /** Set when a commit passed its manifest commit point but the publish
-    * faulted twice — the next statement retries the (idempotent) sweep
-    * so in-process reads heal without a reopen. */
-  @volatile private var publishIncomplete = false
-
-  /** Heal a stranded post-commit-point publish before a statement or a
-    * batch reads or writes anything: the sweep is idempotent, the
-    * caller holds the write lock, and once it succeeds in-process reads
-    * see the whole batch — no reopen required. */
-  private def healPublish(): Unit =
-    if (publishIncomplete) {
-      sweepStaging()
-      publishIncomplete = false
-    }
-
-  /** Parquet modular encryption for data-bearing writes (event-log
-    * batches, snapshots, matviews) — toggled by SET ENCRYPTION KEY /
-    * OFF. Uniform mode: footer + every column under keys wrapped by
-    * the registered master key (file magic becomes PARE; nothing is
-    * readable without the key). */
-  private var encryptionOn = false
-
-  private[exec] def encrypted[T](w: org.apache.spark.sql.DataFrameWriter[T])
-      : org.apache.spark.sql.DataFrameWriter[T] =
-    if (encryptionOn)
-      w.option("parquet.encryption.uniform.key", Encryption.MasterKeyId)
-    else w
-
-  /** CREATE INDEX made physical: every log/snapshot write of a table
-    * with declared indexes adds a parquet BLOOM FILTER on the indexed
-    * payload columns. Min/max stats already serve range predicates;
-    * blooms serve the equality/IN point lookups the reference's B-tree
-    * indexes exist for (index.rs:9-36) — a scan with `col = x` skips
-    * every row group whose bloom excludes x, which min/max cannot do
-    * for high-cardinality unsorted columns. Event-feed reads
-    * (FOR SYSTEM_TIME ALL/BETWEEN, CDC) and external consumers of the
-    * files benefit directly. */
-  private def bloomOptions(t: TableDef): Map[String, String] =
-    catalog.indexedColumns(t.name).flatMap(cn =>
-      t.columns.find(_.logical.equalsIgnoreCase(cn)).map(c =>
-        s"parquet.bloom.filter.enabled#payload.${c.physical}" -> "true")).toMap
-
-  /** Step 3 of publishAtomic — also the recovery path the engine-open
-    * sweep replays for a manifest that crashed mid-publish. Idempotent:
-    * catalog updates max-merge, already-moved files are skipped. */
-  private def completePublish(stagingRoot: Path, hooked: Boolean = false): Unit = {
-    val fs = stagingRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(stagingRoot, "manifest"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val files = Vector.newBuilder[(String, String)] // (relPath, table)
-    val seqs = Map.newBuilder[String, Long]
-    val marks = Map.newBuilder[String, Long]
-    val mutated = Set.newBuilder[String]
-    var stream: Option[(String, Long)] = None
-    for (line <- text.split("\n") if line.nonEmpty) line.split("\t") match {
-      case Array("file", rel, table) => files += ((rel, dec(table)))
-      case Array("seq", table, s) => seqs += (dec(table) -> s.toLong)
-      case Array("stream", id, b) => stream = Some((dec(id), b.toLong))
-      case Array("wmark", table, v) => marks += (dec(table) -> v.toLong)
-      case Array("mut", table) => mutated += dec(table)
-      case other =>
-        throw new IllegalStateException(s"corrupt manifest line: ${other.mkString("\t")}")
-    }
-    catalog.commitPublished(seqs.result(), stream, marks.result(),
-      mutated.result()) // counters first: hole > duplicate
-    for (((rel, table), i) <- files.result().zipWithIndex
-        if catalog.get(table).isDefined) {
-      if (hooked) testFailBeforePublishRename(i)
-      val src = new Path(stagingRoot, rel)
-      if (fs.exists(src)) { // absent = already published by a prior pass
-        val target = new Path(logDir(table))
-        if (!fs.exists(target)) fs.mkdirs(target)
-        // parquet part files carry job UUIDs, so names never collide
-        if (!fs.rename(src, new Path(target, src.getName)))
-          throw new java.io.IOException(s"rename failed: $src")
-      }
-    }
-    // best-effort: a leftover dir with its manifest replays as a no-op
-    scala.util.Try(fs.delete(stagingRoot, true))
-  }
-
-  private def rollbackTxn(toSavepoint: Option[String]): DataFrame = {
-    val tx = txn.getOrElse(throw new IllegalStateException(
-      "no active transaction to rollback"))
-    toSavepoint match {
-      case None =>
-        txn = None
-        metricTxnRollbacks += 1
-        summary("rollback", 0L, 0L)
-      case Some(name) =>
-        val i = tx.savepoints.lastIndexWhere(_._1 == name.toLowerCase)
-        if (i < 0) throw new IllegalArgumentException(s"savepoint not found: $name")
-        val (_, len, seqSnap) = tx.savepoints(i)
-        tx.restore(len, seqSnap)
-        // keep the savepoint itself (PG: you can roll back to it again)
-        tx.savepoints.dropRightInPlace(tx.savepoints.length - (i + 1))
-        tx.aborted = false // PG: ROLLBACK TO clears the abort state
-        summary("rollback_to_savepoint", 0L, 0L)
-    }
-  }
-
-  private def savepoint(name: String): DataFrame = {
-    val tx = txn.getOrElse(throw new IllegalStateException(
-      "SAVEPOINT can only be used in transaction blocks"))
-    // unquoted identifiers fold case, as in PG
-    tx.savepoints += ((name.toLowerCase, tx.pending.length, tx.seqs.toMap))
-    summary("savepoint", 0L, 0L)
-  }
-
-  private def releaseSavepoint(name: String): DataFrame = {
-    val tx = txn.getOrElse(throw new IllegalStateException(
-      "RELEASE SAVEPOINT can only be used in transaction blocks"))
-    val i = tx.savepoints.lastIndexWhere(_._1 == name.toLowerCase)
-    if (i < 0) throw new IllegalArgumentException(s"savepoint not found: $name")
-    // PG: releases this savepoint and all later ones; writes are kept
-    tx.savepoints.dropRightInPlace(tx.savepoints.length - i)
-    summary("release", 0L, 0L)
+        (if (commit.lastPublishAtMs < 0) "-1"
+         else (System.currentTimeMillis() - commit.lastPublishAtMs).toString))
   }
 
   // ================================================================ sql
@@ -923,7 +464,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * Reentrant (trigger/procedure bodies dispatch through the current
     * session); the write-lock monitor serializes sessions on different
     * threads. */
-  private def sqlAs(session: Session, statement: String): DataFrame =
+  private def sqlAs(session: QueryEngine#Session, statement: String): DataFrame =
     asSession(session) {
       session.stmtDepth += 1
       // the security monitor sees each TOP-LEVEL statement once (nested
@@ -973,7 +514,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private[exec] var rateClockNs: () => Long = () => System.nanoTime()
   private var metricRateLimited = 0L
 
-  private def checkRateLimit(s: Session): Unit =
+  private def checkRateLimit(s: QueryEngine#Session): Unit =
     if (rateLimitQps > 0 && !s.superuser && s.stmtDepth <= 1) {
       val now = rateClockNs()
       if (s.rlTokens < 0) { s.rlTokens = rateLimitBurst; s.rlLastNs = now }
@@ -999,34 +540,17 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   private def sqlCurrentInner(statement: String): DataFrame = {
     checkRateLimit(current)
-    healPublish()
+    commit.healPublish()
     val parsed = tracer.span("parse")(StatementRouter.parse(statement))
-    if (isMutating(parsed)) ensureWriteLock()
+    if (isMutating(parsed)) commit.ensureWriteLock()
     def run(): DataFrame = parsed match {
-    case Statement.Begin => begin()
-    case Statement.Commit => commitTxn()
-    case Statement.Rollback(sp) => rollbackTxn(sp)
-    case Statement.Savepoint(name) => savepoint(name)
-    case Statement.ReleaseSavepoint(name) => releaseSavepoint(name)
-    case st =>
-      txn match {
-        case Some(tx) if tx.aborted =>
-          throw new IllegalStateException(
-            "current transaction is aborted, commands ignored until end of transaction block")
-        case Some(tx) =>
-          // statement-level atomicity inside the transaction: a failed
-          // statement leaves no partial batches behind, then aborts the
-          // transaction (PG semantics, sql_bridge.rs:251-264)
-          val (len, seqSnap) = (tx.pending.length, tx.seqs.toMap)
-          try dispatch(st)
-          catch {
-            case e: Throwable =>
-              tx.restore(len, seqSnap)
-              tx.aborted = true
-              throw e
-          }
-        case None => dispatch(st)
-      }
+    case Statement.Begin => commit.begin()
+    case Statement.Commit => commit.commitTxn()
+    case Statement.Rollback(sp) => commit.rollbackTxn(sp)
+    case Statement.Savepoint(name) => commit.savepoint(name)
+    case Statement.ReleaseSavepoint(name) => commit.releaseSavepoint(name)
+    // statement-level atomicity inside a transaction (Txn.statement)
+    case st => txn.fold(dispatch(st))(_.statement(dispatch(st)))
     }
     // statement timeout wraps the eager work (DML, probes, writes,
     // pinned reads); a purely lazy SELECT's later actions run on the
@@ -1121,7 +645,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         require(cols.exists(_._1 == c), s"constraint column not declared: $c")
       catalog.createTable(name, pk,
         cols.map { case (c, ddl) => (c, DataType.fromDDL(ddl)) })
-      tails.forget(name)
+      commit.forget(name)
       if (fkDefs.nonEmpty)
         catalog.setForeignKeys(name, fkDefs.map(f => (f.column, f.refTable, f.refColumn)))
       if (conDefs.nonEmpty)
@@ -1144,7 +668,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       requirePerm("CREATE INDEX", "CREATE_INDEX")
       // catalog metadata + physical effect: subsequent log/snapshot
       // writes stamp a parquet bloom filter on EVERY indexed column
-      // (bloomOptions) — range predicates were already served by
+      // (Commit.writeOptions) — range predicates were already served by
       // min/max pruning and pushdown (SURVEY §1.4). A composite
       // index also becomes the bare-OPTIMIZE Z-order hint.
       val t = catalog.require(table)
@@ -1340,8 +864,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // runs under the statement lock, so no publish is in flight and
       // the copied file set is a consistent committed state; staging
       // dirs and the liveness lock are excluded by the lister
-      if (txn.isDefined)
-        throw new IllegalStateException("BACKUP cannot run inside a transaction")
+      outsideTxn("BACKUP")
       // the manifest records each table's sequence high-water mark —
       // the identification data SHOW BACKUPS lists and RESTORE ... AS
       // OF @SEQ:N cuts the chain by
@@ -1363,26 +886,22 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           "copied", "bytes")
     case Statement.PruneBackups(dir, keep, olderDays, dryRun) =>
       requireSuperuser("PRUNE BACKUPS") // deletes restore points
-      if (txn.isDefined)
-        throw new IllegalStateException(
-          "PRUNE BACKUPS cannot run inside a transaction")
+      outsideTxn("PRUNE BACKUPS")
       import spark.implicits._
       Backup.prune(spark, dir, keep,
           olderDays.map(_.toLong * 24L * 60L * 60L * 1000L), dryRun)
         .toDF("path", "action")
     case Statement.RestoreDb(dir, asOfSeq) =>
       requireSuperuser("RESTORE") // replaces the whole database
-      if (txn.isDefined)
-        throw new IllegalStateException("RESTORE cannot run inside a transaction")
-      ensureWriteLock() // exclusive: no other live writer during the swap
+      outsideTxn("RESTORE")
+      commit.ensureWriteLock() // exclusive: no other live writer during the swap
       val prevTables = catalog.tableNames
       val (restoredFrom, n) = asOfSeq match {
         case Some(seq) => Backup.restoreAsOf(spark, dir, baseDir, seq)
         case None => (dir, Backup.restore(spark, dir, baseDir))
       }
       catalog.reload()
-      lastSnapSeqs.clear()
-      tails.clear()
+      commit.clear()
       // the audit trail is database state: the restore swapped its
       // files, so the unflushed tail is void and ids re-prime from the
       // restored log (the RESTORE record itself lands after, re-primed)
@@ -1407,8 +926,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       requirePerm("DROP TABLE", "DROP_TABLE")
       // dropping a table with buffered writes would orphan them, and the
       // storage delete cannot be rolled back — keep DROP out of txns
-      if (txn.isDefined)
-        throw new IllegalStateException("DROP TABLE cannot run inside a transaction")
+      outsideTxn("DROP TABLE")
       // RESTRICT, like FK deletes: dropping a parent would leave child
       // FKs pointing at a vanished table (a dangling-registry state the
       // reference tolerates — fk.rs:68-71 forgets only the child side)
@@ -1421,8 +939,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
             s"cannot drop $name: referenced by ${children.mkString(", ")}")
       }
       catalog.dropTable(name, ifEx)
-      lastSnapSeqs.remove(name) // a recreated table starts fresh
-      tails.forget(name)
+      commit.forget(name) // a recreated table starts fresh
       // the select path registers session temp views lazily; drop any
       // stale one so the name stops resolving immediately
       spark.catalog.dropTempView(name)
@@ -1480,22 +997,15 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     case Statement.Delete(table, where) => delete(table, where)
     case Statement.Snapshot(table) =>
       requirePerm("SNAPSHOT", "CREATE_SNAPSHOT")
-      // a snapshot reads events() which includes buffered uncommitted
-      // writes — persisting those would leak rolled-back data
-      if (txn.isDefined)
-        throw new IllegalStateException("SNAPSHOT cannot run inside a transaction")
       snapshot(table)
     case Statement.Optimize(table, zcols) =>
-      if (txn.isDefined)
-        throw new IllegalStateException("OPTIMIZE cannot run inside a transaction")
       // a bare OPTIMIZE adopts the composite index declaration as its
       // Z-order hint: the operator already said which columns arrive
       // together in point probes
       optimize(table,
         if (zcols.nonEmpty) zcols else catalog.compositeIndexColumns(table))
     case Statement.VacuumRetain(table, retainSeq) =>
-      if (txn.isDefined)
-        throw new IllegalStateException("VACUUM RETAIN cannot run inside a transaction")
+      outsideTxn("VACUUM RETAIN")
       vacuumRetain(table, retainSeq)
     case Statement.DiffTable(table, a, b) => diff(table, a, b)
     case Statement.Explain(inner, analyze, format) => explain(inner, analyze, format)
@@ -1533,7 +1043,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
             spark.sessionState.conf.numShufflePartitions)
         }
       try {
-        val w = encrypted(df.write).mode("overwrite")
+        val w = commit.encrypted(df.write).mode("overwrite")
         format.getOrElse(inferCopyFormat(path)) match {
           case "jsonl" | "json" => w.json(path)
           case "parquet" => w.parquet(path)
@@ -1657,7 +1167,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // encrypted files become readable the moment the key registers
       Encryption.HadoopConf.foreach { case (k, v) =>
         spark.sparkContext.hadoopConfiguration.set(k, v) }
-      encryptionOn = true
+      commit.encryptionOn = true
       summary("encryption_enabled", 0L, 0L)
     case Statement.SetEncryptionOff =>
       if (!current.superuser)
@@ -1665,7 +1175,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           "permission denied: SET ENCRYPTION requires superuser")
       // stop encrypting NEW writes; leave the factory + key registered
       // so existing encrypted files stay readable
-      encryptionOn = false
+      commit.encryptionOn = false
       summary("encryption_disabled", 0L, 0L)
     case Statement.CreateMigration(ver, up, down) =>
       require(up.trim.nonEmpty, "migration UP script is empty")
@@ -1673,8 +1183,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       summary("migration_created", 0L, 0L)
     case Statement.Migrate =>
       // migrations run DDL (non-transactional) — same rule as DDL itself
-      if (txn.isDefined)
-        throw new IllegalStateException("MIGRATE cannot run inside a transaction")
+      outsideTxn("MIGRATE")
       val pending = catalog.migrationList.filter(!_._4)
       // apply in version order; a failing migration stops the chain
       // with everything before it applied (migration.rs:489-530
@@ -1685,9 +1194,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       }
       summary("migrated", pending.size.toLong, 0L)
     case Statement.RollbackMigration =>
-      if (txn.isDefined)
-        throw new IllegalStateException(
-          "ROLLBACK MIGRATION cannot run inside a transaction")
+      outsideTxn("ROLLBACK MIGRATION")
       val applied = catalog.migrationList.filter(_._4)
       if (applied.isEmpty)
         throw new IllegalStateException("no applied migration to roll back")
@@ -1955,17 +1462,16 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // (mvcc.rs snapshot reads). Attached frames are immutable inputs
       // and need no horizon.
       val base = if (t.attached.isDefined) base0
-        else base0.where(col("sequence") <= lit(snapSeqFor(tx, t.name)))
+        else base0.where(col("sequence") <= lit(tx.horizon(t.name)))
       // buffered events are read back SHIFTED by the same offset COMMIT
       // will apply — if a concurrent direct append (streaming ingest)
       // took the buffered batch's provisional sequences, mid-txn reads
       // must not show two events on one sequence or an AS OF view that
       // contradicts post-commit history
-      val off = tx.baseSeqs.get(t.name)
-        .map(b => catalog.lastSeq(t.name) - b).getOrElse(0L)
+      val off = tx.offset(t.name)
       tx.pending.iterator.collect { case (n, ev, _) if n == t.name => ev }
         .foldLeft(base)((acc, ev) =>
-          acc.unionByName(shiftSequences(ev, off), allowMissingColumns = true))
+          acc.unionByName(Commit.shift(ev, off), allowMissingColumns = true))
     }
   }
 
@@ -1979,9 +1485,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * mergeSchema would spend a Spark job collecting every log file's
     * footer on every statement's state read, and at 100 TB that footer
     * sweep is itself a full metadata scan. */
-  private def baseEvents(t: TableDef): DataFrame =
+  private[exec] def baseEvents(t: TableDef): DataFrame =
     t.attached.getOrElse {
-      val p = new Path(logDir(t.name))
+      val p = new Path(catalog.logPath(t.name))
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // tagged with the pk like a snapshot scan, so a pk point read of
       // the log decodes its candidate row groups on the driver
@@ -1991,47 +1497,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       else
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           EventLog.schema(t.payloadSchema))
-    }
-
-  /** Pin (at first access) and return the transaction's snapshot
-    * horizon for a table. */
-  private def snapSeqFor(tx: Txn, table: String): Long =
-    tx.snapSeqs.getOrElseUpdate(table, catalog.lastSeq(table))
-
-  /** Shift an event frame's sequences (and the sequence-derived clock)
-    * by `off` — identity when nothing interleaved. */
-  private def shiftSequences(ev: DataFrame, off: Long): DataFrame =
-    if (off == 0L) ev
-    else ev.withColumn("sequence", col("sequence") + off)
-      .withColumn("ts", timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")))
-
-  private def logDir(table: String) = catalog.logPath(table)
-
-  // ------------------------------------------------ driver-resident tail
-
-  /** Each table's log tail as the driver wrote it (see DriverTails),
-    * within the pin-literalization caps. Dropped by RESTORE, DROP/CREATE
-    * TABLE, VACUUM and REPAIR; a fresh engine knows none. */
-  private val tails = new DriverTails(PinLiteralizeMaxRows,
-    GraftBridge.LiteralizeByteBudget)
-
-  private def knownTail(t: TableDef): Option[DriverTails.Tail] =
-    if (t.attached.isDefined) None
-    else tails.get(t.name, catalog.lastSeq(t.name),
-      Snapshots.nearest(spark, catalog.snapshotPath(t.name), None),
-      t.payloadSchema)
-
-  /** The tail events a state read needs — those in (snapshot, bound] —
-    * when the driver holds them. Not for transactions (buffered events
-    * union in), attached logs, or dmlRead reads (their row order becomes
-    * event order, which the keyed plan fixes). */
-  private def tailAbove(t: TableDef, base: Option[Long], asOf: Option[Long],
-      dmlRead: Boolean): Option[Seq[InternalRow]] =
-    if (dmlRead || dmlReadScope || txn.isDefined || t.attached.isDefined) None
-    else {
-      val last = catalog.lastSeq(t.name)
-      tails.between(knownTail(t), base.getOrElse(0L),
-        asOf.fold(last)(math.min(_, last)), last, t.payloadSchema)
     }
 
   /** State at a sequence, snapshot-accelerated: replay starts from the
@@ -2083,7 +1548,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // into our collapsed read (ev is horizon-capped, so the tail could
     // not subtract them back out)
     val snapCap = txn.collect {
-      case tx if t.attached.isEmpty => snapSeqFor(tx, t.name)
+      case tx if t.attached.isEmpty => tx.horizon(t.name)
     }
     val bound = (asOf, snapCap) match {
       case (Some(a), Some(c)) => Some(math.min(a, c))
@@ -2099,7 +1564,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
         .fieldNames.toIndexedSeq
       df.select(fields.map(f => col(s"payload.`$f`").as(f)): _*)
     }
-    val collapsed = tailAbove(t, base, asOf, dmlRead) match {
+    val collapsed = commit.tailAbove(t, base, asOf, dmlRead) match {
       // the read is the snapshot (if any) plus tail events the driver
       // holds: fold them on the driver and serve a FLAT plan with no
       // window and no exchange (see StateView.overTail). With an empty
@@ -2156,83 +1621,42 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** Append one pinned batch of payload rows (logical columns) as
     * `eventType` events — the one write path of INSERT, COPY, UPDATE
-    * and DELETE. Inside a transaction the event frame buffers until
-    * COMMIT; otherwise it lands in one atomic publish. Returns (events
-    * appended, last assigned sequence).
-    *
-    * The caller pins the batch (`pinBatch`) and passes the pin's
-    * layout as `pinnedCounts`, so the guard probes read blocks instead
-    * of re-running the source and sequence assignment runs no job (see
-    * `eventFrame`). `pkChecked` says the probes establish pk
-    * uniqueness: only such an INSERT keeps the table's flat-log
-    * certificate and may seed a first-load snapshot. Stream batches
-    * publish through `publishStream` instead, outside any open
-    * transaction and without probes. */
+    * and DELETE: the guard verdict is built here, and Commit.write
+    * sequences the batch, then buffers or publishes it. Returns (events
+    * appended, last assigned sequence). The caller pins the batch
+    * (`pinBatch`) and passes the pin's layout as `pinnedCounts`, so the
+    * probes read blocks and sequencing runs no job. `pkChecked` says
+    * the probes establish pk uniqueness: only such an INSERT keeps the
+    * table's flat-log certificate and may seed a first-load snapshot. */
   private def append(t: TableDef, rowsLogical: DataFrame, eventType: String,
       pkChecked: Boolean = false,
       probes: () => Seq[DataFrame] = Guards.NoProbes,
-      pinnedCounts: Option[Array[Long]] = None): (Long, Long) = {
-    requireWritable(t)
+      pinnedCounts: Option[Array[Long]] = None): (Long, Long) =
     // the guard verdict (Guards.verdict) runs beside the staging write
-    // below and is joined at the publish's commit point; a fork still
+    // and is joined at the publish's commit point; a fork still
     // unjoined when the scope exits is cancelled and awaited, never
     // left running Spark jobs with no consumer
     Par.scope(spark.sparkContext) { par =>
-    // the physical batch decides literal-ness once, for the probes and
-    // for sequencing: a pin's layout says distributed; otherwise one
-    // optimization of the plan sequencing runs anyway
-    val physical = physicalPayload(t, rowsLogical)
-    val literal = pinnedCounts.isEmpty && isLiteral(physical)
-    val verdict = guards.verdict(par, probes, literal)
-    verdict.outranks {
-    // inside a transaction, sequences continue from the buffered tail
-    val base = txn.flatMap(_.seqs.get(t.name)).getOrElse(catalog.lastSeq(t.name))
-    val (ev, last) = eventFrame(t, physical, literal, base, eventType,
-      pinnedCounts)
-    val n = last - base
-    // the flat-log certificate survives this batch only when it is an
-    // INSERT whose pk uniqueness the guard probes established (INSERT
-    // VALUES/SELECT). COPY skips the pk probes, so it revokes;
-    // PATCH/SOFT_DELETE always revoke.
-    val keepsFlat = eventType == EventLog.INSERT && pkChecked
-    if (n > 0) txn match {
-      case Some(tx) => // buffer; flushed at COMMIT, dropped at ROLLBACK
-        snapSeqFor(tx, t.name) // a write also pins the conflict horizon
-        tx.baseSeqs.getOrElseUpdate(t.name, catalog.lastSeq(t.name))
-        tx.pending += ((t.name, ev, last))
-        tx.seqs(t.name) = last
-        if (!keepsFlat) tx.mutated += t.name
-      case None =>
-        // stage → manifest → publish, same all-or-nothing protocol as
-        // COMMIT: a crash mid-statement either leaves the log
-        // untouched or (via the reopen sweep) lands the whole batch +
-        // counter together — never orphan events past the counter,
-        // which a plain append-then-commitSeq would duplicate on
-        // the next statement's sequence assignment
-        publishAtomic(Seq((t.name, ev)), Map(t.name -> last), None,
-          mutated = if (keepsFlat) Set.empty else Set(t.name),
-          validate = verdict)
-        maybeAutoSnapshot(t.name, last,
-          // the first-load checkpoint shortcut requires the batch to
-          // BE the collapsed state: empty table before this append,
-          // INSERT events only, and pk uniqueness probes ACTUALLY RAN
-          // on this batch (COPY skips them, and its duplicates must go
-          // through the real collapse)
-          firstLoad = if (base == 0L && keepsFlat) Some(ev) else None)
+      // the physical batch decides literal-ness once, for the probes and
+      // for sequencing: a pin's layout says distributed; otherwise one
+      // optimization of the plan sequencing runs anyway
+      val physical = commit.physicalPayload(t, rowsLogical)
+      val literal = pinnedCounts.isEmpty && isLiteral(physical)
+      val verdict = guards.verdict(par, probes, literal)
+      verdict.outranks {
+        // the flat-log certificate survives this batch only when it is
+        // an INSERT whose pk uniqueness the guard probes established
+        // (INSERT VALUES/SELECT). COPY skips the pk probes, so it
+        // revokes; PATCH/SOFT_DELETE always revoke.
+        val out = commit.write(t, physical, literal, eventType, pinnedCounts,
+          keepsFlat = eventType == EventLog.INSERT && pkChecked, verdict)
+        // an empty batch never publishes, but its probes still gate the
+        // statement; the join handle is idempotent, so a second call
+        // after the publish path already consumed it is free
+        verdict()
+        out
+      }
     }
-    // an empty batch never publishes, but its probes still gate the
-    // statement; the join handle is idempotent, so a second call after
-    // the publish path already consumed it is free
-    verdict()
-    (n, last)
-    }
-    }
-  }
-
-  private def requireWritable(t: TableDef): Unit =
-    if (t.attached.isDefined)
-      throw new UnsupportedOperationException(
-        s"table ${t.name} is an attached read-only event log")
 
   /** An empty driver-resident frame of `schema`: a LocalRelation, so
     * PropagateEmptyRelation erases what reads it, and analysis against
@@ -2242,57 +1666,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** True when the batch's rows live on the driver: its optimized plan
     * is a LocalRelation (literal VALUES, a literalized pin). */
-  private def isLiteral(df: DataFrame): Boolean =
+  private[exec] def isLiteral(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  // ---------------------------------------------------- auto-snapshot
-
-  /** Auto-checkpoint policy: after this many events append to a table
-    * since its newest snapshot, SNAPSHOT it automatically, bounding
-    * state-collapse replay cost as logs grow (the reference compacts on
-    * the same trigger shape — engine.rs:739-845). 0 disables. The
-    * threshold is deliberately high: snapshots cost a full collapse
-    * job, so they should amortize over many statements. */
-  var autoSnapshotEvery: Long = 100000L
-
-  // newest snapshot sequence per table, lazily primed from storage —
-  // saves a filesystem listing per statement
-  private val lastSnapSeqs = scala.collection.mutable.HashMap.empty[String, Long]
-
-  private def maybeAutoSnapshot(table: String, lastSeq: Long,
-      firstLoad: Option[DataFrame] = None): Unit =
-    if (autoSnapshotEvery > 0 && txn.isEmpty) {
-      val snapAt = lastSnapSeqs.getOrElseUpdate(table,
-        Snapshots.nearest(spark, catalog.snapshotPath(table), None).getOrElse(0L))
-      if (lastSeq - snapAt >= autoSnapshotEvery) {
-        firstLoad match {
-          case Some(ev) if snapAt == 0L &&
-              Snapshots.available(spark, catalog.snapshotPath(table)).isEmpty =>
-            // first bulk load into an empty table: the appended batch
-            // IS the collapsed state (unique pks enforced by the
-            // guard, all INSERT-typed) and the just-published log
-            // files carry exactly its bytes (same rows, same parquet
-            // options) — small loads COPY those files into place with
-            // no Spark job at all; large ones keep the distributed
-            // write, skipping only the log re-read and the collapse
-            // window
-            val t = catalog.require(table)
-            if (!Snapshots.copyFrom(spark, logDir(table),
-                catalog.snapshotPath(table), lastSeq))
-              Snapshots.writePrecollapsed(ev, catalog.snapshotPath(table),
-                lastSeq,
-                (if (encryptionOn)
-                  Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId)
-                else Map.empty[String, String]) ++ bloomOptions(t))
-            metricSnapshots += 1
-          case _ => snapshot(table)
-        }
-        lastSnapSeqs(table) = catalog.lastSeq(table)
-        tails.atSnapshot(table, lastSeq, catalog.lastSeq(table),
-          catalog.require(table).payloadSchema)
-      }
-    }
 
   // ---------------------------------------------------- sequence calls
 
@@ -2324,7 +1700,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       sb.append(sqlText.substring(last, m.start))
       val v =
         if (m.group(1).equalsIgnoreCase("nextval")) {
-          ensureWriteLock() // a draw persists catalog state
+          commit.ensureWriteLock() // a draw persists catalog state
           catalog.nextval(m.group(2))
         } else catalog.currval(m.group(2))
       sb.append(s"CAST($v AS BIGINT)")
@@ -2686,9 +2062,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private var metricStatements = 0L
   private var metricFailed = 0L
   private var metricTimeouts = 0L
-  private var metricTxnCommits = 0L
-  private var metricTxnRollbacks = 0L
-  private var metricSnapshots = 0L
 
   // ==================================================== wall-clock perf
 
@@ -2805,13 +2178,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     ("cache_hits", cacheHits),
     ("cache_misses", cacheMisses),
     ("events_total", catalog.tableNames.map(catalog.lastSeq).sum),
-    ("snapshots_taken", metricSnapshots),
+    ("snapshots_taken", commit.snapshotsTaken),
     ("statements_failed", metricFailed),
     ("statements_timed_out", metricTimeouts),
     ("statements_total", metricStatements),
     ("tables", catalog.tableNames.size.toLong),
-    ("txn_commits", metricTxnCommits),
-    ("txn_rollbacks", metricTxnRollbacks),
+    ("txn_commits", commit.txnCommits),
+    ("txn_rollbacks", commit.txnRollbacks),
     ("views", catalog.viewNames.size.toLong))
 
   private def showMetrics(): DataFrame = {
@@ -2846,10 +2219,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   // the statement monitor themselves (reentrant for SQL-path callers)
   // — a wire session's SHOW ALERTS must not mutate the ring mid-copy
   private[graft] def alertTransitions: Seq[(Long, String, String, String)] =
-    writeLock.synchronized { alertHistory.toSeq }
+    commit.locked { alertHistory.toSeq }
 
   private[graft] def alertRules: Seq[graft.catalog.AlertDef] =
-    writeLock.synchronized { catalog.alertList.sortBy(_.name) }
+    commit.locked { catalog.alertList.sortBy(_.name) }
 
   private def createAlert(name: String, metric: String, op: String,
       threshold: Double, severity: String): DataFrame = {
@@ -2896,7 +2269,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * (category, priority, suggestion), computed from catalog METADATA
     * and in-memory counters only — no data scan, so the endpoint is
     * always cheap to poll. */
-  private[graft] def optimizationSuggestions(): Seq[(String, String, String)] = writeLock.synchronized {
+  private[graft] def optimizationSuggestions(): Seq[(String, String, String)] = commit.locked {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
     val slow = slowLog.toSeq
     if (slow.nonEmpty)
@@ -2909,13 +2282,11 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // tail pays a keyed collapse over that tail on every read
     for (t <- catalog.tableNames
         if catalog.get(t).exists(_.attached.isEmpty) && !catalog.isFlatLog(t)) {
-      val snap = lastSnapSeqs.getOrElseUpdate(t,
-        Snapshots.nearest(spark, catalog.snapshotPath(t), None).getOrElse(0L))
-      val lag = catalog.lastSeq(t) - snap
+      val lag = catalog.lastSeq(t) - commit.lastSnapshot(t)
       // advise even with auto-snapshotting DISABLED — that is the one
       // configuration where the lag can actually run unbounded
       val lagThreshold =
-        if (autoSnapshotEvery > 0) autoSnapshotEvery / 2 else 50000L
+        if (commit.autoSnapshotEvery > 0) commit.autoSnapshotEvery / 2 else 50000L
       if (lag > lagThreshold)
         out += (("storage", "medium",
           s"table $t has $lag unsnapshotted events and no flat-log " +
@@ -3071,13 +2442,13 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   /** The session's effective role set: roles carried at setAuth plus
     * catalog-granted memberships (GRANT role TO user) — the rbac.rs
     * get_user_roles union (rbac.rs:417-429). */
-  private def effectiveRoles(s: Session): Set[String] =
+  private def effectiveRoles(s: QueryEngine#Session): Set[String] =
     s.roles ++ catalog.rolesOf(s.user)
 
   /** True when some effective role's bundle carries `perm` — bundles
     * are database-wide like the reference's Permission set, and the
     * SUPERUSER marker implies everything (rbac.rs:200-245). */
-  private def roleHasPerm(s: Session, perm: String): Boolean =
+  private def roleHasPerm(s: QueryEngine#Session, perm: String): Boolean =
     effectiveRoles(s).exists { r =>
       val ps = catalog.rolePerms(r)
       ps.contains("SUPERUSER") || ps.contains(perm)
@@ -3085,7 +2456,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** Session superuser, by flag or by holding a SUPERUSER-bundle role
     * (the reference's RoleName::Superuser membership). */
-  private def isSuperuser(s: Session): Boolean =
+  private def isSuperuser(s: QueryEngine#Session): Boolean =
     s.superuser || effectiveRoles(s).exists(r =>
       catalog.rolePerms(r).contains("SUPERUSER"))
 
@@ -3311,7 +2682,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       (rlsFilter(table, command).fold(m)(m.where), state)
     }
     val t = catalog.require(table)
-    val tailKnown = txn.isEmpty && tailAbove(t,
+    val tailKnown = txn.isEmpty && commit.tailAbove(t,
       Snapshots.nearest(spark, catalog.snapshotPath(table), None), None,
       dmlRead = false).isDefined
     Option.when(tailKnown)(over(stateAt(table, None))).flatMap { case (m, state) =>
@@ -3418,10 +2789,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     tracer.span("snapshot", table)(snapshotInner(table, atSeq))
 
   private def snapshotInner(table: String, atSeq: Option[Long]): DataFrame = {
-    if (txn.isDefined)
-      throw new IllegalStateException(
-        "SNAPSHOT cannot run inside a transaction: the checkpoint would " +
-          "durably capture uncommitted buffered writes")
+    // a snapshot reads events(), which includes buffered uncommitted
+    // writes — persisting those would leak rolled-back data
+    outsideTxn("SNAPSHOT")
     val t = catalog.require(table)
     val seq = atSeq.getOrElse(catalog.lastSeq(t.name))
     val snapDir = catalog.snapshotPath(table)
@@ -3438,9 +2808,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
               allowMissingColumns = true)
         case None => events(t)
       }
-      val opts = (if (encryptionOn)
-          Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId)
-        else Map.empty[String, String]) ++ bloomOptions(t)
+      val opts = commit.writeOptions(t.name)
       // flat-log certificate: every source row is already a unique-pk
       // INSERT (checkpoint rows are collapsed inserts; tail events are
       // certified inserts disjoint from them), so the collapse window
@@ -3454,9 +2822,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           snapDir, seq, opts)
       else Snapshots.write(src, snapDir, seq, opts)
     }
-    lastSnapSeqs(table) = math.max(lastSnapSeqs.getOrElse(table, 0L), seq)
-    tails.atSnapshot(table, seq, catalog.lastSeq(table), t.payloadSchema)
-    metricSnapshots += 1
+    commit.snapshotted(t, seq)
     summary("snapshot", 0L, seq)
   }
 
@@ -3475,8 +2841,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * locality); multi-column ZORDER BY interleaves so every listed
     * column's parquet min/max stats stay selective at once. */
   def optimize(table: String, zorderBy: Seq[String] = Seq.empty): DataFrame = {
-    if (txn.isDefined)
-      throw new IllegalStateException("OPTIMIZE cannot run inside a transaction")
+    outsideTxn("OPTIMIZE")
     // rewrites the shared checkpoint layout (PG's CLUSTER requires
     // ownership for the same reason) — admin surface under the gate
     requirePerm("OPTIMIZE", "COMPACT") // admin carries CompactDatabase
@@ -3496,10 +2861,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val clustered = graft.operators.ZOrder.cluster(
       frames, physical.map(p => s"payload.$p"),
       spark.sessionState.conf.numShufflePartitions)
-    Snapshots.writeVersioned(clustered, snapDir, seq,
-      (if (encryptionOn)
-        Map("parquet.encryption.uniform.key" -> Encryption.MasterKeyId)
-      else Map.empty[String, String]) ++ bloomOptions(t))
+    Snapshots.writeVersioned(clustered, snapDir, seq, commit.writeOptions(t.name))
     summary("optimize", 0L, seq)
   }
 
@@ -3561,7 +2923,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       snapshot(table, atSeq = Some(retainSeq))
       retainSeq
     }
-    val logP = new Path(logDir(table))
+    val logP = new Path(catalog.logPath(table))
     val fs = logP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var deleted = 0L
     if (fs.exists(logP)) {
@@ -3583,8 +2945,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     for (s <- Snapshots.available(spark, snapDir) if s < floor)
       Snapshots.delete(spark, snapDir, s)
     catalog.setRetentionFloor(table, floor)
-    lastSnapSeqs(table) = math.max(lastSnapSeqs.getOrElse(table, 0L), floor)
-    tails.forget(table)
+    commit.forget(table)
     summary("vacuumed", deleted, floor)
   }
 
@@ -3625,10 +2986,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     * write surface of the `graft` data source
     * (`df.write.format("graft").option("user", u)`): the privilege
     * gate and write-side RLS policies see the session, not root. Runs
-    * in the batch envelope (writeBatch) with no replay id, so it takes
+    * in the batch envelope (Commit.writeBatch) with no replay id, so it takes
     * the base-dir lock like every other write. */
   def ingestFrameAs(session: Session, table: String, df: DataFrame): DataFrame =
-    writeBatch(s"INGEST FRAME $table", None, session)(ingestFrame(table, df))
+    commit.writeBatch(s"INGEST FRAME $table", None, session)(ingestFrame(table, df))
       .get // no replay id: never skipped
 
   /** Bulk-append an arbitrary DataFrame — the shared tail of COPY FROM
@@ -3643,169 +3004,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     insertFrom(table, Some(present), raw.select(present.map(col): _*), bulk = true)
   }
 
-  /** `batch` projected onto `t`'s columns by name and cast to their
-    * declared types; a column the batch lacks reads NULL. */
-  private[graft] def byName(batch: DataFrame, t: TableDef): DataFrame =
-    batch.select(t.columns.map(c =>
-      (if (batch.columns.contains(c.logical)) col(c.logical) else lit(null))
-        .cast(c.dataType).as(c.logical)): _*)
-
-  /** The envelope of every write that is not a SQL statement — stream
-    * micro-batches (graft.streaming), replicated batches and the `graft`
-    * data-source append — run as `session` (asSession), in order:
-    *   1. heal a stranded publish (healPublish, as a statement does);
-    *   2. take the base-dir lock (ensureWriteLock);
-    *   3. skip a replayed batch: `replay` is (stream id, batch id), the
-    *      stream id being the stream's checkpoint location. The id
-    *      commits in the SAME manifest as the batch's events, so a
-    *      restart that replays a committed batch (Spark only guarantees
-    *      at-least-once delivery to foreachBatch) is detected here and
-    *      skipped — the Delta-commit idempotent-sink pattern. A batch
-    *      whose publish faulted after its commit point is healed in
-    *      step 1 first, so the skip never hides its events. Without a
-    *      replay id nothing is skipped;
-    *   4. run `body` as a traced statement named `label`;
-    *   5. run the AUTOREFRESH due check (the continuous
-    *      always-fresh-dashboard shape); a skipped batch advanced
-    *      nothing, so it skips this too.
-    * None means the batch was skipped. Batch writes skip the statement
-    * rate limit, audit and statement metrics. */
-  private[graft] def writeBatch[T](label: String,
-      replay: Option[(String, Long)], session: Session = defaultSession)(
-      body: => T): Option[T] =
-    asSession(session) {
-      healPublish()
-      ensureWriteLock()
-      if (replay.exists { case (id, b) => catalog.lastStreamBatch(id).exists(_ >= b) })
-        None
-      else {
-        val out = tracer.statement(label + replay.fold("")(r => s" batch=${r._2}"))(body)
-        matViews.maybeAutoRefresh()
-        Some(out)
-      }
-    }
-
-  /** One micro-batch from a streaming source (graft.streaming
-    * .StreamIngest): columns matched by name like JSONL ingest, missing
-    * ones NULL, appended as INSERT events. PK/FK guards are skipped —
-    * a stream is bulk ingestion (like COPY) and guard jobs per
-    * micro-batch would double its latency. Runs on the streaming
-    * thread: the write lock serializes it against SQL statements, and
-    * publishStream keeps the batch out of any open transaction's
-    * buffer (a ROLLBACK must never drop streamed rows — the txn's
-    * provisional sequences re-shift at COMMIT instead). */
-  private[graft] def ingestStream(table: String, batch: DataFrame): Unit =
-    ingestStream(table, batch, None, -1L)
-
-  /** Exactly-once variant (see writeBatch). */
+  /** One stream micro-batch (Commit.ingestStream). */
   private[graft] def ingestStream(table: String, batch: DataFrame,
-      streamId: Option[String], batchId: Long): Unit = {
-    val replay = streamId.map(_ -> batchId)
-    writeBatch(s"INGEST STREAM $table", replay) {
-      val t = catalog.require(table)
-      val rows = byName(batch, t)
-      // a literal batch stays on the driver and stages without a job;
-      // anything else pins, so its sequence offsets and the staging
-      // write see one partition layout
-      publishStream(Seq(t -> (if (isLiteral(rows)) rows else pinBatch(rows).df)),
-        replay, mutated = Set(t.name))
-    }
-  }
-
-  /** Payload rows (logical columns) as `t`'s physical payload columns,
-    * cast to their declared types (loose-schema writes are a [REF-GAP]
-    * we do NOT replicate: our tables are typed). */
-  private def physicalPayload(t: TableDef, rowsLogical: DataFrame): DataFrame =
-    rowsLogical.select(t.columns.map(c =>
-      col(c.logical).cast(c.dataType).as(c.physical)): _*)
-
-  /** Sequence-assign and event-shape one batch of physical payload rows
-    * (`physicalPayload`) as `eventType` events numbered from `base` + 1
-    * — the one event-frame builder, under `append` and `publishStream`.
-    * Returns (events, new last sequence).
-    *
-    * The batch must be a pin, a literal batch or a narrow derivation of
-    * one: sequence offsets are computed once, so the consuming write
-    * must see the same row-to-partition layout, and nothing may
-    * re-read the log being appended to. `layout` (a distributed pin's
-    * per-partition counts) makes the assignment job-free; a `literal`
-    * batch (its plan optimizes to a LocalRelation, as the caller found)
-    * is sequenced on the driver; anything else pays one
-    * partition-counts job (EventLog.assignSequences). */
-  private def eventFrame(t: TableDef, physical: DataFrame, literal: Boolean,
-      base: Long, eventType: String = EventLog.INSERT,
-      layout: Option[Array[Long]] = None): (DataFrame, Long) = {
-    val (withSeq, n) = EventLog.assignSequences(physical, base, layout, literal)
-    val ev0 = withSeq.select(
-      col("sequence"),
-      timestamp_seconds(lit(EventLog.ClockEpoch) + col("sequence")).as("ts"),
-      lit(eventType).as("event_type"),
-      col(t.pkPhysical).cast("string").as("pk"),
-      struct(t.columns.map(c => col(c.physical)): _*).as("payload"))
-    // a small batch lands as ONE staged file: the write job runs one
-    // task instead of one per pinned partition, the publish renames
-    // one file, and the log stays compact — a tombstone batch spread
-    // over 32 near-empty part-files would fan out every later state
-    // read's scan. Large batches keep the parallel multi-file write.
-    // coalesce AFTER sequence assignment is layout-safe: the
-    // per-partition offsets were computed against the pinned layout,
-    // and a CoalescedRDD computes its parents with their original
-    // split indices.
-    val ev = if (n <= EventLog.SmallBatchRows) ev0.coalesce(1) else ev0
-    (ev, base + n)
-  }
-
-  /** The publish every stream batch ends in. Each table's rows become
-    * one INSERT event frame sequenced from the table's last sequence —
-    * outside any open transaction — and the frames that carry events
-    * land in ONE atomic publish with the micro-batch's `replay` id (see
-    * writeBatch), the watermarks `marks` and the flat-log revocations
-    * `mutated`; then each table may auto-snapshot. A batch that
-    * advanced nothing publishes only to record its id, and without an
-    * id not at all. */
-  private[graft] def publishStream(parts: Seq[(TableDef, DataFrame)],
-      replay: Option[(String, Long)], mutated: Set[String],
-      marks: Map[String, Long] = Map.empty): Unit = {
-    val framed = for ((t, rows) <- parts) yield {
-      requireWritable(t)
-      val physical = physicalPayload(t, rows)
-      val (ev, last) = eventFrame(t, physical, isLiteral(physical),
-        catalog.lastSeq(t.name))
-      (t.name, ev, last)
-    }
-    val advanced = framed.filter { case (n, _, last) => last > catalog.lastSeq(n) }
-    if (advanced.isEmpty && replay.isEmpty) return
-    publishAtomic(advanced.map { case (n, ev, _) => n -> ev },
-      framed.map { case (n, _, last) => n -> last }.toMap,
-      replay, marks, mutated)
-    framed.foreach { case (n, _, last) => maybeAutoSnapshot(n, last) }
-  }
-
-  /** Apply one replicated micro-batch of RAW events (the primary's
-    * event frame, verbatim — sequence/ts/event_type/pk/payload) into
-    * this engine's log (graft.streaming.Replication). Unlike
-    * ingestStream, sequences are PRESERVED, not assigned: the replica
-    * must serve the primary's exact temporal history, so the counter
-    * advances to the batch's max sequence (max-merged — it never
-    * regresses). Exactly-once: the batch id commits in the same atomic
-    * manifest as the events. */
-  private[graft] def applyReplicated(table: String, batch: DataFrame,
-      streamId: String, batchId: Long): Unit = {
-    val replay = Some(streamId -> batchId)
-    writeBatch(s"APPLY REPLICATED $table", replay) {
-      val t = catalog.require(table)
-      require(t.attached.isEmpty, s"cannot replicate into attached table $table")
-      val pinned = pinBatch(batch).df
-      val mx = pinned.agg(max(col("sequence"))).head()
-      val hi =
-        if (mx.isNullAt(0)) catalog.lastSeq(t.name) // empty batch: record the id only
-        else math.max(mx.getLong(0), catalog.lastSeq(t.name))
-      publishAtomic(Seq((t.name, pinned)), Map(t.name -> hi), replay,
-        // raw replicated frames carry whatever event types the primary
-        // landed — the replica cannot certify anything about them
-        mutated = Set(t.name))
-    }
-  }
+      streamId: Option[String] = None, batchId: Long = -1L): Unit =
+    commit.ingestStream(table, batch, streamId, batchId)
 
   // ========================================================== utilities
 
@@ -4011,7 +3213,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       .replaceAll("\\s+", " ").take(160)
 
   private def tableLogFiles(t: TableDef): Seq[Path] = {
-    val p = new Path(logDir(t.name))
+    val p = new Path(catalog.logPath(t.name))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath)
@@ -4071,7 +3273,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     // failure falls back to per-file isolation jobs (so a clean 100 TB
     // log costs one scan, not one job per file)
     val wholeOk = files.nonEmpty &&
-      auditParquet(logDir(t.name), evSchema).isRight
+      auditParquet(catalog.logPath(t.name), evSchema).isRight
     if (wholeOk) {
       readable ++= files.map(_.toString)
       out += (("log", s"${files.size} file(s)", "OK", "whole-dir read"))
@@ -4111,7 +3313,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
           // collapse the RAW log (not stateAt — that would serve the
           // very checkpoint under audit) at the checkpoint's sequence
           val logState = StateView.stateAtKeyed(
-            spark.read.schema(evSchema).parquet(logDir(t.name)),
+            spark.read.schema(evSchema).parquet(catalog.logPath(t.name)),
             Some(s), t.pkPhysical)
           val (sn, sh) = stateFingerprint(snapState)
           val (ln, lh) = stateFingerprint(logState)
@@ -4144,11 +3346,10 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     *     hole's top (events lost, reported);
     *  4. the current-state checkpoint is rebuilt from the readable
     *     artifacts so every later read serves clean files. */
-  def repairTable(table: String): DataFrame = writeLock.synchronized {
+  def repairTable(table: String): DataFrame = commit.locked {
     requireSuperuserAlways("REPAIR TABLE")
-    if (txn.isDefined)
-      throw new IllegalStateException("REPAIR TABLE cannot run inside a transaction")
-    ensureWriteLock()
+    outsideTxn("REPAIR TABLE")
+    commit.ensureWriteLock()
     val t = catalog.require(table)
     require(t.attached.isEmpty, s"cannot repair attached event log: $table")
     val evSchema = EventLog.schema(t.payloadSchema)
@@ -4159,7 +3360,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val qDir = new Path(s"$baseDir/tables/${t.name}/quarantine")
     val files = tableLogFiles(t)
     // one whole-dir read decides the happy path (see checkTable)
-    if (files.nonEmpty && auditParquet(logDir(t.name), evSchema).isRight)
+    if (files.nonEmpty && auditParquet(catalog.logPath(t.name), evSchema).isRight)
       readable ++= files.map(_.toString)
     else for (p <- files) auditParquet(p.toString, evSchema) match {
       case Right(_) => readable += p.toString
@@ -4197,8 +3398,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     }
     // invalidate the snapshot bookkeeping snapshot() consults, then
     // rebuild the current checkpoint from the readable artifacts
-    lastSnapSeqs.remove(t.name)
-    tails.forget(t.name)
+    commit.forget(t.name)
     snapshot(table)
     out += (("checkpoint", t.name,
       s"rebuilt at seq=${catalog.lastSeq(t.name)}"))

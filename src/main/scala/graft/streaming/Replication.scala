@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the reference's promote path, failover.rs).
   *
   * Delivery is exactly-once per checkpoint: each applied batch runs in
-  * the replica's batch envelope (`QueryEngine.writeBatch`, shared with
+  * the replica's batch envelope (`Commit.writeBatch`, shared with
   * every stream and the data-source write), which takes the replica's
   * base-dir lock, skips a replayed batch id, records a trace and runs
   * the AUTOREFRESH due check; the batch id commits inside the SAME
@@ -63,7 +63,7 @@ object Replication {
       .parquet(dir)
       .where(col("sequence") > fromSeq)
     StreamIngest.sink(events, checkpointDir, trigger) { (batch, batchId) =>
-      replica.applyReplicated(table, batch, checkpointDir, batchId)
+      replica.commit.applyReplicated(table, batch, checkpointDir, batchId)
     }
   }
 }

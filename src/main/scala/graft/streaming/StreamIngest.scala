@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the engine's stream publish (a literal batch stages on the driver,
   * anything else pins and writes distributed), so executors carry the
   * rows. Every micro-batch runs in the engine's batch envelope
-  * (`QueryEngine.writeBatch`), the one entry of every non-SQL write:
+  * (`Commit.writeBatch`), the one entry of every non-SQL write:
   * the write-lock monitor and the base-dir lock keep sequence
   * assignment single-writer per table, the discipline the reference
   * enforces with its process write lock (index.rs:22-26).

@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *     registry per batch (the FK-probe discipline, Guards).
   *
   * Each micro-batch body runs inside the engine's batch envelope
-  * (`QueryEngine.writeBatch`: write lock, base-dir lock, replay skip,
+  * (`Commit.writeBatch`: write lock, base-dir lock, replay skip,
   * trace, auto refresh) and ends in the engine's stream publish. */
 object StreamingDedup {
 
@@ -99,10 +99,10 @@ object StreamingDedup {
       registry: String, batch: DataFrame, fingerprint: Column,
       streamId: Option[String], batchId: Long): Unit = {
     val replay = streamId.map(_ -> batchId)
-    engine.writeBatch(s"INGEST DEDUP $table", replay) {
+    engine.commit.writeBatch(s"INGEST DEDUP $table", replay) {
       val t = engine.catalog.require(table)
       val r = engine.catalog.require(registry)
-      val full = engine.byName(batch, t).withColumn("__fp", fingerprint)
+      val full = engine.commit.byName(batch, t).withColumn("__fp", fingerprint)
       val w = Window.partitionBy(col("__fp")).orderBy(col(t.pk))
       // firsts is one row per DISTINCT fingerprint, so the pin job's
       // count of non-null fingerprints IS the probe's key set size
@@ -121,8 +121,8 @@ object StreamingDedup {
         .select(col(r.pk).cast("string").as("__seen_fp"))
       val admitted = engine.pinBatch(firsts
         .join(seen, col("__fp") === col("__seen_fp"), "left_anti")).df
-      engine.publishStream(Seq(t -> admitted.drop("__fp"),
-          r -> engine.byName(admitted.withColumn(r.pk, col("__fp")), r)),
+      engine.commit.publishStream(Seq(t -> admitted.drop("__fp"),
+          r -> engine.commit.byName(admitted.withColumn(r.pk, col("__fp")), r)),
         replay,
         // the REGISTRY's pk (the fingerprint) is unique by construction
         // — one row per fp inside the batch, anti-joined against every
@@ -172,10 +172,10 @@ object StreamingDedup {
       minJaccard: Double, maxDf: Long, streamId: Option[String],
       batchId: Long, requireOrdered: Boolean = true): Unit = {
     val replay = streamId.map(_ -> batchId)
-    engine.writeBatch(s"INGEST NEARDUP $table", replay) {
+    engine.commit.writeBatch(s"INGEST NEARDUP $table", replay) {
       val t = engine.catalog.require(table)
       val r = engine.catalog.require(registry)
-      val shaped = engine.byName(batch, t)
+      val shaped = engine.commit.byName(batch, t)
         .withColumn("__sh",
           graft.operators.Dedup.shingleSet(textCol, shingleN))
       // total posting count (Σ shingle-array lengths, null arrays 0)
@@ -313,7 +313,7 @@ object StreamingDedup {
       val postingRows = toks.select(
         concat(col("__tok"), lit("#"), col("__id")).as(r.pk),
         col("__tok").as("tok"), col("__id").as("doc_id"), col("__n").as("n"))
-      engine.publishStream(Seq(t -> admitted, r -> engine.byName(postingRows, r)),
+      engine.commit.publishStream(Seq(t -> admitted, r -> engine.commit.byName(postingRows, r)),
         replay, marks = batchMax.map(r.name -> _).toMap,
         // certified: every table pk is distinct within the batch and
         // above the registry watermark, and every registry pk embeds a

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.col
   *
   * The engine's publish protocol makes this free: committed batches
   * land in the table's log directory as complete parquet files via one
-  * atomic rename (QueryEngine.publishAtomic), so a Structured
+  * atomic rename (Commit.publishAtomic), so a Structured
   * Streaming file source on that directory sees each batch exactly
   * when it commits, whole-or-not-at-all. No server, no socket, no
   * driver-side data path — subscribers are ordinary Spark queries with

@@ -9,27 +9,30 @@ import scala.jdk.CollectionConverters._
 /** Source-level guards on the engine's single primitives: one function
   * builds a pin (GraftBridge.pin), one helper starts pool work
   * (graft.exec.Par), one builds one-row result frames
-  * (QueryEngine.oneRow), one builds event frames
-  * (QueryEngine.eventFrame), four writers publish (COMMIT, the
-  * statement append, the stream publish, replication) and one shape
-  * describes an incrementally maintained view (IncrementalView.Shape,
-  * read through MatViews.shapeOf, and only MatViews reads it), one
-  * function reads parquet on the driver (GraftBridge.readLocalParquet),
-  * one site installs optimizer rules (PointReads.install) and one module
-  * builds DML guard probes, owns the inline-key cap and reaches the
-  * guard verdict (Guards), one function swaps the engine's session
-  * (QueryEngine.asSession) and one envelope wraps every write that is
-  * not a SQL statement (QueryEngine.writeBatch, the only replay-skip
-  * check), while the dedup stream bodies live in StreamingDedup; one
-  * driver-side event fold (StateView.foldTail) serves the driver tail
-  * and the point reads, and only the snapshot read and the engine's log
-  * read tag a scan for them (Snapshots.PkOption). A new
-  * pin variant, a hand-rolled thread, a second event-frame builder, a
-  * second view shape, a second driver parquet reader, a guard probe
-  * outside Guards, a hand-rolled session swap or batch envelope, a
-  * second event fold or another tagged scan fails
-  * here instead of quietly growing a second copy. Comment lines are
-  * ignored, so docs may name what the code must not do. */
+  * (QueryEngine.oneRow) and one shape describes an incrementally
+  * maintained view (IncrementalView.Shape, read through MatViews.shapeOf,
+  * and only MatViews reads it), one function reads parquet on the
+  * driver (GraftBridge.readLocalParquet), one site installs optimizer
+  * rules (PointReads.install) and one module builds DML guard probes,
+  * owns the inline-key cap and reaches the guard verdict (Guards). One
+  * module owns the commit path (Commit): the write lock, staging, the
+  * manifest and the driver tails are named nowhere else, one function
+  * builds event frames (Commit.eventFrame), and every writer (COMMIT,
+  * the statement write, the stream publish, replication) ends in one
+  * publish (Commit.publish, the only caller of publishAtomic). One
+  * function swaps the engine's session (QueryEngine.asSession) and one
+  * envelope wraps every write that is not a SQL statement
+  * (Commit.writeBatch, the only replay-skip check), while the dedup
+  * stream bodies live in StreamingDedup; one driver-side event fold
+  * (StateView.foldTail) serves the driver tail and the point reads, and
+  * only the snapshot read and the engine's log read tag a scan for them
+  * (Snapshots.PkOption). A new pin variant, a hand-rolled thread, a
+  * second event-frame builder or publish, a lock or staging dir outside
+  * Commit, a second view shape, a second driver parquet reader, a guard
+  * probe outside Guards, a hand-rolled session swap or batch envelope, a
+  * second event fold or another tagged scan fails here instead of
+  * quietly growing a second copy. Comment lines are ignored, so docs may
+  * name what the code must not do. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -73,6 +76,7 @@ class SourceScanSpec extends AnyFunSuite {
   }
 
   private val qe = "graft/exec/QueryEngine.scala"
+  private val commit = "graft/exec/Commit.scala"
 
   /** The member (declared two spaces in) enclosing each code line of
     * `file` (QueryEngine by default) that satisfies `hit`. */
@@ -86,14 +90,29 @@ class SourceScanSpec extends AnyFunSuite {
   }
 
   test("one event-frame builder, one publish per writer kind") {
-    assert(occurrences(""".cast("string").as("pk")""").getOrElse(qe, 0) <= 1)
-    // every publishAtomic call sits in one of its four callers: COMMIT,
-    // the statement append, the stream publish and replication
-    val callers = enclosingMembers(l =>
-      l.contains("publishAtomic(") && !l.contains("def publishAtomic("))
-    assert(callers.toSet == Set("commitTxn", "append", "publishStream",
-      "applyReplicated"), callers)
-    assert(occurrences("publishAtomic(").keySet == Set(qe))
+    val pkCast = occurrences(""".cast("string").as("pk")""")
+    assert(pkCast.getOrElse(commit, 0) == 1 && !pkCast.contains(qe), pkCast)
+    // publishAtomic has one caller, the publish; the publish has one
+    // caller per writer kind: COMMIT, the statement write, the stream
+    // publish and replication
+    def calls(name: String) = enclosingMembers(l =>
+      l.contains(s"$name(") && !l.contains(s"def $name("), commit)
+    assert(calls("publishAtomic") == Seq("publish"))
+    assert(calls("publish").toSet == Set("commitTxn", "write", "publishStream",
+      "applyReplicated"), calls("publish"))
+    assert(calls("publish").size == 4, calls("publish"))
+  }
+
+  test("the write lock, staging, the manifest and the driver tails live in Commit") {
+    val WriteLock = """\bwriteLock\b""".r
+    for ((f, code) <- sources if f != commit) {
+      val hits = code.filter(l => WriteLock.findFirstIn(l).isDefined ||
+        Seq("publishAtomic(", "completePublish(", "new DriverTails(",
+          ".txn-staging-").exists(l.contains))
+      assert(hits.isEmpty, s"$f: ${hits.map(_.trim)}")
+    }
+    for (p <- Seq("publishAtomic(", "completePublish(", "new DriverTails("))
+      assert(occurrences(p).keySet == Set(commit), p)
   }
 
   test("one session swap (asSession) and one batch envelope (writeBatch)") {
@@ -110,8 +129,9 @@ class SourceScanSpec extends AnyFunSuite {
     assert(swaps.toSet == Set(qe), swaps)
     assert(enclosingMembers(assignsCurrent).toSet == Set("asSession"))
     // the replay skip is decided in one place
-    assert(occurrences("catalog.lastStreamBatch(").keySet == Set(qe))
-    assert(enclosingMembers(_.contains("catalog.lastStreamBatch(")) == Seq("writeBatch"))
+    assert(occurrences("catalog.lastStreamBatch(").keySet == Set(commit))
+    assert(enclosingMembers(_.contains("catalog.lastStreamBatch("), commit) ==
+      Seq("writeBatch"))
     // the dedup stream bodies live in StreamingDedup
     val DedupDef = """def ingestStream\w*Dedup""".r
     assert(!sources.collectFirst { case (`qe`, c) => c }.get

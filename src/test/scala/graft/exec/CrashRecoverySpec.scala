@@ -30,13 +30,13 @@ class CrashRecoverySpec extends AnyFunSuite {
     e.sql("BEGIN")
     e.sql("INSERT INTO t VALUES (4, 'd', 4.5)")
     e.sql("UPDATE t SET val = 0 WHERE id = 1")
-    e.testFailBeforeManifestRename =
+    e.commit.testFailBeforeManifestRename =
       () => throw new java.io.IOException("injected: crash before commit point")
     val ex = intercept[IllegalStateException](e.sql("COMMIT"))
     assert(ex.getMessage.contains("transaction still open"))
     // the transaction is intact — a retry without the fault commits it
     assert(e.inTransaction)
-    e.testFailBeforeManifestRename = () => ()
+    e.commit.testFailBeforeManifestRename = () => ()
     e.sql("COMMIT")
     assert(rows(e, "SELECT id, val FROM t ORDER BY id")
       === Seq(Row(1L, 0.0), Row(2L, 2.5), Row(3L, 3.5), Row(4L, 4.5)))
@@ -44,7 +44,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     // nothing behind after reopen
     e.sql("BEGIN")
     e.sql("INSERT INTO t VALUES (9, 'x', 9.9)")
-    e.testFailBeforeManifestRename =
+    e.commit.testFailBeforeManifestRename =
       () => throw new java.io.IOException("injected: crash before commit point")
     intercept[IllegalStateException](e.sql("COMMIT"))
     e.close()
@@ -65,7 +65,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     e.sql("UPDATE t SET name = upper(name) WHERE id <= 2") // batch 2
     // let the first staged file publish, then "crash" — a naive publish
     // would leave the INSERT visible and the UPDATE lost
-    e.testFailBeforePublishRename =
+    e.commit.testFailBeforePublishRename =
       i => if (i >= 1) throw new java.io.IOException("injected: crash mid-publish")
     val ex = intercept[IllegalStateException](e.sql("COMMIT"))
     assert(ex.getMessage.contains("durable"))
@@ -96,7 +96,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     // immediate in-process retry completes the publish and COMMIT
     // returns success with no exception at all
     var fired = false
-    e.testFailBeforePublishRename = i =>
+    e.commit.testFailBeforePublishRename = i =>
       if (i >= 1 && !fired) { fired = true
         throw new java.io.IOException("injected: transient publish fault") }
     e.sql("COMMIT")
@@ -110,11 +110,11 @@ class CrashRecoverySpec extends AnyFunSuite {
     e.sql("BEGIN")
     e.sql("INSERT INTO t VALUES (5, 'e', 5.5)")
     e.sql("UPDATE t SET val = 0 WHERE id = 4")
-    e.testFailBeforePublishRename =
+    e.commit.testFailBeforePublishRename =
       i => if (i >= 1) throw new java.io.IOException("injected: crash mid-publish")
     val ex = intercept[IllegalStateException](e.sql("COMMIT"))
     assert(ex.getMessage.contains("durable"))
-    e.testFailBeforePublishRename = _ => () // the fault clears
+    e.commit.testFailBeforePublishRename = _ => () // the fault clears
     assert(rows(e, "SELECT id, val FROM t ORDER BY id")
       === Seq(Row(1L, 1.5), Row(2L, 2.5), Row(3L, 3.5), Row(4L, 0.0), Row(5L, 5.5)))
     // nothing stranded for the reopen sweep
@@ -127,7 +127,7 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   test("crash mid-publish of a direct DML statement recovers on reopen") {
     val e = seeded()
-    e.testFailBeforePublishRename =
+    e.commit.testFailBeforePublishRename =
       i => if (i == 0) throw new java.io.IOException("injected: crash mid-publish")
     intercept[IllegalStateException](e.sql("INSERT INTO t VALUES (4, 'd', 4.5)"))
     e.close()
@@ -156,10 +156,10 @@ class CrashRecoverySpec extends AnyFunSuite {
     // IN-PROCESS (no engine reopen), replays the batch — the replay
     // must first roll the stranded manifest forward, then skip, so the
     // events appear exactly once WITHOUT a close()+reopen
-    e.testFailBeforePublishRename =
+    e.commit.testFailBeforePublishRename =
       i => if (i == 0) throw new java.io.IOException("injected: crash mid-publish")
     intercept[IllegalStateException](e.ingestStream("ev", batch(4, 5), Some(ck), 2L))
-    e.testFailBeforePublishRename = _ => ()
+    e.commit.testFailBeforePublishRename = _ => ()
     e.ingestStream("ev", batch(4, 5), Some(ck), 2L) // in-process replay
     assert(rows(e, "SELECT id FROM ev ORDER BY id")
       === Seq(Row(1L), Row(2L), Row(3L), Row(4L), Row(5L)))

@@ -214,7 +214,7 @@ class EngineFeatureSpec extends AnyFunSuite {
   test("auto-snapshot checkpoints a table once enough events accumulate") {
     val e = seeded() // 3 events, default threshold too high to fire
     assert(Snapshots.available(spark, e.catalog.snapshotPath("t")).isEmpty)
-    e.autoSnapshotEvery = 5
+    e.commit.autoSnapshotEvery = 5
     e.sql("INSERT INTO t VALUES (4, 'c', 40)") // 4 events: below
     assert(Snapshots.available(spark, e.catalog.snapshotPath("t")).isEmpty)
     e.sql("INSERT INTO t VALUES (5, 'c', 50)") // 5 events: fires
@@ -229,5 +229,16 @@ class EngineFeatureSpec extends AnyFunSuite {
     (6 to 9).foreach(i => e.sql(s"INSERT INTO t VALUES ($i, 'd', $i)")) // 10
     assert(Snapshots.available(spark, e.catalog.snapshotPath("t")) === Seq(5L, 10L))
     assert(rows(e, "SELECT COUNT(*) AS n FROM t") === Seq(Row(9L)))
+    // a COMMIT that crosses the threshold checkpoints like any publish,
+    // once its transaction has cleared
+    e.sql("BEGIN")
+    (10 to 14).foreach(i => e.sql(s"INSERT INTO t VALUES ($i, 'e', $i)")) // 15
+    assert(Snapshots.available(spark, e.catalog.snapshotPath("t")) === Seq(5L, 10L))
+    e.sql("COMMIT")
+    assert(!e.inTransaction)
+    assert(Snapshots.available(spark, e.catalog.snapshotPath("t")) === Seq(5L, 10L, 15L))
+    assert(rows(e, "SELECT COUNT(*) AS n FROM t") === Seq(Row(14L)))
+    assert(rows(e, "SELECT COUNT(*) AS n FROM t FOR SYSTEM_TIME AS OF @SEQ:12")
+      === Seq(Row(11L)))
   }
 }

@@ -90,7 +90,7 @@ class FlatLogPropertySpec extends AnyFunSuite {
     // crash AFTER the commit point (manifest renamed), BEFORE the
     // publish applies: the events are durable, so the revocation must
     // be too — recovery replays the manifest including its mut line
-    e.testFailBeforePublishRename =
+    e.commit.testFailBeforePublishRename =
       i => throw new java.io.IOException(s"injected: crash at publish step $i")
     intercept[Exception](e.sql("UPDATE t SET v = 0 WHERE id = 1"))
     e.close()

@@ -243,8 +243,8 @@ class TracingSpec extends AnyFunSuite {
       .schema(graft.log.EventLog.schema(p.catalog.require("rt").payloadSchema))
       .parquet(p.catalog.logPath("rt"))
     val rck = java.nio.file.Files.createTempDirectory("graft-tr-rk-").toString
-    e.applyReplicated("rt", raw, rck, 0L)
-    e.applyReplicated("rt", raw, rck, 0L) // replay: skipped
+    e.commit.applyReplicated("rt", raw, rck, 0L)
+    e.commit.applyReplicated("rt", raw, rck, 0L) // replay: skipped
     assert(traced("APPLY REPLICATED rt") == 1)
     assert(e.sql("SELECT COUNT(*) AS n FROM rt").collect().head.getLong(0) == 1L)
     p.close()

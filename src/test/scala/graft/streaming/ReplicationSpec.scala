@@ -33,14 +33,20 @@ class ReplicationSpec extends AnyFunSuite {
     // the primary moves on: more DML AFTER the backup point
     primary.sql("DELETE FROM acct WHERE k = 2") // seq 5
     primary.sql("INSERT INTO acct VALUES (4, 40.0)") // seq 6
-    // follow applies exactly the (4, 6] suffix
+    // follow applies exactly the (4, 6] suffix; a replicated batch that
+    // crosses the auto-snapshot threshold checkpoints the replica
+    replica.commit.autoSnapshotEvery = 2
     val ckpt = java.nio.file.Files.createTempDirectory("graft-repl-ck-").toString
     val q = Replication.follow(primary, replica, "acct", ckpt)
     q.awaitTermination()
+    assert(graft.state.Snapshots.available(spark,
+      replica.catalog.snapshotPath("acct")).nonEmpty)
     def both(sql: String): Unit =
       assert(rows(replica, sql) === rows(primary, sql), s"diverged: $sql")
     both("SELECT k, bal FROM acct ORDER BY k")
     both("SELECT k, bal FROM acct FOR SYSTEM_TIME AS OF @SEQ:3 ORDER BY k")
+    for (s <- 1 to 6)
+      both(s"SELECT COUNT(*) AS n FROM acct FOR SYSTEM_TIME AS OF @SEQ:$s")
     both("SELECT sequence, event_type, k FROM acct FOR SYSTEM_TIME ALL ORDER BY sequence")
     // re-running follow with the same checkpoint replays nothing
     val q2 = Replication.follow(primary, replica, "acct", ckpt)
