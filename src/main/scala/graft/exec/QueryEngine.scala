@@ -7,6 +7,9 @@ import graft.state.{Snapshots, StateView}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructField, StructType}
@@ -18,11 +21,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructField,
   * sql_bridge.rs:274-757, re-expressed Spark-first — SURVEY §3.3):
   *   1. StatementRouter classifies DDL / DML / utility / query.
   *   2. Queries: TemporalPre strips `FOR SYSTEM_TIME ...` at string
-  *      level (sql_bridge.rs:304-320); every referenced engine table is
-  *      registered as a temp view resolved at that point in time
-  *      (state collapse, history, or change range); stored views are
-  *      expanded recursively (sql_bridge.rs:1203-1259); the cleaned
-  *      text is delegated to `spark.sql` — Catalyst owns parsing,
+  *      level (sql_bridge.rs:304-320); the cleaned text is parsed once
+  *      and every engine table it references is bound into the plan,
+  *      resolved at that point in time (state collapse, history, or
+  *      change range); stored views are expanded recursively
+  *      (sql_bridge.rs:1203-1259) — Catalyst owns analysis,
   *      optimization, and execution from there.
   *   3. DML: INSERT / UPDATE / DELETE / TRUNCATE become Insert / Patch
   *      / SoftDelete event appends with monotonic sequence assignment
@@ -34,18 +37,17 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructField,
   * Every statement returns a DataFrame (DML returns an affected-rows
   * summary), so the surface is uniform and lazy where possible.
   *
-  * Name scoping: engine tables resolve through session temp views that
-  * are (re-)registered by every statement before it runs, so multiple
-  * engines over different base dirs can share one SparkSession with
-  * SERIAL use — each statement re-resolves its own names even if
-  * another engine registered the same name in between (covered by the
-  * two-engines test in QueryEngineSpec). Concurrent statements from two
-  * engines sharing a session are not supported — same discipline as the
-  * reference's process-global write lock (index.rs:22-26); use one
-  * SparkSession per concurrent engine. Two engines over the same BASE
-  * DIR are guarded harder: the first write takes an exclusive lock file
-  * (BaseDirLock), so a second live writer fails fast instead of
-  * corrupting sequence assignment; close() releases it for handover.
+  * Name scoping: engine tables bind into each statement's own plan and
+  * never enter the session's namespace, so multiple engines over
+  * different base dirs can share one SparkSession, each reading its
+  * own tables (covered by the two-engines test in QueryEngineSpec).
+  * Concurrent statements from two engines sharing a session are not
+  * supported — same discipline as the reference's process-global write
+  * lock (index.rs:22-26); use one SparkSession per concurrent engine.
+  * Two engines over the same BASE DIR are guarded harder: the first
+  * write takes an exclusive lock file (BaseDirLock), so a second live
+  * writer fails fast instead of corrupting sequence assignment; close()
+  * releases it for handover.
   *
   * Multi-session MVCC: `newSession()` gives independent client
   * sessions over this engine, each with its own transaction — snapshot
@@ -895,7 +897,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       requireSuperuser("RESTORE") // replaces the whole database
       outsideTxn("RESTORE")
       commit.ensureWriteLock() // exclusive: no other live writer during the swap
-      val prevTables = catalog.tableNames
       val (restoredFrom, n) = asOfSeq match {
         case Some(seq) => Backup.restoreAsOf(spark, dir, baseDir, seq)
         case None => (dir, Backup.restore(spark, dir, baseDir))
@@ -907,10 +908,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       // restored log (the RESTORE record itself lands after, re-primed)
       auditBuf.clear()
       auditNextId = None
-      // stale temp views for tables that no longer exist must stop
-      // resolving (the select path re-registers live ones lazily)
-      for (t <- prevTables if catalog.get(t).isEmpty)
-        spark.catalog.dropTempView(t)
       oneRow("op" -> "restore", "files" -> n, "path" -> restoredFrom)
     case Statement.VerifyBackup(dir) =>
       val (checked, bad) = Backup.verify(spark, dir)
@@ -940,13 +937,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       }
       catalog.dropTable(name, ifEx)
       commit.forget(name) // a recreated table starts fresh
-      // the select path registers session temp views lazily; drop any
-      // stale one so the name stops resolving immediately
-      spark.catalog.dropTempView(name)
       summary("dropped", 0L, 0L)
     case Statement.DropView(name, ifEx) =>
       catalog.dropView(name, ifEx)
-      spark.catalog.dropTempView(name)
       summary("dropped", 0L, 0L)
     // TRUNCATE routes through delete(), which already enforces the
     // DELETE privilege and removes only RLS-visible rows
@@ -971,8 +964,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       catalog.dropColumn(table, c)
       summary("altered", 0L, catalog.lastSeq(table))
     case Statement.InsertValues(table, cols, valuesSql) =>
-      insertFrom(table, cols,
-        spark.sql(s"SELECT * FROM ${rewriteSequenceCalls(valuesSql)}"))
+      insertFrom(table, cols, boundFrame(
+        s"SELECT * FROM ${rewriteSequenceCalls(valuesSql)}", SystemTime.Current))
     case Statement.InsertSelect(table, cols, sel) =>
       // a textual rewrite would draw ONCE for all N source rows; the
       // per-row shape is an AUTO_INCREMENT column (block-reserved,
@@ -1219,50 +1212,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   def select(sqlText: String): DataFrame = {
     val (clean, st) = TemporalPre.extract(sqlText)
-    val cache = scala.collection.mutable.Map.empty[(String, SystemTime), DataFrame]
-    val bound = scala.collection.mutable.Map.empty[String, SystemTime]
-    val masked = maskNonCode(clean)
-    // the views the statement references directly, with the spec each
-    // must END UP bound at (its own FOR SYSTEM_TIME, else the
-    // statement's)
-    val directViews = catalog.viewNames
-      .filter(referencesWord(masked, _))
-      .map { v =>
-        if (catalog.isMaterialized(v)) {
-          // a matview is a snapshot of its last REFRESH — it has no
-          // event history to travel; serving current data under an
-          // explicit temporal spec would be silently wrong, so raise
-          if (st != SystemTime.Current)
-            throw new IllegalArgumentException(
-              s"materialized view $v is not temporal: FOR SYSTEM_TIME does not apply to it")
-          v -> SystemTime.Current
-        } else {
-          val (_, vSt) = TemporalPre.extract(catalog.getView(v).get)
-          v -> (if (vSt == SystemTime.Current) st else vSt)
-        }
-      }
-    // fixpoint over view registration: a pinned view's subtree can
-    // rebind a shared sub-view away from the spec the statement (or an
-    // earlier sibling) needs; each pass re-expands only mis-bound
-    // views, so it converges within the view-nesting depth. Silent
-    // non-convergence would return data from the wrong point in time,
-    // so it raises like the expansion-depth guard does.
-    var pass = 0
-    var again = directViews.nonEmpty
-    while (again && pass < 10) {
-      registerViews(clean, st, depth = 0, bound, cache)
-      again = directViews.exists { case (v, eff) => !bound.get(v).contains(eff) }
-      pass += 1
-    }
-    if (again)
-      throw new IllegalStateException(
-        "view temporal bindings did not converge (conflicting view nest > 10 deep?)")
-    // statement-referenced tables are registered LAST, at the
-    // statement's spec: views above already captured their own
-    // resolutions, so this overwrites nothing they depend on
-    for (t <- catalog.tableNames if referencesWord(masked, t))
-      resolveCached(t, st, cache).createOrReplaceTempView(tempName(t))
-    val out = spark.sql(rewriteDotted(clean))
+    val out = boundFrame(clean, st)
     // engine-side exchange sizing (round 18 — the SCALE.md harness
     // finding moved into the engine): a SELECT over a 1000×-scale
     // table must not inherit a fixture-sized shuffle-partition count;
@@ -1275,120 +1225,99 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     out
   }
 
-  /** Spark temp views are single-part names, but the engine's
-    * namespace is FLAT with dots legal inside a name — the reference
-    * flattens `ObjectName.to_string()`, so "app.t" IS the table name,
-    * dot included (sql_bridge.rs:3665, 678). A dotted catalog name
-    * therefore registers under a mangled single-part temp name and
-    * statement text rewrites references to it before `spark.sql`. */
-  private def tempName(n: String): String =
-    if (n.indexOf('.') < 0) n
-    else {
-      // injective mangling: a plain dot→underscore map would collide
-      // "a.b_c" with "a_b.c" on one temp-view name (the second
-      // registration silently shadowing the first) — a short digest
-      // of the ORIGINAL name keeps distinct names distinct
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(n.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map("%02x".format(_)).mkString
-      s"__graft_dn__${n.replace('.', '_')}_$digest"
-    }
+  /** A query text's Dataset, its engine names bound at `st`. */
+  private def boundFrame(text: String, st: SystemTime): DataFrame =
+    GraftBridge.frameOf(spark, bind(parsePlan(text), st,
+      scala.collection.mutable.Map.empty))
 
-  /** Rewrite every referenced dotted catalog name in `text` to its
-    * mangled temp-view name — CODE regions only (maskNonCode keeps a
-    * name inside a string literal or comment untouched), longest name
-    * first so overlapping names (`a.b.c` vs `a.b`) resolve to the
-    * most specific match. */
-  private def rewriteDotted(text: String): String = {
-    val dotted = (catalog.tableNames ++ catalog.viewNames)
-      .filter(_.indexOf('.') >= 0).distinct.sortBy(-_.length)
-    var out = text
-    for (n <- dotted) {
-      val masked = maskNonCode(out)
-      val re = ("""(?i)(?<![\w.])""" + java.util.regex.Pattern.quote(n) +
-        """(?![\w.])""").r
-      val ms = re.findAllMatchIn(masked).toSeq
-      if (ms.nonEmpty) {
-        val sb = new StringBuilder(out)
-        // right-to-left so earlier offsets stay valid
-        for (m <- ms.reverseIterator)
-          sb.replace(m.start, m.end, tempName(n))
-        out = sb.toString
-      }
-    }
-    out
+  private def parsePlan(text: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(text)
+
+  /** A user expression of a DML statement (UPDATE/DELETE `WHERE`,
+    * UPDATE `SET`, a trigger's `WHEN`): its subqueries read current
+    * state through the same binding as a SELECT, privilege checks and
+    * row policies included. */
+  private def boundExpr(text: String): Column = {
+    val memo = scala.collection.mutable.Map.empty[(String, SystemTime), LogicalPlan]
+    GraftBridge.column(spark.sessionState.sqlParser.parseExpression(text)
+      .transform { case s: SubqueryExpression =>
+        s.withNewPlan(bind(s.plan, SystemTime.Current, memo))
+      })
   }
 
-  /** Depth-first stored-view expansion into session temp views.
-    *
-    * `spark.sql` analyzes eagerly, so creating a view's temp view
-    * CAPTURES the logical plans of whatever the names it references
-    * resolve to at that moment — re-registering a base table afterward
-    * does not rebind an already-created view. That capture property
-    * makes temporal precedence work in a single namespace:
-    *   1. sub-views expand first (each capturing its own resolution);
-    *   2. the view's base tables register at the view's effective
-    *      spec — its own FOR SYSTEM_TIME clause if it names one, else
-    *      the spec inherited from its consumer (the reference threads
-    *      the statement spec through expansion the same way,
-    *      sql_bridge.rs:309-320, 1203-1259);
-    *   3. the view's temp view is created, freezing those choices;
-    * and select() then re-registers the statement's own tables at the
-    * statement spec. A view with an explicit AS OF keeps it even when
-    * the statement reads the same table at another time, and vice
-    * versa. */
-  private def registerViews(text: String, st: SystemTime, depth: Int,
-      bound: scala.collection.mutable.Map[String, SystemTime],
-      cache: scala.collection.mutable.Map[(String, SystemTime), DataFrame]): Unit = {
+  /** A trigger firing's transition rows, by lower-case name
+    * (`new_rows`, `old_rows`): bound for the body like a table, after
+    * the catalog's names. fireTriggers sets them one firing at a time
+    * and restores an enclosing firing's on the way out. */
+  private var transitionRows = Map.empty[String, DataFrame]
+
+  /** What a plan's name refers to in the engine: a table, a stored view,
+    * a materialized view or a firing's transition rows, matched
+    * case-insensitively (an exact match first). None leaves the name to
+    * Spark (attached fixtures, the pg_* views). */
+  private def lookupName(name: String): Option[QueryEngine.Ref] = {
+    def find(names: Iterable[String]) =
+      names.find(_ == name).orElse(names.find(_.equalsIgnoreCase(name)))
+    import QueryEngine.Ref._
+    find(catalog.tableNames).map(Table)
+      .orElse(find(catalog.viewNames).map(v =>
+        if (catalog.isMaterialized(v)) MatView(v) else View(v)))
+      .orElse(find(transitionRows.keys).map(Transition))
+  }
+
+  /** Bind the engine's names in a parsed plan at system time `st`. A
+    * table becomes its state at `st` (`resolve`: the SELECT privilege
+    * and row policies apply), a materialized view its stored rows, and
+    * a stored view its own text, bound recursively at its effective
+    * spec: its own FOR SYSTEM_TIME if it names one, else the spec of
+    * whatever reads it (the reference threads the statement spec
+    * through expansion the same way, sql_bridge.rs:309-320,
+    * 1203-1259). Each reference binds on its own, so a view pinned to
+    * one time and a statement reading the same table at another never
+    * share a binding. `memo` keeps one state plan per (table, spec) in a
+    * statement: resolving AS OF a timestamp runs a bounds job. */
+  private def bind(plan: LogicalPlan, st: SystemTime,
+      memo: scala.collection.mutable.Map[(String, SystemTime), LogicalPlan],
+      depth: Int = 0): LogicalPlan = {
     if (depth > 10)
       throw new IllegalStateException("view expansion depth > 10 (cycle?)")
-    val masked = maskNonCode(text)
-    for (v <- catalog.viewNames if referencesWord(masked, v)) {
-      if (catalog.isMaterialized(v)) {
-        // a materialized view serves its stored data, frozen at its
-        // last REFRESH — no SQL expansion, and the statement's temporal
-        // spec does not rebind it (it has no live base tables to rebind)
-        if (!bound.contains(v)) {
-          bound(v) = SystemTime.Current
-          matViews.stored(v).createOrReplaceTempView(tempName(v))
-        }
-      } else {
-      val (vClean, vSt) = TemporalPre.extract(catalog.getView(v).get)
-      val effSt = vSt match {
-        case SystemTime.Current => st
-        case explicit => explicit
-      }
-      // re-expand whenever the current temp-view binding is at a
-      // different spec than this consumer needs — already-created
-      // consumers are immune (they captured), and the select()-level
-      // fixpoint restores the statement's own bindings afterward
-      if (!bound.get(v).contains(effSt)) {
-        bound(v) = effSt // before recursion: breaks self-reference loops
-        registerViews(vClean, effSt, depth + 1, bound, cache)
-        val vMasked = maskNonCode(vClean)
-        for (t <- catalog.tableNames if referencesWord(vMasked, t))
-          resolveCached(t, effSt, cache).createOrReplaceTempView(tempName(t))
-        spark.sql(rewriteDotted(vClean)).createOrReplaceTempView(tempName(v))
-      }
+    QueryEngine.mapRelations(plan) { (name, parts) =>
+      import QueryEngine.Ref._
+      lookupName(name).map { ref =>
+        SubqueryAlias(parts, ref match {
+          case Table(t) =>
+            memo.getOrElseUpdate((t, st), resolve(t, st).queryExecution.analyzed)
+          case MatView(v) =>
+            // a matview is a snapshot of its last REFRESH — it has no
+            // event history to travel; serving current data under an
+            // explicit temporal spec would be silently wrong, so raise
+            if (depth == 0 && st != SystemTime.Current)
+              throw new IllegalArgumentException(
+                s"materialized view $v is not temporal: FOR SYSTEM_TIME does not apply to it")
+            matViews.stored(v).queryExecution.analyzed
+          case View(v) =>
+            val (text, vSt) = TemporalPre.extract(catalog.getView(v).get)
+            bind(parsePlan(text), if (vSt == SystemTime.Current) st else vSt,
+              memo, depth + 1)
+          case Transition(n) => transitionRows(n).queryExecution.analyzed
+        })
       }
     }
   }
 
-  /** resolve() memoized per statement — AS-OF-timestamp resolution
-    * runs a bounds job, which shouldn't repeat per referencing view. */
-  private def resolveCached(table: String, st: SystemTime,
-      cache: scala.collection.mutable.Map[(String, SystemTime), DataFrame]): DataFrame =
-    cache.getOrElseUpdate((table, st), resolve(table, st))
-
-  /** Does the (pre-masked) statement text reference `name` as a word?
-    * Callers mask string literals and `--` comments out of the text
-    * once via maskNonCode, so a table name inside a quoted value or
-    * comment doesn't trigger a spurious registration. */
-  private def referencesWord(maskedSql: String, name: String): Boolean =
-    ("""(?i)\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-      .findFirstIn(maskedSql).isDefined
-
-  private def maskNonCode(sqlText: String): String = SqlText.maskNonCode(sqlText)
+  /** Every catalog object `text` reads, stored views expanded (each
+    * view, then what it reads). None when the text does not parse or
+    * nests views deeper than `bind` expands them. */
+  private def readsOf(text: String, depth: Int = 0): Option[Seq[QueryEngine.Ref]] =
+    if (depth > 10) None
+    else scala.util.Try(parsePlan(TemporalPre.extract(text)._1)).toOption.flatMap { p =>
+      val direct = QueryEngine.relationNames(p).flatMap(lookupName)
+      direct.foldLeft(Option(direct)) {
+        case (acc, QueryEngine.Ref.View(v)) =>
+          for (a <- acc; sub <- readsOf(catalog.getView(v).get, depth + 1)) yield a ++ sub
+        case (acc, _) => acc
+      }
+    }
 
   /** A table at a point in (system) time, with logical column names.
     * Row policies filter here — the user-facing read surface (select()
@@ -1959,8 +1888,8 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 
   /** Fire the enabled (table, event, timing) triggers, in creation
     * order. Set-based firing (the SQL Server inserted/deleted shape):
-    * the affected batch registers as temp views `new_rows` (INSERT/
-    * UPDATE) and `old_rows` (UPDATE/DELETE) for the body statement —
+    * the affected batch binds as `new_rows` (INSERT/UPDATE) and
+    * `old_rows` (UPDATE/DELETE) for the body statement —
     * one execution per statement, scale-independent of row count. A
     * WHEN predicate filters the PRIMARY frame (new rows; old for
     * DELETE): the body sees only matching rows and is skipped when
@@ -1975,25 +1904,19 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val trgs = catalog.triggersFor(table, event, timing)
     if (trgs.isEmpty) return
     withCallDepth("trigger") {
-      // an enclosing firing (nested DML) may hold its own affected-row
-      // views — capture their current bindings so they come back after
-      // this firing instead of vanishing mid-body
-      val savedNew = scala.util.Try(spark.table("new_rows")).toOption
-      val savedOld = scala.util.Try(spark.table("old_rows")).toOption
+      // an enclosing firing (nested DML) holds its own transition rows:
+      // they come back after this firing instead of vanishing mid-body
+      val saved = transitionRows
       try {
         for ((trgName, body) <- trgs; (cond, stmt) <- parseTriggerBody(body)) {
           val primary = if (event == "DELETE") oldRows.get else newRows.get
-          val filtered = cond.fold(primary)(c => primary.where(expr(c)))
+          val filtered = cond.fold(primary)(c => primary.where(boundExpr(c)))
           val fire = cond.isEmpty || filtered.limit(1).count() > 0
           if (fire) {
-            // (re-)register per trigger: a previous trigger's nested DML
-            // may have re-bound these views for its own firing
-            val newView = if (event == "DELETE") None else Some(filtered)
-            val oldView = if (event == "DELETE") Some(filtered) else oldRows
-            spark.catalog.dropTempView("new_rows")
-            spark.catalog.dropTempView("old_rows")
-            newView.foreach(_.createOrReplaceTempView("new_rows"))
-            oldView.foreach(_.createOrReplaceTempView("old_rows"))
+            // per trigger: each body sees its own WHEN-filtered rows
+            transitionRows =
+              (if (event == "DELETE") Map("old_rows" -> filtered)
+               else Map("new_rows" -> filtered) ++ oldRows.map("old_rows" -> _))
             try {
               val res = this.sql(stmt)
               // DML executes eagerly inside sql(); a SELECT body (the
@@ -2010,12 +1933,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
             }
           }
         }
-      } finally {
-        spark.catalog.dropTempView("new_rows")
-        spark.catalog.dropTempView("old_rows")
-        savedNew.foreach(_.createOrReplaceTempView("new_rows"))
-        savedOld.foreach(_.createOrReplaceTempView("old_rows"))
-      }
+      } finally transitionRows = saved
     }
   }
 
@@ -2362,26 +2280,24 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       """now|unix_timestamp|input_file_name)\s*\(|""" +
       """(?i)\bcurrent_(timestamp|date|timezone)\b""").r
 
-  /** Version vector of every table the text transitively references
-    * (through stored views), or None when the statement must not be
-    * cached. */
-  private def referencedVersions(text: String, depth: Int = 0): Option[String] = {
-    if (depth > 10) return None // pathological view nesting: just skip
-    val masked = maskNonCode(text)
-    if (NonDeterministicR.findFirstIn(masked).isDefined) return None
-    val parts = scala.collection.mutable.SortedMap.empty[String, String]
-    for (t <- catalog.tableNames if referencesWord(masked, t);
-        td <- catalog.get(t))
-      parts(s"t:$t") = s"${catalog.lastSeq(t)}/${td.columns.hashCode}"
-    for (v <- catalog.viewNames if referencesWord(masked, v))
-      if (catalog.isMaterialized(v))
-        parts(s"m:$v") = catalog.mviewVersion(v).toString
-      else referencedVersions(catalog.getView(v).get, depth + 1) match {
-        case Some(sub) => parts(s"v:$v") = Integer.toHexString(sub.hashCode)
-        case None => return None
+  private def nonDeterministic(text: String): Boolean =
+    NonDeterministicR.findFirstIn(SqlText.maskNonCode(text)).isDefined
+
+  /** Version vector of every catalog object the text reads (through
+    * stored views), or None when the statement must not be cached. */
+  private def referencedVersions(text: String): Option[String] =
+    if (nonDeterministic(text)) None
+    else readsOf(text).flatMap { refs =>
+      import QueryEngine.Ref._
+      val parts = refs.distinct.map {
+        case Table(t) => Some(s"t:$t=${catalog.lastSeq(t)}/${catalog.require(t).columns.hashCode}")
+        case MatView(m) => Some(s"m:$m=${catalog.mviewVersion(m)}")
+        case View(v) => Some(catalog.getView(v).get)
+          .filterNot(nonDeterministic).map(q => s"v:$v=${q.hashCode}")
+        case Transition(_) => None // a firing's rows have no version
       }
-    Some(parts.map { case (k, x) => s"$k=$x" }.mkString(";"))
-  }
+      Option.when(parts.forall(_.isDefined))(parts.flatten.sorted.mkString(";"))
+    }
 
   private def cacheKeyFor(text: String): Option[String] = {
     if (!cacheEnabled || txn.isDefined || mentionsSequenceCall(text)) return None
@@ -2481,18 +2397,6 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
       throw new SecurityException(
         s"permission denied: $what requires $perm")
 
-  /** Tables the text transitively references (through stored views). */
-  private def referencedTables(text: String, depth: Int = 0): Set[String] = {
-    if (depth > 10) return Set.empty
-    val masked = maskNonCode(text)
-    val direct = catalog.tableNames.filter(referencesWord(masked, _)).toSet
-    val viaViews = catalog.viewNames
-      .filter(v => !catalog.isMaterialized(v) && referencesWord(masked, v))
-      .flatMap(v => catalog.getView(v).toSeq
-        .flatMap(referencedTables(_, depth + 1)))
-    direct ++ viaViews
-  }
-
   /** A materialized view's stored rows are shared across every session,
     * so the population query must see the FULL table state. A
     * non-superuser session whose read would be RLS-filtered must not
@@ -2503,7 +2407,9 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private[exec] def requireUnfilteredPopulation(what: String, viewSql: String): Unit = {
     requireSuperuser(what)
     if (!current.superuser) {
-      val rls = referencedTables(viewSql).filter(catalog.isRlsEnabled)
+      val rls = readsOf(viewSql).getOrElse(Nil).collect {
+        case QueryEngine.Ref.Table(t) if catalog.isRlsEnabled(t) => t
+      }.distinct
       if (rls.nonEmpty)
         throw new SecurityException(
           s"permission denied: $what over RLS-enabled table(s) " +
@@ -2678,7 +2584,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
   private def matchedBatch(table: String, where: Option[String],
       command: String): (DataFrame, DataFrame) = {
     def over(state: DataFrame): (DataFrame, DataFrame) = {
-      val m = where.fold(state)(w => state.where(expr(w)))
+      val m = where.fold(state)(w => state.where(boundExpr(w)))
       (rlsFilter(table, command).fold(m)(m.where), state)
     }
     val t = catalog.require(table)
@@ -2721,7 +2627,7 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
     val matching = mp.df
     val updated = matching.select(t.columns.map { c =>
       assigns.find(_._1 == c.logical) match {
-        case Some((_, e)) => expr(e).cast(c.dataType).as(c.logical)
+        case Some((_, e)) => boundExpr(e).cast(c.dataType).as(c.logical)
         case None => col(c.logical)
       }
     }: _*)
@@ -3465,6 +3371,51 @@ final class QueryEngine(val spark: SparkSession, val baseDir: String) {
 }
 
 object QueryEngine {
+  /** A name a statement reads, as the engine binds it. */
+  private sealed trait Ref
+  private object Ref {
+    final case class Table(name: String) extends Ref
+    final case class View(name: String) extends Ref
+    final case class MatView(name: String) extends Ref
+    final case class Transition(name: String) extends Ref
+  }
+
+  /** Rebuild `plan` with `f` applied to each table reference in it:
+    * every UnresolvedRelation, inside subquery expressions too, except a
+    * name an enclosing WITH binds. `f` gets the flat catalog name (the
+    * engine's namespace is flat, so a multipart `app.t` IS the name
+    * "app.t" — the reference flattens `ObjectName.to_string()`,
+    * sql_bridge.rs:3665) and the parts as written, and returns the
+    * replacement, or None to leave the name for Spark. */
+  private def mapRelations(plan: LogicalPlan, ctes: Set[String] = Set.empty)(
+      f: (String, Seq[String]) => Option[LogicalPlan]): LogicalPlan = plan match {
+    case w: UnresolvedWith =>
+      // a CTE sees the ones defined before it (and itself, if recursive)
+      val (defs, scope) = w.cteRelations.foldLeft(
+          (Vector.empty[(String, SubqueryAlias, Option[Int])], ctes)) {
+        case ((acc, sc), (n, q, d)) =>
+          val own = sc + n.toLowerCase
+          val bound = mapRelations(q, if (w.allowRecursion) own else sc)(f)
+          (acc :+ ((n, bound.asInstanceOf[SubqueryAlias], d)), own)
+      }
+      w.copy(child = mapRelations(w.child, scope)(f), cteRelations = defs)
+    case u: UnresolvedRelation =>
+      val parts = u.multipartIdentifier
+      if (parts.size == 1 && ctes(parts.head.toLowerCase)) u
+      else f(parts.mkString("."), parts).getOrElse(u)
+    case p =>
+      p.mapChildren(mapRelations(_, ctes)(f)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(mapRelations(s.plan, ctes)(f))
+      }
+  }
+
+  /** The flat names of the table references in `plan` (mapRelations). */
+  private def relationNames(plan: LogicalPlan): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    mapRelations(plan) { (n, _) => out += n; None }
+    out.result()
+  }
+
   /** Engine over a fresh scratch dir (tests, per-query fixtures).
     * Inside a scratchScope, the engine is registered for teardown when
     * the scope ends. */

@@ -23,7 +23,9 @@ import scala.jdk.CollectionConverters._
   * function swaps the engine's session (QueryEngine.asSession) and one
   * envelope wraps every write that is not a SQL statement
   * (Commit.writeBatch, the only replay-skip check), while the dedup
-  * stream bodies live in StreamingDedup; one driver-side event fold
+  * stream bodies live in StreamingDedup; statements bind engine names
+  * into their own plan, so only attachExternal registers a session temp
+  * view in the engine; one driver-side event fold
   * (StateView.foldTail) serves the driver tail and the point reads, and
   * only the snapshot read and the engine's log read tag a scan for them
   * (Snapshots.PkOption). A new pin variant, a hand-rolled thread, a
@@ -136,6 +138,23 @@ class SourceScanSpec extends AnyFunSuite {
     val DedupDef = """def ingestStream\w*Dedup""".r
     assert(!sources.collectFirst { case (`qe`, c) => c }.get
       .exists(DedupDef.findFirstIn(_).isDefined))
+  }
+
+  test("statements bind engine names into their plan, not the session namespace") {
+    // a session temp view is one namespace shared by every engine and
+    // session on the SparkSession; in the engine only attachExternal (an
+    // explicitly attached fixture) registers one, and nothing drops one
+    val tempViews = sources.collect {
+      case (f, code) if f.startsWith("graft/exec/") =>
+        f -> code.count(l => l.contains("createOrReplaceTempView") ||
+          l.contains("dropTempView"))
+    }.filter(_._2 > 0)
+    assert(tempViews == Seq(qe -> 1), tempViews)
+    assert(enclosingMembers(l => l.contains("createOrReplaceTempView") ||
+      l.contains("dropTempView")) == Seq("attachExternal"))
+    // the text-level binding helpers are gone for good
+    for ((f, code) <- sources; n <- Seq("referencesWord", "rewriteDotted", "tempName"))
+      assert(!code.exists(_.contains(n)), s"$f names $n")
   }
 
   test("one-row result frames come from QueryEngine.oneRow, not a range job") {

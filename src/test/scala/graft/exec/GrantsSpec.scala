@@ -280,4 +280,33 @@ class GrantsSpec extends AnyFunSuite {
     assert(e.sql("SELECT COUNT(*) AS n FROM t").collect().head.getLong(0) === 2L)
     e.close()
   }
+
+  test("a DML subquery needs SELECT on the table it reads") {
+    val e = fresh()
+    e.sql("CREATE TABLE secret2 (k BIGINT PRIMARY KEY)")
+    e.sql("INSERT INTO secret2 VALUES (2)")
+    e.sql("SET PRIVILEGES ON")
+    e.sql("GRANT SELECT, UPDATE ON t TO alice")
+    val alice = e.newSession(); alice.setAuth("alice")
+    intercept[SecurityException] { alice.sql("SELECT k FROM secret2") }
+    // a superuser's read of secret2 leaves nothing alice can reach
+    assert(e.sql("SELECT k FROM secret2").collect() === Array(Row(2L)))
+    intercept[SecurityException] {
+      alice.sql("UPDATE t SET v = 'x' WHERE k IN (SELECT k FROM secret2)")
+    }
+    assert(e.sql("SELECT v FROM t ORDER BY k").collect() === Array(Row("a"), Row("b")))
+    e.close()
+  }
+
+  test("a column alias named like a forbidden table is not a table reference") {
+    val e = fresh()
+    e.sql("CREATE TABLE secret (k BIGINT PRIMARY KEY)")
+    e.sql("SET PRIVILEGES ON")
+    e.sql("GRANT SELECT ON t TO alice")
+    val alice = e.newSession(); alice.setAuth("alice")
+    intercept[SecurityException] { alice.sql("SELECT k FROM secret") }
+    assert(alice.sql("SELECT k AS secret FROM t ORDER BY k").collect()
+      === Array(Row(1L), Row(2L)))
+    e.close()
+  }
 }

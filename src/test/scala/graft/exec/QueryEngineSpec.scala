@@ -737,9 +737,9 @@ class QueryEngineSpec extends AnyFunSuite {
 
   test("dotted names are flat identifiers end to end") {
     // the reference flattens ObjectName.to_string(): "app.t" IS the
-    // table name, dot included (sql_bridge.rs:3665) — Spark temp
-    // views are single-part, so the engine mangles the registration
-    // name and rewrites references in code regions only
+    // table name, dot included (sql_bridge.rs:3665) — the binder joins
+    // a parsed multipart reference's parts with '.' to look it up, so
+    // the name needs no mangling
     val e = fresh()
     e.sql("CREATE TABLE app.t (pk BIGINT PRIMARY KEY, g BIGINT, v BIGINT)")
     e.sql("INSERT INTO app.t VALUES (1, 1, 10), (2, 1, 20), (3, 2, 30)")
@@ -748,7 +748,7 @@ class QueryEngineSpec extends AnyFunSuite {
     // a dotted name inside a string literal is data, never rewritten
     assert(rows(e, "SELECT 'app.t' AS n FROM app.t WHERE pk = 1")
       === Seq(Row("app.t")))
-    // temporal reads resolve through the same rewrite
+    // temporal reads resolve through the same binding
     assert(rows(e,
       "SELECT pk FROM app.t FOR SYSTEM_TIME AS OF @SEQ:2 ORDER BY pk")
       === Seq(Row(1L), Row(2L)))
@@ -903,5 +903,52 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(a.schema === b.schema)
     assert(a.collect().map(_.toString).sorted.toSeq ===
       b.collect().map(_.toString).sorted.toSeq)
+  }
+
+  private def subqueryPair(): QueryEngine = {
+    val e = fresh()
+    e.sql("CREATE TABLE sub_a (id BIGINT PRIMARY KEY, v BIGINT)")
+    e.sql("CREATE TABLE sub_b (id BIGINT PRIMARY KEY)")
+    e.sql("INSERT INTO sub_a VALUES (1, 0), (2, 0), (3, 0)")
+    e.sql("INSERT INTO sub_b VALUES (1)")
+    e
+  }
+
+  test("a DML subquery reads a table no SELECT has read yet") {
+    val e = subqueryPair()
+    e.sql("UPDATE sub_a SET v = 1 WHERE id IN (SELECT id FROM sub_b)")
+    assert(rows(e, "SELECT id, v FROM sub_a ORDER BY id")
+      === Seq(Row(1L, 1L), Row(2L, 0L), Row(3L, 0L)))
+    // SET and DELETE subqueries read the same way
+    e.sql("UPDATE sub_a SET v = (SELECT MAX(id) FROM sub_b) + 10 WHERE id = 3")
+    e.sql("DELETE FROM sub_a WHERE id IN (SELECT id FROM sub_b)")
+    assert(rows(e, "SELECT id, v FROM sub_a ORDER BY id")
+      === Seq(Row(2L, 0L), Row(3L, 11L)))
+    e.close()
+  }
+
+  test("a DML subquery reads current state after a SELECT and an INSERT") {
+    val e = subqueryPair()
+    assert(rows(e, "SELECT id FROM sub_b") === Seq(Row(1L)))
+    e.sql("INSERT INTO sub_b VALUES (2)")
+    e.sql("UPDATE sub_a SET v = 2 WHERE id IN (SELECT id FROM sub_b)")
+    assert(rows(e, "SELECT id, v FROM sub_a ORDER BY id")
+      === Seq(Row(1L, 2L), Row(2L, 2L), Row(3L, 0L)))
+    e.close()
+  }
+
+  test("a WITH name shadows an engine table of the same name") {
+    val e = seeded()
+    assert(rows(e, "WITH t AS (SELECT 42L AS id) SELECT id FROM t") === Seq(Row(42L)))
+    // a non-recursive CTE's own body still reads the engine table
+    assert(rows(e,
+      "WITH t AS (SELECT id FROM t WHERE id > 1) SELECT COUNT(*) AS n FROM t")
+      === Seq(Row(2L)))
+    // a later CTE sees an earlier one; a subquery sees the enclosing WITH
+    assert(rows(e,
+      """WITH t AS (SELECT 7L AS id), u AS (SELECT id FROM t)
+        |SELECT id FROM u WHERE id IN (SELECT id FROM t)""".stripMargin)
+      === Seq(Row(7L)))
+    e.close()
   }
 }
